@@ -45,11 +45,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) =>
         CellId(args(0), args(1), CellSpace.default, litInt(args(2)))))
     ext.injectFunction((FunctionIdentifier("st_contains_xy"), info("st_contains_xy"),
-      (args: Seq[Expression]) => {
-        val wkb = graft.index.GeomCache.toWkb(
-          graft.index.PolygonCover.fromWkt(litStr(args(0))))
-        STContainsXY(args(1), args(2), wkb)
-      }))
+      (args: Seq[Expression]) =>
+        SpatialFunctions.stContainsWkt(litStr(args(0)), args(1), args(2))))
     ext.injectFunction((FunctionIdentifier("hex_cell"), info("hex_cell"),
       (args: Seq[Expression]) => HexGrid.HexCellExpr(args(0), args(1), args(2))))
     ext.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
@@ -75,11 +72,8 @@ object GraftExtensions {
     reg.createOrReplaceTempFunction("cell_id",
       args => CellId(args(0), args(1), CellSpace.default, g.litIntPub(args(2))), "scala_udf")
     reg.createOrReplaceTempFunction("st_contains_xy",
-      args => {
-        val wkb = graft.index.GeomCache.toWkb(
-          graft.index.PolygonCover.fromWkt(g.litStrPub(args(0))))
-        STContainsXY(args(1), args(2), wkb)
-      }, "scala_udf")
+      args => SpatialFunctions.stContainsWkt(g.litStrPub(args(0)), args(1), args(2)),
+      "scala_udf")
     reg.createOrReplaceTempFunction("hex_cell",
       args => HexGrid.HexCellExpr(args(0), args(1), args(2)), "scala_udf")
     reg.createOrReplaceTempFunction("simhash64",

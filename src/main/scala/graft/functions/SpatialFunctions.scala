@@ -5,7 +5,7 @@ import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
-import graft.index.CellSpace
+import graft.index.{CellSpace, PipIndex}
 
 /** Custom codegen'd Catalyst expressions for the engine's hot scalar ops:
   * Morton keys, cell ids, and the exact point-in-polygon test. All stay
@@ -55,26 +55,43 @@ case class CellId(left: Expression, right: Expression, space: CellSpace, level: 
     copy(left = l, right = r)
 }
 
-/** Exact point-in-polygon against a constant geometry (WKB), via an
-  * executor-side PreparedGeometry cache — the Spark twin of the
-  * reference's prepared-GEOS-contains per point (CropFilter.cpp:242-270)
-  * with preparation hoisted out of the row loop (CropFilter.cpp:137-142).
-  * The WKB literal rides the plan; each executor prepares once. */
-case class STContainsXY(left: Expression, right: Expression, wkb: Array[Byte],
-                        prefiltered: Boolean = false)
+/** Point-in-polygon against a constant polygon through its
+  * [[graft.index.PipIndex]] — the Spark twin of the reference's bbox
+  * prefilter + prepared-GEOS contains per point (CropFilter.cpp:139-151,
+  * 242-270). The index is one reference object: the generated code is the
+  * same for every polygon. `bboxed` marks a predicate whose literal bbox
+  * conjunct has been decided ([[SpatialFunctions.pipPredicate]]). */
+case class STContainsXY(left: Expression, right: Expression, pip: PipIndex,
+                        bboxed: Boolean = false)
     extends BinaryExpression with Serializable {
   override def dataType: DataType = BooleanType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "st_contains_xy"
   override protected def nullSafeEval(x: Any, y: Any): Any =
-    graft.index.GeomCache.containsXY(wkb, x.asInstanceOf[Double], y.asInstanceOf[Double])
+    pip.contains(x.asInstanceOf[Double], y.asInstanceOf[Double])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bytes = ctx.addReferenceObj("wkb", wkb, "byte[]")
-    nullSafeCodeGen(ctx, ev, (x, y) =>
-      s"${ev.value} = graft.index.GeomCache.containsXY($bytes, $x, $y);")
+    val p = ctx.addReferenceObj("pip", pip, classOf[PipIndex].getName)
+    nullSafeCodeGen(ctx, ev, (x, y) => s"${ev.value} = $p.contains($x, $y);")
   }
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+/** Membership of a long column in a sorted driver-built array: a binary
+  * search over one unboxed reference object (a cell list). */
+case class InSortedLongs(child: Expression, sorted: Array[Long])
+    extends UnaryExpression with Serializable {
+  override def dataType: DataType = BooleanType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "in_sorted_longs"
+  override def toString: String = s"$prettyName($child, ${sorted.length} values)"
+  override protected def nullSafeEval(v: Any): Any =
+    java.util.Arrays.binarySearch(sorted, v.asInstanceOf[Long]) >= 0
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val arr = ctx.addReferenceObj("sorted", sorted, "long[]")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = java.util.Arrays.binarySearch($arr, $c) >= 0;")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
 /** Point-in-polygon where the geometry arrives as a WKB column (the
@@ -95,53 +112,38 @@ case class STContainsDyn(first: Expression, second: Expression, third: Expressio
     copy(first = f, second = s, third = t)
 }
 
-/** Single-pass parser for the point-span payload ("xi,yi,zi,intensity,
-  * pid" as ASCII ints) — replaces split() + five string->long casts
-  * (an array allocation plus per-field UTF8String casts per point) with
-  * one scan over the bytes. Returns struct<xi,yi,zi,intensity,pid:long>.
+/** One field of the point-span payload ("xi,yi,zi,intensity,pid" as
+  * ASCII ints), read in place from the string's bytes: no split array, no
+  * per-field string, no row. Missing fields read as 0, a '-' anywhere in
+  * a field negates it, fields past the requested one are never scanned.
   * The hot inner loop of every doc-table scan. */
-case class ParsePointPayload(child: Expression) extends UnaryExpression with Serializable {
-  import org.apache.spark.sql.catalyst.InternalRow
-  override def dataType: DataType = ParsePointPayload.schema
+case class PointPayloadField(child: Expression, field: Int)
+    extends UnaryExpression with Serializable {
+  override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
-  override def prettyName: String = "parse_point_payload"
+  override def prettyName: String = "point_payload_field"
   override protected def nullSafeEval(v: Any): Any =
-    ParsePointPayload.parse(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
+    PointPayloadField.read(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], field)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ParsePointPayload.parse($c);")
+      s"${ev.value} = graft.functions.PointPayloadField.read($c, $field);")
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 
-object ParsePointPayload {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-  import org.apache.spark.unsafe.types.UTF8String
-
-  val schema: StructType = StructType(Seq(
-    StructField("xi", LongType, nullable = false),
-    StructField("yi", LongType, nullable = false),
-    StructField("zi", LongType, nullable = false),
-    StructField("intensity", LongType, nullable = false),
-    StructField("pid", LongType, nullable = false)))
-
-  def parse(s: UTF8String): InternalRow = {
-    val bytes = s.getBytes
-    val out = new Array[Any](5)
-    var field = 0
+object PointPayloadField {
+  def read(s: org.apache.spark.unsafe.types.UTF8String, field: Int): Long = {
+    val n = s.numBytes
+    var i = 0
+    var f = 0
+    while (f < field && i < n) { if (s.getByte(i) == ',') f += 1; i += 1 }
     var acc = 0L
     var neg = false
-    var i = 0
-    while (i < bytes.length && field < 5) {
-      val b = bytes(i)
-      if (b == ',') { out(field) = if (neg) -acc else acc; field += 1; acc = 0L; neg = false }
-      else if (b == '-') neg = true
-      else acc = acc * 10 + (b - '0')
+    while (f == field && i < n && s.getByte(i) != ',') {
+      val b = s.getByte(i)
+      if (b == '-') neg = true else acc = acc * 10 + (b - '0')
       i += 1
     }
-    if (field < 5) { out(field) = if (neg) -acc else acc; field += 1 }
-    while (field < 5) { out(field) = 0L; field += 1 }
-    new GenericInternalRow(out)
+    if (neg) -acc else acc
   }
 }
 
@@ -229,9 +231,30 @@ object SpatialFunctions {
   def cellId(x: Column, y: Column, level: Int, space: CellSpace = CellSpace.default): Column =
     col(CellId(expr(x), expr(y), space, level))
 
-  /** Operator-internal exact test: marked prefiltered — the operators
-    * build their own bbox/cover machinery, so the optimizer rule must
-    * not wrap another one around it. */
-  def stContainsXY(wkb: Array[Byte], x: Column, y: Column): Column =
-    col(STContainsXY(expr(x), expr(y), wkb, prefiltered = true))
+  /** Payload field `field` (0-based) of a point span's text. */
+  def payloadField(text: Column, field: Int): Column = col(PointPayloadField(expr(text), field))
+
+  /** `st_contains_xy(wkt, x, y)` for SQL: indexed in a polygon-padded space. */
+  def stContainsWkt(wkt: String, x: Expression, y: Expression): Expression =
+    STContainsXY(x, y, PipIndex.selfSpaced(graft.index.PolygonCover.fromWkt(wkt)))
+
+  /** The one polygon-crop predicate (`JoinOps.cropPolygon`,
+    * `PipPrefilterRule`): an [[STContainsXY]], plus a literal bbox conjunct
+    * when `scanXY` (x and y are scan columns), the only case where it can
+    * reach the scan. Elsewhere the generated code stays literal-free. */
+  def pipPredicate(x: Expression, y: Expression, pip: PipIndex, scanXY: Boolean): Expression = {
+    val st = STContainsXY(x, y, pip, bboxed = true)
+    if (!scanXY) st
+    else And(And(
+      And(GreaterThanOrEqual(x, Literal(pip.minx)), LessThanOrEqual(x, Literal(pip.maxx))),
+      And(GreaterThanOrEqual(y, Literal(pip.miny)), LessThanOrEqual(y, Literal(pip.maxy)))), st)
+  }
+
+  /** Whether `e` is a column some leaf of `plan` reads (a scan column,
+    * passed through unchanged). */
+  def readFromRelation(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+                       e: Expression): Boolean = e match {
+    case a: Attribute => plan.collectLeaves().exists(_.outputSet.contains(a))
+    case _ => false
+  }
 }

@@ -94,15 +94,6 @@ final case class CellSpace(minx: Double, miny: Double, maxx: Double, maxy: Doubl
     Array.tabulate(4)(i => pack(base | i, lvl + 1))
   }
 
-  /** All level-`toLevel` descendants of `id` (uncompact). */
-  def uncompact(id: Long, toLevel: Int): Array[Long] = {
-    val lvl = level(id)
-    require(toLevel >= lvl)
-    val d = toLevel - lvl
-    val base = (id >>> 6) << (2 * d)
-    Array.tabulate(1 << (2 * d))(i => pack(base | i, toLevel))
-  }
-
   /** The 8-neighborhood (and self) of a cell — the replication ring for
     * grid-partitioned kNN. Edge cells get fewer neighbors. */
   def neighborhood(id: Long): Array[Long] = {
@@ -152,9 +143,7 @@ object CellSpace {
   * (CropFilter.cpp:139-151, AttributeFilter.cpp:307-330) into a
   * resolution-ladder cover usable as a join key.
   */
-final case class CellCover(interior: Array[Long], boundary: Array[Long]) {
-  def all: Array[Long] = interior ++ boundary
-}
+final case class CellCover(interior: Array[Long], boundary: Array[Long])
 
 object PolygonCover {
   /** Compute a compact cover by recursive quadtree descent: interior
@@ -182,14 +171,6 @@ object PolygonCover {
     CellCover(interior.result(), boundary.result())
   }
 
-  /** Uniform-level cover (every cell at `level`) for plain equi-joins.
-    * CAUTION: interior uncompacts to O(area / cellsize²) — prefer
-    * [[cover]] (compact) + ancestor-cell joins at scale. */
-  def coverAtLevel(geom: Geometry, space: CellSpace, level: Int): CellCover = {
-    val c = cover(geom, space, level)
-    CellCover(c.interior.flatMap(space.uncompact(_, level)), c.boundary)
-  }
-
   /** Pick a boundary resolution so a compact cover stays ~`targetCells`:
     * boundary cell count ≈ perimeter / cellSize, so solve for the level
     * whose cell size ≈ perimeter / targetCells. Clamped to [2, MaxLevel]. */
@@ -203,6 +184,69 @@ object PolygonCover {
   }
 
   def fromWkt(wkt: String): Geometry = new WKTReader().read(wkt)
+}
+
+/** A polygon's cover packed for one point-in-polygon test per row, in the
+  * sorted-interval form of *Raster Intervals* (SIGMOD 2023): interior
+  * cells merged into sorted level-`level` Morton ranges [lo, hi) (a
+  * level-l cell covers the keys sharing its 2l-bit prefix), boundary cells
+  * as sorted level-`level` keys. A point costs an envelope check, one
+  * Morton key and two binary searches; only boundary-cell points pay the
+  * exact prepared-geometry test. Rides a plan as one reference object. */
+final class PipIndex private (env: Envelope, space: CellSpace, level: Int,
+                              lo: Array[Long], hi: Array[Long],
+                              boundary: Array[Long], wkb: Array[Byte]) extends Serializable {
+  val minx: Double = env.getMinX
+  val miny: Double = env.getMinY
+  val maxx: Double = env.getMaxX
+  val maxy: Double = env.getMaxY
+  private val shift = CellSpace.MaxLevel - level
+  @transient private lazy val prepared = GeomCache.prepared(wkb)
+
+  def contains(x: Double, y: Double): Boolean = {
+    if (!(x >= minx && x <= maxx && y >= miny && y <= maxy)) return false
+    val m = Morton.interleave(space.ixAt(x) >>> shift, space.iyAt(y) >>> shift)
+    val i = java.util.Arrays.binarySearch(lo, m)
+    // found: m opens a range; otherwise test the range left of the insertion point
+    if (i >= 0 || (i < -1 && m < hi(-i - 2))) true
+    else java.util.Arrays.binarySearch(boundary, m) >= 0 &&
+      prepared.contains(PipIndex.points.createPoint(new Coordinate(x, y)))
+  }
+
+  override def toString: String =
+    s"PipIndex(level=$level, ranges=${lo.length}, boundary=${boundary.length})"
+}
+
+object PipIndex {
+  private val points = new GeometryFactory()
+
+  def apply(geom: Geometry, space: CellSpace, level: Int): PipIndex = {
+    val cover = PolygonCover.cover(geom, space, level)
+    val lo = Array.newBuilder[Long]
+    val hi = Array.newBuilder[Long]
+    var open = -1L; var end = -1L
+    cover.interior.map { id =>
+      val d = 2 * (level - CellSpace.level(id))
+      ((id >>> 6) << d, ((id >>> 6) + 1) << d)
+    }.sortBy(_._1).foreach { case (a, b) =>
+      if (a == end) end = b // adjacent along the curve: extend the open range
+      else { if (open >= 0) { lo += open; hi += end }; open = a; end = b }
+    }
+    if (open >= 0) { lo += open; hi += end }
+    new PipIndex(geom.getEnvelopeInternal, space, level, lo.result(), hi.result(),
+      cover.boundary.map(_ >>> 6).sorted, GeomCache.toWkb(geom))
+  }
+
+  /** Index in a cell space padded 10% around the polygon itself, correct
+    * for any data coordinate range (the SQL `st_contains_xy` path). */
+  def selfSpaced(geom: Geometry): PipIndex = {
+    val env = geom.getEnvelopeInternal
+    val padX = math.max(env.getWidth * 0.1, 1e-9)
+    val padY = math.max(env.getHeight * 0.1, 1e-9)
+    val space = CellSpace(env.getMinX - padX, env.getMinY - padY,
+      env.getMaxX + padX, env.getMaxY + padY)
+    PipIndex(geom, space, PolygonCover.autoLevel(geom, space))
+  }
 }
 
 /** Executor-side cache of prepared geometries keyed by WKB bytes, so a

@@ -132,26 +132,22 @@ object Model {
   // -------------------------------------------------------------------
 
   /** Decode point spans of a doc table into the flat point frame.
-    * Pure narrow transformation: posexplode + string split — no shuffle.
+    * Pure narrow transformation: explode + in-place payload reads — no shuffle.
     * Non-point spans are dropped here; use [[implode]] to reassemble
     * documents with non-point spans preserved. */
   def explodePoints(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val sp = docs
       .select(col("doc_id"), explode(col("spans")).as("s"))
       .filter(col("s.kind") === "point")
-    // single-pass payload parse (see ParsePointPayload) instead of
-    // split() + per-field casts — the scan-side hot loop
-    val p = ColumnBridge.column(graft.functions.ParsePointPayload(
-      ColumnBridge.expression(col("s.text"))))
-    sp.select(col("doc_id"), col("s.offset").as("span_idx"), p.as("p"))
-      .select(
-        col("doc_id"), col("span_idx"),
-        (col("p.xi") * lit(Scale)).as("x"),
-        (col("p.yi") * lit(Scale)).as("y"),
-        (col("p.zi") * lit(Scale)).as("z"),
-        col("p.intensity").cast(IntegerType).as("intensity"),
-        col("p.pid").cast(DoubleType).as("gps_time"))
+    // each field read in place from the payload bytes — the scan-side hot loop
+    def field(i: Int): Column = graft.functions.SpatialFunctions.payloadField(col("s.text"), i)
+    sp.select(
+      col("doc_id"), col("s.offset").as("span_idx"),
+      (field(0) * lit(Scale)).as("x"),
+      (field(1) * lit(Scale)).as("y"),
+      (field(2) * lit(Scale)).as("z"),
+      field(3).cast(IntegerType).as("intensity"),
+      field(4).cast(DoubleType).as("gps_time"))
   }
 
   /** Re-encode a (possibly filtered / transformed) point frame back into a

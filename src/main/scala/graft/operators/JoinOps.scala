@@ -7,24 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
-import org.locationtech.jts.geom.Geometry
-import graft.functions.SpatialFunctions
-import graft.index.{CellSpace, PolygonCover, GeomCache, CellCover}
-
-/** O(1) membership test against a driver-computed cell set (rides the
-  * plan as a reference object; small — a polygon cover). */
-case class CellSetContains(child: Expression, cells: java.util.HashSet[java.lang.Long])
-    extends UnaryExpression with Serializable {
-  override def dataType: DataType = BooleanType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cell_set_contains"
-  override protected def nullSafeEval(v: Any): Any = cells.contains(v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val set = ctx.addReferenceObj("cells", cells, "java.util.HashSet<Long>")
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $set.contains($c);")
-  }
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
+import graft.functions.{InSortedLongs, SpatialFunctions}
+import graft.index.{CellSpace, PolygonCover, GeomCache, PipIndex}
 
 /** Bounded k-smallest collector: keeps the k smallest values seen in a
   * max-heap-ordered buffer (reference stats::Summary-style streaming
@@ -104,41 +88,23 @@ case class NeighborCellsExpr(child: Expression, space: CellSpace)
 object JoinOps {
   import ExpressionUtils.{column => toCol, expression => toExpr}
 
-  private def cellSet(ids: Array[Long]): java.util.HashSet[java.lang.Long] = {
-    val s = new java.util.HashSet[java.lang.Long](math.max(16, ids.length * 2))
-    ids.foreach(i => s.add(i))
-    s
-  }
-
   /** filters.crop, polygon mode (CropFilter.cpp:108-151, 242-270): keep
     * points inside the WKT polygon (or outside, with the flag). Planned
-    * as: bbox filter (pushes to the scan) AND (interior-cell OR exact
-    * prepared contains). Single broadcast-free pass — the polygon and
-    * its cover ride the plan as literals (they are O(perimeter) small).
-    */
+    * as one [[graft.functions.STContainsXY]] over the polygon's
+    * [[PipIndex]] (plus a literal bbox conjunct on scan columns, which
+    * pushes to the scan). Single broadcast-free pass — the index rides the
+    * plan as one reference object, so every polygon reuses the same
+    * compiled stage. */
   def cropPolygon(wkt: String, outside: Boolean = false,
                   space: CellSpace = CellSpace.default,
                   coverLevel: Int = -1)(df: DataFrame): DataFrame = {
     val geom = PolygonCover.fromWkt(wkt)
-    val env = geom.getEnvelopeInternal
     val level = if (coverLevel >= 0) coverLevel else PolygonCover.autoLevel(geom, space)
-    val cover = PolygonCover.cover(geom, space, level)
-    val wkb = GeomCache.toWkb(geom)
-    // interior cells kept compact (mixed levels): test membership of the
-    // point's ancestor cell at each distinct interior level (few).
-    val interiorLevels = cover.interior.map(CellSpace.level).distinct.sorted
-    val bbox = col("x").between(env.getMinX, env.getMaxX) &&
-      col("y").between(env.getMinY, env.getMaxY)
-    val interiorHit: Column = interiorLevels.map { lvl =>
-      val ids = cover.interior.filter(CellSpace.level(_) == lvl)
-      toCol(CellSetContains(
-        toExpr(SpatialFunctions.cellId(col("x"), col("y"), lvl, space)), cellSet(ids)))
-    }.foldLeft(lit(false))(_ || _)
-    val exact = SpatialFunctions.stContainsXY(wkb, col("x"), col("y"))
-    val boundaryHit = toCol(CellSetContains(
-      toExpr(SpatialFunctions.cellId(col("x"), col("y"), level, space)),
-      cellSet(cover.boundary))) && exact
-    val inside = bbox && (interiorHit || boundaryHit)
+    val plan = df.queryExecution.withCachedData
+    val scanXY = Seq("x", "y").forall(n => plan.output.find(_.name.equalsIgnoreCase(n))
+      .exists(SpatialFunctions.readFromRelation(plan, _)))
+    val inside = toCol(SpatialFunctions.pipPredicate(
+      toExpr(col("x")), toExpr(col("y")), PipIndex(geom, space, level), scanXY))
     df.filter(if (outside) !inside else inside)
   }
 
@@ -268,36 +234,15 @@ object JoinOps {
 
   private def ringPairs(left: DataFrame, right: DataFrame, level: Int,
                         space: CellSpace, dims3: Boolean,
-                        keepCells: Option[java.util.HashSet[java.lang.Long]]): DataFrame = {
+                        keepCells: Option[Array[Long]]): DataFrame = {
     val l = left.withColumn("__cell", SpatialFunctions.cellId(col("x"), col("y"), level, space))
     var rc = right.withColumn("__cell",
       explode(neighborRing(SpatialFunctions.cellId(col("x"), col("y"), level, space), space)))
-    // escalation rounds: only ring cells that still hold uncertified left
-    // points matter — filter map-side, before the shuffle
-    keepCells.foreach(s => rc = rc.filter(toCol(CellSetContains(toExpr(col("__cell")), s))))
+    // escalation rounds: only ring cells (sorted) that still hold uncertified
+    // left points matter — filter map-side, before the shuffle
+    keepCells.foreach(s => rc = rc.filter(toCol(InSortedLongs(toExpr(col("__cell")), s))))
     val r = rc.select(col("__cell"), struct(right.columns.map(col): _*).as("__r"))
     // explicit products, not pow(): bit-identical to the SQL oracle's x*x
-    val ddx = col("x") - col("__r.x"); val ddy = col("y") - col("__r.y")
-    val d2d = ddx * ddx + ddy * ddy
-    val ddz = col("z") - col("__r.z")
-    val d2 = if (dims3) d2d + ddz * ddz else d2d
-    l.join(r, "__cell").withColumn("__d2", d2).drop("__cell")
-  }
-
-  /** [[ringPairs]] twin for the escalation loop's narrow frames: left is
-    * (__pid, x, y, z) — renamed __lpid to keep the pair row free of
-    * ambiguity — right is (__pid, x, y, z[, doc_id, span_idx]). No
-    * strings on the pair row unless the caller's aggregate needs the
-    * right-side identity (exactNearest's tie-break). */
-  private def ringPairsPid(left: DataFrame, right: DataFrame, level: Int,
-                           space: CellSpace, dims3: Boolean,
-                           keepCells: Option[java.util.HashSet[java.lang.Long]]): DataFrame = {
-    val l = left.select(col("__pid").as("__lpid"), col("x"), col("y"), col("z"))
-      .withColumn("__cell", SpatialFunctions.cellId(col("x"), col("y"), level, space))
-    var rc = right.withColumn("__cell",
-      explode(neighborRing(SpatialFunctions.cellId(col("x"), col("y"), level, space), space)))
-    keepCells.foreach(s => rc = rc.filter(toCol(CellSetContains(toExpr(col("__cell")), s))))
-    val r = rc.select(col("__cell"), struct(right.columns.map(col): _*).as("__r"))
     val ddx = col("x") - col("__r.x"); val ddy = col("y") - col("__r.y")
     val d2d = ddx * ddx + ddy * ddy
     val ddz = col("z") - col("__r.z")
@@ -317,7 +262,7 @@ object JoinOps {
     * never had, while keeping the scale-friendly single-ring plan for
     * ~all points.
     *
-    * `agg` must aggregate [[ringPairsPid]] output to one row per left
+    * `agg` must aggregate [[ringPairs]] output to one row per left
     * point, grouped on (and keeping) `__lpid`; `certify(guard)` must
     * return a boolean column that is true iff the per-point result is
     * provably exact when every neighbor within `guard` was among the
@@ -414,9 +359,11 @@ object JoinOps {
           val cells = pending
             .select(SpatialFunctions.cellId(col("x"), col("y"), lvl, space).as("c"))
             .distinct().collect().map(_.getLong(0))
-          if (cells.length <= (1 << 16)) Some(cellSet(cells)) else None
+          if (cells.length <= (1 << 16)) Some(cells.sorted) else None
         }
-      var pairs = ringPairsPid(pending, rNarrow, lvl, space, dims3, keep)
+      // left narrow too, its __pid renamed __lpid so the pair row is unambiguous
+      var pairs = ringPairs(pending.select(col("__pid").as("__lpid"), col("x"), col("y"), col("z")),
+        rNarrow, lvl, space, dims3, keep)
       if (excludeSelf)
         pairs = pairs.filter(col("__lpid") =!= col("__r.__pid"))
       // EXACTNESS-PRESERVING guard filter: a certified result only ever

@@ -2,27 +2,25 @@ package graft.plans
 
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Filter}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.BooleanType
-import org.locationtech.jts.io.WKBReader
-import graft.functions.{STContainsXY, CellId}
-import graft.operators.CellSetContains
-import graft.index.{CellSpace, PolygonCover}
+import org.apache.spark.sql.catalyst.expressions.Expression
+import graft.functions.{STContainsXY, SpatialFunctions}
+import graft.index.PipIndex
 
 /** Catalyst optimizer rule: any `st_contains_xy(geom, x, y)` predicate —
   * however the user wrote it (SQL text, Column API, a view) — gets the
-  * engine's full PIP plan injected around it:
+  * engine's PIP plan, the same one `JoinOps.cropPolygon` builds
+  * ([[SpatialFunctions.pipPredicate]]):
   *
   * {{{
-  *   bbox(x, y) AND (interiorCellHit(x, y) OR
-  *                   (boundaryCellHit(x, y) AND st_contains_xy(...)))
+  *   [bbox(x, y) AND] st_contains_xy(x, y)   -- interval cover inside
   * }}}
   *
-  * The bbox conjunction is made of plain comparisons, so it pushes to
-  * the parquet scan; interior-cell points skip the exact geometry test
-  * entirely. This generalizes the reference's hand-placed bbox prefilter
-  * (CropFilter.cpp:139-141, AttributeFilter.cpp:307-315) into an
-  * optimization the planner applies for free.
+  * The cover test is always inside the expression. The bbox conjunction
+  * is made of plain comparisons and is added only when x and y are scan
+  * columns, where it pushes to the parquet scan. This generalizes the
+  * reference's hand-placed bbox prefilter (CropFilter.cpp:139-141,
+  * AttributeFilter.cpp:307-315) into an optimization the planner applies
+  * for free.
   *
   * Activate per session:
   * `spark.experimental.extraOptimizations ++= Seq(PipPrefilterRule)`
@@ -30,50 +28,19 @@ import graft.index.{CellSpace, PolygonCover}
   */
 object PipPrefilterRule extends Rule[LogicalPlan] {
 
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case f @ Filter(cond, child) if cond.exists(isRewritable) =>
+    case Filter(cond, child) if cond.exists(isRewritable) =>
       Filter(cond.transformUp {
-        case st @ STContainsXY(x, y, wkb, false) =>
-          expand(x, y, wkb)
+        case STContainsXY(x, y, pip, false) => expand(child, x, y, pip)
       }, child)
   }
 
   private def isRewritable(e: Expression): Boolean = e match {
-    case st: STContainsXY => !st.prefiltered
+    case st: STContainsXY => !st.bboxed
     case _ => false
   }
 
-  private def expand(x: Expression, y: Expression, wkb: Array[Byte]): Expression = {
-    val geom = new WKBReader().read(wkb)
-    val env = geom.getEnvelopeInternal
-    // a self-consistent cell space derived from the polygon itself (pad
-    // 10%): the cover and the injected CellId expressions share it, so
-    // the rewrite is correct for ANY data coordinate range
-    val padX = math.max(env.getWidth * 0.1, 1e-9)
-    val padY = math.max(env.getHeight * 0.1, 1e-9)
-    val space = CellSpace(env.getMinX - padX, env.getMinY - padY,
-      env.getMaxX + padX, env.getMaxY + padY)
-    val level = PolygonCover.autoLevel(geom, space)
-    val cover = PolygonCover.cover(geom, space, level)
-
-    def cellSet(ids: Array[Long]): java.util.HashSet[java.lang.Long] = {
-      val s = new java.util.HashSet[java.lang.Long](math.max(16, ids.length * 2))
-      ids.foreach(s.add(_)); s
-    }
-    val bbox = And(
-      And(GreaterThanOrEqual(x, Literal(env.getMinX)), LessThanOrEqual(x, Literal(env.getMaxX))),
-      And(GreaterThanOrEqual(y, Literal(env.getMinY)), LessThanOrEqual(y, Literal(env.getMaxY))))
-    val interiorLevels = cover.interior.map(CellSpace.level).distinct.sorted
-    val interiorHit = interiorLevels
-      .map { lvl =>
-        CellSetContains(CellId(x, y, space, lvl),
-          cellSet(cover.interior.filter(CellSpace.level(_) == lvl))): Expression
-      }
-      .reduceOption(Or).getOrElse(Literal(false, BooleanType))
-    val boundaryHit = And(
-      CellSetContains(CellId(x, y, space, level), cellSet(cover.boundary)),
-      STContainsXY(x, y, wkb, prefiltered = true))
-    And(bbox, Or(interiorHit, boundaryHit))
-  }
+  private def expand(child: LogicalPlan, x: Expression, y: Expression, pip: PipIndex): Expression =
+    SpatialFunctions.pipPredicate(x, y, pip,
+      SpatialFunctions.readFromRelation(child, x) && SpatialFunctions.readFromRelation(child, y))
 }

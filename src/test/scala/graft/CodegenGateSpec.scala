@@ -70,4 +70,21 @@ class CodegenGateSpec extends AnyFunSuite {
     assert(compileFailures.isEmpty,
       s"codegen compile failures logged:\n${compileFailures.toArray.mkString("\n")}")
   }
+
+  test("a new crop polygon reuses the compiled stage (no recompile)") {
+    // PlanQualitySpec and the test above check that the crop compiles; this
+    // checks that it compiles ONCE: the per-polygon state rides in one
+    // reference object, so a second polygon's generated code is identical
+    // and hits the compile cache
+    val docs = graft.sources.DocSynth.cachedDocs(spark, sfDir)
+    def crop(wkt: String): Long =
+      graft.operators.JoinOps.cropPolygon(wkt)(graft.model.Model.explodePoints(docs)).count()
+    val hex = "POLYGON ((800.3 500.7, 650.3 760.7, 350.3 760.7, 200.3 500.7, 350.3 240.7, 650.3 240.7, 800.3 500.7))"
+    val tri = "POLYGON ((100 100, 900.5 150, 400 880, 100 100))"
+    assert(crop(hex) > 0)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(crop(tri) > 0)
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "the second polygon recompiled generated code")
+  }
 }

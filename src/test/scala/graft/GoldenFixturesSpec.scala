@@ -22,6 +22,16 @@ object TestSpark {
     s
   }
   val RefData = "/root/reference/test/data"
+  val RefRoot = RefData.stripSuffix("/test/data")
+  /** Path of the reference fixture `rel` under [[RefData]]. Fails with one
+    * clear message when the fixture root itself is absent, instead of a
+    * null directory listing or a reader's bare NoSuchFileException. */
+  def ref(rel: String): String = {
+    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefData)))
+      throw new java.io.FileNotFoundException(
+        s"reference fixture root $RefData is missing (needed for $rel)")
+    s"$RefData/$rel"
+  }
   val P1065 = s"$RefData/las/1.2-with-color.las"
 }
 

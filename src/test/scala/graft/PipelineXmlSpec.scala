@@ -11,19 +11,19 @@ import graft.sources.LasDecode
 class PipelineXmlSpec extends AnyFunSuite {
   import TestSpark._
 
-  private val vars = Map("CMAKE_SOURCE_DIR" -> "/root/reference")
+  private val vars = Map("CMAKE_SOURCE_DIR" -> RefRoot)
   private def read(p: String): String = new String(
     java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)))
 
   test("pipeline_read.xml.in: nested reader-inside-filter, per-axis bounds syntax") {
     val out = PipelineXml.run(spark,
-      "/root/reference/test/data/pipeline/pipeline_read.xml.in", vars)
+      ref("pipeline/pipeline_read.xml.in"), vars)
     assert(out.df.count() === 1065) // the ([0,1e6],[0,1e6],[0,1e6]) box keeps all
   }
 
   test("range_z.xml.in: dimension option with nested min/max children + LAS writer") {
     val tmp = java.nio.file.Files.createTempDirectory("xmlpipe").toString
-    val text = read("/root/reference/test/data/filters/range_z.xml.in")
+    val text = read(ref("filters/range_z.xml.in"))
       .replace("@CMAKE_SOURCE_DIR@/test/temp", tmp)
     val json = PipelineXml.toJsonSpec(text, vars)
     assert(json.contains("\"limits\""))
@@ -38,7 +38,7 @@ class PipelineXmlSpec extends AnyFunSuite {
     assert(mm.getDouble(0) >= 400.0 - 1e-6 && mm.getDouble(1) <= 500.0 + 1e-6)
     // equality with the direct JSON pipeline of the same semantics
     val direct = Pipeline.run(spark, s"""{"pipeline":[
-      {"type":"readers.las","path":"/root/reference/test/data/las/1.2-with-color.las"},
+      {"type":"readers.las","path":"${ref("las/1.2-with-color.las")}"},
       {"type":"filters.range","limits":[{"dimension":"z","min":400,"max":500}]}
     ]}""").df.count()
     assert(direct === n)
@@ -46,7 +46,7 @@ class PipelineXmlSpec extends AnyFunSuite {
 
   test("pipeline_multioptions.xml.in: nested unknown Options tolerated") {
     val out = PipelineXml.run(spark,
-      "/root/reference/test/data/pipeline/pipeline_multioptions.xml.in", vars)
+      ref("pipeline/pipeline_multioptions.xml.in"), vars)
     assert(out.df.count() === 1065)
   }
 
@@ -55,7 +55,7 @@ class PipelineXmlSpec extends AnyFunSuite {
 
     // pipeline_mississippi: plain read -> LAS write copy
     val missOut = PipelineXml.toJsonSpec(
-      read("/root/reference/test/data/pipeline/pipeline_mississippi.xml.in")
+      read(ref("pipeline/pipeline_mississippi.xml.in"))
         .replace("@CMAKE_SOURCE_DIR@/test/temp", tmp), vars)
     val nMiss = Pipeline.run(spark, missOut).df.count()
     assert(nMiss > 0)
@@ -63,17 +63,17 @@ class PipelineXmlSpec extends AnyFunSuite {
 
     // drop_color: crop -> COMPRESSED .laz write through the XML path
     val dropOut = PipelineXml.toJsonSpec(
-      read("/root/reference/test/data/pipeline/drop_color.xml.in")
+      read(ref("pipeline/drop_color.xml.in"))
         .replace("@CMAKE_SOURCE_DIR@/test/temp", tmp), vars)
     assert(Pipeline.run(spark, dropOut).df.count() === 1065)
     assert(LasDecode.asDataFrame(spark, s"$tmp/pdal-compressed.laz").count() === 1065)
 
     // chipper chain: chipper(25) -> merge -> LAS write
     val chipOut = PipelineXml.toJsonSpec(
-      read("/root/reference/test/data/filters/chipper.xml.in")
+      read(ref("filters/chipper.xml.in"))
         .replace("@CMAKE_SOURCE_DIR@/test/temp", tmp), vars)
     val src = LasDecode.asDataFrame(spark,
-      "/root/reference/test/data/autzen/autzen-utm.las").count()
+      ref("autzen/autzen-utm.las")).count()
     assert(Pipeline.run(spark, chipOut).df.count() === src)
     assert(LasDecode.asDataFrame(spark, s"$tmp/autzen-utm-chipped-25.las").count() === src)
   }
@@ -81,7 +81,7 @@ class PipelineXmlSpec extends AnyFunSuite {
   test("pipeline_write.xml.in: mid-chain stats passes points through to the .laz writer") {
     val tmp = java.nio.file.Files.createTempDirectory("xmlwrite").toString
     val json = PipelineXml.toJsonSpec(
-      read("/root/reference/test/data/pipeline/pipeline_write.xml.in")
+      read(ref("pipeline/pipeline_write.xml.in"))
         .replace("@CMAKE_SOURCE_DIR@/test/temp", tmp), vars)
     assert(json.contains("stats_passthrough"))
     val out = Pipeline.run(spark, json)
@@ -92,7 +92,7 @@ class PipelineXmlSpec extends AnyFunSuite {
   test("pipeline_interpolate.xml.in: p2g writer with grid_dist/output_type options") {
     val tmp = java.nio.file.Files.createTempDirectory("xmlp2g").toString
     val json = PipelineXml.toJsonSpec(
-      read("/root/reference/test/data/pipeline/pipeline_interpolate.xml.in")
+      read(ref("pipeline/pipeline_interpolate.xml.in"))
         .replace("@CMAKE_SOURCE_DIR@/test/temp", tmp), vars)
     assert(json.contains("\"dx\":6.0"))
     val out = Pipeline.run(spark, json)
@@ -109,12 +109,12 @@ class PipelineXmlSpec extends AnyFunSuite {
   }
 
   test("splitter without origin defaults to the first point (F9 counts via XML)") {
-    val xml = """<?xml version="1.0"?>
+    val xml = s"""<?xml version="1.0"?>
       <Pipeline version="1.0">
         <Filter type="filters.splitter">
           <Option name="length">1000</Option>
           <Reader type="readers.las">
-            <Option name="filename">/root/reference/test/data/las/1.2-with-color.las</Option>
+            <Option name="filename">${ref("las/1.2-with-color.las")}</Option>
           </Reader>
         </Filter>
       </Pipeline>"""
@@ -127,7 +127,7 @@ class PipelineXmlSpec extends AnyFunSuite {
   }
 
   test("bad/ fixtures all fail loudly at translate or run, never silently") {
-    val dir = new java.io.File("/root/reference/test/data/pipeline/bad")
+    val dir = new java.io.File(ref("pipeline/bad"))
     val bads = dir.listFiles().filter(_.getName.endsWith(".xml")).sortBy(_.getName)
     assert(bads.length === 10)
     bads.foreach { f =>
@@ -141,7 +141,7 @@ class PipelineXmlSpec extends AnyFunSuite {
   test("crop_wkt polygon option flows through (prefix of the fixture chain)") {
     // the fixture's full chain writes LAS; here the polygon path itself:
     // crop_wkt_2d.xml.in carries a 2-D WKT polygon option
-    val text = read("/root/reference/test/data/filters/crop_wkt_2d.xml.in")
+    val text = read(ref("filters/crop_wkt_2d.xml.in"))
     val json = PipelineXml.toJsonSpec(
       text.replace("@CMAKE_SOURCE_DIR@/test/temp",
         java.nio.file.Files.createTempDirectory("xmlwkt").toString), vars)

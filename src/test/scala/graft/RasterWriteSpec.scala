@@ -119,7 +119,7 @@ class RasterWriteSpec extends AnyFunSuite {
 
   test("pipeline writers.p2g filename option emits raster files") {
     val dir = java.nio.file.Files.createTempDirectory("graftp2gpipe").toString
-    val las = "/root/reference/test/data/las/1.2-with-color.las"
+    val las = ref("las/1.2-with-color.las")
     val spec = s"""{"pipeline":[
       {"type":"readers.las","path":"$las"},
       {"type":"writers.p2g","filename":"$dir/r","dx":50,"dy":50,

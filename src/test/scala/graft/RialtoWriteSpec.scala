@@ -109,7 +109,7 @@ class RialtoWriteSpec extends AnyFunSuite {
     val ours = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(s"$dir/header.json")), "US-ASCII")
     val golden = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/test/data/io/header.json")), "US-ASCII")
+      java.nio.file.Paths.get(ref("io/header.json"))), "US-ASCII")
     // scalars byte-identical
     for (line <- Seq("\"version\": 3",
         "\"tilebbox\": [-180.000000, -90.000000, 180.000000, 90.000000]",

@@ -55,4 +55,58 @@ class SpanCodecPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  /** The payload contract as the single-pass struct parser that
+    * [[graft.functions.PointPayloadField]] replaced defined it: fields
+    * split on ',', a '-' anywhere negates its field, any other byte is a
+    * digit, fields past the fifth are ignored, missing ones read as 0. */
+  private def structParse(text: String): Array[Long] = {
+    val bytes = text.getBytes("UTF-8")
+    val out = new Array[Long](5)
+    var field = 0; var acc = 0L; var neg = false; var i = 0
+    while (i < bytes.length && field < 5) {
+      val b = bytes(i)
+      if (b == ',') { out(field) = if (neg) -acc else acc; field += 1; acc = 0L; neg = false }
+      else if (b == '-') neg = true
+      else acc = acc * 10 + (b - '0')
+      i += 1
+    }
+    if (field < 5) out(field) = if (neg) -acc else acc
+    out
+  }
+
+  private val genField: Gen[String] = Gen.frequency(
+    (6, Gen.choose(-1000000000000L, 1000000000000L).map(_.toString)),
+    (1, Gen.const("")), (1, Gen.const("-0")), (1, Gen.const("-")),
+    (1, Gen.listOf(Gen.oneOf('0', '7', '-')).map(_.mkString)))
+
+  // 0 fields is the empty text; under 5 leaves trailing fields missing;
+  // over 5 carries extra ones
+  private val genPayloadText: Gen[String] =
+    Gen.choose(0, 8).flatMap(n => Gen.listOfN(n, genField)).map(_.mkString(","))
+
+  test("payload field reader returns what the struct parse returned (property)") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val texts = Seq("", ",", "1,2", "-1,-2,-3,-4,-5", "1,2,3,4,5,6,7", "1,,3,", "--5,4-2") ++
+      (1 to 400).flatMap(s => genPayloadText(Gen.Parameters.default, Seed(s.toLong)))
+    texts.foreach { t =>
+      val want = structParse(t)
+      (0 until 5).foreach { f =>
+        assert(graft.functions.PointPayloadField.read(UTF8String.fromString(t), f) === want(f),
+          s"field $f of '$t'")
+      }
+    }
+    // the same through the generated code of explodePoints
+    val rows = texts.zipWithIndex.map { case (t, i) => Row(i.toString, Seq(Row("point", t, "", 0))) }
+    val docs = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), Model.docSchema)
+    val got = Model.explodePoints(docs).select("doc_id", "x", "y", "z", "gps_time").collect()
+      .map(r => r.getString(0).toInt -> Seq(r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+      .toMap
+    assert(got.size === texts.size)
+    texts.zipWithIndex.foreach { case (t, i) =>
+      val p = structParse(t)
+      assert(got(i) === Seq(p(0) * Model.Scale, p(1) * Model.Scale, p(2) * Model.Scale, p(4).toDouble),
+        s"explodePoints of '$t'")
+    }
+  }
 }

@@ -91,7 +91,7 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.copy(java.nio.file.Paths.get(p1065),
       java.nio.file.Paths.get(s"$landing/a.las"))
     java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/test/data/laz/simple.laz"),
+      java.nio.file.Paths.get(ref("laz/simple.laz")),
       java.nio.file.Paths.get(s"$landing/b.laz"))
     StreamOps.ingestLasFiles(spark, landing, s"$tmp/out", s"$tmp/ck")
     val out1 = spark.read.parquet(s"$tmp/out")
