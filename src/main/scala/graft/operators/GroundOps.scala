@@ -174,38 +174,6 @@ object GroundOps {
     out.drop("__cx", "__cy", "__ground")
   }
 
-  /** Per-point Chebyshev-window aggregate: for every `target` point,
-    * agg (min/max) of `valueCol` over `source` points within the
-    * half-extent-`r` square window centered on the target — the
-    * morphological erosion/dilation primitive of the EXACT PMF.
-    * Distributed shape: bucket both sides at size r, explode the
-    * SOURCE into the 3x3 neighbor buckets it can serve (9x fan-out of
-    * the small surviving set, map-side), hash-join on the target's
-    * single bucket, window filter, ONE map-side-combinable min/max per
-    * target id. No all-pairs join; skew bounded by bucket occupancy. */
-  private def windowAgg(target: DataFrame, source: DataFrame, r: Double,
-                        valueCol: String, isMin: Boolean, out: String): DataFrame = {
-    val offs = array((-1 to 1).map(lit): _*)
-    val src = source.select(
-      explode(offs).as("__ox"), col("x").as("__sx"), col("y").as("__sy"),
-      col(valueCol).as("__sv"))
-      .select(explode(offs).as("__oy"), col("__ox"), col("__sx"), col("__sy"), col("__sv"))
-      .select(
-        (floor(col("__sx") / r).cast(LongType) + col("__ox")).as("__bx"),
-        (floor(col("__sy") / r).cast(LongType) + col("__oy")).as("__by"),
-        col("__sx"), col("__sy"), col("__sv"))
-    val tgt = target.select(col("doc_id"), col("span_idx"),
-      col("x").as("__tx"), col("y").as("__ty"),
-      floor(col("x") / r).cast(LongType).as("__bx"),
-      floor(col("y") / r).cast(LongType).as("__by"))
-    val aggFn: Column => Column = if (isMin) min else max
-    tgt.join(src, Seq("__bx", "__by"))
-      .filter(abs(col("__sx") - col("__tx")) <= r &&
-        abs(col("__sy") - col("__ty")) <= r)
-      .groupBy(col("doc_id"), col("span_idx"))
-      .agg(aggFn(col("__sv")).as(out))
-  }
-
   /** EXACT Progressive Morphological Filter — the reference's DEFAULT
     * `filters.ground` branch (GroundFilter.cpp:72 `approximate=false`
     * default, :119-132 pcl::ProgressiveMorphologicalFilter): iterative
@@ -220,44 +188,25 @@ object GroundOps {
     * branch) nothing is rasterized: every point is tested against a
     * window measured from its own position.
     *
-    * SCALE: each round is two bucketed window joins over the SURVIVING
-    * set (shrinking monotonically) — 9x map-side fan-out of the source
-    * side, one hash join, one combinable min/max; O(rounds) = O(log
-    * maxWindow) rounds; no all-pairs, no driver state. The surviving
-    * set is localCheckpoint'd per round to cut the growing lineage. */
+    * SCALE: ONE pass of the halo-block kernel ([[NbrBlocks.pmfGround]]):
+    * blocks with a halo of sum(w_k) run every round in place, so the job
+    * count does not grow with the ladder; no all-pairs, no driver state,
+    * rows pass through the kernel unchanged. */
   def pmfExact(p: PmfParams = PmfParams(), extract: Boolean = false)(df: DataFrame): DataFrame = {
-    var ground = df.select(col("doc_id"), col("span_idx"),
-        col("x"), col("y"), col("z"))
-      .localCheckpoint(eager = true)
-    for ((w, dh) <- pclLadder(p)) {
-      val r = w / 2.0
-      val eroded = windowAgg(ground, ground, r, "z", isMin = true, "__ev")
-        .join(ground.select(col("doc_id"), col("span_idx"), col("x"), col("y")),
-          Seq("doc_id", "span_idx"))
-      val opened = windowAgg(ground, eroded, r, "__ev", isMin = false, "__ov")
-      // strict < keep (the published algorithm); under floatSchedule
-      // the diff narrows to float32 before the compare, like PCL's
-      // float z arithmetic — boundary membership proven by the
-      // thin-autzen goldens
-      val keep =
-        if (p.floatSchedule)
-          (col("z") - col("__ov")).cast(FloatType) < lit(dh.toFloat)
-        else col("z") - col("__ov") < dh
-      ground = ground.join(opened, Seq("doc_id", "span_idx"))
-        .filter(keep)
-        .select(col("doc_id"), col("span_idx"), col("x"), col("y"), col("z"))
-        .localCheckpoint(eager = false)
-    }
-    val marks = ground.select(col("doc_id"), col("span_idx"), lit(true).as("__ground"))
-    val classified = df.join(marks, Seq("doc_id", "span_idx"), "left")
+    val ladder = pclLadder(p)
+    val classified =
+      if (ladder.isEmpty) df.withColumn("__ground", lit(true))
+      else NbrBlocks.pmfGround(df, ladder, p.floatSchedule)
     val out =
-      if (extract) classified.filter(col("__ground").isNotNull)
+      if (extract) classified.filter(col("__ground"))
       else {
         val existing = if (df.columns.contains("classification")) col("classification")
                        else lit(0).cast(ShortType)
         classified.withColumn("classification",
-          when(col("__ground").isNotNull, lit(2).cast(ShortType)).otherwise(existing))
+          when(col("__ground"), lit(2).cast(ShortType)).otherwise(existing))
       }
-    out.drop("__ground")
+    // identity columns first, like the classification join this replaced
+    val ids = Seq("doc_id", "span_idx")
+    out.select((ids ++ out.columns.filterNot((ids :+ "__ground").contains)).map(col): _*)
   }
 }

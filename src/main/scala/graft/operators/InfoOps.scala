@@ -27,29 +27,18 @@ object InfoOps {
 
   /** Radius outlier removal (PCL ROR via filters.pclblock,
     * PCLPipeline.hpp:303-325): keep points having at least
-    * `minNeighbors` other points within `radius`. Grid-partitioned like
-    * SOR; the cell side at `level` must be >= radius. */
+    * `minNeighbors` other points within `radius` (3D, exact like the
+    * reference KDIndex radius query, KDIndex.hpp:54-106). One pass of the
+    * halo-block kernel ([[NbrBlocks]]) with reach = radius: rows pass
+    * through unchanged. `level` keeps its contract (cell side at `level`
+    * >= radius) for spec compatibility. */
   def radiusOutlierRemoval(radius: Double, minNeighbors: Int, level: Int,
                            space: CellSpace = CellSpace.default)(df: DataFrame): DataFrame = {
-    // the 3x3 ring at `level` provably contains every neighbor within one
-    // cell side — a smaller side would silently drop far neighbors
-    // (reference KDIndex radius query is exact, KDIndex.hpp:54-106)
     val side = math.min(space.maxx - space.minx, space.maxy - space.miny) / (1L << level).toDouble
     require(side >= radius,
       s"cell side $side at level $level < radius $radius — use a coarser level")
-    val pts = df
-    // both sides of the self-join scan the slim projection: materialize
-    // it once (ContextCleaner-freed; see escalateKnn)
-    val slim = pts.select("doc_id", "span_idx", "x", "y", "z")
-      .localCheckpoint(eager = true)
-    val pairs = JoinOps.knnPairs(slim, slim, level, space, dims3 = true)
-      .filter(!(col("doc_id") === col("__r.doc_id") && col("span_idx") === col("__r.span_idx")))
-      .filter(col("__d2") <= radius * radius)
-    val counts = pairs.groupBy(col("doc_id"), col("span_idx"))
-      .agg(count(lit(1)).as("__nn"))
-      .filter(col("__nn") >= minNeighbors)
-      .select(col("doc_id"), col("span_idx"))
-    pts.join(counts, Seq("doc_id", "span_idx"), "left_semi")
+    val reach = if (radius != 0) math.abs(radius) else side
+    NbrBlocks.radiusKeep(df, radius, minNeighbors, BlockGrid(space.minx, space.miny, reach))
   }
 
   /** `pdal diff` (DiffKernel.cpp:111-230): schema / count / value

@@ -7,64 +7,12 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
-import graft.functions.{InSortedLongs, SpatialFunctions}
+import graft.functions.SpatialFunctions
 import graft.index.{CellSpace, PolygonCover, GeomCache, PipIndex}
 
-/** Bounded k-smallest collector: keeps the k smallest values seen in a
-  * max-heap-ordered buffer (reference stats::Summary-style streaming
-  * aggregate object, SURVEY.md §2.6 -> Aggregator). Mergeable, so Spark
-  * runs it partial+final with map-side combine. `finish` returns the
-  * values in ASCENDING order so every downstream reduction (mean,
-  * k-th distance certificate) is deterministic regardless of the
-  * partitioning that fed the heap. */
-class TopKDistAgg(k: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[Double, Array[Double], Array[Double]] {
-  import org.apache.spark.sql.Encoder
-  // buffer: the up-to-k smallest values, max at slot 0 (binary max-heap)
-  override def zero: Array[Double] = Array.empty
-  private def siftUpDown(h: Array[Double]): Unit = {
-    // restore heap after replacing the root
-    var i = 0
-    val n = h.length
-    while (true) {
-      val l = 2 * i + 1; val r = 2 * i + 2
-      var m = i
-      if (l < n && h(l) > h(m)) m = l
-      if (r < n && h(r) > h(m)) m = r
-      if (m == i) return
-      val t = h(i); h(i) = h(m); h(m) = t
-      i = m
-    }
-  }
-  override def reduce(b: Array[Double], v: Double): Array[Double] = {
-    if (b.length < k) {
-      val nb = java.util.Arrays.copyOf(b, b.length + 1)
-      nb(b.length) = v
-      // sift up the new leaf
-      var i = b.length
-      while (i > 0 && nb((i - 1) / 2) < nb(i)) {
-        val p = (i - 1) / 2; val t = nb(p); nb(p) = nb(i); nb(i) = t; i = p
-      }
-      nb
-    } else if (v < b(0)) { b(0) = v; siftUpDown(b); b }
-    else b
-  }
-  override def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-    b.foldLeft(a)(reduce)
-  override def finish(b: Array[Double]): Array[Double] = {
-    val out = java.util.Arrays.copyOf(b, b.length)
-    java.util.Arrays.sort(out)
-    out
-  }
-  override def bufferEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-  override def outputEncoder: Encoder[Array[Double]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
-}
-
-/** Codegen'd 3x3 neighbor-ring of a cell id (the kNN replication keys).
-  * Replaces the Scala UDF that used to break whole-stage codegen on the
-  * replicated side of the engine's biggest shuffles (SOR/ROR/delta). */
+/** Codegen'd 3x3 neighbor-ring of a cell id (the MLS smoother's
+  * replication keys), kept out of Scala UDFs so whole-stage codegen holds
+  * on the replicated side of the shuffle. */
 case class NeighborCellsExpr(child: Expression, space: CellSpace)
     extends UnaryExpression with Serializable {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -214,34 +162,21 @@ object JoinOps {
   private def neighborRing(cell: Column, space: CellSpace): Column =
     toCol(NeighborCellsExpr(toExpr(cell), space))
 
-  /** Grid-partitioned kNN pair generation: for each left point, all right
-    * points within the 3x3 neighborhood of its level-`level` cell, with
-    * their SQUARED 2D/3D distance `__d2` (sqrt is monotonic — callers
-    * compare against squared radii and take at most k roots after
-    * aggregation, not one per pair). The contract callers must respect
-    * (documented reference KDIndex semantics, KDIndex.hpp:54-106): the
-    * cell side length at `level` must be >= the largest kNN radius of
-    * interest, or far neighbors are missed — radius-bounded callers
-    * `require` this; unbounded-kNN callers go through [[escalateKnn]],
-    * which proves it per point with a distance certificate. Right side
-    * is replicated 9x via a codegen'd ring expression (the classic
-    * neighbor-ring replication join); left side shuffles once on cell.
-    */
+  /** Grid-partitioned neighbour pair generation (the MLS smoother's
+    * input): for each left point, all right points within the 3x3
+    * neighborhood of its level-`level` cell, with their SQUARED 2D/3D
+    * distance `__d2`. The cell side at `level` must be >= the largest
+    * radius of interest, or far neighbors are missed; callers `require`
+    * this. Right side is replicated 9x via a codegen'd ring expression;
+    * left side shuffles once on cell. The exact kNN / radius / PMF
+    * operators use the halo-block kernel ([[NbrBlocks]]) instead. */
   def knnPairs(left: DataFrame, right: DataFrame, level: Int,
                space: CellSpace = CellSpace.default,
-               dims3: Boolean = false): DataFrame =
-    ringPairs(left, right, level, space, dims3, None)
-
-  private def ringPairs(left: DataFrame, right: DataFrame, level: Int,
-                        space: CellSpace, dims3: Boolean,
-                        keepCells: Option[Array[Long]]): DataFrame = {
+               dims3: Boolean = false): DataFrame = {
     val l = left.withColumn("__cell", SpatialFunctions.cellId(col("x"), col("y"), level, space))
-    var rc = right.withColumn("__cell",
-      explode(neighborRing(SpatialFunctions.cellId(col("x"), col("y"), level, space), space)))
-    // escalation rounds: only ring cells (sorted) that still hold uncertified
-    // left points matter — filter map-side, before the shuffle
-    keepCells.foreach(s => rc = rc.filter(toCol(InSortedLongs(toExpr(col("__cell")), s))))
-    val r = rc.select(col("__cell"), struct(right.columns.map(col): _*).as("__r"))
+    val r = right.withColumn("__cell",
+        explode(neighborRing(SpatialFunctions.cellId(col("x"), col("y"), level, space), space)))
+      .select(col("__cell"), struct(right.columns.map(col): _*).as("__r"))
     // explicit products, not pow(): bit-identical to the SQL oracle's x*x
     val ddx = col("x") - col("__r.x"); val ddy = col("y") - col("__r.y")
     val d2d = ddx * ddx + ddy * ddy
@@ -250,25 +185,6 @@ object JoinOps {
     l.join(r, "__cell").withColumn("__d2", d2).drop("__cell")
   }
 
-  /** EXACT distributed kNN via grid-ring candidates + a per-point distance
-    * certificate with level escalation. A ring join at level L provably
-    * contains every neighbor within cellSide(L) of a point, so any point
-    * whose k-th ring candidate lies within that radius has its exact kNN
-    * (certificate passes). The (typically tiny) uncertified remainder —
-    * isolated points in sparse regions — re-runs at a 4x-coarser level
-    * against only the ring cells it touches, until level 0 (one cell =
-    * full cross join, exact by construction). This removes the silent
-    * approximation the reference's exact KDIndex (KDIndex.hpp:54-106)
-    * never had, while keeping the scale-friendly single-ring plan for
-    * ~all points.
-    *
-    * `agg` must aggregate [[ringPairs]] output to one row per left
-    * point, grouped on (and keeping) `__lpid`; `certify(guard)` must
-    * return a boolean column that is true iff the per-point result is
-    * provably exact when every neighbor within `guard` was among the
-    * candidates. (doc_id, span_idx, x, y, z) are joined back onto the
-    * result after the loop.
-    */
   /** Sentinel for the kNN family's `level` parameters: pick the start
     * level from candidate density instead of a caller constant. */
   val AutoLevel: Int = -1
@@ -279,7 +195,7 @@ object JoinOps {
     * cell side; under ~uniform density E[candidates within cellSide(L)]
     * = n*pi/4^L (relative to the space's area), so we pick the largest L
     * with that expectation >= margin*k. Too-coarse start levels are the
-    * scale foot-gun (ring fan-out grows 4x per level too coarse); a
+    * scale foot-gun (block occupancy grows 4x per level too coarse); a
     * too-fine start only costs extra escalation rounds on the sparse
     * tail — the result is exact either way, so this is purely a plan
     * choice, like AQE picking shuffle partition counts. */
@@ -288,7 +204,7 @@ object JoinOps {
 
   /** 3D-aware variant: certification needs the k-th neighbor within one
     * XY cell side `s` in FULL 3D distance, and when points spread over a
-    * vertical extent H >> s only ~4s/(3H) of the ring candidates are
+    * vertical extent H >> s only ~4s/(3H) of the block candidates are
     * also within a 3D ball of radius s (sphere volume over ring-slab
     * volume). Ignoring this picks a grid one or two levels too fine and
     * every point escalates — a full extra pass over the data. `zSpread`
@@ -305,138 +221,31 @@ object JoinOps {
     (12 to 0 by -1).find(l => expected(l) >= margin * math.max(1, k)).getOrElse(0)
   }
 
-  private def escalateKnn(left: DataFrame, right: DataFrame, startLevel: Int,
-                          space: CellSpace, dims3: Boolean, excludeSelf: Boolean,
-                          kHint: Int = 1, carryRightIds: Boolean = false)
-                         (agg: DataFrame => DataFrame)
-                         (certify: Double => Column): DataFrame = {
-    require(!excludeSelf || (left eq right),
-      "excludeSelf requires the same frame reference on both sides " +
-        "(self identity is tracked by the internal point id)")
-    val slim = Seq("doc_id", "span_idx", "x", "y", "z").map(col)
-    // HOT-PATH SHAPE: the ring join fans each point out ~9x density
-    // candidates, so every byte on a pair row is multiplied millions of
-    // times. Identity therefore travels as ONE packed long (`__pid`,
-    // frozen by the eager checkpoint) and the (doc_id, span_idx) strings
-    // are restored by a single narrow join at the very end — the pair
-    // stream carries only longs and doubles. The slim projections are
-    // materialized once (blocks ContextCleaner-freed when the caller
-    // drops the result); self-joins (SOR) share one checkpoint.
-    val rP = right.select(slim: _*)
-      .withColumn("__pid", monotonically_increasing_id())
-      .localCheckpoint(eager = true)
-    val lP = if (left eq right) rP
-      else left.select(slim: _*)
-        .withColumn("__pid", monotonically_increasing_id())
-        .localCheckpoint(eager = true)
-    val rNarrowCols =
-      (Seq("__pid", "x", "y", "z") ++
-        (if (carryRightIds) Seq("doc_id", "span_idx") else Nil)).map(col)
-    val rNarrow = rP.select(rNarrowCols: _*)
-    var pending = lP.select(col("__pid"), col("x"), col("y"), col("z"))
-    var out: Option[DataFrame] = None
-    var lvl =
-      if (startLevel >= 0) startLevel
-      else if (!dims3) knnAutoLevel(rP.count(), kHint)
-      else {
-        // one tiny aggregate over the checkpointed slim side: row count +
-        // robust vertical spread (p05..p95) for the 3D-aware level pick
-        val st = rP.agg(count(lit(1)).as("n"),
-          expr("percentile_approx(z, array(0.05d, 0.95d))").as("zq")).head()
-        val zq = if (st.isNullAt(1)) null else st.getSeq[Double](1)
-        val spread = if (zq == null || zq.length < 2) 0.0 else zq(1) - zq(0)
-        knnAutoLevel(st.getLong(0), kHint, space, spread, margin = 6.0)
-      }
-    val dbg = sys.env.contains("GRAFT_KNN_DEBUG")
-    var firstRound = true
-    var done = false
-    while (!done) {
-      val tRound = System.nanoTime()
-      val guard = math.min(space.maxx - space.minx, space.maxy - space.miny) / (1L << lvl).toDouble
-      val keep =
-        if (firstRound) None
-        else {
-          val cells = pending
-            .select(SpatialFunctions.cellId(col("x"), col("y"), lvl, space).as("c"))
-            .distinct().collect().map(_.getLong(0))
-          if (cells.length <= (1 << 16)) Some(cells.sorted) else None
-        }
-      // left narrow too, its __pid renamed __lpid so the pair row is unambiguous
-      var pairs = ringPairs(pending.select(col("__pid").as("__lpid"), col("x"), col("y"), col("z")),
-        rNarrow, lvl, space, dims3, keep)
-      if (excludeSelf)
-        pairs = pairs.filter(col("__lpid") =!= col("__r.__pid"))
-      // EXACTNESS-PRESERVING guard filter: a certified result only ever
-      // uses neighbors within `guard` (the certificate is precisely "the
-      // k-th candidate lies within guard"), so pairs farther than guard
-      // cannot change a certified answer — and an uncertified point
-      // escalates and recomputes anyway. Filtering here is a codegen'd
-      // comparison that keeps the ~9x ring fan-out out of the per-group
-      // aggregate. At level 0 the ring IS the full cross join and the
-      // certificate is vacuous, so every pair must be kept.
-      if (lvl > 0)
-        pairs = pairs.filter(col("__d2") <= lit(guard * guard))
-      // materialize once — feeds both the certified and escalation branch
-      val nn = agg(pairs).localCheckpoint()
-      val cert = if (lvl == 0) lit(true) else certify(guard)
-      val ok = nn.filter(cert)
-      out = Some(out.map(_.unionByName(ok)).getOrElse(ok))
-      if (lvl == 0) done = true
-      else {
-        // uncertified + points with zero ring candidates (absent from nn):
-        // one anti-join of the narrow pending frame against the certified ids
-        val bad = pending.join(ok.select(col("__lpid")),
-            pending("__pid") === col("__lpid"), "left_anti")
-          .localCheckpoint()
-        val nBad = bad.count()
-        if (dbg) println(f"[knn] level $lvl round done in " +
-          f"${(System.nanoTime() - tRound) / 1e9}%.2fs, uncertified=$nBad")
-        if (nBad == 0) done = true
-        else { pending = bad; lvl = math.max(0, lvl - 2) }
-      }
-      if (dbg && done) println(f"[knn] final level $lvl round in " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
-      firstRound = false
-    }
-    // restore (doc_id, span_idx) and coordinates with one narrow join
-    out.get.join(lP, col("__lpid") === lP("__pid"))
-      .drop("__lpid", "__pid")
-  }
+  private val Slim = Seq("doc_id", "span_idx", "x", "y", "z")
 
   /** Exact k-nearest squared distances per left point: (doc_id, span_idx,
-    * x, y, z, __nnd2 array<double> ascending). */
+    * x, y, z, __nnd2 array<double> ascending). Exact like the reference's
+    * KDIndex (KDIndex.hpp:54-106): block-kernel candidates with a per-point
+    * certificate and level escalation ([[NbrBlocks]]), starting at
+    * `startLevel` ([[AutoLevel]]: from density). */
   def exactKnnDistances(left: DataFrame, right: DataFrame, k: Int, startLevel: Int,
                         space: CellSpace = CellSpace.default, dims3: Boolean = false,
-                        excludeSelf: Boolean = false): DataFrame = {
-    val topk = udaf(new TopKDistAgg(k))
-    escalateKnn(left, right, startLevel, space, dims3, excludeSelf, kHint = k)(pairs =>
-      pairs.groupBy(col("__lpid"))
-        .agg(topk(col("__d2")).as("__nnd2")))(g =>
-      size(col("__nnd2")) === k && element_at(col("__nnd2"), k) <= lit(g * g))
-  }
+                        excludeSelf: Boolean = false): DataFrame =
+    NbrBlocks.knn(left, right, k, startLevel, space, dims3, excludeSelf, Slim)
 
   /** Exact nearest-1 neighbor coords per left point (ties broken by the
     * lexicographic (d2, doc, span) ordering — the reference's stable
-    * KDIndex order). */
+    * KDIndex order): (doc_id, span_idx, x, y, z, __n (nx, ny, nz),
+    * __d2min). */
   def exactNearest(left: DataFrame, right: DataFrame, startLevel: Int,
                    space: CellSpace = CellSpace.default,
                    dims3: Boolean = false): DataFrame =
-    escalateKnn(left, right, startLevel, space, dims3, excludeSelf = false,
-      kHint = 1, carryRightIds = true)(pairs =>
-      pairs.groupBy(col("__lpid"))
-        .agg(
-          min_by(struct(col("__r.x").as("nx"), col("__r.y").as("ny"), col("__r.z").as("nz")),
-            struct(col("__d2"), col("__r.doc_id"), col("__r.span_idx"))).as("__n"),
-          min(col("__d2")).as("__d2min")))(g =>
-      col("__d2min") <= lit(g * g))
+    NbrBlocks.nearest(left, right, startLevel, space, dims3, Slim)
 
   /** `pdal delta` (DeltaKernel.cpp:114-150, 269-330): for each source
     * point the single nearest candidate point (EXACT — certificate +
-    * escalation, see [[escalateKnn]]); emits per-point deltas plus
-    * min/max/mean/median summary of each delta dimension. Nearest-1 is a
-    * min_by hash aggregate (tie-break = the lexicographic (d2, doc, span)
-    * struct ordering), NOT a window — no sort of the pair fan-out,
-    * map-side combinable. */
+    * escalation, see [[exactNearest]]); emits per-point deltas plus
+    * min/max/mean/median summary of each delta dimension. */
   def delta(src: DataFrame, candidates: DataFrame, level: Int,
             space: CellSpace = CellSpace.default,
             detail: Boolean = true): DataFrame = {
@@ -456,9 +265,10 @@ object JoinOps {
     * PCLPipeline.hpp:278-300): per point the mean distance to its k
     * EXACT nearest neighbors (certificate + escalation); keep points with
     * meanDist <= mu + mult * sigma of the global distribution of mean
-    * distances. The kNN aggregate keeps squared distances; the k square
+    * distances. The kNN kernel keeps squared distances; the k square
     * roots per point happen once, summed in ascending order
-    * (deterministic), after aggregation.
+    * (deterministic). The input rows ride the kernel as its payload, so
+    * the kept rows come straight out of the materialized distances.
     *
     * DETERMINISTIC THRESHOLD: mu and sigma are computed from mean
     * distances quantized to 1e-6 and summed as exact integers (decimal
@@ -467,27 +277,21 @@ object JoinOps {
     * is bit-identical across partitionings/executor counts and exactly
     * mirrorable in SQL (the r2 VERDICT's last-ulp membership flake is
     * structurally gone). Quantizing at a micrometer is far below any
-    * physical meaning of the PCL threshold.
-    *
-    * NOTE: the top-k Aggregator runs via ObjectHashAggregate, whose
-    * default sort-based fallback threshold (128 keys) is catastrophic for
-    * per-point grouping. Callers' sessions should raise
-    * spark.sql.objectHashAggregate.sortBased.fallbackThreshold (Verify/
-    * Bench/tests set 5e6) — deliberately NOT set here: an operator must
-    * not silently rewire session config (doc-synthesis sessions need the
-    * default's bounded-memory fallback). */
+    * physical meaning of the PCL threshold. */
   def statisticalOutlierRemoval(k: Int, multThresh: Double, level: Int,
                                 space: CellSpace = CellSpace.default)(df: DataFrame): DataFrame = {
-    val nn = exactKnnDistances(df, df, k, level, space, dims3 = true, excludeSelf = true)
-    // meanDist is tiny (one narrow row per point) but feeds BOTH the
-    // global threshold and the final join: materialize once via eager
-    // localCheckpoint (SOR is already eager through the escalation loop)
-    // so the blocks are ContextCleaner-freed when the caller drops the
-    // frame, instead of pinning a CacheManager entry forever.
-    val meanDist = nn.select(col("doc_id"), col("span_idx"),
-      (aggregate(transform(col("__nnd2"), d => sqrt(d)), lit(0.0), (a, v) => a + v)
-        / size(col("__nnd2"))).as("__md"))
+    val nn = NbrBlocks.knn(df, df, k, level, space, dims3 = true, excludeSelf = true,
+      payload = df.columns.toSeq)
+    // meanDist feeds BOTH the global threshold and the kept rows:
+    // materialize once via eager localCheckpoint (SOR is already eager
+    // through the escalation loop) so the blocks are ContextCleaner-freed
+    // when the caller drops the frame, instead of pinning a CacheManager
+    // entry forever.
+    val meanDist = nn.withColumn("__md",
+        aggregate(transform(col("__nnd2"), d => sqrt(d)), lit(0.0), (a, v) => a + v)
+          / size(col("__nnd2")))
       .withColumn("__q", floor(col("__md") * lit(1000000.0) + lit(0.5)))
+      .drop("__nnd2")
       .localCheckpoint(eager = true)
     val dec = org.apache.spark.sql.types.DecimalType(38, 0)
     val mom = meanDist.agg(
@@ -502,7 +306,6 @@ object JoinOps {
     val mean = s1 / n
     val varS = (s2 - s1 * s1 / n) / (n - 1)
     val t = mean + multThresh * math.sqrt(math.max(varS, 0.0))
-    df.join(meanDist.filter(col("__q") <= lit(t)).select("doc_id", "span_idx"),
-      Seq("doc_id", "span_idx"), "left_semi")
+    meanDist.filter(col("__q") <= lit(t)).drop("__md", "__q")
   }
 }

@@ -86,7 +86,6 @@ object TileOps {
     // is what gets checkpointed log2(m) times, not the full row
     var cur = work.withColumn("__node", lit(0L))
 
-    val dbg = sys.env.contains("GRAFT_KNN_DEBUG")
     // Two per-round split strategies, chosen by rows-per-node:
     //
     // WINDOW (small nodes): rank every row of every active node with one
@@ -114,7 +113,6 @@ object TileOps {
     val ACC = 10000      // percentile_approx rank-error <= n/ACC
     val fractions = (0 to G).map(_.toDouble / G).toArray
     while (nodes.values.exists(!_.leaf)) {
-      val tRound = System.nanoTime()
       val activeIds = nodes.filter(!_._2.leaf).keySet
       val useSketch = n / activeIds.size > sketchSplitMinRows
       // A. per-node count/ranges (+ sketches on the sketch path);
@@ -204,8 +202,6 @@ object TileOps {
           else { // sketch miss: widen to the whole node (exact, just slower)
             s.vLo = Double.NegativeInfinity; s.vHi = Double.PositiveInfinity
             s.cLo = 0L
-            if (dbg) println(s"[chipper] sketch miss on node ${s.id} " +
-              s"(cLo=$cLo cIn=$cIn t=${s.t}) — full-range fallback")
           }
         }
         // C. exact rank among boundary rows only -> one cut key per node
@@ -263,8 +259,6 @@ object TileOps {
         }
       }
       cur = cur.localCheckpoint(eager = false)
-      if (dbg) println(f"[chipper] round with ${activeIds.size} active nodes: " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2fs")
     }
     // chip ordinal = leaf's pl (partition index) — contiguous 0..m-1;
     // join the assignment back onto the full-width rows
@@ -313,9 +307,7 @@ object TileOps {
     var activeNodes: Seq[Long] = Seq(0L)
     val maxRounds = 64 - java.lang.Long.numberOfLeadingZeros(
       math.max(1, total / capacity)) + 3
-    val dbg = sys.env.contains("GRAFT_KNN_DEBUG")
     while (active && round < maxRounds) {
-      val tRound = System.nanoTime()
       // 1. cheap per-node counts over only the still-active subtree
       val statsSrc =
         if (activeNodes.size <= 4096) cur.filter(col("__node").isin(activeNodes: _*))
@@ -358,8 +350,6 @@ object TileOps {
         }
         activeNodes = splitIds.toSeq.flatMap(id => Seq(id * 2 + 1, id * 2 + 2))
       }
-      if (dbg) println(f"[chipperApprox] round $round (${activeNodes.size} " +
-        f"next-active): ${(System.nanoTime() - tRound) / 1e9}%.2fs")
       round += 1
     }
     df0.join(

@@ -14,6 +14,8 @@ import scala.jdk.CollectionConverters._
   * Layout per stage:
   * {{{
   *   <root>/<stageId>/data/...          stage output parquet
+  *   <root>/<stageId>/schema.json       the data's Spark schema (read
+  *                                      without a footer-inference job)
   *   <root>/<stageId>/manifest.json     lineage snapshot:
   *     { stage, inputs: [stageId...], fingerprint,
   *       partitions: [{key, rows, digest}], totalRows }
@@ -151,7 +153,9 @@ object Manifest {
                  inputs: Seq[String], df: DataFrame): StageManifest = {
     val dataDir = s"$root/$stage/data"
     df.write.mode("overwrite").parquet(dataDir)
-    val (lineage, info) = lineageOf(df.sparkSession.read.parquet(dataDir))
+    Files.createDirectories(Paths.get(root, stage))
+    Files.writeString(Paths.get(root, stage, "schema.json"), readBack(df.schema).json)
+    val (lineage, info) = lineageOf(readData(df.sparkSession, root, stage))
     val m = StageManifest(stage, fingerprint, inputs, lineage, info)
     write(root, m)
     m
@@ -173,8 +177,26 @@ object Manifest {
       catch { case _: Exception => false } // unreadable data = invalid
     }
 
-  def readData(spark: SparkSession, root: String, stage: String): DataFrame =
-    spark.read.parquet(s"$root/$stage/data")
+  /** The schema a footer-inferring read reports for data written with
+    * `t`: parquet files read back with every level nullable. */
+  private def readBack(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = readBack(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(readBack(a.elementType), containsNull = true)
+    case m: MapType => MapType(readBack(m.keyType), readBack(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** A checkpoint's data, read with its stored schema; checkpoints written
+    * before schema.json existed fall back to footer inference. */
+  def readData(spark: SparkSession, root: String, stage: String): DataFrame = {
+    val schema = Paths.get(root, stage, "schema.json")
+    val reader =
+      if (Files.exists(schema))
+        spark.read.schema(DataType.fromJson(Files.readString(schema)).asInstanceOf[StructType])
+      else spark.read
+    reader.parquet(s"$root/$stage/data")
+  }
 
   /** `pdal info`-style preview served from the manifest alone — NO Spark
     * job touches the data (the reference's header-only inspect,

@@ -87,6 +87,12 @@ object Pipeline {
       * StatsFilter.cpp:59-71 — mid-chain XML pipelines rely on that).
       * Keyed by stage tag. */
     var sideStats: List[(String, Array[org.apache.spark.sql.Row])] = Nil
+    /** The facts as they stand now, for a stage built later. */
+    def snapshot: RunCtx = {
+      val c = new RunCtx
+      c.inferredSrs = inferredSrs; c.inferredCount = inferredCount; c.sideStats = sideStats
+      c
+    }
   }
 
   /** Build one stage's transformation. Readers ignore their input. */
@@ -561,6 +567,14 @@ object Pipeline {
   final case class RunResult(df: DataFrame, resumedStages: Seq[String],
                              ranStages: Seq[String])
 
+  /** Stages built as soon as the runner reaches them: external side
+    * effects (writers, the stats side channel) and readers, whose build
+    * records facts (SRS, point count) for later stages. Every other
+    * stage is built only when a stage that runs forces its output. */
+  private def eager(typ: String): Boolean =
+    typ.startsWith("writers.") || typ == "filters.stats_passthrough" ||
+      typ == "readers.las" || typ == "readers.faux"
+
   /** Execute a pipeline spec — a DAG, not just a chain. Stages may carry
     * a `"tag"` and reference earlier tags via `"inputs": [tag, ...]`
     * (the reference's multi-input stage graph, src/PipelineReader.cpp:
@@ -575,15 +589,20 @@ object Pipeline {
     * re-run resumes every stage whose fingerprint still matches. A
     * resumed WRITER additionally re-verifies its external destination
     * and re-runs if the destination has been deleted out from under the
-    * checkpoint (the checkpoint proves the work, not the side effect). */
+    * checkpoint (the checkpoint proves the work, not the side effect).
+    *
+    * Building is lazy: a pure stage (not checkpointed, no side effect) is
+    * built only when a stage that runs consumes it, with the run facts as
+    * they stood at its position — so a resume never rebuilds the pure
+    * stages upstream of its checkpoints. The last stage is always built. */
   def run(spark: SparkSession, specJson: String): RunResult = {
     val (stages, ckRoot) = parse(specJson)
     require(stages.nonEmpty, "empty pipeline")
     val ctx = new RunCtx
-    var prev: Option[(DataFrame, String)] = None
-    val byTag = scala.collection.mutable.Map.empty[String, (DataFrame, String)]
+    var prev: Option[(() => DataFrame, String)] = None
+    val byTag = scala.collection.mutable.Map.empty[String, (() => DataFrame, String)]
     var resumed = Vector.empty[String]
-    var ran = Vector.empty[String]
+    val ran = scala.collection.mutable.SortedSet.empty[String]
     stages.zipWithIndex.foreach { case (st, i) =>
       val stageId = f"$i%03d_${st.typ.replace('.', '_')}"
       // json4s extracts a MISSING array field as Some(Nil) — only a
@@ -592,7 +611,7 @@ object Pipeline {
         case JArray(tags) if tags.nonEmpty => st.strs("inputs")
         case _ => None
       }
-      val inputs: Seq[(DataFrame, String)] = explicitInputs match {
+      val inputs: Seq[(() => DataFrame, String)] = explicitInputs match {
         case Some(tags) => tags.map(t => byTag.getOrElse(t,
           throw new IllegalArgumentException(s"stage $stageId references unknown tag '$t'")))
         case None => if (st.typ.startsWith("readers.")) Nil else prev.toSeq
@@ -615,7 +634,7 @@ object Pipeline {
       // before trusting it (bit rot / out-of-band edits)
       def digestsIntact = !st.bool("validate_resume").getOrElse(false) ||
         Manifest.validate(spark, ckRoot.get, stageId)
-      val df =
+      val df: () => DataFrame =
         if (wantCk && Manifest.resumable(ckRoot.get, stageId, fingerprint) &&
             destinationIntact && digestsIntact) {
           resumed :+= stageId
@@ -624,24 +643,36 @@ object Pipeline {
           if (st.typ == "readers.las")
             st.str("path").filterNot(_.exists("*?[".contains(_)))
               .foreach(p => ctx.inferredSrs = LasDecode.srsOf(p))
-          Manifest.readData(spark, ckRoot.get, stageId)
+          memo(Manifest.readData(spark, ckRoot.get, stageId))
         } else {
-          var out = st.typ match {
-            case "filters.merge" if inputs.size > 1 =>
-              inputs.map(_._1).reduce(_ unionByName _)
-            case _ => build(spark, st, ctx)(inputs.headOption.map(_._1))
+          val stageCtx = if (eager(st.typ) || wantCk) ctx else ctx.snapshot
+          val built = memo {
+            var out = st.typ match {
+              case "filters.merge" if inputs.size > 1 =>
+                inputs.map(_._1()).reduce(_ unionByName _)
+              case _ => build(spark, st, stageCtx)(inputs.headOption.map(_._1()))
+            }
+            if (wantCk) {
+              Manifest.checkpoint(ckRoot.get, stageId, fingerprint,
+                explicitInputs.getOrElse(if (i > 0) Seq(f"${i - 1}%03d") else Nil), out)
+              out = Manifest.readData(spark, ckRoot.get, stageId)
+            }
+            ran += stageId
+            out
           }
-          if (wantCk) {
-            Manifest.checkpoint(ckRoot.get, stageId, fingerprint,
-              explicitInputs.getOrElse(if (i > 0) Seq(f"${i - 1}%03d") else Nil), out)
-            out = Manifest.readData(spark, ckRoot.get, stageId)
-          }
-          ran :+= stageId
-          out
+          if (eager(st.typ) || wantCk) built()
+          built
         }
       st.str("tag").foreach(t => byTag(t) = (df, fingerprint))
       prev = Some((df, fingerprint))
     }
-    RunResult(prev.get._1, resumed, ran)
+    val last = prev.get._1()
+    RunResult(last, resumed, ran.toSeq)
+  }
+
+  /** `body`, evaluated once, on first call. */
+  private def memo(body: => DataFrame): () => DataFrame = {
+    lazy val v = body
+    () => v
   }
 }

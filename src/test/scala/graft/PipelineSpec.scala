@@ -345,4 +345,64 @@ class PipelineSpec extends AnyFunSuite {
       assert(gotNonPoint === wantNonPoint)
     }
   }
+
+  /** Call-site names of the jobs `body` launches. */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val sites = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        sites.synchronized(sites ++= j.stageInfos.map(_.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(300) } // drain listener-bus events
+    finally spark.sparkContext.removeSparkListener(listener)
+    sites.synchronized(sites.toSeq)
+  }
+
+  test("resume never builds a pure stage whose only consumer resumes") {
+    // a non-checkpointed outlier filter (eager kNN rounds when built)
+    // between a reader and a checkpointed ground filter: the resume reads
+    // the ground checkpoint and must launch nothing for the outlier stage
+    val ck = tmp()
+    val spec =
+      s"""{ "pipeline": [
+         |  {"type": "readers.faux", "mode": "uniform",
+         |   "bounds": [0, 0, 0, 200, 200, 5], "count": 800, "seed": 4},
+         |  {"type": "filters.outlier", "mean_k": 4, "multiplier": 2.0, "level": 4},
+         |  {"type": "filters.ground", "cell_size": 1.0, "max_window_size": 5.0,
+         |   "checkpoint": true}
+         |], "checkpoint_root": "$ck" }""".stripMargin
+    def knn(s: String) = s.contains("NbrBlocks") || s.contains("JoinOps")
+    var cold: Pipeline.RunResult = null
+    val coldSites = jobSites { cold = Pipeline.run(spark, spec) }
+    assert(coldSites.exists(knn), s"cold run built no kNN round: $coldSites")
+    var again: Pipeline.RunResult = null
+    val sites = jobSites { again = Pipeline.run(spark, spec) }
+    assert(again.resumedStages === Seq("002_filters_ground"))
+    assert(!sites.exists(knn), s"resume launched outlier-stage jobs: $sites")
+    // the reader still builds (it records run facts), the outlier stage not
+    assert(again.ranStages === Seq("000_readers_faux"), s"ran ${again.ranStages}")
+    def rows(r: Pipeline.RunResult) =
+      r.df.select("doc_id", "span_idx", "classification").collect().map(_.toString).sorted.toSeq
+    assert(rows(again) === rows(cold))
+  }
+
+  test("checkpoints read back with their stored schema, no inference job") {
+    val ck = tmp()
+    val df = sources.Faux.ramp(spark, sources.Faux.Box3(0, 0, 0, 10, 10, 10), 300)
+      .withColumn("tags", array(col("x"), col("y")))
+      .withColumn("nest", struct(col("z").as("zz"), map(lit("k"), col("x")).as("m")))
+    Manifest.checkpoint(ck, "st", "fp0", Nil, df)
+    val inferred = spark.read.parquet(s"$ck/st/data")
+    var stored: org.apache.spark.sql.DataFrame = null
+    val sites = jobSites { stored = Manifest.readData(spark, ck, "st") }
+    assert(sites.isEmpty, s"schema read launched jobs: $sites")
+    assert(stored.schema === inferred.schema)
+    assert(Manifest.lineageOf(stored)._1 === Manifest.lineageOf(inferred)._1)
+    assert(Manifest.validate(spark, ck, "st"))
+    // a checkpoint from before schema.json still resumes, by inference
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ck, "st", "schema.json"))
+    assert(Manifest.readData(spark, ck, "st").schema === inferred.schema)
+    assert(Manifest.validate(spark, ck, "st"))
+  }
 }
