@@ -51,18 +51,8 @@ object PclBlock {
   private implicit val fmt: Formats = DefaultFormats
 
   def runFile(df: DataFrame, path: String): DataFrame = {
-    val bytes = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-      val in = fs.open(p)
-      try {
-        val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](65536)
-        var n = in.read(buf)
-        while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-        out.toByteArray
-      } finally in.close()
-    }
+    val bytes = graft.sources.PointCodec.readBytes(
+      new org.apache.hadoop.fs.Path(path), df.sparkSession.sparkContext.hadoopConfiguration)
     run(df, new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
   }
 

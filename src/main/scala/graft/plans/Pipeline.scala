@@ -6,7 +6,7 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 
 import graft.operators._
-import graft.sources.{Bpf, DocSynth, Faux, Icebridge, LasDecode, LasWriter, Nitf, Optech, Pcd, Ply, Qfit, RasterWrite, RialtoWrite, Sbet, Terrasolid}
+import graft.sources.{Bpf, DocSynth, Faux, Icebridge, LasDecode, LasWriter, Nitf, Optech, Pcd, Ply, PointCodec, Qfit, RasterWrite, RialtoWrite, Sbet, ShardedWrite, Terrasolid}
 import graft.model.Model
 import graft.index.CellSpace
 
@@ -95,11 +95,84 @@ object Pipeline {
     }
   }
 
+  /** The codec table of the point-format stages: `readers.<fmt>` and
+    * `writers.<fmt>` find their [[PointCodec]] here, built from the
+    * stage's own options (and, for LAS auto quantization, from the
+    * frame a writer writes). */
+  private def codecOf(st: StageSpec): Option[DataFrame => PointCodec] = st.typ match {
+    case "readers.ply" | "writers.ply" => Some(_ => Ply.Codec(st.str("format").getOrElse(
+      if (st.str("shard_column").isDefined) "binary_little_endian" else "ascii")))
+    case "readers.pcd" | "writers.pcd" => Some(_ => Pcd.Codec(
+      // compression=true mirrors the reference's binary_compressed path
+      st.str("data").getOrElse(
+        if (st.bool("compression").getOrElse(false)) "binary_compressed" else "ascii"),
+      st.bool("shift_origin").getOrElse(false)))
+    case "readers.bpf" | "writers.bpf" => Some(_ => Bpf.Codec(
+      st.strs("columns").getOrElse(Nil), st.int("count").getOrElse(Int.MaxValue),
+      Bpf.WriteOpts(
+        format = st.str("format").getOrElse("dimension").toUpperCase match {
+          case f if f.contains("POINT") => Bpf.PointMajor
+          case f if f.contains("BYTE")  => Bpf.ByteMajor
+          case _                        => Bpf.DimMajor
+        },
+        compression = st.bool("compression").getOrElse(false),
+        coordId = st.int("coord_id").getOrElse(0))))
+    case "writers.las" => Some { d =>
+      val xf = (st.dbls("scale"), st.dbls("offset")) match {
+        case (Some(s), Some(o)) => LasWriter.XForms(s(0), s(1), s(2), o(0), o(1), o(2))
+        case _ =>
+          // auto mode: offset = data min, scale = range / int32 max
+          // (reference src/Writer.cpp:86-148 setAutoXForm)
+          val a = Quantize.autoXForm(d, Seq("x", "y", "z"))
+          LasWriter.XForms(a("x").scale, a("y").scale, a("z").scale,
+            a("x").offset, a("y").offset, a("z").offset)
+      }
+      // a .laz path (or "compression": true) emits LASzip
+      LasDecode.Codec(st.int("format").getOrElse(3), xf,
+        st.str("path").get.endsWith(".laz") || st.bool("compression").getOrElse(false))
+    }
+    case "readers.nitf" => Some(_ => Nitf.Codec())
+    // `count` prunes the HDF5 chunk B-tree walk to rows [0, count)
+    case "readers.icebridge" => Some(_ => Icebridge.Codec(
+      st.int("count").map(_.toLong).getOrElse(Long.MaxValue)))
+    case "readers.sbet" => Some(_ => Sbet.Codec())
+    case "readers.qfit" => Some(_ => Qfit.Codec(
+      st.bool("flip_coordinates").getOrElse(true), st.dbl("scale_z").getOrElse(0.001)))
+    case "readers.terrasolid" => Some(_ => Terrasolid.Codec())
+    case "readers.optech" => Some(_ => Optech.Codec())
+    case _ => None
+  }
+
+  /** A codec-table stage. A reader reads `path` (a glob one task per
+    * file, one file on the driver). A writer writes its input, after an
+    * optional deterministic `order_by` (a file's byte stream is
+    * sequential; unordered writes are iterator-order): `shard_column`
+    * routes to the executor-parallel [[ShardedWrite]] (one file per
+    * distinct shard value under `path` as a directory), otherwise one
+    * file from the driver. */
+  private def pointStage(spark: SparkSession, st: StageSpec, in: Option[DataFrame],
+                         codec: DataFrame => PointCodec): DataFrame = {
+    val path = st.str("path").get
+    if (st.typ.startsWith("readers.")) PointCodec.read(spark, path, codec(null)) // no frame: a reader
+    else {
+      val d = st.strs("order_by").filter(_.nonEmpty)
+        .map(cs => in.get.orderBy(cs.map(col): _*)).getOrElse(in.get)
+      st.str("shard_column") match {
+        case Some(sc) => ShardedWrite.run(d, path, sc, codec(d))
+        case None => codec(d).write(path, d)
+      }
+      d
+    }
+  }
+
   /** Build one stage's transformation. Readers ignore their input. */
   def build(spark: SparkSession, st: StageSpec,
             ctx: RunCtx = new RunCtx): Option[DataFrame] => DataFrame = {
     val t = st.typ
+    val codec = codecOf(st)
     in => t match {
+      // ---- point-format readers and writers: the codec table -----------
+      case _ if codec.isDefined => pointStage(spark, st, in, codec.get)
       // ---- readers -----------------------------------------------------
       case "readers.doc" =>
         val docs = st.str("path") match {
@@ -108,51 +181,8 @@ object Pipeline {
             .getOrElse(throw new IllegalArgumentException("readers.doc needs path or sf_dir")))
         }
         Model.explodePoints(docs)
-      case "readers.ply" =>
-        // one task per file for globs; driver decode for one fixture
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Ply.asDistributedDataFrame(spark, p)
-        else Ply.asDataFrame(spark, p)
       case "readers.parquet" =>
         spark.read.parquet(st.str("path").get)
-      case "readers.nitf" =>
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Nitf.asDistributedDataFrame(spark, p)
-        else Nitf.asDataFrame(spark, p)
-      case "readers.icebridge" =>
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Icebridge.asDistributedDataFrame(spark, p)
-        else Icebridge.asDataFrame(spark, p,
-          // `count` prunes the HDF5 chunk B-tree walk to rows [0, count)
-          st.int("count").map(_.toLong).getOrElse(Long.MaxValue))
-      case "readers.pcd" =>
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Pcd.asDistributedDataFrame(spark, p)
-        else Pcd.asDataFrame(spark, p)
-      case "readers.bpf" =>
-        val p = st.str("path").get
-        val cols = st.strs("columns").getOrElse(Nil)
-        if (p.exists("*?[".contains(_))) Bpf.asDistributedDataFrame(spark, p, cols)
-        else Bpf.asDataFrame(spark, p, st.int("count").getOrElse(Int.MaxValue), cols)
-      case "readers.sbet" =>
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Sbet.asDistributedDataFrame(spark, p)
-        else Sbet.asDataFrame(spark, p)
-      case "readers.qfit" =>
-        val p = st.str("path").get
-        val flip = st.bool("flip_coordinates").getOrElse(true)
-        val sz = st.dbl("scale_z").getOrElse(0.001)
-        if (p.exists("*?[".contains(_)))
-          Qfit.asDistributedDataFrame(spark, p, flip, sz)
-        else Qfit.asDataFrame(spark, p, flip, sz)
-      case "readers.terrasolid" =>
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Terrasolid.asDistributedDataFrame(spark, p)
-        else Terrasolid.asDataFrame(spark, p)
-      case "readers.optech" =>
-        val p = st.str("path").get
-        if (p.exists("*?[".contains(_))) Optech.asDistributedDataFrame(spark, p)
-        else Optech.asDataFrame(spark, p)
       case "readers.faux" =>
         val b = st.dbls("bounds").map(a => Faux.Box3(a(0), a(1), a(2), a(3), a(4), a(5)))
           .getOrElse(Faux.Box3(0, 0, 0, 1, 1, 1))
@@ -176,7 +206,7 @@ object Pipeline {
         val path = st.str("path").get
         // infer the file's SRS from its VLR GeoTIFF keys / WKT record for
         // downstream filters.reprojection auto mode (glob paths skipped)
-        if (!path.exists("*?[".contains(_))) {
+        if (!PointCodec.isGlob(path)) {
           ctx.inferredSrs = LasDecode.srsOf(path)
           ctx.inferredCount = Some(LasDecode.headerOf(path).pointCount)
         }
@@ -460,17 +490,6 @@ object Pipeline {
         val w = d.write.mode("overwrite")
         (if (byTile.nonEmpty) w.partitionBy(byTile: _*) else w).parquet(st.str("path").get)
         d
-      case "writers.ply" =>
-        val d = st.strs("order_by").filter(_.nonEmpty)
-          .map(cs => in.get.orderBy(cs.map(col): _*)).getOrElse(in.get)
-        // shard_column routes to the executor-parallel sharded writer
-        st.str("shard_column") match {
-          case Some(sc) => Ply.writeSharded(st.str("path").get, d, sc,
-            st.str("format").getOrElse("binary_little_endian"))
-          case None => Ply.write(st.str("path").get, d,
-            st.str("format").getOrElse("ascii"))
-        }
-        d
       case "writers.sbet" =>
         Sbet.write(st.str("path").get, in.get)
         in.get
@@ -483,66 +502,6 @@ object Pipeline {
           case _ => LasWriter.XForms(0.01, 0.01, 0.01, 0, 0, 0)
         }
         Nitf.write(st.str("path").get, d, st.int("format").getOrElse(1), xf)
-        d
-      case "writers.pcd" =>
-        val d = st.strs("order_by").filter(_.nonEmpty)
-          .map(cs => in.get.orderBy(cs.map(col): _*)).getOrElse(in.get)
-        // compression=true mirrors the reference's binary_compressed path
-        val mode = st.str("data").getOrElse(
-          if (st.bool("compression").getOrElse(false)) "binary_compressed"
-          else "ascii")
-        // shard_column routes to the executor-parallel sharded writer
-        st.str("shard_column") match {
-          case Some(sc) => Pcd.writeSharded(st.str("path").get, d, sc, mode,
-            st.bool("shift_origin").getOrElse(false))
-          case None => Pcd.write(st.str("path").get, d, mode,
-            st.bool("shift_origin").getOrElse(false))
-        }
-        d
-      case "writers.bpf" =>
-        val d = st.strs("order_by").filter(_.nonEmpty)
-          .map(cs => in.get.orderBy(cs.map(col): _*)).getOrElse(in.get)
-        val fmt = st.str("format").getOrElse("dimension").toUpperCase match {
-          case f if f.contains("POINT") => Bpf.PointMajor
-          case f if f.contains("BYTE")  => Bpf.ByteMajor
-          case _                        => Bpf.DimMajor
-        }
-        val bpfOpts = Bpf.WriteOpts(
-          format = fmt,
-          compression = st.bool("compression").getOrElse(false),
-          coordId = st.int("coord_id").getOrElse(0))
-        st.str("shard_column") match {
-          case Some(sc) => Bpf.writeSharded(st.str("path").get, d, sc, bpfOpts)
-          case None => Bpf.write(st.str("path").get, d, bpfOpts)
-        }
-        d
-      case "writers.las" =>
-        // optional deterministic file order (a LAS byte stream is
-        // sequential; unordered writes are iterator-order)
-        val d = st.strs("order_by").filter(_.nonEmpty)
-          .map(cs => in.get.orderBy(cs.map(col): _*)).getOrElse(in.get)
-        val fmt = st.int("format").getOrElse(3)
-        val xf = (st.dbls("scale"), st.dbls("offset")) match {
-          case (Some(s), Some(o)) => LasWriter.XForms(s(0), s(1), s(2), o(0), o(1), o(2))
-          case _ =>
-            // auto mode: offset = data min, scale = range / int32 max
-            // (reference src/Writer.cpp:86-148 setAutoXForm)
-            val a = Quantize.autoXForm(d, Seq("x", "y", "z"))
-            LasWriter.XForms(a("x").scale, a("y").scale, a("z").scale,
-              a("x").offset, a("y").offset, a("z").offset)
-        }
-        // shard_column routes to the executor-parallel sharded writer
-        // (one LAS per distinct shard value under "path" as a directory);
-        // a .laz path (or "compression": true) emits LASzip; default
-        // stays the single-file driver emit for fixture parity
-        val wpath = st.str("path").get
-        val compressed = wpath.endsWith(".laz") || st.bool("compression").getOrElse(false)
-        st.str("shard_column") match {
-          case Some(sc) =>
-            LasWriter.writeSharded(wpath, d, fmt, xf, sc, compress = compressed)
-          case None if compressed => LasWriter.writeLaz(wpath, d, fmt, xf)
-          case None => LasWriter.write(wpath, d, fmt, xf)
-        }
         d
       case "writers.csv" =>
         val d = in.get
@@ -641,7 +600,7 @@ object Pipeline {
           // a resumed LAS reader still feeds SRS inference downstream
           // (header+VLR read only — no point data)
           if (st.typ == "readers.las")
-            st.str("path").filterNot(_.exists("*?[".contains(_)))
+            st.str("path").filterNot(PointCodec.isGlob)
               .foreach(p => ctx.inferredSrs = LasDecode.srsOf(p))
           memo(Manifest.readData(spark, ckRoot.get, stageId))
         } else {

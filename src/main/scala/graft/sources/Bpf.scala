@@ -390,41 +390,26 @@ object Bpf {
     case v: Float  => v.toDouble
   }
 
-  /** Driver decode of one file (fixture-parity path). */
-  def asDataFrame(spark: SparkSession, path: String,
-                  count: Int = Int.MaxValue,
-                  columns: Seq[String] = Nil): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val (schema, rows) = decode(bytes, docId, count, columns)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 100000)),
-      schema)
+  /** BPF on the codec seam. `columns` prunes dimensions codec-side
+    * (selective block decompression), `count` caps each file's points,
+    * `opts` shapes the written file. */
+  final case class Codec(columns: Seq[String] = Nil, count: Int = Int.MaxValue,
+                         opts: WriteOpts = WriteOpts()) extends PointCodec {
+    def exts: Seq[String] = Seq("bpf")
+    def schema(bytes: => Array[Byte]): StructType = schemaOf(readHeader(bytes), columns)
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      Bpf.decode(bytes, docId, count, columns)
+    override def writeCols(schema: StructType): Seq[StructField] =
+      writeColumns(schema).map(schema(_))
+    override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =
+      imageBytes(cols.map(_._1),
+        recs.map(_.map(_.asInstanceOf[Number].doubleValue)).toArray, opts)
   }
 
-  /** Executor-parallel decode, one task per matched file. All files must
-    * share one dimension table (schema from the first). `columns` prunes
-    * dimensions codec-side (selective block decompression). */
+  /** Executor-parallel decode, one task per matched file. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String,
-                             columns: Seq[String] = Nil): DataFrame = {
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-        reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
-    val first = bin.select("content").head().getAs[Array[Byte]](0)
-    val schema = schemaOf(readHeader(first), columns)
-    val rdd = bin.rdd.flatMap { r =>
-      val path = r.getString(0)
-      val docId = path.substring(path.lastIndexOf('/') + 1)
-      decode(r.getAs[Array[Byte]](1), docId, columns = columns)._2
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+                             columns: Seq[String] = Nil): DataFrame =
+    PointCodec.readFiles(spark, pathGlob, Codec(columns))
 
   // ---- writer ---------------------------------------------------------
 
@@ -579,77 +564,11 @@ object Bpf {
     * as labels X/Y/Z; the header carries the point count and
     * per-dimension raw min/max gathered in the data pass
     * (BpfWriter::done back-patches the same way). */
-  def write(path: String, df: DataFrame, opts: WriteOpts = WriteOpts()): Unit = {
-    val ordered = writeColumns(df.schema)
-    val rows = df.selectExpr(ordered.map(n => s"cast(`$n` as double)"): _*)
-      .collect().map(r => Array.tabulate(ordered.size)(r.getDouble))
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      imageBytes(ordered, rows, opts))
-  }
+  def write(path: String, df: DataFrame, opts: WriteOpts = WriteOpts()): Unit =
+    Codec(opts = opts).write(path, df)
 
-  /** Executor-sharded BPF export: one .bpf file per distinct value of
-    * `shardCol`, written by the executors (no driver funnel). A shard is
-    * one tile/chip — the chipper/splitter capacity bounds the per-shard
-    * buffer, exactly the discipline the reference's DB block writers
-    * prescribe (chip upstream, then write blocks). Scheme'd destinations
-    * publish two-phase (task-local temp -> `.inprogress` upload ->
-    * rename), like LasWriter.writeSharded. Returns shard file names. */
+  /** Executor-sharded BPF export ([[ShardedWrite.run]]). */
   def writeSharded(dir: String, df: DataFrame, shardCol: String,
-                   opts: WriteOpts = WriteOpts(), numTasks: Int = 0): Seq[String] = {
-    import org.apache.spark.sql.functions.col
-    val hasScheme = dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
-    if (hasScheme) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(new org.apache.hadoop.conf.Configuration()).mkdirs(p)
-    } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val ordered = writeColumns(df.schema)
-    val cols = df.columns
-    require(cols.contains(shardCol), s"shard column $shardCol not in ${cols.mkString(",")}")
-    val tasks = if (numTasks > 0) numTasks
-                else df.sparkSession.sparkContext.defaultParallelism
-    val sortKeys = (Seq(shardCol) ++ Seq("doc_id", "span_idx").filter(cols.contains))
-      .map(col)
-    val slim = df
-      .selectExpr((shardCol +: Seq("doc_id", "span_idx").filter(cols.contains))
-        .map(n => s"`$n`") ++ ordered.map(n => s"cast(`$n` as double) as `__v_$n`"): _*)
-      .repartition(tasks, col(shardCol))
-      .sortWithinPartitions(sortKeys: _*)
-    val valIdx = ordered.indices.map(_ + slim.columns.length - ordered.size)
-    import org.apache.spark.sql.Encoders
-    val names = slim.mapPartitions { it =>
-      def publish(name: String, bytes: Array[Byte]): Unit =
-        if (hasScheme) {
-          val tmp = java.io.File.createTempFile("graftbpf", name)
-          java.nio.file.Files.write(tmp.toPath, bytes)
-          val destDir = new org.apache.hadoop.fs.Path(dir)
-          val fs = destDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          val tmpDst = new org.apache.hadoop.fs.Path(destDir, name + ".inprogress")
-          val dst = new org.apache.hadoop.fs.Path(destDir, name)
-          fs.copyFromLocalFile(false, true,
-            new org.apache.hadoop.fs.Path(tmp.toURI), tmpDst)
-          if (fs.exists(dst)) fs.delete(dst, false)
-          require(fs.rename(tmpDst, dst), s"two-phase rename failed for $name")
-          tmp.delete(); ()
-        } else java.nio.file.Files.write(
-          java.nio.file.Paths.get(s"$dir/$name"), bytes)
-
-      var cur: Any = null
-      var buf = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-      var written = List.empty[String]
-      def close(): Unit = if (cur != null && buf.nonEmpty) {
-        val name = s"shard_$cur.bpf"
-        publish(name, imageBytes(ordered, buf.toArray, opts))
-        written ::= name
-        buf = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-      }
-      it.foreach { r =>
-        val shard = r.get(0)
-        if (shard != cur) { close(); cur = shard }
-        buf += valIdx.map(r.getDouble).toArray
-      }
-      close()
-      written.iterator
-    }(Encoders.STRING).collect().toSeq
-    names
-  }
+                   opts: WriteOpts = WriteOpts(), numTasks: Int = 0): Seq[String] =
+    ShardedWrite.run(df, dir, shardCol, Codec(opts = opts), numTasks)
 }

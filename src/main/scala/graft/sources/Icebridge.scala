@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Clean-room minimal HDF5 parser — just enough of the PUBLIC "HDF5 File
@@ -387,30 +387,12 @@ object Icebridge {
     (schema, rows)
   }
 
-  def asDataFrame(spark: SparkSession, path: String,
-                  count: Long = Long.MaxValue): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val (sch, rows) = decode(bytes, docId, 0L, count)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 100000)), sch)
-  }
-
-  /** One decode task per matched granule. */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-        reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
-    val rdd = bin.rdd.flatMap { r =>
-      val p = r.getString(0)
-      Icebridge.decode(r.getAs[Array[Byte]](1), p.substring(p.lastIndexOf('/') + 1))._2
-    }
-    spark.createDataFrame(rdd, schema)
+  /** Icebridge on the codec seam; `count` reads rows [0, count) of each
+    * granule (pruning the HDF5 chunk B-tree walk). */
+  final case class Codec(count: Long = Long.MaxValue) extends PointCodec {
+    def exts: Seq[String] = Seq("h5")
+    def schema(bytes: => Array[Byte]): StructType = Icebridge.schema
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      Icebridge.decode(bytes, docId, 0L, count)
   }
 }

@@ -509,40 +509,43 @@ object LasDecode {
     }
   }
 
-  /** DISTRIBUTED LAS ingest: one executor task per file via Spark's
-    * binaryFile source — the natural parallel unit for LAS (each file is
-    * self-describing; the reference reads files serially, one Stage per
-    * file). `pathGlob` may match many files; doc_id = file name. The
-    * per-record decode is the same [[decodeRecord]] the driver path and
-    * the byte-fixture goldens pin. Files too large for one task's buffer
-    * go through [[asSplitDataFrame]] instead (fail-fast guard here). */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    import org.apache.spark.sql.Row
-    // A glob in the PATH makes FileStreamSink.hasMetadata probe the glob
-    // as a literal directory and log a FileNotFoundException stack on
-    // every load; a pathGlobFilter over the parent directory lists the
-    // same files with clean logs.
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-        reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
+  /** LAS/LAZ on the codec seam, with the zero-boxing lane. The writer
+    * parameters (point format, quantization, LASzip compression) only
+    * shape [[PointCodec.encode]] and [[PointCodec.write]]. */
+  final case class Codec(pointFormat: Int = 3,
+                         xf: LasWriter.XForms = LasWriter.XForms(0.01, 0.01, 0.01, 0, 0, 0),
+                         compress: Boolean = false) extends PointCodec with UnsafeLane {
+    def exts: Seq[String] = if (compress) Seq("laz", "las") else Seq("las", "laz")
+    def schema(bytes: => Array[Byte]): StructType = LasDecode.schema
+    def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) = {
+      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      (LasDecode.schema, decodeAll(bytes, bb, readHeader(bb), docId))
+    }
     // zero-boxing lane: decode straight to UnsafeRows (no external Row,
     // no RowEncoder projection) — the boxed path's allocation rate was
     // the measured multi-core decode bottleneck
-    val rdd = bin.rdd.flatMap { r =>
-      val path = r.getString(0)
-      val docId = path.substring(path.lastIndexOf('/') + 1)
-      val bytes = r.getAs[Array[Byte]](1)
+    def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       decodeAllUnsafe(bytes, bb, readHeader(bb), docId)
     }
-    org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema)
+    override def writeCols(schema: StructType): Seq[StructField] =
+      schema.fields.toSeq.filter(f => LasWriter.fieldNames.contains(f.name))
+    override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =
+      LasWriter.imageBytes(cols.map(_._1), recs, pointFormat, xf, compress)
+    override def write(path: String, df: DataFrame): Unit =
+      if (compress) LasWriter.writeLaz(path, df, pointFormat, xf)
+      else LasWriter.write(path, df, pointFormat, xf)
   }
+
+  /** DISTRIBUTED LAS ingest: one executor task per file — the natural
+    * parallel unit for LAS (each file is self-describing; the reference
+    * reads files serially, one Stage per file). `pathGlob` may match many
+    * files; doc_id = file name. The per-record decode is the same
+    * [[decodeRecord]] the driver path and the byte-fixture goldens pin.
+    * Files too large for one task's buffer go through
+    * [[asSplitDataFrame]] instead (fail-fast guard here). */
+  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
+    PointCodec.readFiles(spark, pathGlob, Codec())
 
   /** Every record of a whole-file LAS/LAZ buffer as Rows (decompressing
     * laszip streams first) — the per-file unit the distributed and

@@ -3,8 +3,9 @@ package graft.sources
 import java.io.ByteArrayOutputStream
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 
 /** LAS binary writer — 1.2 for point record formats 0-3, 1.4 for
   * formats 6-8 — the byte-emitting completion of the writers.las
@@ -22,11 +23,10 @@ import org.apache.spark.sql.functions.col
   * Two paths share one record/header encoder:
   *  - [[write]]: single file, driver-side streaming emit (golden
   *    round-trip / fixture parity; one row resident at a time);
-  *  - [[writeSharded]]: the bulk-export production path — rows are
-  *    hash-partitioned by a shard column (e.g. tile id), each executor
-  *    task streams its shards to `<dir>/shard_<value>.las` with the
-  *    shard's own finalized header. One pass, bounded memory per task
-  *    (one record buffer + a running summary); no driver funnel.
+  *  - [[writeSharded]]: the bulk-export production path — the
+  *    [[ShardedWrite]] harness with the LAS codec as its per-shard
+  *    encoder: each shard becomes `<dir>/shard_<value>.las` with its own
+  *    finalized header; no driver funnel.
   */
 object LasWriter {
 
@@ -58,15 +58,18 @@ object LasWriter {
     ret: Int, num: Int, cls: Int, ang: Int, usr: Int, psi: Int, gps: Int,
     r: Int, g: Int, b: Int, nir: Int, chan: Int)
   private object ColIx {
-    def of(columns: Array[String]): ColIx = {
+    def of(columns: Seq[String]): ColIx = {
       val m = columns.zipWithIndex.toMap
-      def i(n: String) = m.getOrElse(n, -1)
-      ColIx(i("x"), i("y"), i("z"), i("intensity"), i("return_number"),
-        i("number_of_returns"), i("classification"), i("scan_angle_rank"),
-        i("user_data"), i("point_source_id"), i("gps_time"),
-        i("red"), i("green"), i("blue"), i("nir"), i("scanner_channel"))
+      val Seq(x, y, z, intens, ret, num, cls, ang, usr, psi, gps, r, g, b, nir, chan) =
+        fieldNames.map(m.getOrElse(_, -1))
+      ColIx(x, y, z, intens, ret, num, cls, ang, usr, psi, gps, r, g, b, nir, chan)
     }
   }
+
+  /** The point-frame columns a LAS record encodes, in [[ColIx]] order. */
+  val fieldNames: Seq[String] = Seq("x", "y", "z", "intensity", "return_number",
+    "number_of_returns", "classification", "scan_angle_rank", "user_data",
+    "point_source_id", "gps_time", "red", "green", "blue", "nir", "scanner_channel")
 
   /** Running per-file summary (the reference's SummaryData). */
   private final class Summary {
@@ -183,23 +186,41 @@ object LasWriter {
     * file = iterator order of `df` — callers wanting a deterministic
     * file sort first. Returns the finalized header. */
   def write(path: String, df: DataFrame, pointFormat: Int, xf: XForms): LasDecode.LasHeader = {
+    val bytes = fileBytes(df.toLocalIterator().asScala, df.columns.toSeq, pointFormat, xf, compress = false)
+    Files.write(Paths.get(path), bytes)
+    LasDecode.readHeader(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN))
+  }
+
+  /** One whole LAS (or, with `compress`, .laz) file image of `rows`, in
+    * iterator order — the record loop the driver writers and the
+    * sharded encoder ([[imageBytes]]) share. */
+  private def fileBytes(rows: Iterator[Row], columns: Seq[String], pointFormat: Int,
+                        xf: XForms, compress: Boolean,
+                        chunkSize: Int = 50000): Array[Byte] = {
     val rl = recordLen(pointFormat)
-    val ix = ColIx.of(df.columns)
+    val ix = ColIx.of(columns)
     val body = new ByteArrayOutputStream()
     val s = new Summary
     val rec = ByteBuffer.allocate(rl).order(ByteOrder.LITTLE_ENDIAN)
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      encodeRecord(rec, it.next(), ix, pointFormat, xf, s)
+    rows.foreach { row =>
+      encodeRecord(rec, row, ix, pointFormat, xf, s)
       body.write(rec.array(), 0, rl)
     }
-    val hdr = headerBytes(pointFormat, xf, s)
-    val out = new ByteArrayOutputStream(hdr.length + body.size())
-    out.write(hdr)
-    body.writeTo(out)
-    Files.write(Paths.get(path), out.toByteArray)
-    LasDecode.readHeader(ByteBuffer.wrap(hdr).order(ByteOrder.LITTLE_ENDIAN))
+    if (compress) lazContainerBytes(body.toByteArray, pointFormat, xf, s, chunkSize)
+    else {
+      val out = new ByteArrayOutputStream()
+      out.write(headerBytes(pointFormat, xf, s))
+      body.writeTo(out)
+      out.toByteArray
+    }
   }
+
+  /** The codec seam's per-shard encoder: one LAS/LAZ file from boxed
+    * records over `columns`. */
+  private[sources] def imageBytes(columns: Seq[String], recs: IndexedSeq[Array[Any]],
+                                  pointFormat: Int, xf: XForms,
+                                  compress: Boolean): Array[Byte] =
+    fileBytes(recs.iterator.map(new GenericRow(_)), columns, pointFormat, xf, compress)
 
   /** Write `df` as a COMPRESSED LAS (.laz): LAS header with the laszip
     * VLR (record 22204) and the point block produced by the clean-room
@@ -212,17 +233,8 @@ object LasWriter {
     * Returns the finalized header. */
   def writeLaz(path: String, df: DataFrame, pointFormat: Int, xf: XForms,
                chunkSize: Int = 50000): LasDecode.LasHeader = {
-    val rl = recordLen(pointFormat)
-    val ix = ColIx.of(df.columns)
-    val body = new ByteArrayOutputStream()
-    val s = new Summary
-    val rec = ByteBuffer.allocate(rl).order(ByteOrder.LITTLE_ENDIAN)
-    val it = df.toLocalIterator()
-    while (it.hasNext) {
-      encodeRecord(rec, it.next(), ix, pointFormat, xf, s)
-      body.write(rec.array(), 0, rl)
-    }
-    val bytes = lazContainerBytes(body.toByteArray, pointFormat, xf, s, chunkSize)
+    val bytes = fileBytes(df.toLocalIterator().asScala, df.columns.toSeq, pointFormat, xf,
+      compress = true, chunkSize)
     Files.write(Paths.get(path), bytes)
     LasDecode.readHeader(ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN))
   }
@@ -277,7 +289,7 @@ object LasWriter {
     require(tileSize > 0, s"tileSize $tileSize")
     val rl = recordLen(pointFormat)
     val sorted = df.orderBy(floor(col("x") / tileSize), floor(col("y") / tileSize))
-    val ix = ColIx.of(sorted.columns)
+    val ix = ColIx.of(sorted.columns.toSeq)
     val body = new ByteArrayOutputStream()
     val s = new Summary
     val rec = ByteBuffer.allocate(rl).order(ByteOrder.LITTLE_ENDIAN)
@@ -392,133 +404,16 @@ object LasWriter {
     out.toByteArray
   }
 
-  /** Bulk-export production path: one LAS shard per distinct value of
-    * `shardCol` (tile id, split id, …), encoded IN THE EXECUTORS.
-    *
-    * Rows are hash-partitioned on the shard column (all rows of a shard
-    * land in exactly one task) and sorted within partitions by (shard,
-    * doc_id, span_idx) so each task streams its shards sequentially:
-    * placeholder header, records one at a time, then the finalized
-    * header seeked back in. Memory per task = one record buffer + one
-    * running summary — independent of shard size.
-    *
-    * Destinations: a PLAIN path writes directly (task-writable shared
-    * filesystem). A path WITH a scheme (`file:/...`, `hdfs://...`,
-    * `s3a://...`) goes through the Hadoop FileSystem API with the
-    * standard object-store-safe TWO-PHASE protocol: each shard is
-    * finalized in a task-local temp file, uploaded as
-    * `<name>.inprogress`, then renamed — a killed task never leaves a
-    * half-written shard under its final name.
-    *
-    * Returns the shard file names written (collected; one small row per
-    * shard). Reference discipline: io/las/LasWriter.cpp single-file
-    * serial emit, fanned out per shard as VERDICT r2 #3 specified. */
+  /** Bulk-export production path: one LAS (or, with `compress`, LAZ)
+    * shard per distinct value of `shardCol` (tile id, split id, …),
+    * encoded in the executors and published two-phase on scheme'd
+    * destinations by [[ShardedWrite.run]]. Returns the shard file names.
+    * Reference discipline: io/las/LasWriter.cpp single-file serial emit,
+    * fanned out per shard. */
   def writeSharded(dir: String, df: DataFrame, pointFormat: Int, xf: XForms,
                    shardCol: String, numTasks: Int = 0,
                    compress: Boolean = false): Seq[String] = {
-    import org.apache.spark.sql.Encoders
-    val hasScheme = dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
-    if (hasScheme) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(new org.apache.hadoop.conf.Configuration()).mkdirs(p)
-    } else Files.createDirectories(Paths.get(dir))
-    val rl = recordLen(pointFormat)
-    val cols = df.columns
-    val ix = ColIx.of(cols)
-    val shardIdx = cols.indexOf(shardCol)
-    require(shardIdx >= 0, s"shard column $shardCol not in ${cols.mkString(",")}")
-    require(!compress || pointFormat <= 3 || pointFormat >= 6,
-      s"compressed shards support formats 0-3 and 6-8, got $pointFormat")
-    val tasks = if (numTasks > 0) numTasks
-                else df.sparkSession.sparkContext.defaultParallelism
-    val sortKeys = (Seq(shardCol) ++ Seq("doc_id", "span_idx").filter(cols.contains))
-      .map(col)
-    val files = df
-      .repartition(tasks, col(shardCol))
-      .sortWithinPartitions(sortKeys: _*)
-      .mapPartitions { it =>
-        val rec = ByteBuffer.allocate(rl).order(ByteOrder.LITTLE_ENDIAN)
-        var cur: Any = null
-        var raf: java.io.RandomAccessFile = null
-        var rafTmp: java.io.File = null   // non-null = two-phase publish
-        var rafName: String = null
-        var s: Summary = null
-        var written = List.empty[String]
-        // compressed path buffers the shard's raw records (a shard is
-        // one tile — bounded by the tiling capacity), then emits the
-        // whole .laz container at close; uncompressed streams records
-        var lazBuf: ByteArrayOutputStream = null
-        var lazName: String = null
-        val headerLen = if (LasDecode.isV14(pointFormat)) 375 else 227
-        // two-phase publish: upload the finished local file as
-        // <name>.inprogress, then rename — object-store-safe commit
-        def publish(local: java.io.File, name: String): Unit = {
-          val destDir = new org.apache.hadoop.fs.Path(dir)
-          val fs = destDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-          val tmpDst = new org.apache.hadoop.fs.Path(destDir, name + ".inprogress")
-          val dst = new org.apache.hadoop.fs.Path(destDir, name)
-          fs.copyFromLocalFile(false, true,
-            new org.apache.hadoop.fs.Path(local.toURI), tmpDst)
-          if (fs.exists(dst)) fs.delete(dst, false)
-          require(fs.rename(tmpDst, dst), s"two-phase rename failed for $name")
-          local.delete(); ()
-        }
-        def writeBlob(name: String, bytes: Array[Byte]): Unit =
-          if (hasScheme) {
-            val tmp = java.io.File.createTempFile("graftshard", name)
-            Files.write(tmp.toPath, bytes)
-            publish(tmp, name)
-          } else Files.write(Paths.get(s"$dir/$name"), bytes)
-        def close(): Unit = {
-          if (raf != null) {
-            raf.seek(0)
-            raf.write(headerBytes(pointFormat, xf, s))
-            raf.close(); raf = null
-            if (rafTmp != null) { publish(rafTmp, rafName); rafTmp = null }
-            rafName = null
-          }
-          if (lazBuf != null) {
-            writeBlob(lazName, lazContainerBytes(lazBuf.toByteArray, pointFormat, xf, s, 50000))
-            lazBuf = null; lazName = null
-          }
-        }
-        def open(shard: Any): Unit = {
-          s = new Summary
-          if (compress) {
-            lazName = s"shard_$shard.laz"
-            lazBuf = new ByteArrayOutputStream()
-            written ::= lazName
-          } else {
-            rafName = s"shard_$shard.las"
-            val target =
-              if (hasScheme) { rafTmp = java.io.File.createTempFile("graftshard", rafName); rafTmp.getPath }
-              else s"$dir/$rafName"
-            raf = new java.io.RandomAccessFile(target, "rw")
-            raf.setLength(0)
-            raf.write(new Array[Byte](headerLen)) // placeholder
-            written ::= rafName
-          }
-        }
-        new Iterator[String] {
-          private var done = false
-          def hasNext: Boolean = !done
-          def next(): String = {
-            while (it.hasNext) {
-              val row = it.next()
-              val shard = row.get(shardIdx)
-              if ((raf == null && lazBuf == null) || shard != cur) {
-                close(); open(shard); cur = shard
-              }
-              encodeRecord(rec, row, ix, pointFormat, xf, s)
-              if (raf != null) raf.write(rec.array(), 0, rl)
-              else lazBuf.write(rec.array(), 0, rl)
-            }
-            close(); done = true
-            written.mkString(",")
-          }
-        }.filter(_.nonEmpty)
-      }(Encoders.STRING)
-      .collect()
-    files.flatMap(_.split(',')).toSeq.sorted
+    recordLen(pointFormat) // unsupported formats fail on the driver
+    ShardedWrite.run(df, dir, shardCol, LasDecode.Codec(pointFormat, xf, compress), numTasks)
   }
 }

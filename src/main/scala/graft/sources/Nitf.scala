@@ -2,7 +2,9 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.StructType
 
 /** Clean-room readers.nitf — LAS-in-NITF per the PUBLIC MIL-STD-2500C
   * container layout, covering the reference's nitf plugin read path
@@ -116,38 +118,15 @@ object Nitf {
     } finally out.close()
   }
 
-  private def decodeImage(payload: Array[Byte], docId: String) = {
-    val bb = java.nio.ByteBuffer.wrap(payload)
-      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val h = LasDecode.readHeader(bb)
-    LasDecode.decodeAll(payload, bb, h, docId)
-  }
-
-  /** Driver decode of one .ntf (delegates to the LAS decoder). */
-  def asDataFrame(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val rows = decodeImage(lasPayload(bytes), docId)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows.toSeq, 4), LasDecode.schema)
-  }
-
-  /** One decode task per matched .ntf. */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-        reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
-    val rdd = bin.rdd.flatMap { r =>
-      val p = r.getString(0)
-      val docId = p.substring(p.lastIndexOf('/') + 1)
-      decodeImage(lasPayload(r.getAs[Array[Byte]](1)), docId)
-    }
-    spark.createDataFrame(rdd, LasDecode.schema)
+  /** NITF on the codec seam: the LAS codec over the embedded LAS image
+    * (LIDARA DES payload), zero-boxing lane included. */
+  final case class Codec() extends PointCodec with UnsafeLane {
+    private val las = LasDecode.Codec()
+    def exts: Seq[String] = Seq("ntf", "nitf")
+    def schema(bytes: => Array[Byte]): StructType = LasDecode.schema
+    def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) =
+      las.decode(lasPayload(bytes), docId)
+    def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[InternalRow] =
+      las.decodeUnsafe(lasPayload(bytes), docId)
   }
 }

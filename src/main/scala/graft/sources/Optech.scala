@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 /** Clean-room readers.optech — Optech .csd pulse files
@@ -169,19 +169,11 @@ object Optech {
     rows.result()
   }
 
-  def asDataFrame(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(decode(bytes, docId), 1), schema)
-  }
-
-  /** One task per matched .csd file. */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val rdd = Trajectory.binaryFiles(spark, pathGlob).rdd.flatMap { r =>
-      val path = r.getString(0)
-      decode(r.getAs[Array[Byte]](1), path.substring(path.lastIndexOf('/') + 1))
-    }
-    spark.createDataFrame(rdd, schema)
+  /** Optech on the codec seam. */
+  final case class Codec() extends PointCodec {
+    def exts: Seq[String] = Seq("csd")
+    def schema(bytes: => Array[Byte]): StructType = Optech.schema
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      (Optech.schema, Optech.decode(bytes, docId))
   }
 }

@@ -298,36 +298,21 @@ object Pcd {
     }
   }
 
-  /** Driver decode of one file (fixture-parity path). */
-  def asDataFrame(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val (schema, rows) = decode(bytes, docId)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 100000)),
-      schema)
+  /** PCD on the codec seam; `data` and `shiftOrigin` shape the
+    * written file. */
+  final case class Codec(data: String = "binary_compressed",
+                         shiftOrigin: Boolean = false) extends PointCodec {
+    def exts: Seq[String] = Seq("pcd")
+    def schema(bytes: => Array[Byte]): StructType = schemaOf(parseHeader(bytes))
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      Pcd.decode(bytes, docId)
+    override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =
+      imageBytes(cols, recs, data, shiftOrigin)
   }
 
   /** Executor-parallel decode, one task per matched file. */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-        reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
-    val first = bin.select("content").head().getAs[Array[Byte]](0)
-    val schema = schemaOf(parseHeader(first))
-    val rdd = bin.rdd.flatMap { r =>
-      val path = r.getString(0)
-      val docId = path.substring(path.lastIndexOf('/') + 1)
-      decode(r.getAs[Array[Byte]](1), docId)._2
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
+    PointCodec.readFiles(spark, pathGlob, Codec())
 
   // ---- writer -----------------------------------------------------------
 
@@ -343,10 +328,6 @@ object Pcd {
     case other => throw new IllegalArgumentException(s"pcd: unwritable type $other")
   }
 
-  /** Write the DataFrame's numeric columns as one PCD (driver collect —
-    * fixture-scale by intent; shard upstream for volume). `shiftOrigin`
-    * reproduces the reference writer's PDALtoPCD bounds-min subtraction
-    * (lossy, nothing re-adds it on read). */
   /** Build one complete PCD v0.7 image for `recs` (one boxed value per
     * column each, in `cols` order). Shared by the driver writer and the
     * sharded executor writer. With `shiftOrigin`, x/y/z are rebased to
@@ -439,24 +420,16 @@ object Pcd {
 
   /** Write the DataFrame's numeric columns as ONE PCD file (driver
     * collect — fixture-scale by intent; use [[writeSharded]] for
-    * volume). */
+    * volume). `shiftOrigin` reproduces the reference writer's PDALtoPCD
+    * bounds-min subtraction (lossy, nothing re-adds it on read). */
   def write(path: String, df: DataFrame, data: String = "ascii",
-            shiftOrigin: Boolean = false): Unit = {
-    val cols = ShardedWrite.numericCols(df.schema)
-    val rows = df.select(cols.map(f =>
-      org.apache.spark.sql.functions.col(f.name)): _*).collect()
-      .map(r => Array.tabulate(cols.length)(r.get)).toIndexedSeq
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      imageBytes(cols.map(f => (f.name, f.dataType)), rows, data, shiftOrigin))
-  }
+            shiftOrigin: Boolean = false): Unit =
+    Codec(data, shiftOrigin).write(path, df)
 
-  /** Executor-sharded PCD export: one .pcd per distinct value of
-    * `shardCol`, built and published by the executors (two-phase on
-    * object stores) — no driver funnel. Returns shard file names. */
+  /** Executor-sharded PCD export ([[ShardedWrite.run]]). */
   def writeSharded(dir: String, df: DataFrame, shardCol: String,
                    data: String = "binary_compressed",
                    shiftOrigin: Boolean = false,
                    numTasks: Int = 0): Seq[String] =
-    ShardedWrite.run(df, dir, shardCol, "pcd", numTasks)(
-      (cols, recs) => imageBytes(cols, recs, data, shiftOrigin))
+    ShardedWrite.run(df, dir, shardCol, Codec(data, shiftOrigin), numTasks)
 }

@@ -197,41 +197,20 @@ object Ply {
     }
   }
 
-  /** Driver decode of one file (fixture-parity path, like
-    * LasDecode.asDataFrame). */
-  def asDataFrame(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val (schema, rows) = decode(bytes, docId)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, rows.size / 100000)),
-      schema)
+  /** PLY on the codec seam; `format` is the written layout. */
+  final case class Codec(format: String = "binary_little_endian") extends PointCodec {
+    def exts: Seq[String] = Seq("ply")
+    def schema(bytes: => Array[Byte]): StructType =
+      schemaOf(parseHeader(bytes).elements.find(_.name == "vertex").map(_.props).getOrElse(Nil))
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      Ply.decode(bytes, docId)
+    override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =
+      imageBytes(cols, recs, format)
   }
 
-  /** Executor-parallel decode, one task per matched file. All files must
-    * share one vertex property list (schema comes from the first). */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-        reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
-    val first = bin.select("content").head().getAs[Array[Byte]](0)
-    val schema = {
-      val h = parseHeader(first)
-      schemaOf(h.elements.find(_.name == "vertex").map(_.props).getOrElse(Nil))
-    }
-    val rdd = bin.rdd.flatMap { r =>
-      val path = r.getString(0)
-      val docId = path.substring(path.lastIndexOf('/') + 1)
-      decode(r.getAs[Array[Byte]](1), docId)._2
-    }
-    spark.createDataFrame(rdd, schema)
-  }
+  /** Executor-parallel decode, one task per matched file. */
+  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
+    PointCodec.readFiles(spark, pathGlob, Codec())
 
   // ---- writer ------------------------------------------------------------
 
@@ -301,21 +280,12 @@ object Ply {
     * [[writeSharded]] for volume). doc_id/span_idx are engine row
     * identity, not point dimensions — the reader regenerates them
     * (rename upstream to persist them). */
-  def write(path: String, df: DataFrame, format: String = "ascii"): Unit = {
-    val cols = ShardedWrite.numericCols(df.schema)
-    val rows = df.select(cols.map(f => org.apache.spark.sql.functions
-      .col(f.name)): _*).collect()
-      .map(r => Array.tabulate(cols.length)(r.get)).toIndexedSeq
-    java.nio.file.Files.write(java.nio.file.Paths.get(path),
-      imageBytes(cols.map(f => (f.name, f.dataType)), rows, format))
-  }
+  def write(path: String, df: DataFrame, format: String = "ascii"): Unit =
+    Codec(format).write(path, df)
 
-  /** Executor-sharded PLY export: one .ply per distinct value of
-    * `shardCol`, built and published by the executors (two-phase on
-    * object stores) — no driver funnel. Returns shard file names. */
+  /** Executor-sharded PLY export ([[ShardedWrite.run]]). */
   def writeSharded(dir: String, df: DataFrame, shardCol: String,
                    format: String = "binary_little_endian",
                    numTasks: Int = 0): Seq[String] =
-    ShardedWrite.run(df, dir, shardCol, "ply", numTasks)(
-      (cols, recs) => imageBytes(cols, recs, format))
+    ShardedWrite.run(df, dir, shardCol, Codec(format), numTasks)
 }

@@ -1,0 +1,161 @@
+package graft.sources
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
+
+/** One whole-file point format on the engine's single codec seam — the
+  * reader/writer registry PDAL keeps over its typed point model.
+  *
+  * A codec supplies only what is format-specific: the frame schema of a
+  * file, the decode of one whole file and, where the format has a
+  * writer, the encode of one file from its records. Format parameters
+  * (BPF `columns`, QFIT `flip_coordinates`/`scale_z`, a reader's
+  * `count`, a writer's layout) are constructor arguments of the codec
+  * value. Everything else is written once: the glob and single-file
+  * reads in the companion, the landing-dir stream in
+  * [[graft.streaming.StreamOps.ingestPointFiles]] and the sharded write
+  * in [[ShardedWrite.run]].
+  */
+trait PointCodec extends Serializable {
+
+  /** Lower-case file extensions the codec reads; a written file takes
+    * the first. */
+  def exts: Seq[String]
+
+  /** The frame schema of a file. By name: a format with one fixed
+    * schema never reads the bytes. */
+  def schema(bytes: => Array[Byte]): StructType
+
+  /** Every point of one whole file, with the schema that file decodes
+    * to (doc_id = `docId`, span_idx = the record ordinal). */
+  def decode(bytes: Array[Byte], docId: String): (StructType, IterableOnce[Row])
+
+  /** The columns a written file serializes, in file order. */
+  def writeCols(schema: StructType): Seq[StructField] = ShardedWrite.numericCols(schema)
+
+  /** One complete file from its records (one boxed value per
+    * [[writeCols]] column each, in that order). */
+  def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =
+    throw new UnsupportedOperationException(s"no .${exts.head} writer")
+
+  /** Driver write of the whole frame as ONE file. Collects: fixture-scale
+    * by intent; [[ShardedWrite.run]] is the volume path. */
+  def write(path: String, df: DataFrame): Unit = {
+    val cols = writeCols(df.schema)
+    val recs = df.select(cols.map(f => col(f.name)): _*).collect()
+      .map(r => Array.tabulate(cols.size)(r.get)).toIndexedSeq
+    java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      encode(cols.map(f => (f.name, f.dataType)), recs))
+  }
+}
+
+/** A codec with one fixed schema that decodes straight to UnsafeRows:
+  * its glob read builds the frame with no external Row per point. */
+trait UnsafeLane { this: PointCodec =>
+  def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[InternalRow]
+}
+
+object PointCodec {
+
+  /** Every codec, for dispatch by file extension. */
+  val all: Seq[PointCodec] = Seq(LasDecode.Codec(), Nitf.Codec(), Bpf.Codec(),
+    Pcd.Codec(), Ply.Codec(), Icebridge.Codec(), Sbet.Codec(), Qfit.Codec(),
+    Terrasolid.Codec(), Optech.Codec())
+
+  /** The codec that reads `path`, by its extension. */
+  def forPath(path: String): PointCodec = {
+    val ext = path.substring(path.lastIndexOf('.') + 1).toLowerCase
+    all.find(_.exts.contains(ext)).getOrElse(
+      throw new IllegalArgumentException(s"no point codec reads .$ext ($path)"))
+  }
+
+  def isGlob(path: String): Boolean = path.exists("*?[".contains(_))
+
+  def docIdOf(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  /** One whole file through the Hadoop FileSystem, so scheme'd
+    * (object-store) paths read the same as local ones. */
+  def readBytes(path: Path, conf: Configuration): Array[Byte] = {
+    val in = path.getFileSystem(conf).open(path)
+    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
+    finally in.close()
+  }
+
+  /** The first file by name that `pathGlob` matches (a directory lists
+    * its files; hidden `_`/`.` names are skipped, as the binaryFile
+    * source skips them): the file a multi-file read pins its schema
+    * from. */
+  def firstFile(conf: Configuration, pathGlob: String): Path = {
+    val p = new Path(pathGlob)
+    val fs = p.getFileSystem(conf)
+    Option(fs.globStatus(p)).toSeq.flatten
+      .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
+      .filter(_.isFile).map(_.getPath)
+      .filterNot(q => q.getName.startsWith("_") || q.getName.startsWith("."))
+      .sortBy(_.getName).headOption
+      .getOrElse(throw new IllegalArgumentException(
+        s"no file matches $pathGlob to pin the schema"))
+  }
+
+  /** Decode one file of a multi-file read and fail loudly, naming the
+    * file, when its schema is not the pinned one (a file with its
+    * properties in another order would otherwise land under the wrong
+    * column names). */
+  def decodeChecked(codec: PointCodec, pinned: StructType, path: String,
+                    bytes: Array[Byte]): IterableOnce[Row] = {
+    val (sch, rows) = codec.decode(bytes, docIdOf(path))
+    require(sch == pinned,
+      s"$path: schema ${sch.simpleString} differs from the pinned schema ${pinned.simpleString}")
+    rows
+  }
+
+  /** A `readers.*` path: a glob reads one task per file, a single path
+    * decodes on the driver. */
+  def read(spark: SparkSession, path: String, codec: PointCodec): DataFrame =
+    if (isGlob(path)) readFiles(spark, path, codec) else readFile(spark, path, codec)
+
+  /** Driver decode of one file (fixture-parity path). */
+  def readFile(spark: SparkSession, path: String, codec: PointCodec): DataFrame = {
+    val bytes = readBytes(new Path(path), spark.sparkContext.hadoopConfiguration)
+    val (schema, rows) = codec.decode(bytes, docIdOf(path))
+    val seq = rows.iterator.toVector
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(seq, math.max(1, seq.size / 100000)), schema)
+  }
+
+  /** DISTRIBUTED ingest: one executor task per matched file through
+    * Spark's binaryFile source, doc_id = the file name. The schema is
+    * pinned from the first file by name, read on the driver; every file
+    * must decode to it. */
+  def readFiles(spark: SparkSession, pathGlob: String, codec: PointCodec): DataFrame = {
+    // A glob in the PATH makes FileStreamSink.hasMetadata probe the glob
+    // as a literal directory and log a FileNotFoundException stack on
+    // every load; a pathGlobFilter over the parent directory lists the
+    // same files with clean logs.
+    val slash = pathGlob.lastIndexOf('/')
+    val (dir, leaf) =
+      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
+      else (".", pathGlob)
+    val reader = spark.read.format("binaryFile")
+    val bin = (if (isGlob(leaf)) reader.option("pathGlobFilter", leaf).load(dir)
+      else reader.load(pathGlob))
+      .select("path", "content")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = codec.schema(readBytes(firstFile(conf, pathGlob), conf))
+    codec match {
+      case u: UnsafeLane =>
+        val rdd = bin.rdd.flatMap { r =>
+          u.decodeUnsafe(r.getAs[Array[Byte]](1), docIdOf(r.getString(0)))
+        }
+        org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema)
+      case _ =>
+        spark.createDataFrame(bin.rdd.flatMap { r =>
+          decodeChecked(codec, schema, r.getString(0), r.getAs[Array[Byte]](1))
+        }, schema)
+    }
+  }
+}

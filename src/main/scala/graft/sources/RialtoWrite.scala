@@ -102,7 +102,7 @@ object RialtoWrite {
     * .lodPyramid]]). Returns the number of tile files written. */
   def write(dir: String, df: DataFrame, maxLevel: Int,
             ordinal: String = "span_idx", overwrite: Boolean = false): Long = {
-    val local = !dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
+    val local = !ShardedWrite.hasScheme(dir)
     if (local) {
       val p = java.nio.file.Paths.get(dir)
       if (java.nio.file.Files.exists(p)) {

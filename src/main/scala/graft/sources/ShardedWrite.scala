@@ -2,17 +2,21 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, NumericType, StructField, StructType}
+import org.apache.spark.sql.types.{NumericType, StructField, StructType}
 
-/** Executor-sharded single-format export harness shared by the PLY and
-  * PCD writers (the BPF/LAS writers carry format-specific variants of
-  * the same discipline): one output file per distinct value of a shard
-  * column, each file built ON THE EXECUTOR from its shard's rows and
-  * published two-phase for object-store destinations (task-local temp
-  * -> `.inprogress` upload -> rename), so no points ever funnel through
-  * the driver. A shard is one tile/chip — the upstream chipper/splitter
-  * capacity bounds the per-shard buffer, the discipline the reference's
-  * DB block writers prescribe (chip first, then write blocks).
+/** The one executor-sharded export harness behind every point-format
+  * writer (LAS/LAZ, BPF, PCD, PLY): one output file per distinct value
+  * of a shard column, each file encoded ON THE EXECUTOR by its
+  * [[PointCodec]] from the shard's rows and published two-phase for
+  * object-store destinations (task-local temp -> `.inprogress` upload
+  * -> rename), so no points ever funnel through the driver.
+  *
+  * Buffering discipline: a task buffers ONE shard's records at a time
+  * and encodes it whole at the shard boundary. A shard is one tile/chip,
+  * so the upstream chipper/splitter capacity bounds that buffer — the
+  * discipline the reference's DB block writers prescribe (chip first,
+  * then write blocks). A null shard value fails loudly: a null tile/chip
+  * id is an upstream bug, not a shard.
   */
 object ShardedWrite {
 
@@ -23,6 +27,9 @@ object ShardedWrite {
     schema.fields.collect {
       case f if f.dataType.isInstanceOf[NumericType] && f.name != "span_idx" => f
     }.toSeq
+
+  /** True for `file:/...`, `hdfs://...`, `s3a://...` destinations. */
+  def hasScheme(dir: String): Boolean = dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
 
   /** Publish bytes as `dir/name`; scheme'd destinations go two-phase. */
   def publish(dir: String, hasScheme: Boolean, name: String,
@@ -45,21 +52,18 @@ object ShardedWrite {
   /** Run the sharded export: partition by `shardCol`, sort each
     * partition by (shard, doc_id, span_idx) for deterministic record
     * order, group consecutive rows per shard on the executor, and emit
-    * `build(colMeta, records)` as `shard_<value>.<ext>`. Returns the
-    * shard file names. `build` must be a serializable pure function
-    * over boxed column values (one Array[Any] per record, in
-    * `numericCols` order). */
-  def run(df: DataFrame, dir: String, shardCol: String, ext: String,
-          numTasks: Int = 0)
-         (build: (Seq[(String, DataType)], IndexedSeq[Array[Any]]) => Array[Byte])
-      : Seq[String] = {
-    val hasScheme = dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
-    if (hasScheme) {
+    * `codec.encode` of each group as `shard_<value>.<ext>`. Returns the
+    * shard file names, sorted. */
+  def run(df: DataFrame, dir: String, shardCol: String, codec: PointCodec,
+          numTasks: Int = 0): Seq[String] = {
+    val scheme = hasScheme(dir)
+    if (scheme) {
       val p = new org.apache.hadoop.fs.Path(dir)
       p.getFileSystem(new org.apache.hadoop.conf.Configuration()).mkdirs(p)
     } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    val valueCols = numericCols(df.schema)
-    require(valueCols.nonEmpty, s"no numeric columns to write as .$ext")
+    val ext = codec.exts.head
+    val valueCols = codec.writeCols(df.schema)
+    require(valueCols.nonEmpty, s"no columns to write as .$ext")
     val allCols = df.columns
     require(allCols.contains(shardCol),
       s"shard column $shardCol not in ${allCols.mkString(",")}")
@@ -73,29 +77,27 @@ object ShardedWrite {
       .repartition(tasks, col(shardCol))
       .sortWithinPartitions(sortKeys: _*)
     val base = 1 + idCols.size
-    val colMeta: Seq[(String, DataType)] =
-      valueCols.map(f => (f.name, f.dataType))
+    val colMeta = valueCols.map(f => (f.name, f.dataType))
     slim.mapPartitions { it =>
       var cur: Any = null
       var buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
       var written = List.empty[String]
       def close(): Unit = if (cur != null && buf.nonEmpty) {
         val name = s"shard_$cur.$ext"
-        publish(dir, hasScheme, name, build(colMeta, buf.toIndexedSeq))
+        publish(dir, scheme, name, codec.encode(colMeta, buf.toIndexedSeq))
         written ::= name
         buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
       }
       it.foreach { r =>
         val shard = r.get(0)
         // a null shard would alias the initial `cur` sentinel and its
-        // run would never close() — rows silently dropped; fail loudly
-        // (a null tile/chip id is an upstream bug, not a shard)
+        // run would never close() — rows silently dropped or misfiled
         require(shard != null, s"sharded write: null value in shard column $shardCol")
         if (shard != cur) { close(); cur = shard }
         buf += Array.tabulate(colMeta.size)(i => r.get(base + i))
       }
       close()
       written.iterator
-    }(Encoders.STRING).collect().toSeq
+    }(Encoders.STRING).collect().toSeq.sorted
   }
 }

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types._
 
 /** Clean-room readers (and, for SBET, a writer) for the reference's three
@@ -22,12 +22,11 @@ import org.apache.spark.sql.types._
   * (doc_id, span_idx) identity columns, then the format's dimensions in
   * the reference's registration order, snake_case.
   *
-  * Each format exposes a driver decode for single-fixture parity
-  * (`asDataFrame`) and an executor-parallel one-task-per-file decode for
-  * archive-scale ingest (`asDistributedDataFrame`) — these files are
-  * per-flightline small (an SBET is one trajectory), so file-level
-  * parallelism is the right grain; record-offset splitting as in
-  * LasDecode is unnecessary.
+  * Each format is a [[PointCodec]]: the seam's driver read serves
+  * single-fixture parity and its one-task-per-file read serves
+  * archive-scale ingest — these files are per-flightline small (an SBET
+  * is one trajectory), so file-level parallelism is the right grain;
+  * record-offset splitting as in LasDecode is unnecessary.
   */
 object Sbet {
 
@@ -58,19 +57,12 @@ object Sbet {
     }
   }
 
-  def asDataFrame(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(decode(bytes, docId), 1), schema)
-  }
-
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val rdd = Trajectory.binaryFiles(spark, pathGlob).rdd.flatMap { r =>
-      val path = r.getString(0)
-      decode(r.getAs[Array[Byte]](1), path.substring(path.lastIndexOf('/') + 1))
-    }
-    spark.createDataFrame(rdd, schema)
+  /** SBET on the codec seam. */
+  final case class Codec() extends PointCodec {
+    def exts: Seq[String] = Seq("sbet")
+    def schema(bytes: => Array[Byte]): StructType = Sbet.schema
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      (Sbet.schema, Sbet.decode(bytes, docId))
   }
 
   /** writers.sbet (io/sbet/SbetWriter.cpp:35-50): the 17 doubles back out
@@ -188,29 +180,12 @@ object Qfit {
     }
   }
 
-  def asDataFrame(spark: SparkSession, path: String,
-                  flipX: Boolean = true, scaleZ: Double = 0.001): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val h = header(bytes)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(decode(bytes, docId, flipX, scaleZ), 1),
-      schemaOf(h.words))
-  }
-
-  /** One task per file; all files must share one word format (schema is
-    * taken from the first). */
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String,
-                             flipX: Boolean = true,
-                             scaleZ: Double = 0.001): DataFrame = {
-    val bin = Trajectory.binaryFiles(spark, pathGlob)
-    val words = header(bin.select("content").head().getAs[Array[Byte]](0)).words
-    val rdd = bin.rdd.flatMap { r =>
-      val path = r.getString(0)
-      decode(r.getAs[Array[Byte]](1),
-        path.substring(path.lastIndexOf('/') + 1), flipX, scaleZ)
-    }
-    spark.createDataFrame(rdd, schemaOf(words))
+  /** QFIT on the codec seam; `flipX`/`scaleZ` as in [[decode]]. */
+  final case class Codec(flipX: Boolean = true, scaleZ: Double = 0.001) extends PointCodec {
+    def exts: Seq[String] = Seq("qi")
+    def schema(bytes: => Array[Byte]): StructType = schemaOf(header(bytes).words)
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      (schemaOf(header(bytes).words), Qfit.decode(bytes, docId, flipX, scaleZ))
   }
 }
 
@@ -332,37 +307,11 @@ object Terrasolid {
     (schemaOf(h), rows)
   }
 
-  def asDataFrame(spark: SparkSession, path: String): DataFrame = {
-    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    val (schema, rows) = decode(bytes, docId)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
-  }
-
-  def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame = {
-    val bin = Trajectory.binaryFiles(spark, pathGlob)
-    val schema = schemaOf(header(bin.select("content").head().getAs[Array[Byte]](0)))
-    val rdd = bin.rdd.flatMap { r =>
-      val path = r.getString(0)
-      decode(r.getAs[Array[Byte]](1), path.substring(path.lastIndexOf('/') + 1))._2
-    }
-    spark.createDataFrame(rdd, schema)
-  }
-}
-
-private[sources] object Trajectory {
-  /** binaryFile scan for a glob, loading the parent dir with
-    * pathGlobFilter (not a glob path) so FileStreamSink's metadata probe
-    * stays quiet — same discipline as LasDecode. */
-  def binaryFiles(spark: SparkSession, pathGlob: String): DataFrame = {
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    (if (leaf.exists(c => c == '*' || c == '?' || c == '['))
-       reader.option("pathGlobFilter", leaf).load(dir)
-     else reader.load(pathGlob))
-      .select("path", "content")
+  /** TerraScan on the codec seam. */
+  final case class Codec() extends PointCodec {
+    def exts: Seq[String] = Seq("bin")
+    def schema(bytes: => Array[Byte]): StructType = schemaOf(header(bytes))
+    def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
+      Terrasolid.decode(bytes, docId)
   }
 }

@@ -152,18 +152,29 @@ object StreamOps {
     q.awaitTermination()
   }
 
-  /** Streaming LAS/LAZ archive ingest: watch a landing directory for
-    * dropped .las/.laz files (the standard survey-delivery pattern),
-    * decode each in the executors — LASzip decompression included, via
-    * the same fixture-pinned decode every batch path uses — and append
-    * the point frame to parquet with a per-batch lineage manifest.
+  /** Streaming point-archive ingest: watch a landing directory for
+    * dropped point files (the standard survey-delivery pattern), decode
+    * each in the executors with the [[graft.sources.PointCodec]] its
+    * extension names — .las/.laz (LASzip decompression included), .bpf,
+    * .pcd, .ply, ... — and append the point frame to parquet with a
+    * per-batch lineage manifest.
+    *
+    * A streaming query needs one pinned schema: it comes from the FIRST
+    * file present at stream start (a real delivery feed is one sensor =
+    * one schema), and any later file that decodes to a different schema
+    * fails the batch loudly rather than silently coercing.
+    *
     * Exactly-once end-to-end: the file-source checkpoint never re-lists
     * a committed file, and the sink writes each micro-batch to its own
     * `batch_id=<id>` partition directory in overwrite mode — a batch
     * replayed after a crash between the write and the stream commit
     * overwrites its own directory rather than appending duplicates. */
-  def ingestLasFiles(spark: SparkSession, landingDir: String, outPath: String,
-                     ckRoot: String, glob: String = "*.la[sz]"): Unit = {
+  def ingestPointFiles(spark: SparkSession, landingDir: String, outPath: String,
+                       ckRoot: String, glob: String): Unit = {
+    import graft.sources.PointCodec
+    val conf = spark.sparkContext.hadoopConfiguration
+    val seed = PointCodec.firstFile(conf, s"$landingDir/$glob")
+    val schema = PointCodec.forPath(seed.getName).schema(PointCodec.readBytes(seed, conf))
     // the binaryFile source's fixed schema, required explicitly for streams
     val binSchema = StructType(Seq(
       StructField("path", StringType), StructField("modificationTime", TimestampType),
@@ -173,86 +184,13 @@ object StreamOps {
       .option("pathGlobFilter", glob)
       .load(landingDir)
       .select("path", "content")
-    val rowEnc = org.apache.spark.sql.Encoders.row(graft.sources.LasDecode.schema)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val pts = batch.flatMap { r =>
           val path = r.getString(0)
-          val docId = path.substring(path.lastIndexOf('/') + 1)
-          val bytes = r.getAs[Array[Byte]](1)
-          val bb = java.nio.ByteBuffer.wrap(bytes)
-            .order(java.nio.ByteOrder.LITTLE_ENDIAN)
-          val h = graft.sources.LasDecode.readHeader(bb)
-          graft.sources.LasDecode.decodeAll(bytes, bb, h, docId)
-        }(rowEnc)
-        pts.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
-        graft.plans.Manifest.checkpoint(ckRoot, f"lasbatch_$batchId%05d",
-          s"las-ingest-$batchId", Nil, pts)
-        ()
-      }
-      .option("checkpointLocation", s"$ckRoot/_las_stream_ck")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** Extension-dispatched decode shared by the generic landing-dir
-    * ingest below (executor-side; all three codecs return the same
-    * (schema, rows) shape). */
-  def decodeByExt(path: String, bytes: Array[Byte]): (StructType, Seq[org.apache.spark.sql.Row]) = {
-    val docId = path.substring(path.lastIndexOf('/') + 1)
-    path.substring(path.lastIndexOf('.') + 1).toLowerCase match {
-      case "bpf" => graft.sources.Bpf.decode(bytes, docId)
-      case "pcd" => graft.sources.Pcd.decode(bytes, docId)
-      case "ply" => graft.sources.Ply.decode(bytes, docId)
-      case other => throw new IllegalArgumentException(
-        s"streaming ingest: unsupported extension .$other ($path)")
-    }
-  }
-
-  /** Streaming BPF/PCD/PLY landing-dir ingest — the same exactly-once
-    * harness as [[ingestLasFiles]] (file-source checkpoint + idempotent
-    * batch_id-keyed overwrite sink + per-batch lineage), generalized
-    * over the container codecs. Unlike LAS, these formats carry
-    * per-file schemas, so a streaming query needs one pinned schema:
-    * it comes from the FIRST file present at stream start (a real
-    * delivery feed is one sensor = one schema), and any later file
-    * that decodes to a different schema fails the batch loudly rather
-    * than silently coercing. */
-  def ingestPointFiles(spark: SparkSession, landingDir: String, outPath: String,
-                       ckRoot: String, glob: String): Unit = {
-    // schema seed via Hadoop FS so scheme'd (object-store) landing dirs
-    // work the same as local ones
-    val hPath = new org.apache.hadoop.fs.Path(landingDir)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val seed = fs.globStatus(new org.apache.hadoop.fs.Path(hPath, glob))
-      .map(_.getPath).sortBy(_.getName).headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"streaming ingest: no $glob file in $landingDir to pin the schema"))
-    val seedBytes = {
-      val in = fs.open(seed)
-      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-      finally in.close()
-    }
-    val schema = decodeByExt(seed.toString, seedBytes)._1
-    val binSchema = StructType(Seq(
-      StructField("path", StringType), StructField("modificationTime", TimestampType),
-      StructField("length", LongType), StructField("content", BinaryType)))
-    val stream = spark.readStream.format("binaryFile")
-      .schema(binSchema)
-      .option("pathGlobFilter", glob)
-      .load(landingDir)
-      .select("path", "content")
-    val rowEnc = org.apache.spark.sql.Encoders.row(schema)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pts = batch.flatMap { r =>
-          val path = r.getString(0)
-          val (sch, rows) = decodeByExt(path, r.getAs[Array[Byte]](1))
-          require(sch == schema,
-            s"streaming ingest: $path schema ${sch.simpleString} != pinned ${schema.simpleString}")
-          rows
-        }(rowEnc)
+          PointCodec.decodeChecked(PointCodec.forPath(path), schema, path,
+            r.getAs[Array[Byte]](1))
+        }(Encoders.row(schema))
         pts.write.mode("overwrite").parquet(s"$outPath/batch_id=$batchId")
         graft.plans.Manifest.checkpoint(ckRoot, f"ptsbatch_$batchId%05d",
           s"pts-ingest-$batchId", Nil, pts)

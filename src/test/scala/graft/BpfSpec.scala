@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalactic.Tolerance._
 import org.apache.spark.sql.Row
-import graft.sources.Bpf
+import graft.sources.{Bpf, PointCodec}
 import graft.plans.Pipeline
 
 /** readers.bpf / writers.bpf against the reference's own BPF v3
@@ -31,7 +31,7 @@ class BpfSpec extends AnyFunSuite {
     (494021.094f, 4877440.0f, 130.460007f))
 
   private def checkFileType(path: String): Unit = {
-    val df = Bpf.asDataFrame(spark, path, count = 506)
+    val df = PointCodec.readFile(spark, path, Bpf.Codec(count = 506))
     assert(df.count() === 506)
     val first = df.orderBy("span_idx").select("x", "y", "z").limit(3).collect()
     first.zip(golden).foreach { case (r, (gx, gy, gz)) =>
@@ -54,12 +54,12 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("fastlz variants decode identically to the uncompressed twin (clean-room FastLZ)") {
-    val want = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
+    val want = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .drop("doc_id").orderBy("span_idx").collect().toSeq
     for (f <- Seq("autzen-utm-chipped-25-v3-fastlz.bpf",
                   "autzen-utm-chipped-25-v3-fastlz-interleaved.bpf",
                   "autzen-utm-chipped-25-v3-fastlz-segregated.bpf")) {
-      val got = Bpf.asDataFrame(spark, s"$B/$f")
+      val got = PointCodec.readFile(spark, s"$B/$f", Bpf.Codec())
         .drop("doc_id").orderBy("span_idx").collect().toSeq
       assert(got === want, s"$f differs from uncompressed twin")
     }
@@ -97,14 +97,14 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("round-trip: every format x compression re-reads within float precision") {
-    val src = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3-interleaved.bpf")
+    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3-interleaved.bpf", Bpf.Codec())
     val want = src.orderBy("span_idx").collect().toSeq
     val dir = tmpDir
     for (fmt <- Seq(Bpf.PointMajor, Bpf.DimMajor, Bpf.ByteMajor);
          comp <- Seq(false, true)) {
       val p = s"$dir/rt-$fmt-$comp.bpf"
       Bpf.write(p, src, Bpf.WriteOpts(format = fmt, compression = comp))
-      val got = Bpf.asDataFrame(spark, p).orderBy("span_idx").collect().toSeq
+      val got = PointCodec.readFile(spark, p, Bpf.Codec()).orderBy("span_idx").collect().toSeq
       // one float32 quantization hop per value (the fixture holds exact
       // float32s, so the re-write is in fact exact)
       assertClose(got, want, 1e-6)
@@ -112,13 +112,13 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("round-trip with explicit scale/offset (BPFTest roundtrip_scaling)") {
-    val src = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3-interleaved.bpf")
+    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3-interleaved.bpf", Bpf.Codec())
     val want = src.orderBy("span_idx").collect().toSeq
     val p = s"$tmpDir/rt-scaled.bpf"
     Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.PointMajor,
       offsetX = 494000.0, offsetY = 487000.0, offsetZ = 130.0,
       scaleX = .001, scaleY = .01, scaleZ = 10.0))
-    val got = Bpf.asDataFrame(spark, p).orderBy("span_idx").collect().toSeq
+    val got = PointCodec.readFile(spark, p, Bpf.Codec()).orderBy("span_idx").collect().toSeq
     // scaling pushes values through float32 at a different magnitude —
     // EXPECT_FLOAT_EQ-grade tolerance
     assertClose(got, want, 1e-5)
@@ -150,7 +150,7 @@ class BpfSpec extends AnyFunSuite {
     val dir = tmpDir
     val p = s"$dir/legacy1.bpf"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), bb.array())
-    val df = Bpf.asDataFrame(spark, p)
+    val df = PointCodec.readFile(spark, p, Bpf.Codec())
     assert(df.columns.toSeq === Seq("doc_id", "span_idx", "x", "y", "z", "intensity"))
     val rows = df.orderBy("span_idx").collect()
     assert(rows.length === 3)
@@ -163,7 +163,7 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("distributed glob ingest equals driver decode") {
-    val driver = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
+    val driver = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .orderBy("span_idx").collect().toSeq
     val dist = Bpf.asDistributedDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
       .orderBy("span_idx").collect().toSeq
@@ -172,7 +172,7 @@ class BpfSpec extends AnyFunSuite {
 
   test("executor-sharded write: 4 shards re-decode to the full cloud, file: URI two-phase") {
     import org.apache.spark.sql.functions._
-    val src = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
+    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .withColumn("shard", pmod(col("span_idx"), lit(4)))
     // shard files re-index spans per shard, so compare order-free
     // aggregate invariants (one float32 re-quantization hop of slack)
@@ -208,16 +208,16 @@ class BpfSpec extends AnyFunSuite {
 
   test("selective decode: pruned dimensions' blocks are never decompressed") {
     import org.apache.spark.sql.functions._
-    val src = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
+    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
     val dir = tmpDir
     val p = s"$dir/sel.bpf"
     // dim-major + zlib: our writer emits exactly one block per dimension
     Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.DimMajor, compression = true))
 
     // selective xyz decode equals the full decode's xyz columns
-    val full = Bpf.asDataFrame(spark, p).select("span_idx", "x", "y", "z")
+    val full = PointCodec.readFile(spark, p, Bpf.Codec()).select("span_idx", "x", "y", "z")
       .orderBy("span_idx").collect().toSeq
-    val sel = Bpf.asDataFrame(spark, p, columns = Seq("x", "y", "z"))
+    val sel = PointCodec.readFile(spark, p, Bpf.Codec(columns = Seq("x", "y", "z")))
     assert(sel.columns.toSeq === Seq("doc_id", "span_idx", "x", "y", "z"))
     assert(sel.select("span_idx", "x", "y", "z").orderBy("span_idx")
       .collect().toSeq === full)
@@ -235,7 +235,7 @@ class BpfSpec extends AnyFunSuite {
       bytes(i) = (bytes(i) ^ 0x5a).toByte)
     val pc = s"$dir/sel-corrupt.bpf"
     java.nio.file.Files.write(java.nio.file.Paths.get(pc), bytes)
-    val selC = Bpf.asDataFrame(spark, pc, columns = Seq("x", "y", "z"))
+    val selC = PointCodec.readFile(spark, pc, Bpf.Codec(columns = Seq("x", "y", "z")))
       .select("span_idx", "x", "y", "z").orderBy("span_idx").collect().toSeq
     assert(selC === full, "selective decode touched a pruned block")
     val boom = intercept[Exception] { Bpf.decode(bytes, "c") }
@@ -244,11 +244,11 @@ class BpfSpec extends AnyFunSuite {
 
   test("empty cloud round-trips (0-point header, no data blocks)") {
     val dir = tmpDir
-    val src = Bpf.asDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf").limit(0)
+    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec()).limit(0)
     for (comp <- Seq(false, true)) {
       val p = s"$dir/empty-$comp.bpf"
       Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.DimMajor, compression = comp))
-      val back = Bpf.asDataFrame(spark, p)
+      val back = PointCodec.readFile(spark, p, Bpf.Codec())
       assert(back.count() === 0)
       assert(Bpf.quickInfo(p).numPts === 0)
     }
@@ -265,7 +265,7 @@ class BpfSpec extends AnyFunSuite {
     val df = Pipeline.run(spark, spec).df
     val n = df.count()
     assert(n > 0 && n < 1065)
-    val back = Bpf.asDataFrame(spark, out)
+    val back = PointCodec.readFile(spark, out, Bpf.Codec())
     assert(back.count() === n)
     import org.apache.spark.sql.functions._
     val mx = back.agg(max("z")).head().getDouble(0)

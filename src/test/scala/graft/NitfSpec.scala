@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.sources.{LasDecode, Nitf}
+import graft.sources.{LasDecode, Nitf, PointCodec}
 
 /** readers.nitf — LAS-in-NITF (plugins/nitf/io/NitfFile.cpp LIDARA DES
   * extraction), pinned to the reference's own fixture pair: the points
@@ -15,7 +15,7 @@ class NitfSpec extends AnyFunSuite {
   private val N = s"$RefData/nitf"
 
   test("autzen-utm10.ntf decodes row-identically to its .las twin") {
-    val ntf = Nitf.asDataFrame(spark, s"$N/autzen-utm10.ntf")
+    val ntf = PointCodec.readFile(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
       .drop("doc_id").orderBy("span_idx").collect().toSeq
     val las = LasDecode.asDataFrame(spark, s"$N/autzen-utm10.las")
       .drop("doc_id").orderBy("span_idx").collect().toSeq
@@ -24,9 +24,9 @@ class NitfSpec extends AnyFunSuite {
   }
 
   test("distributed == driver; pipeline readers.nitf -> crop runs") {
-    val driver = Nitf.asDataFrame(spark, s"$N/autzen-utm10.ntf")
+    val driver = PointCodec.readFile(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = Nitf.asDistributedDataFrame(spark, s"$N/autzen-utm10.ntf")
+    val dist = PointCodec.readFiles(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
       .orderBy("span_idx").collect().toSeq
     assert(dist === driver)
     val spec = s"""{"pipeline":[
@@ -37,12 +37,12 @@ class NitfSpec extends AnyFunSuite {
   }
 
   test("writers.nitf: wrap -> read back row-identically (and through the pipeline)") {
-    val src = Nitf.asDataFrame(spark, s"$N/autzen-utm10.ntf")
+    val src = PointCodec.readFile(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
     val dir = java.nio.file.Files.createTempDirectory("nitf-spec").toString
     val p = s"$dir/rt.ntf"
     // the twin's quantization is 0.01/0 so the re-write is value-exact
     Nitf.write(p, src.orderBy("span_idx"))
-    val back = Nitf.asDataFrame(spark, p)
+    val back = PointCodec.readFile(spark, p, Nitf.Codec())
       .drop("doc_id").orderBy("span_idx").collect().toSeq
     val want = src.drop("doc_id").orderBy("span_idx").collect().toSeq
     assert(back === want)
@@ -53,7 +53,7 @@ class NitfSpec extends AnyFunSuite {
       {"type":"writers.nitf","path":"$out","order_by":["span_idx"]}
     ]}"""
     assert(graft.plans.Pipeline.run(spark, spec).df.count() === 106)
-    assert(Nitf.asDataFrame(spark, out).count() === 106)
+    assert(PointCodec.readFile(spark, out, Nitf.Codec()).count() === 106)
   }
 
   test("non-LAS NITF and non-NITF inputs fail loudly") {

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.sources.Ply
+import graft.sources.{Ply, PointCodec}
 
 /** readers.ply / writers.ply vs the reference's own fixtures
   * (test/data/ply, expectations from PlyReaderTest.cpp:64-110) plus
@@ -14,7 +14,7 @@ class PlySpec extends AnyFunSuite {
   private val expected = Seq((-1.0, 0.0, 0.0), (0.0, 1.0, 0.0), (1.0, 0.0, 0.0))
 
   test("ascii fixture decodes to the reference's three vertices in order") {
-    val df = Ply.asDataFrame(spark, s"$RefData/ply/simple_text.ply")
+    val df = PointCodec.readFile(spark, s"$RefData/ply/simple_text.ply", Ply.Codec())
     assert(df.schema.fieldNames.toSeq === Seq("doc_id", "span_idx", "x", "y", "z"))
     assert(df.schema("x").dataType === DoubleType)
     val rows = df.orderBy("span_idx").collect()
@@ -23,14 +23,14 @@ class PlySpec extends AnyFunSuite {
   }
 
   test("binary_little_endian fixture decodes bit-equal to the ascii twin") {
-    val df = Ply.asDataFrame(spark, s"$RefData/ply/simple_binary.ply")
+    val df = PointCodec.readFile(spark, s"$RefData/ply/simple_binary.ply", Ply.Codec())
     val rows = df.orderBy("span_idx").collect()
       .map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSeq
     assert(rows === expected)
   }
 
   test("no_vertex fixture yields zero rows, not an error") {
-    assert(Ply.asDataFrame(spark, s"$RefData/ply/no_vertex.ply").count() === 0)
+    assert(PointCodec.readFile(spark, s"$RefData/ply/no_vertex.ply", Ply.Codec()).count() === 0)
   }
 
   test("round-trip preserves typed properties through both formats") {
@@ -43,7 +43,7 @@ class PlySpec extends AnyFunSuite {
     for (fmt <- Seq("ascii", "binary_little_endian")) {
       val p = s"$dir/rt_$fmt.ply"
       Ply.write(p, src, fmt)
-      val back = Ply.asDataFrame(spark, p).orderBy("span_idx")
+      val back = PointCodec.readFile(spark, p, Ply.Codec()).orderBy("span_idx")
       assert(back.schema("x").dataType === DoubleType)
       assert(back.schema("cls").dataType === IntegerType)
       assert(back.schema("inten").dataType === ShortType, fmt)
@@ -66,7 +66,7 @@ class PlySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("plyun").toString
     val p = s"$dir/u.ply"
     Ply.write(p, src, "binary_little_endian")
-    val r = Ply.asDataFrame(spark, p).head()
+    val r = PointCodec.readFile(spark, p, Ply.Codec()).head()
     // u16 wrote as int32 (IntegerType -> int32), u32 as float64 (LongType)
     assert(r.getAs[Int]("u16") === 65535)
     assert(r.getAs[Double]("u32") === 4294967295.0)
@@ -91,7 +91,7 @@ class PlySpec extends AnyFunSuite {
     val p = s"$dir/faces.ply"
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       withFaces.getBytes("US-ASCII"))
-    val df = Ply.asDataFrame(spark, p)
+    val df = PointCodec.readFile(spark, p, Ply.Codec())
     assert(df.count() === 2)
     // binary with a variable-size element BEFORE vertex must fail loudly
     val badHdr =
@@ -119,9 +119,27 @@ class PlySpec extends AnyFunSuite {
          |   "format": "binary_little_endian", "order_by": ["span_idx"]}
          |]}""".stripMargin
     graft.plans.Pipeline.run(spark, json)
-    val back = Ply.asDataFrame(spark, s"$dir/out.ply").orderBy("span_idx")
+    val back = PointCodec.readFile(spark, s"$dir/out.ply", Ply.Codec()).orderBy("span_idx")
     val rows = back.collect().map(r =>
       (r.getAs[Double]("x"), r.getAs[Double]("y"), r.getAs[Double]("z"))).toSeq
     assert(rows === Seq((0.0, 1.0, 0.0), (1.0, 0.0, 0.0)))
+  }
+
+  test("glob read: a file whose property order drifts from the first fails loudly, naming it") {
+    val dir = java.nio.file.Files.createTempDirectory("plydrift").toString
+    val pts = spark.range(0, 5).select(
+      col("id").cast("double").as("x"), (col("id") * 10).cast("double").as("y"),
+      lit(1.5).as("z"))
+    Ply.write(s"$dir/a.ply", pts, "binary_little_endian")
+    // same properties, x and y swapped: read under a's schema they
+    // would land as each other's column
+    Ply.write(s"$dir/b.ply", pts.select("y", "x", "z"), "binary_little_endian")
+    val ex = intercept[Exception] {
+      Ply.asDistributedDataFrame(spark, s"$dir/*.ply").collect()
+    }
+    val messages = Iterator.iterate(ex: Throwable)(_.getCause)
+      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).toSeq
+    assert(messages.exists(m => m.contains("b.ply") && m.contains("schema")),
+      messages.mkString(" | "))
   }
 }

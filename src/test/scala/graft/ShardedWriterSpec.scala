@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.sources.{Faux, Pcd, Ply}
+import graft.sources.{Bpf, Faux, LasWriter, Pcd, Ply}
 import graft.plans.Pipeline
 
 /** Executor-sharded PLY/PCD export (io/ply/PlyWriter.cpp,
@@ -95,11 +95,17 @@ class ShardedWriterSpec extends AnyFunSuite {
   test("null shard values fail loudly instead of silently dropping rows") {
     val withNull = src.withColumn("shard",
       when(col("span_idx") < 3, lit(null)).otherwise(col("shard")))
-    val ex = intercept[Exception] {
-      Ply.writeSharded(tmpDir, withNull, "shard", "ascii")
+    val writers: Seq[(String, String => Seq[String])] = Seq(
+      "ply" -> (Ply.writeSharded(_, withNull, "shard", "ascii")),
+      "bpf" -> (Bpf.writeSharded(_, withNull, "shard")),
+      "las" -> (LasWriter.writeSharded(_, withNull, 1,
+        LasWriter.XForms(0.01, 0.01, 0.01, 0, 0, 0), "shard")))
+    for ((fmt, write) <- writers) {
+      val ex = intercept[Exception](write(tmpDir))
+      val messages = Iterator.iterate(ex: Throwable)(_.getCause)
+        .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).toSeq
+      assert(messages.exists(_.contains("null value in shard column")),
+        s"$fmt: ${messages.mkString(" | ")}")
     }
-    val messages = Iterator.iterate(ex: Throwable)(_.getCause)
-      .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).toSeq
-    assert(messages.exists(_.contains("null value in shard column")), messages.mkString(" | "))
   }
 }

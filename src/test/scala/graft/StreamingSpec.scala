@@ -93,7 +93,7 @@ class StreamingSpec extends AnyFunSuite {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(ref("laz/simple.laz")),
       java.nio.file.Paths.get(s"$landing/b.laz"))
-    StreamOps.ingestLasFiles(spark, landing, s"$tmp/out", s"$tmp/ck")
+    StreamOps.ingestPointFiles(spark, landing, s"$tmp/out", s"$tmp/ck", "*.la[sz]")
     val out1 = spark.read.parquet(s"$tmp/out")
     assert(out1.count() === 2130, s"got ${out1.count()}") // 1065 + 1065
     assert(out1.select("doc_id").distinct().count() === 2)
@@ -102,7 +102,7 @@ class StreamingSpec extends AnyFunSuite {
     val small = LasDecode.asDataFrame(spark, p1065).limit(10)
     LasWriter.writeLaz(s"$landing/c.laz", small, h0.pointFormat,
       LasWriter.XForms(h0.sx, h0.sy, h0.sz, h0.ox, h0.oy, h0.oz))
-    StreamOps.ingestLasFiles(spark, landing, s"$tmp/out", s"$tmp/ck")
+    StreamOps.ingestPointFiles(spark, landing, s"$tmp/out", s"$tmp/ck", "*.la[sz]")
     val out2 = spark.read.parquet(s"$tmp/out")
     assert(out2.count() === 2140, s"got ${out2.count()} — old files re-ingested?")
     // drop a FOURTH file: a LAS 1.4 LAYERED .laz (compressor 3, fmt 8)
@@ -112,14 +112,59 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("nir", lit(5)).withColumn("scanner_channel", lit(1).cast("short"))
     LasWriter.writeLaz(s"$landing/d14.laz", v14, pointFormat = 8,
       LasWriter.XForms(h0.sx, h0.sy, h0.sz, h0.ox, h0.oy, h0.oz))
-    StreamOps.ingestLasFiles(spark, landing, s"$tmp/out", s"$tmp/ck")
+    StreamOps.ingestPointFiles(spark, landing, s"$tmp/out", s"$tmp/ck", "*.la[sz]")
     val out3 = spark.read.parquet(s"$tmp/out")
     assert(out3.count() === 2150, s"got ${out3.count()} — layered delivery missed?")
     assert(out3.filter(org.apache.spark.sql.functions.col("doc_id") === "d14.laz")
       .count() === 10)
     val manifests = new java.io.File(tmp, "ck").listFiles()
-      .filter(_.getName.startsWith("lasbatch_"))
+      .filter(_.getName.startsWith("ptsbatch_"))
     assert(manifests.nonEmpty, "no lineage manifests written")
+  }
+
+  test("streaming LAS landing-dir ingest on engine-written .las/.laz: exactly-once per file") {
+    import graft.sources.LasWriter
+    import org.apache.spark.sql.functions._
+    val tmp = java.nio.file.Files.createTempDirectory("graftlasstream2").toString
+    val landing = s"$tmp/landing"
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(landing))
+    val pts = spark.range(0, 90).select(lit("src").as("doc_id"),
+      col("id").cast("int").as("span_idx"),
+      (col("id") * 0.5).as("x"), (col("id") % 9).cast("double").as("y"),
+      lit(2.0).as("z"), (col("id") % 50).cast("int").as("intensity"))
+    val xf = LasWriter.XForms(0.5, 0.5, 0.5, 0, 0, 0)
+    LasWriter.write(s"$landing/a.las", pts.filter(col("span_idx") < 40), 1, xf)
+    LasWriter.writeLaz(s"$landing/b.laz", pts.filter(col("span_idx") >= 40), 1, xf)
+    StreamOps.ingestPointFiles(spark, landing, s"$tmp/out", s"$tmp/ck", "*.la[sz]")
+    val out1 = spark.read.parquet(s"$tmp/out")
+    assert(out1.count() === 90)
+    assert(out1.select("doc_id").distinct().count() === 2)
+    // a third delivery: only IT is ingested (file-source checkpoint)
+    LasWriter.writeLaz(s"$landing/c.laz", pts.limit(7), 6, xf)
+    StreamOps.ingestPointFiles(spark, landing, s"$tmp/out", s"$tmp/ck", "*.la[sz]")
+    val out2 = spark.read.parquet(s"$tmp/out")
+    assert(out2.count() === 97, s"got ${out2.count()} — old files re-ingested?")
+    assert(out2.agg(sum("x")).head().getDouble(0) ===
+      (0 until 90).map(_ * 0.5).sum + (0 until 7).map(_ * 0.5).sum)
+    assert(new java.io.File(tmp, "ck").listFiles().exists(_.getName.startsWith("ptsbatch_")))
+  }
+
+  test("streaming NITF landing-dir ingest dispatches .ntf through the codec table") {
+    import graft.sources.{LasWriter, Nitf}
+    import org.apache.spark.sql.functions._
+    val tmp = java.nio.file.Files.createTempDirectory("graftntfstream").toString
+    val landing = s"$tmp/landing"
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(landing))
+    val pts = spark.range(0, 30).select(lit("src").as("doc_id"),
+      col("id").cast("int").as("span_idx"), col("id").cast("double").as("x"),
+      lit(1.0).as("y"), lit(2.0).as("z"))
+    val xf = LasWriter.XForms(0.5, 0.5, 0.5, 0, 0, 0)
+    Nitf.write(s"$landing/a.ntf", pts.filter(col("span_idx") < 12), 1, xf)
+    Nitf.write(s"$landing/b.ntf", pts.filter(col("span_idx") >= 12), 1, xf)
+    StreamOps.ingestPointFiles(spark, landing, s"$tmp/out", s"$tmp/ck", "*.ntf")
+    val out = spark.read.parquet(s"$tmp/out")
+    assert(out.count() === 30)
+    assert(out.agg(sum("x")).head().getDouble(0) === (0 until 30).sum.toDouble)
   }
 
   test("streaming BPF landing-dir ingest: pinned schema, incremental files, schema drift is loud") {

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.types._
-import graft.sources.{Qfit, Sbet, Terrasolid}
+import graft.sources.{Optech, PointCodec, Qfit, Sbet, Terrasolid}
 import graft.plans.Pipeline
 
 /** readers.sbet / readers.qfit / readers.terrasolid (+ writers.sbet) vs the
@@ -17,7 +17,7 @@ class TrajectorySpec extends AnyFunSuite {
     math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 
   test("sbet 2-points fixture decodes to the reference's pinned records") {
-    val df = Sbet.asDataFrame(spark, s"$RefData/sbet/2-points.sbet")
+    val df = PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
     assert(df.schema.fieldNames.take(3).toSeq === Seq("doc_id", "span_idx", "gpstime"))
     val rows = df.orderBy("span_idx").collect()
     assert(rows.length === 2)
@@ -42,15 +42,15 @@ class TrajectorySpec extends AnyFunSuite {
 
   test("sbet badfile (size not a record multiple) fails loudly") {
     val e = intercept[IllegalArgumentException] {
-      Sbet.asDataFrame(spark, s"$RefData/sbet/badfile.sbet")
+      PointCodec.readFile(spark, s"$RefData/sbet/badfile.sbet", Sbet.Codec())
     }
     assert(e.getMessage.contains("invalid sbet file size"))
   }
 
   test("sbet distributed decode equals the driver decode") {
-    val drv = Sbet.asDataFrame(spark, s"$RefData/sbet/2-points.sbet")
+    val drv = PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = Sbet.asDistributedDataFrame(spark, s"$RefData/sbet/2-points*.sbet")
+    val dist = PointCodec.readFiles(spark, s"$RefData/sbet/2-points*.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
     assert(dist === drv)
   }
@@ -58,7 +58,7 @@ class TrajectorySpec extends AnyFunSuite {
   test("writers.sbet round-trips the fixture byte-exactly") {
     val src = s"$RefData/sbet/2-points.sbet"
     val out = java.nio.file.Files.createTempDirectory("sbetw").toString + "/rt.sbet"
-    Sbet.write(out, Sbet.asDataFrame(spark, src))
+    Sbet.write(out, PointCodec.readFile(spark, src, Sbet.Codec()))
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
     val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
     assert(java.util.Arrays.equals(a, b))
@@ -66,7 +66,7 @@ class TrajectorySpec extends AnyFunSuite {
 
   test("qfit 10-word big-endian fixture matches the reference's 3 pinned points") {
     // QFITReaderTest.cpp test_10_word (flip_coordinates=false, scale_z=0.001)
-    val df = Qfit.asDataFrame(spark, s"$RefData/qfit/10-word.qi", flipX = false)
+    val df = PointCodec.readFile(spark, s"$RefData/qfit/10-word.qi", Qfit.Codec(flipX = false))
     val rows = df.orderBy("span_idx").limit(3).collect()
     assert(df.schema.fieldNames.toSeq === Seq("doc_id", "span_idx",
       "offset_time", "y", "x", "z", "start_pulse", "reflected_pulse",
@@ -84,7 +84,7 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("qfit 14-word fixture matches the reference's 3 pinned points") {
-    val df = Qfit.asDataFrame(spark, s"$RefData/qfit/14-word.qi", flipX = false)
+    val df = PointCodec.readFile(spark, s"$RefData/qfit/14-word.qi", Qfit.Codec(flipX = false))
     assert(df.schema.fieldNames.containsSlice(Seq(
       "passive_signal", "passive_y", "passive_x", "passive_z")))
     val rows = df.orderBy("span_idx").limit(3).collect()
@@ -102,7 +102,7 @@ class TrajectorySpec extends AnyFunSuite {
 
   test("qfit 12-word little-endian fixture decodes with pdop/pulse_width") {
     // 20100515_152839.atm4bT2.qi is the post-2010 little-endian era file
-    val df = Qfit.asDataFrame(spark, s"$RefData/qfit/20100515_152839.atm4bT2.qi")
+    val df = PointCodec.readFile(spark, s"$RefData/qfit/20100515_152839.atm4bT2.qi", Qfit.Codec())
     assert(df.schema.fieldNames.containsSlice(Seq("pdop", "pulse_width")))
     val n = df.count()
     assert(n > 0)
@@ -126,8 +126,8 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("terrasolid point golden (TerrasolidReaderTest.cpp:70-96)") {
-    val df = Terrasolid.asDataFrame(spark,
-      s"$RefData/terrasolid/20020715-time-color.bin")
+    val df = PointCodec.readFile(spark,
+      s"$RefData/terrasolid/20020715-time-color.bin", Terrasolid.Codec())
     assert(df.count() === 1000)
     val r = df.orderBy("span_idx").head()
     assert(r.getAs[Double]("x") === 363127.94)
@@ -149,7 +149,7 @@ class TrajectorySpec extends AnyFunSuite {
 
   test("terrasolid rejects a non-TerraSolid file loudly") {
     val e = intercept[IllegalArgumentException] {
-      Terrasolid.asDataFrame(spark, s"$RefData/sbet/2-points.sbet")
+      PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Terrasolid.Codec())
     }
     assert(e.getMessage.contains("970401"))
   }
@@ -176,7 +176,7 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("optech csd point golden (OptechReaderTest.cpp:81-105)") {
-    val df = graft.sources.Optech.asDataFrame(spark, s"$RefData/optech/sample.csd")
+    val df = PointCodec.readFile(spark, s"$RefData/optech/sample.csd", Optech.Codec())
     assert(df.count() === 1000)
     val r = df.orderBy("span_idx").head()
     assert(approx(r.getAs[Double]("x"), -82.554028877408555, 1e-12))
