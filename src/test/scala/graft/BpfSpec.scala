@@ -97,7 +97,9 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("round-trip: every format x compression re-reads within float precision") {
-    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3-interleaved.bpf", Bpf.Codec())
+    // twin: the BPF twin
+    val src = PointCodec.readFile(spark,
+      refOr("bpf/autzen-utm-chipped-25-v3-interleaved.bpf")(Twins.bpf), Bpf.Codec())
     val want = src.orderBy("span_idx").collect().toSeq
     val dir = tmpDir
     for (fmt <- Seq(Bpf.PointMajor, Bpf.DimMajor, Bpf.ByteMajor);
@@ -112,7 +114,9 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("round-trip with explicit scale/offset (BPFTest roundtrip_scaling)") {
-    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3-interleaved.bpf", Bpf.Codec())
+    // twin: the BPF twin
+    val src = PointCodec.readFile(spark,
+      refOr("bpf/autzen-utm-chipped-25-v3-interleaved.bpf")(Twins.bpf), Bpf.Codec())
     val want = src.orderBy("span_idx").collect().toSeq
     val p = s"$tmpDir/rt-scaled.bpf"
     Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.PointMajor,
@@ -163,16 +167,20 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("distributed glob ingest equals driver decode") {
-    val driver = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
+    // twin: the BPF twin
+    val f = refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf)
+    val driver = PointCodec.readFile(spark, f, Bpf.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = Bpf.asDistributedDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
+    val dist = Bpf.asDistributedDataFrame(spark, f)
       .orderBy("span_idx").collect().toSeq
     assert(dist === driver)
   }
 
   test("executor-sharded write: 4 shards re-decode to the full cloud, file: URI two-phase") {
     import org.apache.spark.sql.functions._
-    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
+    // twin: the BPF twin
+    val src = PointCodec.readFile(spark,
+      refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf), Bpf.Codec())
       .withColumn("shard", pmod(col("span_idx"), lit(4)))
     // shard files re-index spans per shard, so compare order-free
     // aggregate invariants (one float32 re-quantization hop of slack)
@@ -208,7 +216,9 @@ class BpfSpec extends AnyFunSuite {
 
   test("selective decode: pruned dimensions' blocks are never decompressed") {
     import org.apache.spark.sql.functions._
-    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
+    // twin: the BPF twin
+    val src = PointCodec.readFile(spark,
+      refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf), Bpf.Codec())
     val dir = tmpDir
     val p = s"$dir/sel.bpf"
     // dim-major + zlib: our writer emits exactly one block per dimension
@@ -244,7 +254,9 @@ class BpfSpec extends AnyFunSuite {
 
   test("empty cloud round-trips (0-point header, no data blocks)") {
     val dir = tmpDir
-    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec()).limit(0)
+    // twin: the BPF twin
+    val src = PointCodec.readFile(spark,
+      refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf), Bpf.Codec()).limit(0)
     for (comp <- Seq(false, true)) {
       val p = s"$dir/empty-$comp.bpf"
       Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.DimMajor, compression = comp))

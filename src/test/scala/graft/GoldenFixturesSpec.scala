@@ -27,11 +27,24 @@ object TestSpark {
     * clear message when the fixture root itself is absent, instead of a
     * null directory listing or a reader's bare NoSuchFileException. */
   def ref(rel: String): String = {
-    if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefData)))
+    if (!refPresent)
       throw new java.io.FileNotFoundException(
         s"reference fixture root $RefData is missing (needed for $rel)")
     s"$RefData/$rel"
   }
+  private def refPresent: Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefData))
+  /** Input path for a spec that uses the reference fixture `rel` only as
+    * an arbitrary file of its format (a loud failure on a malformed file,
+    * a write->read round trip, a glob-versus-driver equality), never for
+    * its content. When the fixture root [[RefData]] is a directory this
+    * is `s"$RefData/$rel"`, the fixture itself. Only when the root itself
+    * is absent is it `twin`, the path of an engine-written file of the
+    * same format ([[Twins]]). The choice is made on the root, not on the
+    * file: under a present root a missing or renamed fixture must still
+    * fail loudly, never be silently replaced by a twin. */
+  def refOr(rel: String)(twin: => String): String =
+    if (refPresent) s"$RefData/$rel" else twin
   val P1065 = s"$RefData/las/1.2-with-color.las"
 }
 

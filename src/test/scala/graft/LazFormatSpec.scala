@@ -190,8 +190,10 @@ class LazFormatSpec extends AnyFunSuite {
   }
 
   test("offset-split ingest refuses compressed streams loudly") {
+    // twin: the LAZ twin
+    val laz = refOr("laz/simple.laz")(Twins.laz)
     val ex = intercept[IllegalArgumentException] {
-      LasDecode.asSplitDataFrame(spark, s"$RefData/laz/simple.laz", 2).count()
+      LasDecode.asSplitDataFrame(spark, laz, 2).count()
     }
     assert(ex.getMessage.contains("uncompressed"))
   }

@@ -57,11 +57,12 @@ class NitfSpec extends AnyFunSuite {
   }
 
   test("non-LAS NITF and non-NITF inputs fail loudly") {
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(s"$N/autzen-utm10.ntf"))
+    // twin: the NITF twin, whose DES subheader follows its 401-byte header
+    val path = refOr("nitf/autzen-utm10.ntf")(Twins.nitf)
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val noDes = bytes.clone()
     // blank out the DESID so no LIDARA segment is found
-    val desSub = 761687
+    val desSub = if (path.startsWith(RefData)) 761687 else Twins.NitfDesAt
     (0 until 10).foreach(i => noDes(desSub + 2 + i) = ' ')
     val boom = intercept[IllegalArgumentException] { Nitf.lasPayload(noDes) }
     assert(boom.getMessage.contains("LIDARA"))

@@ -153,8 +153,11 @@ class PclBlockGoldenSpec extends AnyFunSuite {
   }
 
   test("tile_size is rejected loudly") {
+    // twin: the LAZ twin; run rejects the option before it reads a row
+    val cloud = LasDecode.asDataFrame(spark,
+      refOr("autzen/autzen-point-format-3.las")(Twins.laz))
     val ex = intercept[IllegalArgumentException] {
-      PclBlock.run(autzen, """{"pipeline":{"tile_size":100,"filters":[]}}""")
+      PclBlock.run(cloud, """{"pipeline":{"tile_size":100,"filters":[]}}""")
     }
     assert(ex.getMessage.contains("tile_size"))
   }

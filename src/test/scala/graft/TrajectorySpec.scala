@@ -41,22 +41,27 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("sbet badfile (size not a record multiple) fails loudly") {
+    // twin: the SBET twin plus one trailing byte, in its own directory
+    val bad = refOr("sbet/badfile.sbet")(Twins.sbetBad)
     val e = intercept[IllegalArgumentException] {
-      PointCodec.readFile(spark, s"$RefData/sbet/badfile.sbet", Sbet.Codec())
+      PointCodec.readFile(spark, bad, Sbet.Codec())
     }
     assert(e.getMessage.contains("invalid sbet file size"))
   }
 
   test("sbet distributed decode equals the driver decode") {
-    val drv = PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
+    // twin: the SBET twin; the glob is derived from the file's own name
+    val f = refOr("sbet/2-points.sbet")(Twins.sbet)
+    val drv = PointCodec.readFile(spark, f, Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = PointCodec.readFiles(spark, s"$RefData/sbet/2-points*.sbet", Sbet.Codec())
+    val dist = PointCodec.readFiles(spark, f.stripSuffix(".sbet") + "*.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
     assert(dist === drv)
   }
 
   test("writers.sbet round-trips the fixture byte-exactly") {
-    val src = s"$RefData/sbet/2-points.sbet"
+    // twin: the SBET twin
+    val src = refOr("sbet/2-points.sbet")(Twins.sbet)
     val out = java.nio.file.Files.createTempDirectory("sbetw").toString + "/rt.sbet"
     Sbet.write(out, PointCodec.readFile(spark, src, Sbet.Codec()))
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
@@ -148,8 +153,10 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("terrasolid rejects a non-TerraSolid file loudly") {
+    // twin: the SBET twin, as a non-TerraSolid file
+    val notBin = refOr("sbet/2-points.sbet")(Twins.sbet)
     val e = intercept[IllegalArgumentException] {
-      PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Terrasolid.Codec())
+      PointCodec.readFile(spark, notBin, Terrasolid.Codec())
     }
     assert(e.getMessage.contains("970401"))
   }
