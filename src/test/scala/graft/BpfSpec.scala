@@ -167,20 +167,16 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("distributed glob ingest equals driver decode") {
-    // twin: the BPF twin
-    val f = refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf)
-    val driver = PointCodec.readFile(spark, f, Bpf.Codec())
+    val driver = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = Bpf.asDistributedDataFrame(spark, f)
+    val dist = Bpf.asDistributedDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
       .orderBy("span_idx").collect().toSeq
     assert(dist === driver)
   }
 
   test("executor-sharded write: 4 shards re-decode to the full cloud, file: URI two-phase") {
     import org.apache.spark.sql.functions._
-    // twin: the BPF twin
-    val src = PointCodec.readFile(spark,
-      refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf), Bpf.Codec())
+    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .withColumn("shard", pmod(col("span_idx"), lit(4)))
     // shard files re-index spans per shard, so compare order-free
     // aggregate invariants (one float32 re-quantization hop of slack)

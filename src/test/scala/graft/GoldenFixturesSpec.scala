@@ -32,7 +32,10 @@ object TestSpark {
         s"reference fixture root $RefData is missing (needed for $rel)")
     s"$RefData/$rel"
   }
-  private def refPresent: Boolean =
+  /** Whether the fixture root [[RefData]] is a directory: the one
+    * condition on which [[refOr]] (and a spec that picks its input
+    * directly) takes the fixture rather than an engine-written twin. */
+  def refPresent: Boolean =
     java.nio.file.Files.isDirectory(java.nio.file.Paths.get(RefData))
   /** Input path for a spec that uses the reference fixture `rel` only as
     * an arbitrary file of its format (a loud failure on a malformed file,

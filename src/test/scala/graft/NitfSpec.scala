@@ -62,7 +62,7 @@ class NitfSpec extends AnyFunSuite {
     val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
     val noDes = bytes.clone()
     // blank out the DESID so no LIDARA segment is found
-    val desSub = if (path.startsWith(RefData)) 761687 else Twins.NitfDesAt
+    val desSub = if (refPresent) 761687 else Twins.NitfDesAt
     (0 until 10).foreach(i => noDes(desSub + 2 + i) = ' ')
     val boom = intercept[IllegalArgumentException] { Nitf.lasPayload(noDes) }
     assert(boom.getMessage.contains("LIDARA"))

@@ -154,8 +154,7 @@ class PclBlockGoldenSpec extends AnyFunSuite {
 
   test("tile_size is rejected loudly") {
     // twin: the LAZ twin; run rejects the option before it reads a row
-    val cloud = LasDecode.asDataFrame(spark,
-      refOr("autzen/autzen-point-format-3.las")(Twins.laz))
+    val cloud = if (refPresent) autzen else LasDecode.asDataFrame(spark, Twins.laz)
     val ex = intercept[IllegalArgumentException] {
       PclBlock.run(cloud, """{"pipeline":{"tile_size":100,"filters":[]}}""")
     }

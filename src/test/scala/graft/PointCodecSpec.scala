@@ -18,13 +18,8 @@ class PointCodecSpec extends AnyFunSuite {
 
   private val xf = LasWriter.XForms(0.125, 0.125, 0.125, 0, 0, 0)
 
-  private lazy val src = spark.range(0, 300).select(
-    lit("src").as("doc_id"), col("id").cast("int").as("span_idx"),
-    ((col("id") % 37) * 0.25 + 100).as("x"),
-    ((col("id") / 37).cast("long") * 0.5).as("y"),
-    ((col("id") % 11) * 0.125 - 1).as("z"),
-    (col("id") % 200).cast("int").as("intensity"),
-    (col("id") % 3).cast("int").as("shard"))
+  private lazy val src = Twins.grid(300, 37, 11, (100.0, 0.0, -1.0), (0.25, 0.5, 0.125))
+    .withColumn("shard", col("span_idx") % 3)
 
   private def xyz(d: DataFrame): Seq[(Double, Double, Double)] =
     d.select("x", "y", "z").collect()

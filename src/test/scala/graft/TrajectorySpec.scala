@@ -41,7 +41,7 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("sbet badfile (size not a record multiple) fails loudly") {
-    // twin: the SBET twin plus one trailing byte, in its own directory
+    // twin: the SBET twin plus one trailing byte
     val bad = refOr("sbet/badfile.sbet")(Twins.sbetBad)
     val e = intercept[IllegalArgumentException] {
       PointCodec.readFile(spark, bad, Sbet.Codec())
@@ -50,18 +50,15 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("sbet distributed decode equals the driver decode") {
-    // twin: the SBET twin; the glob is derived from the file's own name
-    val f = refOr("sbet/2-points.sbet")(Twins.sbet)
-    val drv = PointCodec.readFile(spark, f, Sbet.Codec())
+    val drv = PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = PointCodec.readFiles(spark, f.stripSuffix(".sbet") + "*.sbet", Sbet.Codec())
+    val dist = PointCodec.readFiles(spark, s"$RefData/sbet/2-points*.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
     assert(dist === drv)
   }
 
   test("writers.sbet round-trips the fixture byte-exactly") {
-    // twin: the SBET twin
-    val src = refOr("sbet/2-points.sbet")(Twins.sbet)
+    val src = s"$RefData/sbet/2-points.sbet"
     val out = java.nio.file.Files.createTempDirectory("sbetw").toString + "/rt.sbet"
     Sbet.write(out, PointCodec.readFile(spark, src, Sbet.Codec()))
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
