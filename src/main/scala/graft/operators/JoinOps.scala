@@ -1,14 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column, SparkSession}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.SpatialFunctions
 import graft.index.{CellSpace, PolygonCover, GeomCache, PipIndex}
+import graft.plans.RowFold
 
 /** Codegen'd 3x3 neighbor-ring of a cell id (the MLS smoother's
   * replication keys), kept out of Scala UDFs so whole-stage codegen holds
@@ -271,8 +271,8 @@ object JoinOps {
     * the kept rows come straight out of the materialized distances.
     *
     * DETERMINISTIC THRESHOLD: mu and sigma are computed from mean
-    * distances quantized to 1e-6 and summed as exact integers (decimal
-    * sums are order-free, unlike double partial aggregation), then
+    * distances quantized to 1e-6 and summed as exact integers
+    * ([[SorMoments]]: order-free, unlike double partial aggregation), then
     * combined on the driver in one fixed op sequence — so the kept set
     * is bit-identical across partitionings/executor counts and exactly
     * mirrorable in SQL (the r2 VERDICT's last-ulp membership flake is
@@ -286,26 +286,39 @@ object JoinOps {
     // materialize once via eager localCheckpoint (SOR is already eager
     // through the escalation loop) so the blocks are ContextCleaner-freed
     // when the caller drops the frame, instead of pinning a CacheManager
-    // entry forever.
-    val meanDist = nn.withColumn("__md",
+    // entry forever. The moments are folded by that checkpoint's own job.
+    val md = nn.withColumn("__md",
         aggregate(transform(col("__nnd2"), d => sqrt(d)), lit(0.0), (a, v) => a + v)
           / size(col("__nnd2")))
       .withColumn("__q", floor(col("__md") * lit(1000000.0) + lit(0.5)))
       .drop("__nnd2")
-      .localCheckpoint(eager = true)
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val mom = meanDist.agg(
-      sum(col("__q").cast(dec)).as("s1"),
-      sum(col("__q").cast(dec) * col("__q").cast(dec)).as("s2"),
-      count(lit(1)).as("n")).head()
-    if (mom.getLong(2) < 2) return df.limit(0) // sigma undefined (matches prior null-threshold behavior)
-    val n = mom.getLong(2)
-    val s1 = mom.getDecimal(0).toBigInteger.doubleValue()
-    val s2 = mom.getDecimal(1).toBigInteger.doubleValue()
+    val qi = md.schema.fieldIndex("__q")
+    val (tapped, moments) = RowFold.tap(md, () => new SorMoments(qi))
+    val meanDist = tapped.localCheckpoint(eager = true)
+    val mom = moments()
+    if (mom.n < 2) return df.limit(0) // sigma undefined (matches prior null-threshold behavior)
+    val (n, s1, s2) = (mom.n, mom.s1.doubleValue(), mom.s2.doubleValue())
     // fixed scalar op sequence — mirrored token-for-token in the oracle
     val mean = s1 / n
     val varS = (s2 - s1 * s1 / n) / (n - 1)
     val t = mean + multThresh * math.sqrt(math.max(varS, 0.0))
     meanDist.filter(col("__q") <= lit(t)).drop("__md", "__q")
+  }
+
+  /** Exact moments of SOR's quantized mean distances (field `qi`): the
+    * row count `n`, and Σq and Σq² over the rows whose q is not null. */
+  private final class SorMoments(qi: Int) extends RowFold.Partial[SorMoments] {
+    var n = 0L
+    var s1: java.math.BigInteger = java.math.BigInteger.ZERO
+    var s2: java.math.BigInteger = java.math.BigInteger.ZERO
+    def add(row: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+      n += 1
+      if (!row.isNullAt(qi)) {
+        val q = java.math.BigInteger.valueOf(row.getLong(qi))
+        s1 = s1.add(q)
+        s2 = s2.add(q.multiply(q))
+      }
+    }
+    def merge(o: SorMoments): Unit = { n += o.n; s1 = s1.add(o.s1); s2 = s2.add(o.s2) }
   }
 }

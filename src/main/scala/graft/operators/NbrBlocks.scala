@@ -4,16 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.AccumulatorV2
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 import graft.functions.InSortedLongs
 import graft.index.CellSpace
+import graft.plans.RowFold
 
 /** The neighbourhood kernel's block grid: square blocks of side
   * 4 * `reach` anchored at (ox, oy), unclamped. A point lives in its home
@@ -106,32 +107,29 @@ case class HaloBlocksExpr(left: Expression, right: Expression, grid: BlockGrid,
     copy(left = l, right = r)
 }
 
-/** Uncertified kNN targets of one round: how many, and the distinct keys
-  * of their home blocks at the next level, up to `cap` (past it the key
-  * set is dropped and the next round reads every source). */
-final class PendingBlocks(cap: Int)
-    extends AccumulatorV2[Long, (Long, Option[Array[Long]])] {
-  private var count = 0L
+/** Uncertified kNN targets of one round's output rows (`__x`, `__y` and
+  * `__ok` are fields 1, 2 and 5): how many, and the distinct keys of their
+  * home blocks on grid `next`, up to `cap` (past it the key set is
+  * dropped and the next round reads every source). */
+final class PendingBlocks(cap: Int, next: BlockGrid) extends RowFold.Partial[PendingBlocks] {
+  var count = 0L
   private var overflow = false
   private val keys = new java.util.HashSet[java.lang.Long]()
-  override def isZero: Boolean = count == 0 && !overflow && keys.isEmpty
-  override def copy(): PendingBlocks = { val p = new PendingBlocks(cap); p.merge(this); p }
-  override def reset(): Unit = { count = 0; overflow = false; keys.clear() }
-  override def add(k: Long): Unit = { count += 1; addKey(k) }
+  def add(r: InternalRow): Unit =
+    if (!r.getBoolean(5)) { count += 1; addKey(next.home(r.getDouble(1), r.getDouble(2))) }
   private def addKey(k: Long): Unit =
     if (!overflow) {
       keys.add(k)
       if (keys.size > cap) { overflow = true; keys.clear() }
     }
-  override def merge(o: AccumulatorV2[Long, (Long, Option[Array[Long]])]): Unit = o match {
-    case p: PendingBlocks =>
-      count += p.count
-      if (p.overflow) { overflow = true; keys.clear() }
-      else p.keys.forEach(k => addKey(k))
+  def merge(p: PendingBlocks): Unit = {
+    count += p.count
+    if (p.overflow) { overflow = true; keys.clear() }
+    else p.keys.forEach(k => addKey(k))
   }
-  /** (uncertified targets, their sorted next-level block keys or None past the cap). */
-  override def value: (Long, Option[Array[Long]]) =
-    (count, if (overflow) None else Some(keys.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted))
+  /** The sorted next-level block keys, or None past the cap. */
+  def blocks: Option[Array[Long]] =
+    if (overflow) None else Some(keys.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted)
 }
 
 /** One neighbourhood kernel for the engine's exact point-neighbourhood
@@ -392,9 +390,9 @@ object NbrBlocks {
     * of the blocks that hold them, until level 0 (one block: exact by
     * construction, targets without any candidate dropped). Each round is
     * one block shuffle, materialized once; the round's uncertified count
-    * and next-level blocks come back in a [[PendingBlocks]] accumulator,
-    * so a round launches no job beyond its own. Returns `payload` columns
-    * + `result` columns. */
+    * and next-level blocks are folded ([[PendingBlocks]]) by that
+    * materialization's own job, so a round launches no job beyond it.
+    * Returns `payload` columns + `result` columns. */
   private def knnRounds(left: DataFrame, right: DataFrame, startLevel: Int, space: CellSpace,
                         dims3: Boolean, excludeSelf: Boolean, kHint: Int, payload: Seq[String],
                         nearest: Boolean, result: StructType)
@@ -430,7 +428,6 @@ object NbrBlocks {
         val spread = if (zq == null || zq.length < 2) 0.0 else zq(1) - zq(0)
         JoinOps.knnAutoLevel(st.getLong(0), kHint, space, spread, margin = 6.0)
       }
-    val sc = right.sparkSession.sparkContext
     val certified = ArrayBuffer.empty[DataFrame]
     var keep: Option[Array[Long]] = None
     var first = true
@@ -438,8 +435,6 @@ object NbrBlocks {
     while (!done) {
       val g = BlockGrid.atLevel(space, lvl)
       val next = BlockGrid.atLevel(space, math.max(0, lvl - 2))
-      val acc = new PendingBlocks(1 << 16)
-      sc.register(acc, s"knn pending blocks, level $lvl")
       val rows =
         if (first && self) selfRows(rP, g, sid)
         else {
@@ -453,7 +448,7 @@ object NbrBlocks {
             .unionByName(pending.select(Seq(home(g).as("__blk"), lit(true).as("__tgt"),
               lit(false).as("__src")) ++ core ++ Seq(col("__row")) ++ noSid: _*))
         }
-      val res = perBlock(rows, out) { b =>
+      val round = perBlock(rows, out) { b =>
         val members = (0 until b.n).filter(b.src(_)).toArray
         // cells of ~2 sources: the ring search stops after a ring or two
         val gr = new LocalGrid(b, members, g.reach / 64, members.length / 2 + 16)
@@ -465,18 +460,17 @@ object NbrBlocks {
           val head = Seq(b.pid(t), tx, ty, b.z(t), b.row(t))
           if (c.ok(rMax, g.single)) Some(Row.fromSeq(head ++ (true +: c.values)))
           else if (g.single) None
-          else {
-            acc.add(next.home(tx, ty))
-            Some(Row.fromSeq(head ++ (false +: result.fields.map(_ => null).toSeq)))
-          }
+          else Some(Row.fromSeq(head ++ (false +: result.fields.map(_ => null).toSeq)))
         }
-      }.localCheckpoint(eager = true)
+      }
+      val (tapped, pend) = RowFold.tap(round, () => new PendingBlocks(1 << 16, next))
+      val res = tapped.localCheckpoint(eager = true)
       certified += res.filter(col("__ok"))
-      val (uncertified, blocks) = acc.value
-      if (uncertified == 0) done = true
+      val uncertified = pend()
+      if (uncertified.count == 0) done = true
       else {
         pending = res.filter(!col("__ok")).select(core :+ col("__row"): _*)
-        keep = blocks
+        keep = uncertified.blocks
         lvl = math.max(0, lvl - 2)
       }
       first = false

@@ -1,10 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.nio.file.{Files, Paths, Path}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 /** Iceberg-style table + lineage layer (no Iceberg jar in this
   * environment, so the manifest/snapshot machinery is built here —
@@ -49,42 +51,75 @@ object Manifest {
   }
 
   /** Lineage partition key: the doc's spatial tile when x/y exist, else
-    * a stable hash bucket of doc_id. */
+    * a stable hash bucket of doc_id. Rows with a null x or y have no tile;
+    * the fold files them under [[NullCoordKey]]. */
   def lineageKey(df: DataFrame, buckets: Int = 64): org.apache.spark.sql.Column = {
     if (df.columns.contains("x") && df.columns.contains("y"))
       graft.functions.SpatialFunctions.cellId(col("x"), col("y"), 3)
     else pmod(xxhash64(col("doc_id")), lit(buckets)).cast(LongType)
   }
 
-  /** Compute per-partition lineage of a DataFrame — ONE aggregate job
-    * that also folds in the per-partition bbox/count when the frame has
-    * coordinates, rolled up driver-side into the manifest's QuickStats. */
+  /** Lineage key of rows whose x or y is null: tile ids and hash buckets
+    * are never negative. */
+  val NullCoordKey: Long = -1L
+
+  /** The fold's totals over one task's rows, or over many merged: per
+    * lineage key the row count and the XOR of the row digests; per axis
+    * (x, y, z) the least and greatest non-null value in
+    * `java.lang.Double.compare` order (NaN above every number, as in
+    * Spark's min/max), `seen(a)` false while axis `a` has none. */
+  private final class Totals(@transient inputs: Seq[Expression]) extends RowFold.Partial[Totals] {
+    @transient private lazy val proj = UnsafeProjection.create(inputs)
+    private val keys = scala.collection.mutable.LongMap.empty[Array[Long]]
+    private val lo, hi = new Array[Double](3)
+    private val seen = new Array[Boolean](3)
+    private def key(k: Long, rows: Long, digest: Long): Unit = {
+      val t = keys.getOrElseUpdate(k, new Array[Long](2))
+      t(0) += rows; t(1) ^= digest
+    }
+    private def coord(a: Int, v: Double): Unit =
+      if (!seen(a)) { seen(a) = true; lo(a) = v; hi(a) = v }
+      else {
+        if (java.lang.Double.compare(v, lo(a)) < 0) lo(a) = v
+        if (java.lang.Double.compare(v, hi(a)) > 0) hi(a) = v
+      }
+    def add(row: InternalRow): Unit = {
+      val in = proj(row)
+      key(if (in.isNullAt(0)) NullCoordKey else in.getLong(0), 1, in.getLong(1))
+      for (a <- 2 until in.numFields if !in.isNullAt(a)) coord(a - 2, in.getDouble(a))
+    }
+    def merge(o: Totals): Unit = {
+      o.keys.foreach { case (k, t) => key(k, t(0), t(1)) }
+      for (a <- 0 until 3 if o.seen(a)) { coord(a, o.lo(a)); coord(a, o.hi(a)) }
+    }
+    def lineage: Seq[PartitionLineage] =
+      keys.toSeq.sortBy(_._1).map { case (k, t) => PartitionLineage(k, t(0), t(1)) }
+    /** Row count and non-null bounds; None unless every axis has a value. */
+    def info: Option[QuickStats] =
+      if (!seen.forall(identity)) None
+      else Some(QuickStats(keys.valuesIterator.map(_(0)).sum, lo(0), hi(0), lo(1), hi(1), lo(2), hi(2)))
+  }
+
+  /** New [[Totals]] over `df`'s rows, whose inputs are the lineage key,
+    * the row digest xxhash64(cast(col as string), ...) over all columns,
+    * and x, y, z as doubles when the frame has all three. */
+  private def totals(df: DataFrame): () => Totals = {
+    val xyz = Seq("x", "y", "z")
+    val coords = if (xyz.forall(df.columns.contains)) xyz.map(col(_).cast(DoubleType)) else Nil
+    val digest = expr(s"xxhash64(${df.columns.map(c => s"cast(`$c` as string)").mkString(", ")})")
+    val inputs = df.select(Seq(lineageKey(df), digest) ++ coords: _*).queryExecution.analyzed match {
+      case Project(list, child) =>
+        BindReferences.bindReferences(list.map { case Alias(e, _) => e; case e => e }, AttributeSeq(child.output))
+    }
+    () => new Totals(inputs)
+  }
+
+  /** Per-partition lineage of a DataFrame and, when it has coordinates,
+    * its QuickStats: one map-only job, each task returning its totals
+    * (at most 64 keys, plus [[NullCoordKey]]) through an accumulator. */
   def lineageOf(df: DataFrame): (Seq[PartitionLineage], Option[QuickStats]) = {
-    val spatial = Seq("x", "y", "z").forall(df.columns.contains)
-    val baseAggs = Seq(count(lit(1)).as("rows"),
-      expr(s"bit_xor(xxhash64(${df.columns.map(c => s"cast(`$c` as string)").mkString(", ")}))")
-        .as("digest"))
-    val bboxAggs = if (spatial)
-      Seq(min("x").as("mnx"), max("x").as("mxx"), min("y").as("mny"),
-        max("y").as("mxy"), min("z").as("mnz"), max("z").as("mxz"))
-    else Nil
-    val aggs = baseAggs ++ bboxAggs
-    val rows = df.withColumn("__lk", lineageKey(df))
-      .groupBy(col("__lk"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val lineage = rows
-      .map(r => PartitionLineage(r.getLong(0), r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2)))
-      .sortBy(_.key).toSeq
-    val info =
-      if (spatial && rows.nonEmpty)
-        Some(QuickStats(rows.map(_.getLong(1)).sum,
-          rows.map(_.getDouble(3)).min, rows.map(_.getDouble(4)).max,
-          rows.map(_.getDouble(5)).min, rows.map(_.getDouble(6)).max,
-          rows.map(_.getDouble(7)).min, rows.map(_.getDouble(8)).max))
-      else None
-    (lineage, info)
+    val t = RowFold.scan(df, totals(df))
+    (t.lineage, t.info)
   }
 
   // ---- JSON (hand-rolled: flat, stable ordering, no extra deps) ----
@@ -147,16 +182,19 @@ object Manifest {
     if (Files.exists(p)) Some(fromJson(Files.readString(p))) else None
   }
 
-  /** Checkpoint a stage: write data (partition-pruned layout: bucketed
-    * by lineage key), compute lineage, persist manifest. */
+  /** Checkpoint a stage: write its data and the manifest of its lineage.
+    * One Spark job: the lineage is folded by the parquet write's own
+    * tasks ([[RowFold.tap]]), which read the stage's rows directly, with
+    * no exchange or sort between the fold and the writer, so each
+    * partition's totals reach the manifest exactly once. */
   def checkpoint(root: String, stage: String, fingerprint: String,
                  inputs: Seq[String], df: DataFrame): StageManifest = {
-    val dataDir = s"$root/$stage/data"
-    df.write.mode("overwrite").parquet(dataDir)
+    val (tapped, folded) = RowFold.tap(df, totals(df))
+    tapped.write.mode("overwrite").parquet(s"$root/$stage/data")
     Files.createDirectories(Paths.get(root, stage))
     Files.writeString(Paths.get(root, stage, "schema.json"), readBack(df.schema).json)
-    val (lineage, info) = lineageOf(readData(df.sparkSession, root, stage))
-    val m = StageManifest(stage, fingerprint, inputs, lineage, info)
+    val t = folded()
+    val m = StageManifest(stage, fingerprint, inputs, t.lineage, t.info)
     write(root, m)
     m
   }
@@ -169,8 +207,8 @@ object Manifest {
   /** Deep validation: recompute the checkpoint data's per-partition
     * lineage and compare against the manifest — catches bit rot or
     * out-of-band edits the fingerprint (config-level) cannot see. One
-    * aggregate job over the checkpoint; order-independent digests make
-    * the compare partition-by-partition exact. */
+    * map-only scan of the checkpoint ([[lineageOf]]); order-independent
+    * digests make the compare partition-by-partition exact. */
   def validate(spark: SparkSession, root: String, stage: String): Boolean =
     read(root, stage).exists { m =>
       try lineageOf(readData(spark, root, stage))._1 == m.partitions

@@ -176,7 +176,7 @@ object Pipeline {
       // ---- readers -----------------------------------------------------
       case "readers.doc" =>
         val docs = st.str("path") match {
-          case Some(p) => spark.read.parquet(p)
+          case Some(p) => spark.read.schema(Model.docSchema).parquet(p) // no footer job
           case None => DocSynth.cachedDocs(spark, st.str("sf_dir")
             .getOrElse(throw new IllegalArgumentException("readers.doc needs path or sf_dir")))
         }
@@ -341,11 +341,15 @@ object Pipeline {
         // the engine's documented estimator is density-matched sizing
         // edge = 2*sqrt(bbox_area / n) over the FULL frame (one
         // aggregate) — deterministic and partition-invariant, unlike a
-        // limit()-sample; sample_size is accepted for spec compat but
-        // exact stats make it unnecessary
+        // limit()-sample; sample_size is accepted for spec compat and
+        // ignored, with a WARN
         val edgeOpt = st.dbl("edge_length").orElse(st.dbl("edge_size"))
           .orElse(st.dbl("edge")).filter(_ != 0.0)
         val edge = edgeOpt.getOrElse {
+          if (st.config.obj.exists(_._1 == "sample_size"))
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(st.typ +
+              st.str("tag").fold("")(t => s" '$t'") +
+              ": sample_size is ignored; the edge is estimated over the full frame")
           val s = in.get
             .agg(min("x"), max("x"), min("y"), max("y"), count(lit(1))).head()
           if (s.isNullAt(0)) 10.0 // empty input: any edge yields an empty grid

@@ -436,10 +436,10 @@ object LasDecode {
     * per point instead of ~20 (external Row + field boxing + the
     * RowEncoder conversion projection). At 8+ concurrent decode tasks
     * in one JVM the allocation-rate/cache pressure of the boxed path
-    * was the measured scaling bottleneck (LazScaleTry: GC <= 5% but
-    * per-core throughput halved 2 -> 8 cores). Field-for-field
-    * identical to decodeRecord; the distributed==driver equality specs
-    * pin that. */
+    * was the measured scaling bottleneck (a replicated-LAZ scaling run
+    * measured GC <= 5% but per-core throughput halved 2 -> 8 cores).
+    * Field-for-field identical to decodeRecord; the distributed==driver
+    * equality specs pin that. */
   def decodeRecordUnsafe(bb: ByteBuffer, base: Int, h: LasHeader,
                          docId: org.apache.spark.unsafe.types.UTF8String, idx: Int,
                          w: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter)

@@ -405,4 +405,115 @@ class PipelineSpec extends AnyFunSuite {
     assert(Manifest.readData(spark, ck, "st").schema === inferred.schema)
     assert(Manifest.validate(spark, ck, "st"))
   }
+
+  /** The result-stage name of each job `body` launches, in start order. */
+  private def jobNames(body: => Unit): Seq[String] = {
+    val names = scala.collection.mutable.ArrayBuffer.empty[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        names.synchronized(names += j.stageInfos.maxBy(_.stageId).name)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(300) } // drain listener-bus events
+    finally spark.sparkContext.removeSparkListener(listener)
+    names.synchronized(names.toSeq)
+  }
+
+  test("job-count gate: checkpoint 1 job, validate 1, readers.doc 0, SOR none after its mean distances") {
+    val ck = tmp()
+    val df = sources.Faux.ramp(spark, sources.Faux.Box3(0, 0, 0, 50, 50, 5), 400)
+    var m: Manifest.StageManifest = null
+    val ckJobs = jobNames { m = Manifest.checkpoint(ck, "g", "fp0", Nil, df) }
+    assert(ckJobs.size === 1, s"checkpoint ran $ckJobs")
+    assert(m.totalRows === 400 && m.info.exists(_.count === 400))
+    var ok = false
+    val valJobs = jobNames { ok = Manifest.validate(spark, ck, "g") }
+    assert(ok && valJobs.size === 1, s"validate ran $valJobs")
+    // readers.doc with a path reads with the doc schema: no footer job
+    val docs = tmp() + "/docs"
+    spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row("d0",
+        Seq(org.apache.spark.sql.Row("point", "2,4,6,10,1", "", 0)))), Model.docSchema)
+      .write.parquet(docs)
+    var pts: org.apache.spark.sql.DataFrame = null
+    val docJobs = jobNames {
+      pts = Pipeline.run(spark, s"""{"pipeline": [{"type": "readers.doc", "path": "$docs"}]}""").df
+    }
+    assert(docJobs.isEmpty, s"readers.doc ran $docJobs")
+    assert(pts.select("x", "y", "z").head() === org.apache.spark.sql.Row(1.0, 2.0, 3.0))
+    // SOR: the threshold moments come from the mean-distance
+    // materialization itself, so it is the last job SOR launches
+    val cloud = sources.Faux.uniform(spark, sources.Faux.Box3(0, 0, 0, 100, 100, 5), 600, seed = 3)
+    var kept: org.apache.spark.sql.DataFrame = null
+    val sorJobs = jobNames { kept = operators.JoinOps.statisticalOutlierRemoval(4, 1.0, level = 4)(cloud) }
+    def meanDistances(name: String) = name.startsWith("localCheckpoint at JoinOps")
+    assert(sorJobs.count(meanDistances) === 1, s"SOR ran $sorJobs")
+    assert(meanDistances(sorJobs.last), s"SOR ran jobs after its mean distances: $sorJobs")
+    assert(kept.count() > 0)
+  }
+
+  test("null coordinates checkpoint, validate and resume") {
+    val base = sources.Faux.ramp(spark, sources.Faux.Box3(0, 0, 0, 10, 10, 10), 100)
+    val nullX = base.withColumn("x", when(col("offset_time") === 3, lit(null).cast("double"))
+      .otherwise(col("x")))
+    val nullZ = base.withColumn("z", lit(null).cast("double"))
+    val ck = tmp()
+    val mx = Manifest.checkpoint(ck, "nx", "fp0", Nil, nullX)
+    assert(mx.partitions.find(_.key == Manifest.NullCoordKey).map(_.rows) === Some(1L))
+    assert(mx.totalRows === 100)
+    // bounds over the non-null values; the null row still counts
+    val want = nullX.agg(min("x"), max("x"), min("y"), max("y"), min("z"), max("z")).head()
+    assert(mx.info === Some(Manifest.QuickStats(100, want.getDouble(0), want.getDouble(1),
+      want.getDouble(2), want.getDouble(3), want.getDouble(4), want.getDouble(5))))
+    assert(Manifest.validate(spark, ck, "nx"))
+    val mz = Manifest.checkpoint(ck, "nz", "fp0", Nil, nullZ)
+    assert(mz.totalRows === 100 && !mz.partitions.exists(_.key == Manifest.NullCoordKey))
+    assert(mz.info.isEmpty, "a stage with no non-null z records no QuickStats")
+    assert(Manifest.quickInfo(spark, ck, "nz").isEmpty)
+    assert(Manifest.validate(spark, ck, "nz"))
+    // through the runner: checkpoint, validate on resume, resume
+    for ((name, frame) <- Seq("nx" -> nullX, "nz" -> nullZ)) {
+      val in = tmp() + "/in"
+      frame.write.parquet(in)
+      val pck = tmp()
+      val spec =
+        s"""{ "pipeline": [
+           |  {"type": "readers.parquet", "path": "$in"},
+           |  {"type": "filters.range", "checkpoint": true, "validate_resume": true,
+           |   "limits": [{"dimension": "offset_time", "min": 0, "max": 1000}]}
+           |], "checkpoint_root": "$pck" }""".stripMargin
+      val first = Pipeline.run(spark, spec)
+      assert(first.df.count() === 100, name)
+      val again = Pipeline.run(spark, spec)
+      assert(again.resumedStages === Seq("001_filters_range"), name)
+      assert(again.df.count() === 100, name)
+    }
+  }
+
+  test("filters.hexbin warns once, naming the stage, that sample_size is ignored") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warnings = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val capture = new AbstractAppender("hexbin-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    def run(opts: String): Long = Pipeline.run(spark, s"""{"pipeline": [
+      {"type": "readers.faux", "mode": "uniform", "bounds": [0, 0, 0, 10, 10, 1], "count": 200},
+      {"type": "filters.hexbin", "tag": "hx"$opts}]}""").df.count()
+    try {
+      assert(run(""", "sample_size": 50""") > 0)
+      assert(run(""", "sample_size": 50, "edge_length": 1.0""") > 0) // no estimate, no notice
+      assert(run("") > 0)
+    } finally { root.removeAppender("hexbin-capture"); ctx.updateLoggers(); capture.stop() }
+    val notices = warnings.toArray.map(_.toString).filter(_.contains("sample_size")).toSeq
+    assert(notices.size === 1, s"warnings: $warnings")
+    assert(notices.head.contains("filters.hexbin 'hx'") && notices.head.contains("full frame"))
+  }
 }
