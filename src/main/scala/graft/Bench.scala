@@ -45,9 +45,10 @@ object Bench {
       w.groupBy("k").agg(sum("id"), count(lit(1))).count()
       w.withColumn("rn", row_number().over(
         Window.partitionBy(col("k")).orderBy(col("id")))).filter(col("rn") === 1).count()
-      // quantile-sketch machinery (chipperApprox medians): the
-      // QuantileSummaries insert/compress path is interpreter-slow until
-      // C2 compiles it — a session constant, not per-query work
+      // quantile-sketch machinery (the 3D kNN level pick's z spread; the
+      // chipper's rounds bracket their cuts with a row sample instead):
+      // the QuantileSummaries insert/compress path is interpreter-slow
+      // until C2 compiles it — a session constant, not per-query work
       w.groupBy("k").agg(percentile_approx(col("id").cast("double"),
         lit(0.5), lit(250))).count()
       // Bloom-delta machinery (bloomDeltaDedup): BloomFilter class load,
@@ -72,23 +73,23 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       timed(name)(() => fn(spark, sfDir).count())
     }
-    // scale-path evidence beyond the driver queries: the approximate
-    // (map-only-assignment) chipper on an 8x-replicated cloud — the
-    // capacity-tiling path that replaces the exact chipper's per-round
-    // window sorts at 100x data (VERDICT r1 asked for this measured,
-    // not narrated). Size contract asserted here, not just timed.
+    // scale-path evidence beyond the driver queries: the exact chipper
+    // on an 8x-replicated cloud (4.8M points at sf0.1), whose sketch rounds
+    // split the top of the tree and whose tasks finish the nodes. Size
+    // contract asserted here, not just timed.
     // setup() materializes input OUTSIDE the timer (input construction is
     // not what the entry measures); the returned thunk is the timed job
     val extras: Seq[(String, () => () => Unit)] = Seq(
-      "x_chipper_approx_8x" -> (() => {
+      "x_chipper_8x" -> (() => {
         val pts = graft.model.Model.explodePoints(
           graft.sources.DocSynth.docTableReplicated(spark, sfDir, 8))
           .localCheckpoint()
+        val n = pts.count()
         () => {
-          val sizes = graft.operators.TileOps.chipperApprox(250000)(pts)
+          val sizes = graft.operators.TileOps.chipper(250000)(pts)
             .groupBy("chip").count().collect().map(_.getLong(1))
-          require(sizes.max <= (250000 * 1.3).toLong,
-            s"approx chip ${sizes.max} exceeds capacity + sketch slack")
+          require(sizes.length == (n + 249999) / 250000 && sizes.max <= 250000,
+            s"chipper made ${sizes.length} chips, largest ${sizes.max}, for $n points")
         }
       }),
       // compressed-archive ingest throughput: 16 executor-written .laz

@@ -37,10 +37,13 @@ case class MortonKey(left: Expression, right: Expression, space: CellSpace)
 }
 
 /** Level-tagged cell id containing (x, y) at `level` on the resolution
-  * ladder — the partition/join key of every spatial operator. */
+  * ladder — the partition/join key of every spatial operator. Other
+  * numeric coordinates (decimal, float, integer) are cast to double by the
+  * analyzer; double inputs get no cast. */
 case class CellId(left: Expression, right: Expression, space: CellSpace, level: Int)
-    extends BinaryExpression with Serializable {
+    extends BinaryExpression with ImplicitCastInputTypes with Serializable {
   require(level >= 0 && level <= CellSpace.MaxPackLevel, s"bad level $level")
+  override def inputTypes = Seq(DoubleType, DoubleType)
   override def dataType: DataType = LongType
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "cell_id"

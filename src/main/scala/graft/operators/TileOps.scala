@@ -1,9 +1,16 @@
 package graft.operators
 
+import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
+  GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.SpatialFunctions
 import graft.index.CellSpace
 
@@ -37,325 +44,299 @@ object TileOps {
       .agg(count(lit(1)).as("n"), min(col("x")).as("minx"), min(col("y")).as("miny"),
         max(col("x")).as("maxx"), max(col("y")).as("maxy"))
 
+  /** Rows per node a task finishes in memory ([[finish]]): the task
+    * holds the node's rows (copied UnsafeRows, the width of df0's row)
+    * plus about 60 bytes per row of keys, ranks and orders, so 1M rows of
+    * a ~100-byte point row bound a task's working memory near 160 MB,
+    * beside the rows Spark's sorter holds for the task's partition. A leaf
+    * (one chip) is never split, so a capacity above the budget raises the
+    * bound to the capacity. */
+  private val TaskRows = 1000000L
+
+  /** Sampled rows per node that bracket a distributed round's cut. */
+  private val SampleRows = 20000
+
   /** filters.chipper — capacity-balanced spatial tiling
-    * (ChipperFilter.cpp:39-68 algorithm description): recursively split
-    * the point set along the wider axis at "cumulate and round" rank
-    * boundaries (partition i boundary = lround(i * n / m), m = ceil(n /
-    * capacity), ChipperFilter.cpp:153-173) until each leaf covers one
-    * partition. Chip sizes reproduce the reference exactly because rank
-    * selection is exact (window row_number per node, stable tiebreak on
-    * original point order, matching the reference's stable_sort).
+    * (ChipperFilter.cpp:39-68): recursively split the point set along the
+    * wider axis at the "cumulate and round" rank bounds lround(i * n / m),
+    * m = ceil(n / capacity) (ChipperFilter.cpp:153-173), over the stable
+    * order (axis value, doc_id, span_idx), until every leaf holds one
+    * chip. Chip sizes and membership are the reference's exactly.
     *
-    * Distributed shape: log2(m) rounds. Small nodes rank with one window
-    * shuffle keyed by node; nodes above `sketchSplitMinRows` rows switch
-    * to a quantile-sketch split (aggregate + boundary refinement + map-
-    * only cut-key assignment — see the strategy comment in the loop)
-    * whose jobs never sort or shuffle the full data, so the first rounds
-    * stay parallel at any scale. Both paths are exact and bit-identical;
-    * the threshold is a parameter only so tests can force either path.
-    * At very large m, swap `exactRanks = false`-style sampling in; the
-    * contract (<= capacity, spatially contiguous, squarish) survives
-    * approximation — only exact size parity needs exact ranks.
+    * Distributed shape: Spark rounds over the narrow working set (doc_id,
+    * span_idx, x, y) split the top of the tree only while a node is too
+    * big to finish in one task ([[sketchRound]]; no round sorts or
+    * shuffles the full data). Their cut keys are then replayed map-only
+    * on df0's full rows ([[route]]), ONE shuffle groups each node, and
+    * each task finishes its nodes' subtrees in memory ([[finish]]).
     *
-    * Returns df + `chip` column (0-based chip ordinal in partition
-    * order along the recursion, which equals the reference's emit order).
-    */
-  def chipper(capacity: Long, sketchSplitMinRows: Long = 2000000L)(df0: DataFrame): DataFrame = {
-    // The driver loop only ever re-scans the NARROW working set
-    // (doc_id, span_idx, x, y) — materialize exactly that as an eager
-    // row-format localCheckpoint. A full-width columnar cache of df0
-    // (the previous shape) built the expensive array/struct columnar
-    // batches for columns the loop never touches and still paid a
-    // columnar->row conversion per scan; the narrow checkpoint is both
-    // cheaper to build and cheaper to read. df0 itself is scanned
-    // exactly once more by the final assignment join.
+    * The top splits a node while it holds more than
+    * min(taskRows, max(n, taskRows) / P) rows, P = the default
+    * parallelism: no node above the task budget reaches a task, and the
+    * top stops once about P nodes share the work, or once the nodes are
+    * so small (taskRows / P) that a task finishes one sooner than a round
+    * of Spark jobs splits it. `taskRows` defaults to [[TaskRows]]; tests
+    * lower it to force distributed rounds.
+    *
+    * Returns doc_id, span_idx, the other columns of df0, then `chip` INT:
+    * the leaf's partition index 0..m-1, the reference's emit order. */
+  def chipper(capacity: Long, taskRows: Long = TaskRows)(df0: DataFrame): DataFrame = {
+    require(capacity >= 1, s"filters.chipper capacity must be >= 1, got $capacity")
+    val spark = df0.sparkSession
+    val cols = (Seq("doc_id", "span_idx") ++
+      df0.columns.filterNot(c => c == "doc_id" || c == "span_idx")).map(col)
     val work = df0.select(col("doc_id"), col("span_idx"), col("x"), col("y"))
       .localCheckpoint()
     val n = work.count()
-    if (n == 0) return df0.withColumn("chip", lit(0))
+    if (n == 0) return df0.select(cols :+ lit(0).as("chip"): _*)
     val m = ((n + capacity - 1) / capacity).toInt
-    // partition boundary i (0..m): lround(i * n / m) — computed lazily,
-    // never materialized (O(1) per lookup, scale-safe).
-    def bound(i: Int): Long = math.round(i.toDouble * n / m)
+    val bound: Int => Long = i => math.round(i.toDouble * n / m)
+    val splitAbove = math.min(taskRows,
+      math.max(n, taskRows) / spark.sparkContext.defaultParallelism)
 
-    // node encoding: (pl, pr) partition-index range; root = (0, m).
-    // Active nodes tracked on the driver (final count = m).
-    final case class Node(pl: Int, pr: Int) { def leaf: Boolean = pr - pl == 1 }
-    var nodes = Map(0L -> Node(0, m))
-    // recursion carries only (id, coords, node) — the narrow working set
-    // is what gets checkpointed log2(m) times, not the full row
+    // node id -> its partition range [pl, pr); node i's children are
+    // 2i+1 (left) and 2i+2 (right)
+    var nodes = Map(0L -> (0, m))
+    def big = nodes.filter { case (_, (pl, pr)) =>
+      pr - pl > 1 && bound(pr) - bound(pl) > splitAbove }
     var cur = work.withColumn("__node", lit(0L))
-
-    // Two per-round split strategies, chosen by rows-per-node:
-    //
-    // WINDOW (small nodes): rank every row of every active node with one
-    // row_number window — one job, cheapest when each node's rows fit a
-    // single sort task.
-    //
-    // SKETCH (big nodes — the scale path): the window shape is a dead
-    // end for early rounds at scale (round 1 = sort the ENTIRE dataset
-    // inside one partition). Instead:
-    //   A. per-node aggregate: count, ranges, and approximate quantile
-    //      sketches of both axes (partial-aggregated, one row per node);
-    //   B. per-node exact counts around the sketch-bracketed split value
-    //      (verifies the bracket; falls back to the full range on the
-    //      rare sketch miss);
-    //   C. exact rank of the threshold row among ONLY the bracketed
-    //      boundary rows (a window over ~n/G rows per node), collecting
-    //      one CUT KEY (axis value, doc_id, span_idx) per node.
-    // Assignment is then a map-only lexicographic comparison against the
-    // broadcast cut keys — rows with full key <= cut go left, exactly
-    // the window path's `row_number < thresh` split (full keys are
-    // unique: the engine-wide (doc_id, span_idx) point identity). No
-    // full-data shuffle or sort exists anywhere in the sketch path; both
-    // paths produce bit-identical assignments (spec-pinned).
-    val G = 200          // sketch grid: boundary rows ~ n/G per node
-    val ACC = 10000      // percentile_approx rank-error <= n/ACC
-    val fractions = (0 to G).map(_.toDouble / G).toArray
-    while (nodes.values.exists(!_.leaf)) {
-      val activeIds = nodes.filter(!_._2.leaf).keySet
-      val useSketch = n / activeIds.size > sketchSplitMinRows
-      // A. per-node count/ranges (+ sketches on the sketch path);
-      //    driver-collected, <= #nodes rows
-      val baseAggs = Seq(
-        min("x").as("minx"), max("x").as("maxx"),
-        min("y").as("miny"), max("y").as("maxy"))
-      val sketchAggs = if (useSketch) Seq(
-        percentile_approx(col("x"), typedLit(fractions), lit(ACC)).as("qx"),
-        percentile_approx(col("y"), typedLit(fractions), lit(ACC)).as("qy"))
-        else Nil
-      val statRows = cur.filter(col("__node").isin(activeIds.toSeq: _*))
-        .groupBy(col("__node"))
-        .agg(count(lit(1)).as("n"), (baseAggs ++ sketchAggs): _*)
-        .collect()
-      // B-prep. split decision + sketch bracket per node: wider axis
-      //   (x iff xrange > yrange, ChipperFilter.cpp:185-192) + rank
-      //   threshold from the cumulate-and-round formula
-      final case class Split(id: Long, onX: Boolean, t: Long, n: Long,
-                             var vLo: Double, var vHi: Double,
-                             var cLo: Long = 0L)
-      val splits = statRows.map { r =>
-        val id = r.getLong(0); val nNode = r.getLong(1)
-        val (mnx, mxx, mny, mxy) =
-          (r.getDouble(2), r.getDouble(3), r.getDouble(4), r.getDouble(5))
-        val onX = (mxx - mnx) > (mxy - mny)
-        val Node(pl, pr) = nodes(id)
+    val rounds = ArrayBuffer.empty[Map[Long, Cut]]
+    while (big.nonEmpty) {
+      val split = big
+      val cuts = sketchRound(cur, split.map { case (id, (pl, pr)) =>
+        id -> (bound(pr) - bound(pl), bound((pl + pr) / 2) - bound(pl)) })
+      rounds += cuts
+      cur = cur.withColumn("__node", route(col("__node"), cuts)).localCheckpoint(eager = false)
+      nodes = nodes -- split.keys ++ split.flatMap { case (id, (pl, pr)) =>
         val pc = (pl + pr) / 2
-        val t = bound(pc) - bound(pl) // # points going left
-        if (!useSketch) Split(id, onX, t, nNode,
-          Double.NegativeInfinity, Double.PositiveInfinity)
-        else {
-          val grid = r.getSeq[Double](if (onX) 6 else 7)
-          val q = t.toDouble / nNode
-          val eps = 1.0 / G + 2.0 / ACC
-          val iLo = math.floor((q - eps) * G).toInt
-          val iHi = math.ceil((q + eps) * G).toInt
-          val vLo = if (iLo < 0) Double.NegativeInfinity else grid(iLo)
-          val vHi = if (iHi > G) Double.PositiveInfinity else grid(iHi)
-          Split(id, onX, t, nNode, vLo, vHi)
-        }
+        Seq(id * 2 + 1 -> (pl, pc), id * 2 + 2 -> (pc, pr))
       }
-      def axisVal(byNode: Column): Column = when(byNode, col("x")).otherwise(col("y"))
-      // per-node driver state rides as LongMapLookupExpr hash tables
-      // keyed by __node (O(1) probe, constant-size plan rendering, one
-      // shared reference per task) — NOT as map(lit...) literal trees,
-      // whose size-m expression trees made AQE's per-stage plan-string
-      // rendering the dominant cost of the whole operator
-      def lookupOf(f: Split => Any, vt: DataType, tag: String): Column =
-        SpatialFunctions.longLookup(col("__node"),
-          splits.map(s => s.id -> f(s)).toSeq, vt, tag)
-      if (!useSketch) {
-        // WINDOW path: rank within node along the chosen axis, stable
-        // (doc_id, span_idx) tiebreak, one shuffle keyed by node
-        val axisByNode = lookupOf(_.onX, BooleanType, "axis")
-        val threshByNode = lookupOf(_.t, LongType, "thresh")
-        val av = axisVal(axisByNode)
-        val w = Window.partitionBy(col("__node"))
-          .orderBy(av.asc, col("doc_id").asc, col("span_idx").asc)
-        cur = cur
-          .withColumn("__rank", row_number().over(w) - 1)
-          .withColumn("__node",
-            // leaf-node rows (no entry in the decision tables) keep their node
-            when(threshByNode.isNull, col("__node"))
-              .when(col("__rank") < threshByNode, col("__node") * 2 + 1)
-              .otherwise(col("__node") * 2 + 2))
-          .drop("__rank")
-      } else {
-      // B. exact counts below/inside the bracket; sketch-miss nodes fall
-      //    back to the full range (bracket = everything, cLo = 0)
-      val needCut = splits.filter(s => s.t > 0 && s.t < s.n)
-      var cutRows: Array[org.apache.spark.sql.Row] = Array.empty
-      if (needCut.nonEmpty) {
-        val onXM = lookupOf(_.onX, BooleanType, "onx")
-        val vLoM = lookupOf(_.vLo, DoubleType, "vlo")
-        val vHiM = lookupOf(_.vHi, DoubleType, "vhi")
-        val av = axisVal(onXM)
-        val cnt = cur.filter(col("__node").isin(needCut.map(_.id).toSeq: _*))
-          .groupBy(col("__node"))
-          .agg(sum(when(av < vLoM, 1L).otherwise(0L)).as("c_lo"),
-            sum(when(av >= vLoM && av <= vHiM, 1L)
-              .otherwise(0L)).as("c_in"))
-          .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-        needCut.foreach { s =>
-          val (cLo, cIn) = cnt(s.id)
-          if (cLo < s.t && cLo + cIn >= s.t) { s.cLo = cLo }
-          else { // sketch miss: widen to the whole node (exact, just slower)
-            s.vLo = Double.NegativeInfinity; s.vHi = Double.PositiveInfinity
-            s.cLo = 0L
-          }
-        }
-        // C. exact rank among boundary rows only -> one cut key per node
-        val onXM2 = lookupOf(_.onX, BooleanType, "onx2")
-        val vLoM2 = lookupOf(_.vLo, DoubleType, "vlo2")
-        val vHiM2 = lookupOf(_.vHi, DoubleType, "vhi2")
-        val resM = lookupOf(s => s.t - s.cLo, LongType, "res")
-        val av2 = axisVal(onXM2)
-        val wB = Window.partitionBy(col("__node"))
-          .orderBy(av2.asc, col("doc_id").asc, col("span_idx").asc)
-        cutRows = cur
-          .filter(col("__node").isin(needCut.map(_.id).toSeq: _*))
-          .filter(av2 >= vLoM2 && av2 <= vHiM2)
-          .withColumn("__brank", row_number().over(wB))
-          .filter(col("__brank") === resM)
-          .select(col("__node"), av2.as("__cut_a"), col("doc_id"), col("span_idx"))
-          .collect()
-        require(cutRows.length == needCut.length,
-          s"chipper cut-key resolution found ${cutRows.length} of " +
-            s"${needCut.length} node cuts — duplicate (doc_id, span_idx) keys?")
-      }
-      // assignment: full key (axis, doc_id, span_idx) <= cut key.
-      // Degenerate thresholds join the same map with an axis cut of
-      // +inf (t == n, everything left) or -inf (t == 0, everything
-      // right); equality with an infinity never fires, so their missing
-      // doc/span entries (null comparisons -> false) are unreachable.
-      val cutAEntries: Seq[(Long, Any)] =
-        cutRows.map(r => r.getLong(0) -> (r.getDouble(1): Any)).toSeq ++
-          splits.filter(s => s.t == 0 || s.t == s.n).map(s =>
-            s.id -> ((if (s.t == s.n) Double.PositiveInfinity
-              else Double.NegativeInfinity): Any))
-      val a = SpatialFunctions.longLookup(col("__node"), cutAEntries,
-        DoubleType, "cuta")
-      val cutD = SpatialFunctions.longLookup(col("__node"),
-        cutRows.map(r => r.getLong(0) -> (r.getString(2): Any)).toSeq,
-        StringType, "cutd")
-      val cutS = SpatialFunctions.longLookup(col("__node"),
-        cutRows.map(r => r.getLong(0) -> (r.getInt(3): Any)).toSeq,
-        IntegerType, "cuts")
-      val av3 = axisVal(lookupOf(_.onX, BooleanType, "onx3"))
-      val goLeft = av3 < a ||
-        (av3 === a && (col("doc_id") < cutD ||
-          (col("doc_id") === cutD && col("span_idx") <= cutS)))
-      cur = cur.withColumn("__node",
-        // leaf-node rows (no entry in the maps) keep their node
-        when(a.isNull, col("__node"))
-          .when(goLeft, col("__node") * 2 + 1)
-          .otherwise(col("__node") * 2 + 2))
-      }
-      nodes = nodes.flatMap { case (id, nd) =>
-        if (nd.leaf) Seq(id -> nd)
-        else {
-          val pc = (nd.pl + nd.pr) / 2
-          Seq(id * 2 + 1 -> Node(nd.pl, pc), id * 2 + 2 -> Node(pc, nd.pr))
-        }
-      }
-      cur = cur.localCheckpoint(eager = false)
     }
-    // chip ordinal = leaf's pl (partition index) — contiguous 0..m-1;
-    // join the assignment back onto the full-width rows
-    val chipByNode = SpatialFunctions.longLookup(col("__node"),
-      nodes.toSeq.map { case (id, nd) => id -> (nd.pl: Any) },
-      IntegerType, "chip")
-    val assignment = cur.select(col("doc_id"), col("span_idx"),
-      chipByNode.as("chip")).localCheckpoint(eager = true)
-    df0.join(assignment, Seq("doc_id", "span_idx"))
+
+    val keyed = rounds.foldLeft(df0.withColumn("__node", lit(0L))) { (df, cuts) =>
+      df.withColumn("__node", route(col("__node"), cuts))
+    }.select(cols :+ col("__node"): _*)
+    val width = cols.length // __node's ordinal
+    val (xi, yi) = (keyed.schema.fieldIndex("x"), keyed.schema.fieldIndex("y"))
+    val outSchema = StructType(keyed.schema.fields.take(width) :+
+      StructField("chip", IntegerType, nullable = false))
+    val ranges = nodes
+    // each node to the partition of its slot, round robin over the node
+    // ids: a hash of few node ids would stack several in one task
+    val parts = math.min(nodes.size, spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val slot = SpatialFunctions.longLookup(col("__node"),
+      nodes.keys.toSeq.sorted.zipWithIndex.map { case (id, i) => id -> (i % parts: Any) },
+      IntegerType, "slot")
+    val chipped = ColumnBridge.internalRows(
+      keyed.repartitionById(parts, slot).sortWithinPartitions(col("__node"))
+    ).mapPartitions { it =>
+      // output = the row's first `width` fields, then the chip (joined after __node)
+      val proj = UnsafeProjection.create(outSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(if (i < width) i else width + 1, f.dataType, f.nullable): Expression })
+      val chipRow = new GenericInternalRow(1)
+      val joined = new JoinedRow
+      val rows = it.buffered
+      Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
+        val id = rows.head.getLong(width)
+        val node = ArrayBuffer.empty[InternalRow]
+        while (rows.hasNext && rows.head.getLong(width) == id) {
+          val r = rows.next()
+          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(xi) || r.isNullAt(yi))
+            throw new IllegalArgumentException(
+              "filters.chipper needs non-null doc_id, span_idx, x and y")
+          node += r.copy()
+        }
+        val (pl, pr) = ranges(id)
+        val k = node.length
+        val (x, y, doc, span) = (new Array[Double](k), new Array[Double](k),
+          new Array[UTF8String](k), new Array[Int](k))
+        for (i <- 0 until k) {
+          val r = node(i)
+          x(i) = r.getDouble(xi); y(i) = r.getDouble(yi); doc(i) = r.getUTF8String(0); span(i) = r.getInt(1)
+        }
+        val chips = finish(x, y, doc, span, pl, pr, bound)
+        node.iterator.zip(chips.iterator).map { case (r, c) =>
+          chipRow.setInt(0, c); proj(joined(r, chipRow)): InternalRow
+        }
+      }
+    }
+    ColumnBridge.internalCreateDataFrame(spark, chipped, outSchema)
   }
 
-  /** Approximate chipper — the scale path promised in SCALE.md: same
-    * contract (chips ≈ capacity, spatially contiguous, squarish splits
-    * along the wider axis) but split positions come from per-node
-    * approximate MEDIANS, and assignment is a map-only comparison
-    * against broadcast cut values — no rank window, no per-node sort.
-    * Chip sizes are within the quantile sketch's error of the exact
-    * sizes; use [[chipper]] when exact reference parity matters.
-    *
-    * Per-round shape (two jobs, both shrinking):
-    *   1. COUNT per active node — a plain codegen'd hash aggregate;
-    *      nodes at or under capacity settle, the rest split.
-    *   2. median sketch of ONLY the splitting nodes' rows, on ONE axis
-    *      per node (the wider side of the node's driver-carried bbox) —
-    *      the sketch never runs over settled data, and the final
-    *      confirmation round degenerates to the count aggregate alone.
-    * Node bboxes are carried on the driver (root from one min/max pass;
-    * a split at cut c on axis a gives children the parent bbox with the
-    * a-range cut at c) — conservative supersets of the true data bounds,
-    * which only affects which axis is called "wider", never sizes. */
-  def chipperApprox(capacity: Long)(df0: DataFrame): DataFrame = {
-    // narrow eager checkpoint of the working set — see chipper for why
-    // this replaces a full-width columnar cache of df0
-    val work = df0.select(col("doc_id"), col("span_idx"), col("x"), col("y"))
-      .localCheckpoint()
-    val total = work.count()
-    if (total == 0) return df0.withColumn("chip", lit(0L))
+  /** The reference's axis rule (ChipperFilter.cpp:185-192): split on x
+    * only when its range is strictly wider. */
+  private def splitOnX(xRange: Double, yRange: Double): Boolean = xRange > yRange
 
-    var cur = work.withColumn("__node", lit(0L))
-    val rb = work.agg(min("x"), max("x"), min("y"), max("y")).head()
-    // node id -> (minx, maxx, miny, maxy), driver-resident; O(#chips)
-    var bounds = Map(0L -> (rb.getDouble(0), rb.getDouble(1),
-      rb.getDouble(2), rb.getDouble(3)))
-    var active = true
-    var round = 0
-    var activeNodes: Seq[Long] = Seq(0L)
-    val maxRounds = 64 - java.lang.Long.numberOfLeadingZeros(
-      math.max(1, total / capacity)) + 3
-    while (active && round < maxRounds) {
-      // 1. cheap per-node counts over only the still-active subtree
-      val statsSrc =
-        if (activeNodes.size <= 4096) cur.filter(col("__node").isin(activeNodes: _*))
-        else cur
-      val counts = statsSrc.groupBy(col("__node"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getLong(0) -> r.getLong(1))
-      val splitIds = counts.filter(_._2 > capacity).map(_._1)
-      if (splitIds.isEmpty) active = false
-      else {
-        // 2. wider-axis median for splitting nodes only, one value per row
-        val axisOf: Seq[(Long, Any)] = splitIds.toSeq.map { id =>
-          val (mnx, mxx, mny, mxy) = bounds(id)
-          id -> (((mxx - mnx) > (mxy - mny)): Any)
-        }
-        val axisByNode = SpatialFunctions.longLookup(col("__node"), axisOf,
-          BooleanType, "axis")
-        val axisVal = when(axisByNode, col("x")).otherwise(col("y"))
-        val cuts = cur.filter(col("__node").isin(splitIds: _*))
-          .groupBy(col("__node"))
-          .agg(percentile_approx(axisVal, lit(0.5), lit(250)).as("cut"))
-          .collect().map(r => r.getLong(0) -> r.getDouble(1))
-        val cutByNode = SpatialFunctions.longLookup(col("__node"),
-          cuts.toSeq.map { case (id, c) => id -> (c: Any) }, DoubleType, "cut")
-        cur = cur.withColumn("__node",
-          when(cutByNode.isNull, col("__node"))
-            .when(axisVal < cutByNode, col("__node") * 2 + 1)
-            .otherwise(col("__node") * 2 + 2))
-          .localCheckpoint(eager = false)
-        val axisMap = axisOf.toMap
-        cuts.foreach { case (id, c) =>
-          val (mnx, mxx, mny, mxy) = bounds(id)
-          if (axisMap(id).asInstanceOf[Boolean]) {
-            bounds += (id * 2 + 1) -> (mnx, c, mny, mxy)
-            bounds += (id * 2 + 2) -> (c, mxx, mny, mxy)
-          } else {
-            bounds += (id * 2 + 1) -> (mnx, mxx, mny, c)
-            bounds += (id * 2 + 2) -> (mnx, mxx, c, mxy)
-          }
-        }
-        activeNodes = splitIds.toSeq.flatMap(id => Seq(id * 2 + 1, id * 2 + 2))
-      }
-      round += 1
+  /** A node's cut key: rows whose full key (axis value, doc_id, span_idx)
+    * is <= (a, d, s) go to the left child. */
+  private final case class Cut(onX: Boolean, a: Double, d: String, s: Int)
+
+  /** Each row's child after a round's `cuts`, compared as Spark orders
+    * the full key; nodes without a cut keep their id. */
+  private def route(node: Column, cuts: Map[Long, Cut]): Column = {
+    def lookup(f: Cut => Any, vt: DataType, tag: String): Column =
+      SpatialFunctions.longLookup(node, cuts.toSeq.map { case (id, c) => id -> f(c) }, vt, tag)
+    val a = lookup(_.a, DoubleType, "cuta")
+    val d = lookup(_.d, StringType, "cutd")
+    val s = lookup(_.s, IntegerType, "cuts")
+    val v = when(lookup(_.onX, BooleanType, "onx"), col("x")).otherwise(col("y"))
+    val left = v < a || (v === a && (col("doc_id") < d ||
+      (col("doc_id") === d && col("span_idx") <= s)))
+    when(a.isNull, node).when(left, node * 2 + 1).otherwise(node * 2 + 2)
+  }
+
+  /** One distributed split of the nodes `split` (id -> (rows, rows going
+    * left)) of `cur` (doc_id, span_idx, x, y, __node), each job collecting
+    * at most a few rows per node:
+    *   A. per node: count and the exact min/max of both axes, which decide
+    *      the axis;
+    *   B. a Bernoulli sample of about [[SampleRows]] rows per node, whose
+    *      order statistics bracket the cut's axis value;
+    *   C. exact counts below and inside each bracket (a bracket that misses
+    *      the cut widens to the whole node: slower, still exact);
+    *   D. the exact rank of the cut row among the bracketed rows only (a
+    *      window over a few percent of the node); its full key is the cut.
+    * No job sorts or shuffles the full data. */
+  private def sketchRound(cur: DataFrame, split: Map[Long, (Long, Long)]): Map[Long, Cut] = {
+    val mine = cur.filter(col("__node").isin(split.keys.toSeq: _*))
+    val onX = mine.groupBy(col("__node"))
+      .agg(count(lit(1)), min("x"), max("x"), min("y"), max("y"))
+      .collect().map { r =>
+        val id = r.getLong(0)
+        require(r.getLong(1) == split(id)._1, s"filters.chipper: node $id holds " +
+          s"${r.getLong(1)} rows, expected ${split(id)._1}; are (doc_id, span_idx) keys duplicated?")
+        id -> splitOnX(r.getDouble(3) - r.getDouble(2), r.getDouble(5) - r.getDouble(4))
+      }.toMap
+    // per-node driver state rides as LongMapLookupExpr hash tables keyed
+    // by __node (O(1) probe, constant-size plan rendering)
+    def lookup(f: Long => Any, vt: DataType, tag: String): Column =
+      SpatialFunctions.longLookup(col("__node"), split.keys.toSeq.map(id => id -> f(id)), vt, tag)
+    val v = when(lookup(onX, BooleanType, "onx"), col("x")).otherwise(col("y"))
+    val fraction = math.min(1.0, SampleRows.toDouble / split.values.map(_._1).min)
+    val sample = mine.sample(fraction, 1L).select(col("__node"), v).collect()
+      .groupBy(_.getLong(0)).map { case (id, rs) =>
+        val vs = rs.map(_.getDouble(1)); java.util.Arrays.sort(vs); id -> vs }
+    // the cut's rank in a sample of s rows is s * q +- sqrt(s * q * (1 - q)),
+    // q = the left share; five of those either side
+    val bracket = split.map { case (id, (rows, t)) =>
+      val vs = sample.getOrElse(id, Array.emptyDoubleArray)
+      val q = t.toDouble / rows
+      val at = vs.length * q
+      val half = 5 * math.sqrt(vs.length * q * (1 - q)) + 1
+      val (iLo, iHi) = (math.floor(at - half).toInt, math.ceil(at + half).toInt)
+      id -> (if (iLo < 0) Double.NegativeInfinity else vs(iLo),
+        if (iHi >= vs.length) Double.PositiveInfinity else vs(iHi))
     }
-    df0.join(
-      cur.select(col("doc_id"), col("span_idx"), col("__node").as("chip"))
-        .localCheckpoint(eager = true),
-      Seq("doc_id", "span_idx"))
+    val below = {
+      val (lo, hi) = (lookup(bracket(_)._1, DoubleType, "lo"), lookup(bracket(_)._2, DoubleType, "hi"))
+      val counts = mine.groupBy(col("__node"))
+        .agg(sum(when(v < lo, 1L).otherwise(0L)), sum(when(v >= lo && v <= hi, 1L).otherwise(0L)))
+        .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      split.map { case (id, (_, t)) =>
+        val (under, in) = counts(id)
+        id -> (if (under < t && under + in >= t) Some(under) else None)
+      }
+    }
+    val lo = lookup(id => below(id).fold(Double.NegativeInfinity)(_ => bracket(id)._1), DoubleType, "lo")
+    val hi = lookup(id => below(id).fold(Double.PositiveInfinity)(_ => bracket(id)._2), DoubleType, "hi")
+    val rank = lookup(id => split(id)._2 - below(id).getOrElse(0L), LongType, "rank")
+    val w = Window.partitionBy(col("__node")).orderBy(v.asc, col("doc_id").asc, col("span_idx").asc)
+    val cutRows = mine.filter(v >= lo && v <= hi)
+      .withColumn("__rank", row_number().over(w))
+      .filter(col("__rank") === rank)
+      .select(col("__node"), v, col("doc_id"), col("span_idx"))
+      .collect()
+    require(cutRows.length == split.size, s"filters.chipper found ${cutRows.length} of " +
+      s"${split.size} node cuts; are (doc_id, span_idx) keys duplicated?")
+    cutRows.map { r =>
+      r.getLong(0) -> Cut(onX(r.getLong(0)), r.getDouble(1), r.getString(2), r.getInt(3))
+    }.toMap
+  }
+
+  /** 0 until k in `cmp` order: a bottom-up merge sort on primitive ints. */
+  private def sortedBy(k: Int)(cmp: (Int, Int) => Int): Array[Int] = {
+    var a = Array.range(0, k)
+    var b = new Array[Int](k)
+    var w = 1
+    while (w < k) {
+      var lo = 0
+      while (lo < k) {
+        val mid = math.min(lo + w, k); val hi = math.min(lo + 2 * w, k)
+        var i = lo; var j = mid; var o = lo
+        while (o < hi) {
+          if (j >= hi || (i < mid && cmp(a(i), a(j)) <= 0)) { b(o) = a(i); i += 1 }
+          else { b(o) = a(j); j += 1 }
+          o += 1
+        }
+        lo = hi
+      }
+      val t = a; a = b; b = t
+      w *= 2
+    }
+    a
+  }
+
+  /** The chip of each row of node [pl, pr), its subtree finished in
+    * memory with the reference's rules: the wider axis from the sub-node's
+    * own min and max, `bound`'s lround rank bounds, and the (axis value,
+    * doc_id, span_idx) order, doubles compared as Spark orders them and
+    * doc_id in UTF-8 byte order. The (doc_id, span_idx) order is found
+    * once, each axis order at most once; a split then sorts the sub-node's
+    * ranks as primitives. */
+  private def finish(x: Array[Double], y: Array[Double], doc: Array[UTF8String],
+                     span: Array[Int], pl: Int, pr: Int, bound: Int => Long): Array[Int] = {
+    val k = x.length
+    require(k == bound(pr) - bound(pl), s"filters.chipper: the node of chips [$pl, $pr) holds " +
+      s"$k rows, expected ${bound(pr) - bound(pl)}; are (doc_id, span_idx) keys duplicated?")
+    lazy val tie = ranks(sortedBy(k) { (i, j) =>
+      val d = doc(i).binaryCompare(doc(j))
+      if (d != 0) d else Integer.compare(span(i), span(j))
+    })
+    // (each row's rank, the rows in rank order) by full key along `a`
+    def order(a: Array[Double]): (Array[Int], Array[Int]) = {
+      val sorted = sortedBy(k) { (i, j) =>
+        val c = SQLOrderingUtil.compareDoubles(a(i), a(j))
+        if (c != 0) c else Integer.compare(tie(i), tie(j))
+      }
+      for (r <- 1 until k) {
+        val (i, j) = (sorted(r - 1), sorted(r))
+        if (SQLOrderingUtil.compareDoubles(a(i), a(j)) == 0 && span(i) == span(j) && doc(i) == doc(j))
+          throw new IllegalArgumentException(s"filters.chipper: two points share the key " +
+            s"(${a(j)}, ${doc(j)}, ${span(j)}); the chipper orders points by (axis, doc_id, span_idx)")
+      }
+      (ranks(sorted), sorted)
+    }
+    lazy val (rx, sx) = order(x)
+    lazy val (ry, sy) = order(y)
+    def range(a: Array[Double], rows: Array[Int]): Double = {
+      var lo = a(rows(0)); var hi = lo
+      rows.foreach { i =>
+        if (SQLOrderingUtil.compareDoubles(a(i), lo) < 0) lo = a(i)
+        if (SQLOrderingUtil.compareDoubles(a(i), hi) > 0) hi = a(i)
+      }
+      hi - lo
+    }
+    val chip = new Array[Int](k)
+    def split(rows: Array[Int], pl: Int, pr: Int): Unit =
+      if (pr - pl == 1) rows.foreach(chip(_) = pl)
+      else {
+        val (rank, sorted) = if (splitOnX(range(x, rows), range(y, rows))) (rx, sx) else (ry, sy)
+        val rs = rows.map(rank)
+        java.util.Arrays.sort(rs)
+        val pc = (pl + pr) / 2
+        val t = (bound(pc) - bound(pl)).toInt
+        split(rs.take(t).map(sorted), pl, pc)
+        split(rs.drop(t).map(sorted), pc, pr)
+      }
+    split(Array.range(0, k), pl, pr)
+    chip
+  }
+
+  /** Each position's rank in the permutation `sorted`. */
+  private def ranks(sorted: Array[Int]): Array[Int] = {
+    val r = new Array[Int](sorted.length)
+    for (i <- sorted.indices) r(sorted(i)) = i
+    r
   }
 
   /** writers.rialto's LOD pyramid (RialtoCommon.cpp:79-94): level L of a

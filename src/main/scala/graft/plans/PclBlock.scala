@@ -119,8 +119,9 @@ object PclBlock {
     name.toLowerCase match {
       case "passthrough" =>
         // limits arrive in WORLD coords; x/y/z limits get the offsets
-        // subtracted like the reference (PCLPipeline.hpp:248-264);
-        // inclusive bounds (pcl::PassThrough keeps [min, max])
+        // subtracted like the reference (PCLPipeline.hpp:248-264) and are
+        // float32 there, as the shifted coordinates are here; inclusive
+        // bounds (pcl::PassThrough keeps [min, max])
         val field = (f \ "setFilterFieldName").extractOpt[String]
           .getOrElse(throw new IllegalArgumentException(
             "pclblock PassThrough: setFilterFieldName is required"))
@@ -130,8 +131,9 @@ object PclBlock {
         val off = field match {
           case "x" => mx; case "y" => my; case "z" => mz; case _ => 0.0
         }
-        val lo = (f \ "setFilterLimits" \ "min").extractOpt[Double].map(_ - off)
-        val hi = (f \ "setFilterLimits" \ "max").extractOpt[Double].map(_ - off)
+        def limit(k: String) =
+          (f \ "setFilterLimits" \ k).extractOpt[Double].map(v => (v - off).toFloat.toDouble)
+        val (lo, hi) = (limit("min"), limit("max"))
         val c = col(field)
         (lo, hi) match {
           case (Some(a), Some(b)) => df.filter(c >= a && c <= b)

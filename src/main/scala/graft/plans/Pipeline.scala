@@ -67,6 +67,11 @@ object Pipeline {
     (stages, (j \ "checkpoint_root").extractOpt[String])
   }
 
+  /** One WARN naming the stage (type and tag) about options it ignores. */
+  private def warnIgnored(st: StageSpec, msg: String): Unit =
+    org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      st.typ + st.str("tag").fold("")(t => s" '$t'") + ": " + msg)
+
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
@@ -77,11 +82,6 @@ object Pipeline {
     * stage input's spatial reference the same way). */
   final class RunCtx {
     var inferredSrs: Option[String] = None
-    /** Row count the reader already knows for free (LAS header point
-      * count, faux count param) — lets downstream auto-routing decisions
-      * (filters.chipper) avoid a full count() scan job. Upper bound once
-      * filters run, which is the conservative direction for routing. */
-    var inferredCount: Option[Long] = None
     /** Side-channel per-stage stats (the reference's filters.stats sends
       * its summary to the METADATA tree and passes points through,
       * StatsFilter.cpp:59-71 — mid-chain XML pipelines rely on that).
@@ -90,7 +90,7 @@ object Pipeline {
     /** The facts as they stand now, for a stage built later. */
     def snapshot: RunCtx = {
       val c = new RunCtx
-      c.inferredSrs = inferredSrs; c.inferredCount = inferredCount; c.sideStats = sideStats
+      c.inferredSrs = inferredSrs; c.sideStats = sideStats
       c
     }
   }
@@ -187,7 +187,6 @@ object Pipeline {
         val b = st.dbls("bounds").map(a => Faux.Box3(a(0), a(1), a(2), a(3), a(4), a(5)))
           .getOrElse(Faux.Box3(0, 0, 0, 1, 1, 1))
         val n = st.int("count").getOrElse(1000).toLong
-        ctx.inferredCount = Some(n)
         st.str("mode").getOrElse("ramp") match {
           case "ramp" => Faux.ramp(spark, b, n)
           case "constant" => Faux.constant(spark, b, n)
@@ -206,10 +205,7 @@ object Pipeline {
         val path = st.str("path").get
         // infer the file's SRS from its VLR GeoTIFF keys / WKT record for
         // downstream filters.reprojection auto mode (glob paths skipped)
-        if (!PointCodec.isGlob(path)) {
-          ctx.inferredSrs = LasDecode.srsOf(path)
-          ctx.inferredCount = Some(LasDecode.headerOf(path).pointCount)
-        }
+        if (!PointCodec.isGlob(path)) ctx.inferredSrs = LasDecode.srsOf(path)
         // "columns": project the read — on layered .laz via the chunk
         // path this prunes whole entropy layers INSIDE the codec
         // (selective decompression); elsewhere a post-decode projection
@@ -291,31 +287,11 @@ object Pipeline {
         }
         TileOps.splitter(st.dbl("length").getOrElse(1000.0), ox, oy)(in.get)
       case "filters.chipper" =>
-        // "exact" reproduces the reference's chip sizes bit-for-bit
-        // (iterative rank windows — fixture-parity path); "approx" is
-        // the 100x-scale path (one aggregate per round, map-only
-        // assignment, sizes within the quantile sketch's error of
-        // capacity); "auto" routes on input size.
-        val capacity = st.int("capacity").getOrElse(5000).toLong
-        st.str("method").getOrElse("exact") match {
-          case "exact"  => TileOps.chipper(capacity)(in.get)
-          case "approx" => TileOps.chipperApprox(capacity)(in.get)
-          case "auto" =>
-            val threshold = st.int("auto_threshold").getOrElse(10000000).toLong
-            val df = in.get
-            // route on a ZERO-JOB estimate when one exists — the reader's
-            // own declared count (LAS header / faux count), else
-            // Catalyst's plan-stats row count; only when neither knows
-            // does routing cost a count() scan. At 100x scale the extra
-            // full-input scan just to pick a method is the bug.
-            val est: Long = ctx.inferredCount
-              .orElse(df.queryExecution.optimizedPlan.stats.rowCount.map(_.toLong))
-              .getOrElse(df.count())
-            if (est > threshold) TileOps.chipperApprox(capacity)(df)
-            else TileOps.chipper(capacity)(df)
-          case m => throw new IllegalArgumentException(
-            s"filters.chipper method must be exact|approx|auto, got $m")
-        }
+        // one exact chipper; `method` and `auto_threshold` are accepted for
+        // spec compatibility and ignored, with a WARN
+        if (st.str("method").exists(_ != "exact") || st.config.obj.exists(_._1 == "auto_threshold"))
+          warnIgnored(st, "method and auto_threshold are ignored; the chipper is always exact")
+        TileOps.chipper(st.int("capacity").getOrElse(5000).toLong)(in.get)
       case "filters.stats" =>
         AggOps.stats(st.strs("dimensions").getOrElse(Seq("x", "y", "z")),
           st.strs("enumerate").getOrElse(Nil).toSet)(in.get)
@@ -347,9 +323,7 @@ object Pipeline {
           .orElse(st.dbl("edge")).filter(_ != 0.0)
         val edge = edgeOpt.getOrElse {
           if (st.config.obj.exists(_._1 == "sample_size"))
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(st.typ +
-              st.str("tag").fold("")(t => s" '$t'") +
-              ": sample_size is ignored; the edge is estimated over the full frame")
+            warnIgnored(st, "sample_size is ignored; the edge is estimated over the full frame")
           val s = in.get
             .agg(min("x"), max("x"), min("y"), max("y"), count(lit(1))).head()
           if (s.isNullAt(0)) 10.0 // empty input: any edge yields an empty grid

@@ -1,8 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, classic}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Run facts folded from a frame's rows by the tasks of a job that reads
@@ -30,11 +29,7 @@ object RowFold {
   def tap[P <: Partial[P]](df: DataFrame, zero: () => P): (DataFrame, () => P) = {
     val spark = df.sparkSession
     val parts = spark.sparkContext.collectionAccumulator[P]
-    // toRdd runs the frame's adaptive shuffle stages now: with the
-    // session's SQL conf visible to their tasks, as inside an action
-    val input = SQLExecution.withSQLConfPropagated(spark.asInstanceOf[classic.SparkSession])(
-      df.queryExecution.toRdd)
-    val rows = input.mapPartitions { it =>
+    val rows = ColumnBridge.internalRows(df).mapPartitions { it =>
       val p = zero()
       new Iterator[InternalRow] {
         private var open = true

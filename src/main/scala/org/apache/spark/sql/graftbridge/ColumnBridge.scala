@@ -23,6 +23,14 @@ object ColumnBridge {
                               schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** `df`'s rows as an RDD of InternalRows, the inverse of
+    * [[internalCreateDataFrame]]. Runs the frame's adaptive shuffle
+    * stages now, with the session's SQL conf visible to their tasks as
+    * inside an action. */
+  def internalRows(df: DataFrame): org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    org.apache.spark.sql.execution.SQLExecution.withSQLConfPropagated(
+      df.sparkSession.asInstanceOf[classic.SparkSession])(df.queryExecution.toRdd)
+
   /** Number of plans pinned in the session's CacheManager. Used by the
     * cache-hygiene spec: operators that `.cache()` internally must
     * release the entry before returning (a leaked entry is pinned for

@@ -33,7 +33,6 @@ class EdgeCaseSpec extends AnyFunSuite {
     val before = ColumnBridge.cacheEntryCount(spark)
     val pts = Faux.ramp(spark, Faux.Box3(0, 0, 0, 100, 100, 10), 400)
     TileOps.chipper(50)(pts).count()
-    TileOps.chipperApprox(50)(pts).count()
     JoinOps.statisticalOutlierRemoval(4, 2.0, 4)(pts).count()
     GroundOps.pmf()(pts).count()
     val edges = Seq((1L, "a"), (2L, "a"), (3L, "b"), (2L, "b")).toDF("doc_id", "band")

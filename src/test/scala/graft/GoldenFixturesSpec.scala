@@ -191,17 +191,17 @@ class GoldenFixturesSpec extends AnyFunSuite {
   }
 
   test("F10 golden holds on the sketch-split chipper path (scale strategy)") {
-    // force the quantile-sketch split for every round (threshold 0) and
-    // assert the EXACT same chip assignment as the window path on the
-    // reference fixture — the two strategies must be bit-identical
-    val sketch = TileOps.chipper(15, sketchSplitMinRows = 0L)(p1065)
+    // task budget 0 splits every node with a distributed sketch round; an
+    // unlimited budget finishes the whole tree in one task. Both must give
+    // the EXACT same chip assignment on the reference fixture
+    val sketch = TileOps.chipper(15, taskRows = 0L)(p1065)
       .select("doc_id", "span_idx", "chip").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
-    val window = TileOps.chipper(15, sketchSplitMinRows = Long.MaxValue)(p1065)
+    val inTask = TileOps.chipper(15, taskRows = Long.MaxValue)(p1065)
       .select("doc_id", "span_idx", "chip").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> r.getInt(2)).toMap
     assert(sketch.size === 1065)
-    assert(sketch === window)
+    assert(sketch === inTask)
   }
 
   // F11: crop autzen polygon -> 47 (CropFilterTest.cpp:117-153)

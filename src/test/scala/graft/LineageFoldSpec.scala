@@ -152,4 +152,29 @@ class LineageFoldSpec extends AnyFunSuite {
     assert(Manifest.lineageOf(Manifest.readData(spark, ck, "t"))._1.map(_.rows).sum < m.totalRows)
     assert(!Manifest.validate(spark, ck, "t"))
   }
+
+  test("decimal and float coordinates checkpoint and validate with their doubles' lineage") {
+    // k * 0.5 under 1000 prints alike as double, float and decimal(10, 1),
+    // so even the row digests of the three frames agree
+    val dbl = spark.range(0, 500, 1, 8).selectExpr("(id * 37 % 1000) * 0.5D as x",
+      "(id * 91 % 800) * 0.5D as y", "(id % 50) * 0.5D as z", "id")
+    def as(t: String) = dbl.selectExpr(s"cast(x as $t) as x", s"cast(y as $t) as y", "z", "id")
+    val want = Manifest.lineageOf(dbl)
+    def check(df: DataFrame, stage: String): Unit = {
+      val ck = tmp()
+      val m = Manifest.checkpoint(ck, stage, "fp", Nil, df)
+      assert(m.partitions === want._1, stage)
+      assert(sameStats(m.info, want._2), stage)
+      assert(Manifest.validate(spark, ck, stage), stage)
+    }
+    check(as("decimal(10, 1)"), "decimal")
+    val wholeStage = spark.conf.get("spark.sql.codegen.wholeStage")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try check(as("float"), "float")
+    finally spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+    // double coordinates get no cast
+    val analyzed = dbl.select(Manifest.lineageKey(dbl)).queryExecution.analyzed
+    assert(!analyzed.expressions.exists(_.exists(_.isInstanceOf[
+      org.apache.spark.sql.catalyst.expressions.Cast])), analyzed.toString)
+  }
 }

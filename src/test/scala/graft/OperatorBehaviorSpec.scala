@@ -458,17 +458,16 @@ class OperatorBehaviorSpec extends AnyFunSuite {
     assert(salted.exceptAll(direct).isEmpty && direct.exceptAll(salted).isEmpty)
   }
 
-  test("approximate chipper bounds chip sizes near capacity without window sorts") {
+  test("chipper chips stay at or under capacity, ceil(n / cap) of them") {
     val pts = Faux.uniform(spark, Faux.Box3(0, 0, 0, 1000, 1000, 1), 60000, seed = 17)
     val t0 = System.nanoTime()
-    val chips = TileOps.chipperApprox(4000)(pts)
+    val chips = TileOps.chipper(4000)(pts)
       .groupBy("chip").count().collect().map(_.getLong(1))
     val secs = (System.nanoTime() - t0) / 1e9
     assert(chips.sum === 60000L)
-    // approximate: allow sketch-error slack over the capacity
-    assert(chips.max <= 4000 * 1.3, s"max chip ${chips.max}")
-    assert(chips.length >= 15, s"only ${chips.length} chips")
-    info(f"approx chipper: ${chips.length} chips in $secs%.1fs")
+    assert(chips.max <= 4000, s"max chip ${chips.max}")
+    assert(chips.length === 15, s"${chips.length} chips")
+    info(f"chipper: ${chips.length} chips in $secs%.1fs")
   }
 
   test("hexbin boundary covers the data blob and excludes far space") {

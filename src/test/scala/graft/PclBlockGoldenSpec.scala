@@ -160,4 +160,15 @@ class PclBlockGoldenSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("tile_size"))
   }
+
+  test("PassThrough limits are float32 like the shifted coordinates they bound") {
+    import spark.implicits._
+    // float32(0.1) > 0.1: the point at x = 0.1 narrows above a double limit
+    // of 0.1, and the reference keeps it against its float limit
+    val two = Seq(("a", 0, 0.0, 0.0, 0.0), ("a", 1, 0.1, 0.0, 0.0))
+      .toDF("doc_id", "span_idx", "x", "y", "z")
+    val kept = PclBlock.run(two, """{"pipeline": {"filters": [{"name": "PassThrough",
+      "setFilterFieldName": "x", "setFilterLimits": {"max": 0.1}}]}}""")
+    assert(kept.select("span_idx").as[Int].collect().sorted.toSeq === Seq(0, 1))
+  }
 }

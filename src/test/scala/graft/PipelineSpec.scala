@@ -67,74 +67,57 @@ class PipelineSpec extends AnyFunSuite {
          |  {"type": "filters.chipper", "method": "approx", "capacity": 1000,
          |   "checkpoint": true}
          |], "checkpoint_root": "$ck" }""".stripMargin
+    def chips(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "span_idx", "chip").collect().map(_.toSeq).toSet
     val first = Pipeline.run(spark, spec)
+    val firstChips = chips(first.df)
     val sizes = first.df.groupBy("chip").count()
       .collect().map(_.getLong(1))
-    // contract: chips bounded by capacity * (1 + quantile-sketch slack)
-    assert(sizes.max <= (1000 * 1.3).toLong,
-      s"approx chip ${sizes.max} exceeds capacity + sketch slack")
-    assert(sizes.length >= 15, s"only ${sizes.length} chips for 20k pts / 1k capacity")
+    // "approx" runs the one exact chipper: ceil(n / capacity) chips, none over
+    assert(sizes.max <= 1000, s"chip ${sizes.max} exceeds capacity")
+    assert(sizes.length === 20, s"${sizes.length} chips for 20k pts / 1k capacity")
     // identical re-run resumes from the checkpoint, bit-identical output
     val second = Pipeline.run(spark, spec)
     assert(second.resumedStages.contains("001_filters_chipper"))
-    assert(second.df.groupBy("chip").count().collect().map(_.getLong(1)).sorted
-      === sizes.sorted)
-    // method is part of the stage fingerprint: switching to exact re-runs
-    val exactSpec = spec.replace("\"approx\"", "\"exact\"")
-    val third = Pipeline.run(spark, exactSpec)
+    assert(chips(second.df) === firstChips)
+    // method is part of the stage fingerprint: switching to exact re-runs,
+    // to the same chips
+    val third = Pipeline.run(spark, spec.replace("\"approx\"", "\"exact\""))
     assert(!third.resumedStages.contains("001_filters_chipper"))
-    val exactSizes = third.df.groupBy("chip").count().collect().map(_.getLong(1))
-    assert(exactSizes.max <= 1000, "exact chipper must never exceed capacity")
+    assert(chips(third.df) === firstChips)
   }
 
-  test("chipper auto mode routes by input size") {
-    def run(threshold: Int): Array[Long] = Pipeline.run(spark,
-      s"""{ "pipeline": [
-         |  {"type": "readers.faux", "mode": "uniform",
-         |   "bounds": [0, 0, 0, 500, 500, 10], "count": 4000, "seed": 3},
-         |  {"type": "filters.chipper", "method": "auto", "capacity": 500,
-         |   "auto_threshold": $threshold}
-         |]}""".stripMargin).df
-      .select("chip").distinct().collect()
-      .map(_.getAs[Number](0).longValue).sorted
-    // big threshold -> exact path: chip ids are the contiguous ordinals 0..m-1
-    val exactChips = run(1000000)
-    assert(exactChips === exactChips.indices.map(_.toLong).toArray,
-      s"exact chipper ids not contiguous: ${exactChips.mkString(",")}")
-    // tiny threshold -> approx path: chip ids are recursion-tree node ids
-    // (never the contiguous 0..m-1 range)
-    val approxChips = run(100)
-    assert(approxChips !== approxChips.indices.map(_.toLong).toArray,
-      "auto did not route to the approx chipper above the threshold")
-  }
-
-  test("chipper auto routing adds no scan job when the reader declares its count") {
-    // auto must route on the reader's free count (faux count / LAS header
-    // point count), not a full count() scan — at 100x scale that extra
-    // scan of the whole input just to pick a method is the bug
-    def jobsFor(method: String): Int = {
-      var jobs = 0
+  test("chipper methods exact|approx|auto: same rows and jobs, and a WARN") {
+    def jobsFor(method: String): (Int, Set[Seq[Any]]) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
       val listener = new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
+          jobs.incrementAndGet()
       }
+      val threshold = if (method == "auto") ", \"auto_threshold\": 100" else ""
       spark.sparkContext.addSparkListener(listener)
       try {
-        Pipeline.run(spark,
+        val rows = Pipeline.run(spark,
           s"""{ "pipeline": [
              |  {"type": "readers.faux", "mode": "uniform",
              |   "bounds": [0, 0, 0, 500, 500, 10], "count": 4000, "seed": 3},
-             |  {"type": "filters.chipper", "method": "$method", "capacity": 500,
-             |   "auto_threshold": 100}
-             |]}""".stripMargin).df.collect()
+             |  {"type": "filters.chipper", "tag": "ch", "method": "$method",
+             |   "capacity": 500$threshold}
+             |]}""".stripMargin).df.collect().map(_.toSeq).toSet
         Thread.sleep(300) // drain listener-bus events
-        jobs
+        (jobs.get, rows)
       } finally spark.sparkContext.removeSparkListener(listener)
     }
-    val direct = jobsFor("approx")
-    val routed = jobsFor("auto") // threshold 100 < 4000 -> routes to approx
-    assert(routed === direct,
-      s"auto ran $routed jobs vs $direct for direct approx — routing must not add a scan")
+    val (runs, warnings) = warningsDuring(Seq("exact", "approx", "auto").map(jobsFor))
+    val (exactJobs, exactRows) = runs.head
+    assert(exactRows.size === 4000)
+    runs.tail.foreach { case (jobs, rows) =>
+      assert(rows === exactRows)
+      assert(jobs === exactJobs, s"$jobs jobs vs $exactJobs for exact")
+    }
+    val notices = warnings.filter(_.contains("auto_threshold"))
+    assert(notices.size === 2, s"warnings: $warnings")
+    assert(notices.forall(_.startsWith("filters.chipper 'ch': ")))
   }
 
   test("multi-input DAG: two tagged readers merge n-ary through checkpoint and resume") {
@@ -489,12 +472,13 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("filters.hexbin warns once, naming the stage, that sample_size is ignored") {
+  /** `body`'s result and the WARN messages logged while it ran. */
+  private def warningsDuring[T](body: => T): (T, Seq[String]) = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     val warnings = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
-    val capture = new AbstractAppender("hexbin-capture", null, null, true,
+    val capture = new AbstractAppender("warn-capture", null, null, true,
         org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
         if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
@@ -504,15 +488,21 @@ class PipelineSpec extends AnyFunSuite {
     val root = ctx.getConfiguration.getRootLogger
     root.addAppender(capture, Level.WARN, null)
     ctx.updateLoggers()
+    val out = try body
+      finally { root.removeAppender("warn-capture"); ctx.updateLoggers(); capture.stop() }
+    (out, warnings.toArray.map(_.toString).toSeq)
+  }
+
+  test("filters.hexbin warns once, naming the stage, that sample_size is ignored") {
     def run(opts: String): Long = Pipeline.run(spark, s"""{"pipeline": [
       {"type": "readers.faux", "mode": "uniform", "bounds": [0, 0, 0, 10, 10, 1], "count": 200},
       {"type": "filters.hexbin", "tag": "hx"$opts}]}""").df.count()
-    try {
+    val (_, warnings) = warningsDuring {
       assert(run(""", "sample_size": 50""") > 0)
       assert(run(""", "sample_size": 50, "edge_length": 1.0""") > 0) // no estimate, no notice
       assert(run("") > 0)
-    } finally { root.removeAppender("hexbin-capture"); ctx.updateLoggers(); capture.stop() }
-    val notices = warnings.toArray.map(_.toString).filter(_.contains("sample_size")).toSeq
+    }
+    val notices = warnings.filter(_.contains("sample_size"))
     assert(notices.size === 1, s"warnings: $warnings")
     assert(notices.head.contains("filters.hexbin 'hx'") && notices.head.contains("full frame"))
   }
