@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Per-round driver bench: one JSON line of per-query seconds.
   * The doc-table synthesis (the engine's INPUT materialization) is
@@ -18,19 +17,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // simple (one-line) plan descriptions for listener events: the
-      // default formatted mode re-renders the full plan on every AQE
-      // stage update — driver-side time that scales with plan size
-      .config("spark.sql.ui.explainMode", "simple")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "5000000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus, cpus, Session.Adaptive, Session.SimplePlans,
+      Session.LateSortFallback)
     // Generic JVM/codegen warmup BEFORE any timer starts: first-job
     // costs (whole-stage codegen compilation, parquet reader init,
     // shuffle machinery class loading) are session constants that no

@@ -24,26 +24,10 @@ object ScalingBench {
   private val hexWkt =
     "POLYGON ((800.3 500.7, 650.3 760.7, 350.3 760.7, 200.3 500.7, 350.3 240.7, 650.3 240.7, 800.3 500.7))"
 
-  def session(cores: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-scaling-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // simple (one-line) plan descriptions for listener events: the
-      // default formatted mode re-renders the full plan on every AQE
-      // stage update — driver-side time that scales with plan size
-      .config("spark.sql.ui.explainMode", "simple")
-      // NOTE deliberately NOT raising objectHashAggregate's sort fallback
-      // here: doc synthesis (collect_list per doc) relies on the early
-      // sort-based fallback to bound memory at high replication; the
-      // raised threshold is for per-point top-k aggregation paths only
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** No [[Session.LateSortFallback]]: doc synthesis runs in these sessions. */
+  def session(cores: Int): SparkSession =
+    Session.local(cores, cores, "spark.app.name" -> s"graft-scaling-$cores",
+      Session.Adaptive, Session.SimplePlans, Session.Utc)
 
   /** Materialize the replicated doc table once (untimed setup): the
     * north-star input IS a stored table of interleaved documents, so

@@ -327,7 +327,7 @@ object NbrBlocks {
       case (null, null) => 0
       case (null, _) => -1
       case (_, null) => 1
-      case (s: String, t: String) => UTF8String.fromString(s).compareTo(UTF8String.fromString(t))
+      case (s: String, t: String) => UTF8String.fromString(s).binaryCompare(UTF8String.fromString(t))
       case (s, t) => s.asInstanceOf[Comparable[Any]].compareTo(t)
     }
     val c = one(a.get(0), b.get(0))

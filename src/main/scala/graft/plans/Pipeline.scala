@@ -53,8 +53,26 @@ object Pipeline {
       case JArray(_) => (config \ k).extractOpt[Seq[String]]
       case _ => None
     }
-    def fingerprintSource: String = typ + JsonMethods.compact(JsonMethods.render(config))
+    def sets(k: String): Boolean = config.obj.exists(_._1 == k)
+    /** The stage's type and config, without the options it ignores: a
+      * change to those alone resumes the stage. */
+    def fingerprintSource: String = {
+      val ignored = Ignored.get(typ).fold(Seq.empty[String])(_._1)
+      typ + JsonMethods.compact(JsonMethods.render(
+        JObject(config.obj.filterNot(kv => ignored.contains(kv._1)))))
+    }
   }
+
+  /** Options a stage accepts for spec compatibility and ignores, with the
+    * WARN it logs when they are set: they feed [[warnIgnored]] and are
+    * left out of the stage's fingerprint. */
+  private val Ignored: Map[String, (Seq[String], String)] = Map(
+    "filters.chipper" -> (Seq("method", "auto_threshold"),
+      "method and auto_threshold are ignored; the chipper is always exact"),
+    "filters.hexbin" -> (Seq("sample_size"),
+      "sample_size is ignored; the edge is estimated over the full frame"),
+    "readers.las" -> (Seq("splits", "distributed"),
+      "splits and distributed are ignored; the read is planned from the file header"))
 
   def parse(specJson: String): (Seq[StageSpec], Option[String]) = {
     val j = JsonMethods.parse(specJson)
@@ -67,10 +85,11 @@ object Pipeline {
     (stages, (j \ "checkpoint_root").extractOpt[String])
   }
 
-  /** One WARN naming the stage (type and tag) about options it ignores. */
-  private def warnIgnored(st: StageSpec, msg: String): Unit =
+  /** One WARN naming the stage (type and tag) about the options it
+    * ignores ([[Ignored]]). */
+  private def warnIgnored(st: StageSpec): Unit =
     org.slf4j.LoggerFactory.getLogger(getClass).warn(
-      st.typ + st.str("tag").fold("")(t => s" '$t'") + ": " + msg)
+      st.typ + st.str("tag").fold("")(t => s" '$t'") + ": " + Ignored(st.typ)._2)
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
@@ -143,13 +162,13 @@ object Pipeline {
     case _ => None
   }
 
-  /** A codec-table stage. A reader reads `path` (a glob one task per
-    * file, one file on the driver). A writer writes its input, after an
-    * optional deterministic `order_by` (a file's byte stream is
-    * sequential; unordered writes are iterator-order): `shard_column`
-    * routes to the executor-parallel [[ShardedWrite]] (one file per
-    * distinct shard value under `path` as a directory), otherwise one
-    * file from the driver. */
+  /** A codec-table stage. A reader reads `path`, one file or a glob, one
+    * executor task per file ([[PointCodec.read]]). A writer writes its
+    * input, after an optional deterministic `order_by` (a file's byte
+    * stream is sequential; unordered writes are iterator-order):
+    * `shard_column` routes to the executor-parallel [[ShardedWrite]] (one
+    * file per distinct shard value under `path` as a directory),
+    * otherwise one file from the driver. */
   private def pointStage(spark: SparkSession, st: StageSpec, in: Option[DataFrame],
                          codec: DataFrame => PointCodec): DataFrame = {
     val path = st.str("path").get
@@ -199,33 +218,22 @@ object Pipeline {
           case m => throw new IllegalArgumentException(s"faux mode $m")
         }
       case "readers.las" =>
-        // "splits": N fans ONE large file across N tasks at record
-        // offsets; "distributed": one task per matched file (glob);
-        // default stays the driver decode for single-fixture parity runs
+        // a glob reads one task per file; one file is planned from its
+        // header (LasDecode.asDataFrame): LAZ chunks, where `columns`
+        // prunes entropy layers and `bounds` prunes tiled-archive chunks
+        // (exactness still comes from a downstream filters.crop), or
+        // record ranges of an uncompressed file
         val path = st.str("path").get
-        // infer the file's SRS from its VLR GeoTIFF keys / WKT record for
-        // downstream filters.reprojection auto mode (glob paths skipped)
-        if (!PointCodec.isGlob(path)) ctx.inferredSrs = LasDecode.srsOf(path)
-        // "columns": project the read — on layered .laz via the chunk
-        // path this prunes whole entropy layers INSIDE the codec
-        // (selective decompression); elsewhere a post-decode projection
-        val colsCfg = st.strs("columns").getOrElse(Nil)
-        def project(df: DataFrame): DataFrame =
-          if (colsCfg.isEmpty) df
-          else df.select(((Seq("doc_id", "span_idx", "x", "y") ++ colsCfg).distinct
-            .filter(df.columns.contains)).map(org.apache.spark.sql.functions.col): _*)
-        st.int("splits") match {
-          case Some(_) if LasDecode.isLaszip(path) =>
-            // compressed records aren't offset-splittable; LAZ chunks
-            // are the natural parallel unit instead. "bounds" prunes
-            // whole chunks via the spatial sidecar before any read
-            // (exactness still comes from a downstream filters.crop)
-            LasDecode.asChunkSplitDataFrame(spark, path, columns = colsCfg,
-              bounds = st.dbls("bounds").getOrElse(Nil))
-          case Some(n) => project(LasDecode.asSplitDataFrame(spark, path, n))
-          case None if st.bool("distributed").getOrElse(false) =>
-            project(LasDecode.asDistributedDataFrame(spark, path))
-          case None => project(LasDecode.asDataFrame(spark, path))
+        if (Ignored(st.typ)._1.exists(st.sets)) warnIgnored(st)
+        val columns = st.strs("columns").getOrElse(Nil)
+        if (PointCodec.isGlob(path))
+          LasDecode.project(PointCodec.read(spark, path, LasDecode.Codec()), columns)
+        else {
+          // the file's SRS, from its VLR GeoTIFF keys / WKT record, for
+          // a downstream filters.reprojection in auto mode
+          ctx.inferredSrs = LasDecode.srsOf(path)
+          LasDecode.asDataFrame(spark, path, columns = columns,
+            bounds = st.dbls("bounds").getOrElse(Nil))
         }
 
       // ---- filters -----------------------------------------------------
@@ -289,8 +297,7 @@ object Pipeline {
       case "filters.chipper" =>
         // one exact chipper; `method` and `auto_threshold` are accepted for
         // spec compatibility and ignored, with a WARN
-        if (st.str("method").exists(_ != "exact") || st.config.obj.exists(_._1 == "auto_threshold"))
-          warnIgnored(st, "method and auto_threshold are ignored; the chipper is always exact")
+        if (st.str("method").exists(_ != "exact") || st.sets("auto_threshold")) warnIgnored(st)
         TileOps.chipper(st.int("capacity").getOrElse(5000).toLong)(in.get)
       case "filters.stats" =>
         AggOps.stats(st.strs("dimensions").getOrElse(Seq("x", "y", "z")),
@@ -322,8 +329,7 @@ object Pipeline {
         val edgeOpt = st.dbl("edge_length").orElse(st.dbl("edge_size"))
           .orElse(st.dbl("edge")).filter(_ != 0.0)
         val edge = edgeOpt.getOrElse {
-          if (st.config.obj.exists(_._1 == "sample_size"))
-            warnIgnored(st, "sample_size is ignored; the edge is estimated over the full frame")
+          if (st.sets("sample_size")) warnIgnored(st)
           val s = in.get
             .agg(min("x"), max("x"), min("y"), max("y"), count(lit(1))).head()
           if (s.isNullAt(0)) 10.0 // empty input: any edge yields an empty grid

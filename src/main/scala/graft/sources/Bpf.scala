@@ -409,7 +409,7 @@ object Bpf {
   /** Executor-parallel decode, one task per matched file. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String,
                              columns: Seq[String] = Nil): DataFrame =
-    PointCodec.readFiles(spark, pathGlob, Codec(columns))
+    PointCodec.read(spark, pathGlob, Codec(columns))
 
   // ---- writer ---------------------------------------------------------
 

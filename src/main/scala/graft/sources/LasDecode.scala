@@ -2,8 +2,12 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** LAS 1.0-1.4 point decoder (point record formats 0-10), from the public
   * ASPRS LAS specification; field layout cross-checked against the
@@ -23,10 +27,11 @@ import org.apache.spark.sql.types._
   *    byte 247 and 15 u64 per-return counts; point-format byte masks
   *    off the two laszip compression bits (~0xC0).
   *
-  * Purpose: decoding the reference's small golden fixtures (P1065 =
-  * test/data/las/1.2-with-color.las) into the engine's point frame for
-  * row-for-row parity tests. Driver-side read, fixture-scale only — the
-  * production ingest path is the parquet/doc-table source.
+  * Every frame read decodes in executor tasks: one file through
+  * [[asDataFrame]], planned from its header (LAZ chunks or record
+  * ranges), a glob through [[PointCodec.read]], one task per file. One
+  * record decoder, [[decodeRecordUnsafe]], serves them all; the driver
+  * decodes whole files only for tests and tools ([[readPoints]]).
   */
 object LasDecode {
   final case class LasHeader(
@@ -304,9 +309,12 @@ object LasDecode {
       if (baseNames.contains(d.name.toLowerCase)) s"extra_${d.name}" else d.name
     val fullSchema = StructType(schema.fields ++
       extras.map(d => StructField(colName(d), DoubleType, nullable = false)))
+    val toRow = rowConverter
+    val id = UTF8String.fromString(docId)
+    val w = new UnsafeRowWriter(schema.length)
     val rows = (0L until h.pointCount).map { i =>
       val recBase = (off0 + i * h.recordLen).toInt
-      val std = decodeRecord(pb, recBase, h, docId, i.toInt)
+      val std = toRow(decodeRecordUnsafe(pb, recBase, h, id, i.toInt, w))
       Row.fromSeq(std.toSeq ++ extras.map(readExtra(pb, recBase, _)))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), fullSchema)
@@ -349,11 +357,11 @@ object LasDecode {
   /** Single-buffer decodes index with Int offsets: fail clearly on
     * files past 2 GiB (1.4's u64 counts allow them) instead of wrapped
     * offsets and garbage records — large files go through
-    * [[asSplitDataFrame]], which bounds each task's buffer. */
+    * [[asDataFrame]], which bounds each task's buffer. */
   private def requireSingleBuffer(h: LasHeader): Unit =
     require(h.dataOffset + h.pointCount * h.recordLen <= Int.MaxValue,
       s"file too large for single-buffer decode (${h.pointCount} records); " +
-        "use the offset-split ingest (asSplitDataFrame / splits config)")
+        "read it with asDataFrame, which bounds each task's buffer")
 
   /** The "laszip encoded" VLR, if this is a .laz stream. */
   def lazVlrOf(bb: ByteBuffer): Option[laz.LazDecoder.LazVlr] =
@@ -362,7 +370,7 @@ object LasDecode {
 
   /** Point-record bytes of `bb`, decompressing LASzip streams into raw
     * records first (so every caller decodes through the same
-    * golden-pinned [[decodeRecord]]). Returns (buffer, offset of record
+    * golden-pinned [[decodeRecordUnsafe]]). Returns (buffer, offset of record
     * 0 inside it). */
   private def pointBytes(bytes: Array[Byte], bb: ByteBuffer, h: LasHeader): (ByteBuffer, Long) =
     lazVlrOf(bb) match {
@@ -373,73 +381,71 @@ object LasDecode {
       case None => (bb, h.dataOffset)
     }
 
+  /** Driver decode of one whole file to external Rows, for tests and
+    * tools; frames come from [[asDataFrame]]. */
   def readPoints(path: String, docId: String = "las"): (LasHeader, Vector[Row]) = {
     val bytes = Files.readAllBytes(Paths.get(path))
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val h = readHeader(bb)
     require(h.pointFormat <= 10, s"unsupported point format ${h.pointFormat}")
-    (h, decodeAll(bytes, bb, h, docId).toVector)
+    (h, decodeAllUnsafe(bytes, bb, h, docId).map(rowConverter).toVector)
   }
 
-  /** One point record -> one Row (schema above). */
-  def decodeRecord(bb: ByteBuffer, base: Int, h: LasHeader,
-                   docId: String, idx: Int): Row = {
-    val fmt = h.pointFormat
-    val xi = bb.getInt(base); val yi = bb.getInt(base + 4); val zi = bb.getInt(base + 8)
-    val intensity = bb.getShort(base + 12) & 0xffff
-    val x = xi * h.sx + h.ox; val y = yi * h.sy + h.oy; val z = zi * h.sz + h.oz
-    if (!isV14(fmt)) {
-      val flags = bb.get(base + 14) & 0xff
-      val cls = bb.get(base + 15) & 0xff
-      val angle = bb.get(base + 16).toFloat // i8, whole degrees
-      val user = bb.get(base + 17) & 0xff
-      val psid = bb.getShort(base + 18) & 0xffff
-      var off = base + 20
-      val gps = if (hasTime(fmt)) { val g = bb.getDouble(off); off += 8; g } else 0.0
-      val (r, g2, b) = if (hasColor(fmt)) {
-        (bb.getShort(off) & 0xffff, bb.getShort(off + 2) & 0xffff, bb.getShort(off + 4) & 0xffff)
-      } else (0, 0, 0)
-      // fmt 4/5 wave packet descriptors follow — skipped (vendor laszip
-      // territory in the reference too)
-      Row(docId, idx, x, y, z, intensity,
-        (flags & 0x7).toShort, ((flags >> 3) & 0x7).toShort,
-        cls.toShort, angle, user.toShort, psid, gps, r, g2, b, 0, 0.toShort)
-    } else {
-      val returnInfo = bb.get(base + 14) & 0xff
-      val flags = bb.get(base + 15) & 0xff
-      val cls = bb.get(base + 16) & 0xff
-      val user = bb.get(base + 17) & 0xff
-      val angle = (bb.getShort(base + 18) * 0.006).toFloat // i16 * 0.006 deg
-      val psid = bb.getShort(base + 20) & 0xffff
-      val gps = bb.getDouble(base + 22)
-      var off = base + 30
-      val (r, g2, b) = if (hasColor(fmt)) {
-        val c = (bb.getShort(off) & 0xffff, bb.getShort(off + 2) & 0xffff, bb.getShort(off + 4) & 0xffff)
-        off += 6; c
-      } else (0, 0, 0)
-      val nir = if (hasInfrared(fmt)) { val n = bb.getShort(off) & 0xffff; off += 2; n } else 0
-      Row(docId, idx, x, y, z, intensity,
-        (returnInfo & 0xf).toShort, ((returnInfo >> 4) & 0xf).toShort,
-        cls.toShort, angle, user.toShort, psid, gps, r, g2, b, nir,
-        ((flags >> 4) & 0x3).toShort)
+  /** InternalRow -> external Row of [[schema]]. */
+  private def rowConverter: InternalRow => Row = {
+    val conv = CatalystTypeConverters.createToScalaConverter(schema)
+    r => conv(r).asInstanceOf[Row]
+  }
+
+  /** A single LAS/LAZ file as a frame, planned from its header and
+    * decoded in executor tasks. A LASzip file reads one task per chunk
+    * ([[asChunkSplitDataFrame]]: `columns` prunes the entropy layers of
+    * a layered stream, `bounds` the chunks of a tiled archive). An
+    * uncompressed file reads [[splitsFor]] record ranges
+    * ([[asSplitDataFrame]]), then projects `columns`. */
+  def asDataFrame(spark: SparkSession, path: String, docId: String = "las",
+                  columns: Seq[String] = Nil, bounds: Seq[Double] = Nil): DataFrame =
+    if (isLaszip(path)) asChunkSplitDataFrame(spark, path, docId, columns, bounds)
+    else {
+      val h = headerOf(path)
+      project(asSplitDataFrame(spark, path,
+        splitsFor(spark, presentRecords(path, h) * h.recordLen), docId), columns)
     }
+
+  /** `df` narrowed to doc_id, span_idx, x, y and `columns` (all of it
+    * when `columns` is empty). */
+  def project(df: DataFrame, columns: Seq[String]): DataFrame =
+    if (columns.isEmpty) df
+    else df.select((Seq("doc_id", "span_idx", "x", "y") ++ columns).distinct
+      .filter(df.columns.contains).map(org.apache.spark.sql.functions.col): _*)
+
+  /** Task count for `recordBytes` of fixed-length records, sized as
+    * Spark sizes file splits: split bytes = min(maxPartitionBytes,
+    * max(openCostInBytes, recordBytes / defaultParallelism)). */
+  def splitsFor(spark: SparkSession, recordBytes: Long): Int = {
+    def conf(k: String) = JavaUtils.byteStringAsBytes(spark.conf.get(k))
+    val split = math.max(1L, math.min(conf("spark.sql.files.maxPartitionBytes"),
+      math.max(conf("spark.sql.files.openCostInBytes"),
+        recordBytes / spark.sparkContext.defaultParallelism)))
+    math.max(1L, (recordBytes + split - 1) / split).toInt
   }
 
-  def asDataFrame(spark: SparkSession, path: String, docId: String = "las"): DataFrame = {
-    val (_, rows) = readPoints(path, docId)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 4), schema)
-  }
+  /** Records physically present in an uncompressed file: a header whose
+    * count overruns the file (the reference's 1.2-no-points.las declares
+    * 1065 points over zero bytes) clamps to them, the reference reader's
+    * read-until-EOF behavior. */
+  private def presentRecords(path: String, h: LasHeader): Long =
+    math.min(h.pointCount,
+      math.max(0L, (Files.size(Paths.get(path)) - h.dataOffset) / h.recordLen))
 
-  /** [[decodeRecord]]'s zero-boxing twin for the PRODUCTION ingest
-    * paths: writes the same 18 fields straight into a reusable
+  /** One point record -> one row of [[schema]], the engine's one LAS
+    * record decoder: writes the 18 fields straight into a reusable
     * UnsafeRowWriter and returns a materialized copy — 2 allocations
     * per point instead of ~20 (external Row + field boxing + the
     * RowEncoder conversion projection). At 8+ concurrent decode tasks
-    * in one JVM the allocation-rate/cache pressure of the boxed path
+    * in one JVM the allocation-rate/cache pressure of a boxed decode
     * was the measured scaling bottleneck (a replicated-LAZ scaling run
-    * measured GC <= 5% but per-core throughput halved 2 -> 8 cores).
-    * Field-for-field identical to decodeRecord; the distributed==driver
-    * equality specs pin that. */
+    * measured GC <= 5% but per-core throughput halved 2 -> 8 cores). */
   def decodeRecordUnsafe(bb: ByteBuffer, base: Int, h: LasHeader,
                          docId: org.apache.spark.unsafe.types.UTF8String, idx: Int,
                          w: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter)
@@ -495,8 +501,9 @@ object LasDecode {
   }
 
   /** Every record of a whole-file buffer as InternalRows (laszip
-    * decompressed) — the per-file unit of the zero-boxing distributed
-    * ingest. Same clamping as [[decodeAll]]. */
+    * decompressed) — the per-file unit of the glob and streaming reads.
+    * A header whose count overruns the records present clamps to them,
+    * as [[presentRecords]] does. */
   def decodeAllUnsafe(bytes: Array[Byte], bb: ByteBuffer, h: LasHeader,
                       docId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     requireSingleBuffer(h)
@@ -517,13 +524,8 @@ object LasDecode {
                          compress: Boolean = false) extends PointCodec with UnsafeLane {
     def exts: Seq[String] = if (compress) Seq("laz", "las") else Seq("las", "laz")
     def schema(bytes: => Array[Byte]): StructType = LasDecode.schema
-    def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) = {
-      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      (LasDecode.schema, decodeAll(bytes, bb, readHeader(bb), docId))
-    }
-    // zero-boxing lane: decode straight to UnsafeRows (no external Row,
-    // no RowEncoder projection) — the boxed path's allocation rate was
-    // the measured multi-core decode bottleneck
+    def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) =
+      (LasDecode.schema, decodeUnsafe(bytes, docId).map(rowConverter))
     def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
       decodeAllUnsafe(bytes, bb, readHeader(bb), docId)
@@ -537,31 +539,11 @@ object LasDecode {
       else LasWriter.write(path, df, pointFormat, xf)
   }
 
-  /** DISTRIBUTED LAS ingest: one executor task per file — the natural
-    * parallel unit for LAS (each file is self-describing; the reference
-    * reads files serially, one Stage per file). `pathGlob` may match many
-    * files; doc_id = file name. The per-record decode is the same
-    * [[decodeRecord]] the driver path and the byte-fixture goldens pin.
-    * Files too large for one task's buffer go through
-    * [[asSplitDataFrame]] instead (fail-fast guard here). */
+  /** One executor task per file of `pathGlob`, doc_id = file name.
+    * Files too large for one task's buffer fail fast; a single one reads
+    * through [[asDataFrame]]. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
-    PointCodec.readFiles(spark, pathGlob, Codec())
-
-  /** Every record of a whole-file LAS/LAZ buffer as Rows (decompressing
-    * laszip streams first) — the per-file unit the distributed and
-    * streaming ingests share. A header whose count overruns the actual
-    * file (the reference's 1.2-no-points.las fixture declares 1065
-    * points over zero bytes) clamps to the records physically present,
-    * the reference reader's read-until-EOF behavior. */
-  def decodeAll(bytes: Array[Byte], bb: ByteBuffer, h: LasHeader,
-                docId: String): Iterator[Row] = {
-    requireSingleBuffer(h)
-    val (pb, off0) = pointBytes(bytes, bb, h)
-    val present = math.max(0L, (pb.capacity() - off0) / h.recordLen)
-    (0L until math.min(h.pointCount, present)).iterator.map { i =>
-      decodeRecord(pb, (off0 + i * h.recordLen).toInt, h, docId, i.toInt)
-    }
-  }
+    PointCodec.read(spark, pathGlob, Codec())
 
   /** True iff the file's point-format byte carries the laszip
     * compression bits (header peek only). */
@@ -697,14 +679,8 @@ object LasDecode {
           decodeRecordUnsafe(rb, i * h.recordLen, h, id, (base + i).toInt, w)
         }
       }
-    val decoded =
-      org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema)
-    if (columns.isEmpty) decoded
-    else {
-      val keep = (Seq("doc_id", "span_idx", "x", "y") ++ columns).distinct
-        .filter(schema.fieldNames.contains)
-      decoded.select(keep.map(org.apache.spark.sql.functions.col): _*)
-    }
+    project(org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema),
+      columns)
   }
 
   /** Offset-SPLIT LAS ingest: ONE large file fanned across `numSplits`
@@ -713,10 +689,11 @@ object LasDecode {
     * Parquet/CSV splittable sources make). The driver reads only the
     * header; each task opens the file through the Hadoop FileSystem
     * (file://, hdfs://, s3a:// all resolve), seeks to its range, and
-    * decodes with the same [[decodeRecord]] the goldens pin. span_idx
-    * stays the ABSOLUTE record index, so split count never changes the
-    * decoded frame. A single 500 GB LAS file becomes numSplits parallel
-    * scans instead of pinning one executor. */
+    * decodes with [[decodeRecordUnsafe]]. span_idx stays the ABSOLUTE
+    * record index, so split count never changes the decoded frame. The
+    * ranges cover the records present ([[presentRecords]]). A single
+    * 500 GB LAS file becomes numSplits parallel scans instead of pinning
+    * one executor. */
   def asSplitDataFrame(spark: SparkSession, path: String, numSplits: Int,
                        docId: String = "las"): DataFrame = {
     require(numSplits >= 1, s"numSplits must be >= 1, got $numSplits")
@@ -729,19 +706,19 @@ object LasDecode {
     require(h.pointCount <= Int.MaxValue,
       s"$path holds ${h.pointCount} records; span_idx is int32 — shard the file (2^31-1 records max per file)")
     // laszip bits in the raw format byte: compressed records are not
-    // fixed-length, so offset splitting cannot apply — decode via the
-    // whole-file paths (which decompress), splitting at chunk boundaries
-    // is the future refinement
+    // fixed-length, so offset splitting cannot apply; LAZ chunks are the
+    // split unit there
     require((headBytes(104) & 0xC0) == 0,
-      "offset-split ingest needs uncompressed LAS; use readers.las without splits for .laz")
-    val per = (h.pointCount + numSplits - 1) / numSplits
+      "offset-split ingest needs uncompressed LAS; read .laz with asChunkSplitDataFrame")
+    val n = presentRecords(path, h)
+    val per = (n + numSplits - 1) / numSplits
     require(per * h.recordLen <= Int.MaxValue,
       s"split of $per records exceeds one task's buffer; raise numSplits")
     val ranges = (0 until numSplits)
-      .map(i => (i * per, math.min((i + 1) * per, h.pointCount)))
+      .map(i => (n * i / numSplits, n * (i + 1) / numSplits))
       .filter { case (s, e) => e > s }
     val absPath = Paths.get(path).toAbsolutePath.toString
-    val rdd = spark.sparkContext.parallelize(ranges, ranges.size)
+    val rdd = spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
       .flatMap { case (startRec, endRec) =>
         val hp = new org.apache.hadoop.fs.Path(absPath)
         val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())

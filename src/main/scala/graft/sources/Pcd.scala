@@ -312,7 +312,7 @@ object Pcd {
 
   /** Executor-parallel decode, one task per matched file. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
-    PointCodec.readFiles(spark, pathGlob, Codec())
+    PointCodec.read(spark, pathGlob, Codec())
 
   // ---- writer -----------------------------------------------------------
 

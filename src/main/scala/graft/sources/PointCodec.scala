@@ -15,10 +15,9 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * writer, the encode of one file from its records. Format parameters
   * (BPF `columns`, QFIT `flip_coordinates`/`scale_z`, a reader's
   * `count`, a writer's layout) are constructor arguments of the codec
-  * value. Everything else is written once: the glob and single-file
-  * reads in the companion, the landing-dir stream in
-  * [[graft.streaming.StreamOps.ingestPointFiles]] and the sharded write
-  * in [[ShardedWrite.run]].
+  * value. Everything else is written once: the read in the companion,
+  * the landing-dir stream in [[graft.streaming.StreamOps.ingestPointFiles]]
+  * and the sharded write in [[ShardedWrite.run]].
   */
 trait PointCodec extends Serializable {
 
@@ -113,25 +112,12 @@ object PointCodec {
     rows
   }
 
-  /** A `readers.*` path: a glob reads one task per file, a single path
-    * decodes on the driver. */
-  def read(spark: SparkSession, path: String, codec: PointCodec): DataFrame =
-    if (isGlob(path)) readFiles(spark, path, codec) else readFile(spark, path, codec)
-
-  /** Driver decode of one file (fixture-parity path). */
-  def readFile(spark: SparkSession, path: String, codec: PointCodec): DataFrame = {
-    val bytes = readBytes(new Path(path), spark.sparkContext.hadoopConfiguration)
-    val (schema, rows) = codec.decode(bytes, docIdOf(path))
-    val seq = rows.iterator.toVector
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(seq, math.max(1, seq.size / 100000)), schema)
-  }
-
-  /** DISTRIBUTED ingest: one executor task per matched file through
-    * Spark's binaryFile source, doc_id = the file name. The schema is
-    * pinned from the first file by name, read on the driver; every file
-    * must decode to it. */
-  def readFiles(spark: SparkSession, pathGlob: String, codec: PointCodec): DataFrame = {
+  /** A `readers.*` path, one file or a glob: one executor task per
+    * matched file through Spark's binaryFile source, doc_id = the file
+    * name, span_idx = the record ordinal. The schema is pinned from the
+    * first file by name, read on the driver; every file must decode to
+    * it. No decoded row passes through the driver. */
+  def read(spark: SparkSession, pathGlob: String, codec: PointCodec): DataFrame = {
     // A glob in the PATH makes FileStreamSink.hasMetadata probe the glob
     // as a literal directory and log a FileNotFoundException stack on
     // every load; a pathGlobFilter over the parent directory lists the

@@ -4,18 +4,11 @@
 // Not part of the build contract.
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 object PipelineRun {
   def main(args: Array[String]): Unit = {
     val spec = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(args(0))), "UTF-8")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, 8)
     val out = graft.plans.Pipeline.run(spark, spec)
     println(s"pipeline ok: ${out.df.count()} rows")
     spark.stop()

@@ -42,7 +42,7 @@ class AdviceFixesSpec extends AnyFunSuite {
     assert(img.length > n * 12, "plane should have expanded under deflate")
     val p = s"$tmpDir/incompressible.bpf"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), img)
-    val got = PointCodec.readFile(spark, p, Bpf.Codec()).orderBy("span_idx")
+    val got = PointCodec.read(spark, p, Bpf.Codec()).orderBy("span_idx")
       .select("x", "y", "z").collect()
     assert(got.length === n)
     var i = 0
@@ -77,8 +77,8 @@ class AdviceFixesSpec extends AnyFunSuite {
     out.write(bytes, headerEnd, bytes.length - headerEnd)
     val crlf = s"$dir/crlf.pcd"
     java.nio.file.Files.write(java.nio.file.Paths.get(crlf), out.toByteArray)
-    val want = PointCodec.readFile(spark, lf, Pcd.Codec()).orderBy("span_idx").drop("doc_id").collect().toSeq
-    val got = PointCodec.readFile(spark, crlf, Pcd.Codec()).orderBy("span_idx").drop("doc_id").collect().toSeq
+    val want = PointCodec.read(spark, lf, Pcd.Codec()).orderBy("span_idx").drop("doc_id").collect().toSeq
+    val got = PointCodec.read(spark, crlf, Pcd.Codec()).orderBy("span_idx").drop("doc_id").collect().toSeq
     assert(got === want)
   }
 

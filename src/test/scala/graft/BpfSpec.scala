@@ -31,7 +31,7 @@ class BpfSpec extends AnyFunSuite {
     (494021.094f, 4877440.0f, 130.460007f))
 
   private def checkFileType(path: String): Unit = {
-    val df = PointCodec.readFile(spark, path, Bpf.Codec(count = 506))
+    val df = PointCodec.read(spark, path, Bpf.Codec(count = 506))
     assert(df.count() === 506)
     val first = df.orderBy("span_idx").select("x", "y", "z").limit(3).collect()
     first.zip(golden).foreach { case (r, (gx, gy, gz)) =>
@@ -54,12 +54,12 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("fastlz variants decode identically to the uncompressed twin (clean-room FastLZ)") {
-    val want = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
+    val want = PointCodec.read(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .drop("doc_id").orderBy("span_idx").collect().toSeq
     for (f <- Seq("autzen-utm-chipped-25-v3-fastlz.bpf",
                   "autzen-utm-chipped-25-v3-fastlz-interleaved.bpf",
                   "autzen-utm-chipped-25-v3-fastlz-segregated.bpf")) {
-      val got = PointCodec.readFile(spark, s"$B/$f", Bpf.Codec())
+      val got = PointCodec.read(spark, s"$B/$f", Bpf.Codec())
         .drop("doc_id").orderBy("span_idx").collect().toSeq
       assert(got === want, s"$f differs from uncompressed twin")
     }
@@ -98,7 +98,7 @@ class BpfSpec extends AnyFunSuite {
 
   test("round-trip: every format x compression re-reads within float precision") {
     // twin: the BPF twin
-    val src = PointCodec.readFile(spark,
+    val src = PointCodec.read(spark,
       refOr("bpf/autzen-utm-chipped-25-v3-interleaved.bpf")(Twins.bpf), Bpf.Codec())
     val want = src.orderBy("span_idx").collect().toSeq
     val dir = tmpDir
@@ -106,7 +106,7 @@ class BpfSpec extends AnyFunSuite {
          comp <- Seq(false, true)) {
       val p = s"$dir/rt-$fmt-$comp.bpf"
       Bpf.write(p, src, Bpf.WriteOpts(format = fmt, compression = comp))
-      val got = PointCodec.readFile(spark, p, Bpf.Codec()).orderBy("span_idx").collect().toSeq
+      val got = PointCodec.read(spark, p, Bpf.Codec()).orderBy("span_idx").collect().toSeq
       // one float32 quantization hop per value (the fixture holds exact
       // float32s, so the re-write is in fact exact)
       assertClose(got, want, 1e-6)
@@ -115,14 +115,14 @@ class BpfSpec extends AnyFunSuite {
 
   test("round-trip with explicit scale/offset (BPFTest roundtrip_scaling)") {
     // twin: the BPF twin
-    val src = PointCodec.readFile(spark,
+    val src = PointCodec.read(spark,
       refOr("bpf/autzen-utm-chipped-25-v3-interleaved.bpf")(Twins.bpf), Bpf.Codec())
     val want = src.orderBy("span_idx").collect().toSeq
     val p = s"$tmpDir/rt-scaled.bpf"
     Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.PointMajor,
       offsetX = 494000.0, offsetY = 487000.0, offsetZ = 130.0,
       scaleX = .001, scaleY = .01, scaleZ = 10.0))
-    val got = PointCodec.readFile(spark, p, Bpf.Codec()).orderBy("span_idx").collect().toSeq
+    val got = PointCodec.read(spark, p, Bpf.Codec()).orderBy("span_idx").collect().toSeq
     // scaling pushes values through float32 at a different magnitude —
     // EXPECT_FLOAT_EQ-grade tolerance
     assertClose(got, want, 1e-5)
@@ -154,7 +154,7 @@ class BpfSpec extends AnyFunSuite {
     val dir = tmpDir
     val p = s"$dir/legacy1.bpf"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), bb.array())
-    val df = PointCodec.readFile(spark, p, Bpf.Codec())
+    val df = PointCodec.read(spark, p, Bpf.Codec())
     assert(df.columns.toSeq === Seq("doc_id", "span_idx", "x", "y", "z", "intensity"))
     val rows = df.orderBy("span_idx").collect()
     assert(rows.length === 3)
@@ -167,7 +167,7 @@ class BpfSpec extends AnyFunSuite {
   }
 
   test("distributed glob ingest equals driver decode") {
-    val driver = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
+    val driver = PointCodec.read(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .orderBy("span_idx").collect().toSeq
     val dist = Bpf.asDistributedDataFrame(spark, s"$B/autzen-utm-chipped-25-v3.bpf")
       .orderBy("span_idx").collect().toSeq
@@ -176,7 +176,7 @@ class BpfSpec extends AnyFunSuite {
 
   test("executor-sharded write: 4 shards re-decode to the full cloud, file: URI two-phase") {
     import org.apache.spark.sql.functions._
-    val src = PointCodec.readFile(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
+    val src = PointCodec.read(spark, s"$B/autzen-utm-chipped-25-v3.bpf", Bpf.Codec())
       .withColumn("shard", pmod(col("span_idx"), lit(4)))
     // shard files re-index spans per shard, so compare order-free
     // aggregate invariants (one float32 re-quantization hop of slack)
@@ -213,7 +213,7 @@ class BpfSpec extends AnyFunSuite {
   test("selective decode: pruned dimensions' blocks are never decompressed") {
     import org.apache.spark.sql.functions._
     // twin: the BPF twin
-    val src = PointCodec.readFile(spark,
+    val src = PointCodec.read(spark,
       refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf), Bpf.Codec())
     val dir = tmpDir
     val p = s"$dir/sel.bpf"
@@ -221,9 +221,9 @@ class BpfSpec extends AnyFunSuite {
     Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.DimMajor, compression = true))
 
     // selective xyz decode equals the full decode's xyz columns
-    val full = PointCodec.readFile(spark, p, Bpf.Codec()).select("span_idx", "x", "y", "z")
+    val full = PointCodec.read(spark, p, Bpf.Codec()).select("span_idx", "x", "y", "z")
       .orderBy("span_idx").collect().toSeq
-    val sel = PointCodec.readFile(spark, p, Bpf.Codec(columns = Seq("x", "y", "z")))
+    val sel = PointCodec.read(spark, p, Bpf.Codec(columns = Seq("x", "y", "z")))
     assert(sel.columns.toSeq === Seq("doc_id", "span_idx", "x", "y", "z"))
     assert(sel.select("span_idx", "x", "y", "z").orderBy("span_idx")
       .collect().toSeq === full)
@@ -241,7 +241,7 @@ class BpfSpec extends AnyFunSuite {
       bytes(i) = (bytes(i) ^ 0x5a).toByte)
     val pc = s"$dir/sel-corrupt.bpf"
     java.nio.file.Files.write(java.nio.file.Paths.get(pc), bytes)
-    val selC = PointCodec.readFile(spark, pc, Bpf.Codec(columns = Seq("x", "y", "z")))
+    val selC = PointCodec.read(spark, pc, Bpf.Codec(columns = Seq("x", "y", "z")))
       .select("span_idx", "x", "y", "z").orderBy("span_idx").collect().toSeq
     assert(selC === full, "selective decode touched a pruned block")
     val boom = intercept[Exception] { Bpf.decode(bytes, "c") }
@@ -251,12 +251,12 @@ class BpfSpec extends AnyFunSuite {
   test("empty cloud round-trips (0-point header, no data blocks)") {
     val dir = tmpDir
     // twin: the BPF twin
-    val src = PointCodec.readFile(spark,
+    val src = PointCodec.read(spark,
       refOr("bpf/autzen-utm-chipped-25-v3.bpf")(Twins.bpf), Bpf.Codec()).limit(0)
     for (comp <- Seq(false, true)) {
       val p = s"$dir/empty-$comp.bpf"
       Bpf.write(p, src, Bpf.WriteOpts(format = Bpf.DimMajor, compression = comp))
-      val back = PointCodec.readFile(spark, p, Bpf.Codec())
+      val back = PointCodec.read(spark, p, Bpf.Codec())
       assert(back.count() === 0)
       assert(Bpf.quickInfo(p).numPts === 0)
     }
@@ -273,7 +273,7 @@ class BpfSpec extends AnyFunSuite {
     val df = Pipeline.run(spark, spec).df
     val n = df.count()
     assert(n > 0 && n < 1065)
-    val back = PointCodec.readFile(spark, out, Bpf.Codec())
+    val back = PointCodec.read(spark, out, Bpf.Codec())
     assert(back.count() === n)
     import org.apache.spark.sql.functions._
     val mx = back.agg(max("z")).head().getDouble(0)

@@ -9,18 +9,8 @@ import graft.model.Model
 
 /** Shared session for all suites (one JVM, reused). */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "5000000")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(8, 8, "spark.app.name" -> "graft-test",
+    Session.Utc, Session.LateSortFallback)
   val RefData = "/root/reference/test/data"
   val RefRoot = RefData.stripSuffix("/test/data")
   /** Path of the reference fixture `rel` under [[RefData]]. Fails with one
@@ -49,6 +39,34 @@ object TestSpark {
   def refOr(rel: String)(twin: => String): String =
     if (refPresent) s"$RefData/$rel" else twin
   val P1065 = s"$RefData/las/1.2-with-color.las"
+
+  /** `body`'s result and the WARN messages logged while it ran, through
+    * an appender on the root logger. */
+  def warningsDuring[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val warnings = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
+    val capture = new AbstractAppender("warn-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    val out = try body
+      finally { root.removeAppender("warn-capture"); ctx.updateLoggers(); capture.stop() }
+    (out, warnings.toArray.map(_.toString).toSeq)
+  }
+
+  /** The innermost cause of `e`: a decode failure inside a task reaches
+    * the driver wrapped in a SparkException. */
+  @scala.annotation.tailrec
+  def rootCause(e: Throwable): Throwable =
+    if (e.getCause == null || e.getCause == e) e else rootCause(e.getCause)
 }
 
 /** Golden fixtures F1-F15 from FIXTURES.md, reproducing the reference's

@@ -12,7 +12,7 @@ class IcebridgeSpec extends AnyFunSuite {
   private val H5 = s"$RefData/icebridge/twoPoints.h5"
 
   test("twoPoints.h5 golden: both points, all 12 dimensions") {
-    val df = PointCodec.readFile(spark, H5, Icebridge.Codec()).orderBy("span_idx")
+    val df = PointCodec.read(spark, H5, Icebridge.Codec()).orderBy("span_idx")
     assert(df.count() === 2)
     val r = df.collect()
     def chk(i: Int, time: Float, lat: Float, lon: Float, elev: Float,
@@ -39,8 +39,8 @@ class IcebridgeSpec extends AnyFunSuite {
   }
 
   test("distributed ingest equals driver decode; pipeline stage runs") {
-    val driver = PointCodec.readFile(spark, H5, Icebridge.Codec()).orderBy("span_idx").collect().toSeq
-    val dist = PointCodec.readFiles(spark, H5, Icebridge.Codec()).orderBy("span_idx").collect().toSeq
+    val driver = PointCodec.read(spark, H5, Icebridge.Codec()).orderBy("span_idx").collect().toSeq
+    val dist = PointCodec.read(spark, H5, Icebridge.Codec()).orderBy("span_idx").collect().toSeq
     assert(dist === driver)
     val spec = s"""{"pipeline":[
       {"type":"readers.icebridge","path":"$H5"},

@@ -126,6 +126,22 @@ class NbrBlocksPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("nearest-1 breaks a distance tie across doc_ids in UTF-8 order, also under spark.testing") {
+    // UTF8String.compareTo throws whenever spark.testing is set; U+FFFF
+    // precedes U+10000 in UTF-8 bytes and follows it in UTF-16 units
+    import spark.implicits._
+    val left = Seq(("t", 0, 10.0, 10.0, 0.0)).toDF("doc_id", "span_idx", "x", "y", "z")
+    val right = Seq(("\uD800\uDC00", 0, 11.0, 10.0, 1.0), ("\uFFFF", 0, 9.0, 10.0, 2.0))
+      .toDF("doc_id", "span_idx", "x", "y", "z")
+    val prev = Option(System.getProperty("spark.testing"))
+    System.setProperty("spark.testing", "1")
+    try {
+      val n = JoinOps.exactNearest(left, right, startLevel = 6, space)
+        .select(col("__n.nz"), col("__d2min")).head()
+      assert((n.getDouble(0), n.getDouble(1)) === ((2.0, 1.0)))
+    } finally prev.fold(System.clearProperty("spark.testing"))(System.setProperty("spark.testing", _))
+  }
+
   test("radius outlier removal keeps exactly the brute-force survivors") {
     for (seed <- seeds; (radius, minN) <- Seq((4.0, 1), (4.0, 3), (2.5, 2))) {
       val pts = points(200, 300L + seed, borderSide = 4 * radius)

@@ -15,7 +15,7 @@ class NitfSpec extends AnyFunSuite {
   private val N = s"$RefData/nitf"
 
   test("autzen-utm10.ntf decodes row-identically to its .las twin") {
-    val ntf = PointCodec.readFile(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
+    val ntf = PointCodec.read(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
       .drop("doc_id").orderBy("span_idx").collect().toSeq
     val las = LasDecode.asDataFrame(spark, s"$N/autzen-utm10.las")
       .drop("doc_id").orderBy("span_idx").collect().toSeq
@@ -24,9 +24,9 @@ class NitfSpec extends AnyFunSuite {
   }
 
   test("distributed == driver; pipeline readers.nitf -> crop runs") {
-    val driver = PointCodec.readFile(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
+    val driver = PointCodec.read(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = PointCodec.readFiles(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
+    val dist = PointCodec.read(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
       .orderBy("span_idx").collect().toSeq
     assert(dist === driver)
     val spec = s"""{"pipeline":[
@@ -37,12 +37,12 @@ class NitfSpec extends AnyFunSuite {
   }
 
   test("writers.nitf: wrap -> read back row-identically (and through the pipeline)") {
-    val src = PointCodec.readFile(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
+    val src = PointCodec.read(spark, s"$N/autzen-utm10.ntf", Nitf.Codec())
     val dir = java.nio.file.Files.createTempDirectory("nitf-spec").toString
     val p = s"$dir/rt.ntf"
     // the twin's quantization is 0.01/0 so the re-write is value-exact
     Nitf.write(p, src.orderBy("span_idx"))
-    val back = PointCodec.readFile(spark, p, Nitf.Codec())
+    val back = PointCodec.read(spark, p, Nitf.Codec())
       .drop("doc_id").orderBy("span_idx").collect().toSeq
     val want = src.drop("doc_id").orderBy("span_idx").collect().toSeq
     assert(back === want)
@@ -53,7 +53,7 @@ class NitfSpec extends AnyFunSuite {
       {"type":"writers.nitf","path":"$out","order_by":["span_idx"]}
     ]}"""
     assert(graft.plans.Pipeline.run(spark, spec).df.count() === 106)
-    assert(PointCodec.readFile(spark, out, Nitf.Codec()).count() === 106)
+    assert(PointCodec.read(spark, out, Nitf.Codec()).count() === 106)
   }
 
   test("non-LAS NITF and non-NITF inputs fail loudly") {

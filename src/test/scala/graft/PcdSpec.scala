@@ -41,7 +41,7 @@ class PcdSpec extends AnyFunSuite {
     val dir = tmpDir
     val p = s"$dir/spec.pcd"
     java.nio.file.Files.write(java.nio.file.Paths.get(p), asciiFixture.getBytes)
-    val df = PointCodec.readFile(spark, p, Pcd.Codec())
+    val df = PointCodec.read(spark, p, Pcd.Codec())
     assert(df.columns.toSeq === Seq("doc_id", "span_idx", "x", "y", "z", "rgba"))
     assert(df.count() === 5)
     val r = df.orderBy("span_idx").collect()
@@ -86,7 +86,7 @@ class PcdSpec extends AnyFunSuite {
     for (mode <- Seq("ascii", "binary", "binary_compressed")) {
       val p = s"$dir/rt-$mode.pcd"
       Pcd.write(p, src, mode)
-      val got = PointCodec.readFile(spark, p, Pcd.Codec())
+      val got = PointCodec.read(spark, p, Pcd.Codec())
         .select("x", "y", "z", "intensity", "classification")
         .orderBy("x").collect().toSeq
         .map(r => (r.getDouble(0).toFloat, r.getDouble(1).toFloat,
@@ -102,7 +102,7 @@ class PcdSpec extends AnyFunSuite {
     val dir = tmpDir
     val p = s"$dir/shifted.pcd"
     Pcd.write(p, src, "binary", shiftOrigin = true)
-    val back = PointCodec.readFile(spark, p, Pcd.Codec())
+    val back = PointCodec.read(spark, p, Pcd.Codec())
     val mn = back.agg(min("x"), min("y"), min("z")).head()
     assert(math.abs(mn.getDouble(0)) < 1e-5)
     assert(math.abs(mn.getDouble(1)) < 1e-5)
@@ -118,7 +118,7 @@ class PcdSpec extends AnyFunSuite {
     for (mode <- Seq("ascii", "binary", "binary_compressed")) {
       val p = s"$dir/empty-$mode.pcd"
       Pcd.write(p, src, mode)
-      assert(PointCodec.readFile(spark, p, Pcd.Codec()).count() === 0, mode)
+      assert(PointCodec.read(spark, p, Pcd.Codec()).count() === 0, mode)
     }
   }
 
@@ -136,8 +136,8 @@ class PcdSpec extends AnyFunSuite {
     ]}"""
     val n = Pipeline.run(spark, spec).df.count()
     assert(n > 0 && n < 400)
-    assert(PointCodec.readFile(spark, out, Pcd.Codec()).count() === n)
-    val driver = PointCodec.readFile(spark, seedPath, Pcd.Codec()).orderBy("span_idx").collect().toSeq
+    assert(PointCodec.read(spark, out, Pcd.Codec()).count() === n)
+    val driver = PointCodec.read(spark, seedPath, Pcd.Codec()).orderBy("span_idx").collect().toSeq
     val dist = Pcd.asDistributedDataFrame(spark, seedPath).orderBy("span_idx").collect().toSeq
     assert(dist === driver)
   }

@@ -80,11 +80,21 @@ class PipelineSpec extends AnyFunSuite {
     val second = Pipeline.run(spark, spec)
     assert(second.resumedStages.contains("001_filters_chipper"))
     assert(chips(second.df) === firstChips)
-    // method is part of the stage fingerprint: switching to exact re-runs,
-    // to the same chips
+    // method is ignored, so it is not part of the stage fingerprint:
+    // switching to exact resumes, with the same chips
     val third = Pipeline.run(spark, spec.replace("\"approx\"", "\"exact\""))
-    assert(!third.resumedStages.contains("001_filters_chipper"))
+    assert(third.resumedStages.contains("001_filters_chipper"))
     assert(chips(third.df) === firstChips)
+  }
+
+  test("a stage's fingerprint leaves out exactly the options it ignores") {
+    val (Seq(withIgnored, plain, range), _) = Pipeline.parse("""{"pipeline": [
+      {"type": "filters.chipper", "capacity": 10, "method": "approx", "auto_threshold": 5},
+      {"type": "filters.chipper", "capacity": 10},
+      {"type": "filters.range", "method": "x"}]}""")
+    assert(withIgnored.fingerprintSource === plain.fingerprintSource)
+    assert(plain.fingerprintSource === """filters.chipper{"type":"filters.chipper","capacity":10}""")
+    assert(range.fingerprintSource === """filters.range{"type":"filters.range","method":"x"}""")
   }
 
   test("chipper methods exact|approx|auto: same rows and jobs, and a WARN") {
@@ -470,27 +480,6 @@ class PipelineSpec extends AnyFunSuite {
       assert(again.resumedStages === Seq("001_filters_range"), name)
       assert(again.df.count() === 100, name)
     }
-  }
-
-  /** `body`'s result and the WARN messages logged while it ran. */
-  private def warningsDuring[T](body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    val warnings = java.util.Collections.synchronizedList(new java.util.ArrayList[String])
-    val capture = new AbstractAppender("warn-capture", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val root = ctx.getConfiguration.getRootLogger
-    root.addAppender(capture, Level.WARN, null)
-    ctx.updateLoggers()
-    val out = try body
-      finally { root.removeAppender("warn-capture"); ctx.updateLoggers(); capture.stop() }
-    (out, warnings.toArray.map(_.toString).toSeq)
   }
 
   test("filters.hexbin warns once, naming the stage, that sample_size is ignored") {

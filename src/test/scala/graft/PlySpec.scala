@@ -14,7 +14,7 @@ class PlySpec extends AnyFunSuite {
   private val expected = Seq((-1.0, 0.0, 0.0), (0.0, 1.0, 0.0), (1.0, 0.0, 0.0))
 
   test("ascii fixture decodes to the reference's three vertices in order") {
-    val df = PointCodec.readFile(spark, s"$RefData/ply/simple_text.ply", Ply.Codec())
+    val df = PointCodec.read(spark, s"$RefData/ply/simple_text.ply", Ply.Codec())
     assert(df.schema.fieldNames.toSeq === Seq("doc_id", "span_idx", "x", "y", "z"))
     assert(df.schema("x").dataType === DoubleType)
     val rows = df.orderBy("span_idx").collect()
@@ -23,14 +23,14 @@ class PlySpec extends AnyFunSuite {
   }
 
   test("binary_little_endian fixture decodes bit-equal to the ascii twin") {
-    val df = PointCodec.readFile(spark, s"$RefData/ply/simple_binary.ply", Ply.Codec())
+    val df = PointCodec.read(spark, s"$RefData/ply/simple_binary.ply", Ply.Codec())
     val rows = df.orderBy("span_idx").collect()
       .map(r => (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toSeq
     assert(rows === expected)
   }
 
   test("no_vertex fixture yields zero rows, not an error") {
-    assert(PointCodec.readFile(spark, s"$RefData/ply/no_vertex.ply", Ply.Codec()).count() === 0)
+    assert(PointCodec.read(spark, s"$RefData/ply/no_vertex.ply", Ply.Codec()).count() === 0)
   }
 
   test("round-trip preserves typed properties through both formats") {
@@ -43,7 +43,7 @@ class PlySpec extends AnyFunSuite {
     for (fmt <- Seq("ascii", "binary_little_endian")) {
       val p = s"$dir/rt_$fmt.ply"
       Ply.write(p, src, fmt)
-      val back = PointCodec.readFile(spark, p, Ply.Codec()).orderBy("span_idx")
+      val back = PointCodec.read(spark, p, Ply.Codec()).orderBy("span_idx")
       assert(back.schema("x").dataType === DoubleType)
       assert(back.schema("cls").dataType === IntegerType)
       assert(back.schema("inten").dataType === ShortType, fmt)
@@ -66,7 +66,7 @@ class PlySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("plyun").toString
     val p = s"$dir/u.ply"
     Ply.write(p, src, "binary_little_endian")
-    val r = PointCodec.readFile(spark, p, Ply.Codec()).head()
+    val r = PointCodec.read(spark, p, Ply.Codec()).head()
     // u16 wrote as int32 (IntegerType -> int32), u32 as float64 (LongType)
     assert(r.getAs[Int]("u16") === 65535)
     assert(r.getAs[Double]("u32") === 4294967295.0)
@@ -91,7 +91,7 @@ class PlySpec extends AnyFunSuite {
     val p = s"$dir/faces.ply"
     java.nio.file.Files.write(java.nio.file.Paths.get(p),
       withFaces.getBytes("US-ASCII"))
-    val df = PointCodec.readFile(spark, p, Ply.Codec())
+    val df = PointCodec.read(spark, p, Ply.Codec())
     assert(df.count() === 2)
     // binary with a variable-size element BEFORE vertex must fail loudly
     val badHdr =
@@ -119,7 +119,7 @@ class PlySpec extends AnyFunSuite {
          |   "format": "binary_little_endian", "order_by": ["span_idx"]}
          |]}""".stripMargin
     graft.plans.Pipeline.run(spark, json)
-    val back = PointCodec.readFile(spark, s"$dir/out.ply", Ply.Codec()).orderBy("span_idx")
+    val back = PointCodec.read(spark, s"$dir/out.ply", Ply.Codec()).orderBy("span_idx")
     val rows = back.collect().map(r =>
       (r.getAs[Double]("x"), r.getAs[Double]("y"), r.getAs[Double]("z"))).toSeq
     assert(rows === Seq((0.0, 1.0, 0.0), (1.0, 0.0, 0.0)))

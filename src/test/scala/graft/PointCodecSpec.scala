@@ -7,11 +7,11 @@ import graft.sources.{Bpf, LasDecode, LasWriter, Nitf, Pcd, Ply, PointCodec, Sbe
 
 /** The codec seam over every format with a writer, on engine-written
   * files (no reference fixture needed): the glob read of three files
-  * equals the union of their driver reads, and the sharded writers
-  * re-decode to the cloud they wrote on plain and `file:` (two-phase)
-  * destinations. Coordinates sit on a 1/8 grid, so every container
-  * (LAS at scale 0.125, float32 BPF/PCD, float64 PLY/SBET) stores them
-  * exactly. */
+  * equals the union of their single-file reads ("driver reads" in the
+  * test names), and the sharded writers re-decode to the cloud they
+  * wrote on plain and `file:` (two-phase) destinations. Coordinates sit
+  * on a 1/8 grid, so every container (LAS at scale 0.125, float32
+  * BPF/PCD, float64 PLY/SBET) stores them exactly. */
 class PointCodecSpec extends AnyFunSuite {
   import TestSpark._
   import PointCodecSpec.Fmt
@@ -53,8 +53,8 @@ class PointCodecSpec extends AnyFunSuite {
         f.write(p, src.filter(col("shard") === i).orderBy("span_idx").drop("shard"))
         p
       }
-      val glob = PointCodec.readFiles(spark, s"$dir/*.${f.ext}", f.codec)
-      val union = files.map(PointCodec.readFile(spark, _, f.codec)).reduce(_ union _)
+      val glob = PointCodec.read(spark, s"$dir/*.${f.ext}", f.codec)
+      val union = files.map(PointCodec.read(spark, _, f.codec)).reduce(_ union _)
       assert(glob.schema === union.schema)
       assert(glob.count() === 300L)
       assert(glob.exceptAll(union).isEmpty && union.exceptAll(glob).isEmpty)
@@ -74,7 +74,7 @@ class PointCodecSpec extends AnyFunSuite {
         assert(names === (0 until 3).map(i => s"shard_$i.${f.ext}"))
         val residue = new java.io.File(dir0).list().filter(_.endsWith(".inprogress"))
         assert(residue.isEmpty, residue.mkString(","))
-        assert(xyz(PointCodec.readFiles(spark, s"$dir0/*.${f.ext}", f.codec)) === want)
+        assert(xyz(PointCodec.read(spark, s"$dir0/*.${f.ext}", f.codec)) === want)
       }
     }
   }

@@ -17,7 +17,7 @@ class TrajectorySpec extends AnyFunSuite {
     math.abs(a - b) <= tol * math.max(1.0, math.max(math.abs(a), math.abs(b)))
 
   test("sbet 2-points fixture decodes to the reference's pinned records") {
-    val df = PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
+    val df = PointCodec.read(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
     assert(df.schema.fieldNames.take(3).toSeq === Seq("doc_id", "span_idx", "gpstime"))
     val rows = df.orderBy("span_idx").collect()
     assert(rows.length === 2)
@@ -43,16 +43,17 @@ class TrajectorySpec extends AnyFunSuite {
   test("sbet badfile (size not a record multiple) fails loudly") {
     // twin: the SBET twin plus one trailing byte
     val bad = refOr("sbet/badfile.sbet")(Twins.sbetBad)
-    val e = intercept[IllegalArgumentException] {
-      PointCodec.readFile(spark, bad, Sbet.Codec())
-    }
+    // the file decodes in a task: the first action fails, on the
+    // decoder's IllegalArgumentException
+    val e = rootCause(intercept[Exception](PointCodec.read(spark, bad, Sbet.Codec()).count()))
+    assert(e.isInstanceOf[IllegalArgumentException], e.toString)
     assert(e.getMessage.contains("invalid sbet file size"))
   }
 
   test("sbet distributed decode equals the driver decode") {
-    val drv = PointCodec.readFile(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
+    val drv = PointCodec.read(spark, s"$RefData/sbet/2-points.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
-    val dist = PointCodec.readFiles(spark, s"$RefData/sbet/2-points*.sbet", Sbet.Codec())
+    val dist = PointCodec.read(spark, s"$RefData/sbet/2-points*.sbet", Sbet.Codec())
       .orderBy("span_idx").collect().toSeq
     assert(dist === drv)
   }
@@ -60,7 +61,7 @@ class TrajectorySpec extends AnyFunSuite {
   test("writers.sbet round-trips the fixture byte-exactly") {
     val src = s"$RefData/sbet/2-points.sbet"
     val out = java.nio.file.Files.createTempDirectory("sbetw").toString + "/rt.sbet"
-    Sbet.write(out, PointCodec.readFile(spark, src, Sbet.Codec()))
+    Sbet.write(out, PointCodec.read(spark, src, Sbet.Codec()))
     val a = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
     val b = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out))
     assert(java.util.Arrays.equals(a, b))
@@ -68,7 +69,7 @@ class TrajectorySpec extends AnyFunSuite {
 
   test("qfit 10-word big-endian fixture matches the reference's 3 pinned points") {
     // QFITReaderTest.cpp test_10_word (flip_coordinates=false, scale_z=0.001)
-    val df = PointCodec.readFile(spark, s"$RefData/qfit/10-word.qi", Qfit.Codec(flipX = false))
+    val df = PointCodec.read(spark, s"$RefData/qfit/10-word.qi", Qfit.Codec(flipX = false))
     val rows = df.orderBy("span_idx").limit(3).collect()
     assert(df.schema.fieldNames.toSeq === Seq("doc_id", "span_idx",
       "offset_time", "y", "x", "z", "start_pulse", "reflected_pulse",
@@ -86,7 +87,7 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("qfit 14-word fixture matches the reference's 3 pinned points") {
-    val df = PointCodec.readFile(spark, s"$RefData/qfit/14-word.qi", Qfit.Codec(flipX = false))
+    val df = PointCodec.read(spark, s"$RefData/qfit/14-word.qi", Qfit.Codec(flipX = false))
     assert(df.schema.fieldNames.containsSlice(Seq(
       "passive_signal", "passive_y", "passive_x", "passive_z")))
     val rows = df.orderBy("span_idx").limit(3).collect()
@@ -104,7 +105,7 @@ class TrajectorySpec extends AnyFunSuite {
 
   test("qfit 12-word little-endian fixture decodes with pdop/pulse_width") {
     // 20100515_152839.atm4bT2.qi is the post-2010 little-endian era file
-    val df = PointCodec.readFile(spark, s"$RefData/qfit/20100515_152839.atm4bT2.qi", Qfit.Codec())
+    val df = PointCodec.read(spark, s"$RefData/qfit/20100515_152839.atm4bT2.qi", Qfit.Codec())
     assert(df.schema.fieldNames.containsSlice(Seq("pdop", "pulse_width")))
     val n = df.count()
     assert(n > 0)
@@ -128,7 +129,7 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("terrasolid point golden (TerrasolidReaderTest.cpp:70-96)") {
-    val df = PointCodec.readFile(spark,
+    val df = PointCodec.read(spark,
       s"$RefData/terrasolid/20020715-time-color.bin", Terrasolid.Codec())
     assert(df.count() === 1000)
     val r = df.orderBy("span_idx").head()
@@ -152,9 +153,8 @@ class TrajectorySpec extends AnyFunSuite {
   test("terrasolid rejects a non-TerraSolid file loudly") {
     // twin: the SBET twin, as a non-TerraSolid file
     val notBin = refOr("sbet/2-points.sbet")(Twins.sbet)
-    val e = intercept[IllegalArgumentException] {
-      PointCodec.readFile(spark, notBin, Terrasolid.Codec())
-    }
+    val e = rootCause(intercept[Exception](PointCodec.read(spark, notBin, Terrasolid.Codec()).count()))
+    assert(e.isInstanceOf[IllegalArgumentException], e.toString)
     assert(e.getMessage.contains("970401"))
   }
 
@@ -180,7 +180,7 @@ class TrajectorySpec extends AnyFunSuite {
   }
 
   test("optech csd point golden (OptechReaderTest.cpp:81-105)") {
-    val df = PointCodec.readFile(spark, s"$RefData/optech/sample.csd", Optech.Codec())
+    val df = PointCodec.read(spark, s"$RefData/optech/sample.csd", Optech.Codec())
     assert(df.count() === 1000)
     val r = df.orderBy("span_idx").head()
     assert(approx(r.getAs[Double]("x"), -82.554028877408555, 1e-12))
