@@ -1,6 +1,7 @@
 package graft
 
-/** Per-round driver bench: one JSON line of per-query seconds.
+/** Per-round driver bench: one JSON line of per-query seconds on stdout,
+  * also written to BENCH/last.json.
   * The doc-table synthesis (the engine's INPUT materialization) is
   * warmed and reported separately as `synth` so per-query numbers
   * measure query work, not input construction. */
@@ -195,7 +196,10 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum + synthSec
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("BENCH"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH", "last.json"), line + "\n")
+    println(line)
     spark.stop()
   }
 }

@@ -84,8 +84,7 @@ object CpdOps {
       allowScale: Boolean = false,
       beta: Double = 3.0,
       lambda: Double = 3.0,
-      normalize: Boolean = true,
-      debug: Boolean = false)
+      normalize: Boolean = true)
 
   /** Hard cap on the broadcast/moving side and on per-chip group sizes —
     * the moving cloud is the replicated operand by design (the reference
@@ -451,7 +450,6 @@ object CpdOps {
       r = r2; s = s2v; t = t2
       val next = if (sig2 > 0.0) sig2 else 1e-12
       converged = math.abs(sigma2 - next) < params.tolerance * math.max(sigma2, 1e-12)
-      if (params.debug) println(f"it=$it sigma2=$sigma2%.9g next=$next%.9g np=${st.np}%.4f t=(${t(0)}%.4f,${t(1)}%.4f,${t(2)}%.4f)")
       sigma2 = next
       it += 1
     }

@@ -1,20 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeArrayData}
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
-import scala.collection.immutable.ArraySeq
 import scala.collection.mutable.ArrayBuffer
 import graft.functions.InSortedLongs
 import graft.index.CellSpace
-import graft.plans.RowFold
+import graft.plans.{Kernels, RowFold}
 
 /** The neighbourhood kernel's block grid: square blocks of side
   * 4 * `reach` anchored at (ox, oy), unclamped. A point lives in its home
@@ -179,24 +179,22 @@ object NbrBlocks {
       .select(Seq(col("__blk"), (col("__pos") === 0).as("__tgt"), lit(true).as("__src")) ++ core ++
         Seq(when(col("__pos") === 0, col("__row")).as("__row")) ++ extra: _*)
 
-  /** Points grouped by block (home and halo copies), each block reduced. */
-  private def perBlock(rows: DataFrame, out: StructType)(reduce: Block => Iterator[Row]): DataFrame =
-    rows.repartition(col("__blk")).sortWithinPartitions(col("__blk"))
-      .mapPartitions((it: Iterator[Row]) => blocks(it).flatMap(reduce))(Encoders.row(out))
-
-  private def blocks(it: Iterator[Row]): Iterator[Block] = new Iterator[Block] {
-    private val buf = it.buffered
-    def hasNext: Boolean = buf.hasNext
-    def next(): Block = {
-      val key = buf.head.getLong(0)
-      val rows = ArrayBuffer.empty[Row]
-      while (buf.hasNext && buf.head.getLong(0) == key) rows += buf.next()
-      new Block(key, rows.toArray)
-    }
+  /** Points grouped by block (home and halo copies), each block reduced
+    * in its task by the planned halo-block reduce ([[Kernels.groupReduce]]):
+    * one exchange on `__blk`, rows kept as UnsafeRows, payloads unopened. */
+  private def perBlock(rows: DataFrame, out: StructType, name: String, n: Long)
+                      (reduce: (Block, SQLMetric) => Iterator[InternalRow]): DataFrame = {
+    val width = rows.schema("__row").dataType.asInstanceOf[StructType].length
+    Kernels.groupReduce(rows, "__blk", clustered = true, out, new Kernels.GroupKernel {
+      def apply(key: Long, rs: Array[InternalRow], ok: SQLMetric) = reduce(new Block(key, rs, width), ok)
+      def rounds: Long = n
+      override def toString: String = name
+    })
   }
 
-  /** One block's rows as primitive arrays. */
-  private final class Block(val key: Long, rs: Array[Row]) {
+  /** One block's rows as primitive arrays; `row` and `sid` are the
+    * payload and (doc_id, span_idx) structs, null where a row has none. */
+  private final class Block(val key: Long, rs: Array[InternalRow], width: Int) {
     val n: Int = rs.length
     val tgt: Array[Boolean] = rs.map(_.getBoolean(1))
     val src: Array[Boolean] = rs.map(_.getBoolean(2))
@@ -204,8 +202,9 @@ object NbrBlocks {
     val x: Array[Double] = rs.map(_.getDouble(4))
     val y: Array[Double] = rs.map(_.getDouble(5))
     val z: Array[Double] = rs.map(_.getDouble(6))
-    val row: Array[Row] = rs.map(_.getAs[Row](7))
-    val sid: Array[Row] = rs.map(r => if (r.length > 8) r.getAs[Row](8) else null)
+    val row: Array[InternalRow] = rs.map(r => if (r.isNullAt(7)) null else r.getStruct(7, width))
+    val sid: Array[InternalRow] =
+      rs.map(r => if (r.numFields < 9 || r.isNullAt(8)) null else r.getStruct(8, 2))
     def finite(i: Int): Boolean = !x(i).isNaN && !y(i).isNaN
     @inline def d2(t: Int, s: Int, dims3: Boolean): Double = {
       // explicit products in this order: bit-identical to the SQL twins
@@ -302,36 +301,36 @@ object NbrBlocks {
       if (single) size > 0 else full && h(0) <= rMax * rMax
     def values: Seq[Any] = {
       val a = java.util.Arrays.copyOf(h, size); java.util.Arrays.sort(a)
-      Seq(ArraySeq.unsafeWrapArray(a))
+      Seq(UnsafeArrayData.fromPrimitiveArray(a))
     }
   }
 
   /** The nearest source under the (d2, doc_id, span_idx) order. */
-  private final class Nearest(b: Block) extends Collect {
+  private final class Nearest(b: Block, ids: Seq[DataType]) extends Collect {
     var best = -1
     var bestD2 = Double.PositiveInfinity
     def full: Boolean = best >= 0
     def worst: Double = bestD2
     def offer(d2: Double, s: Int): Unit =
-      if (best < 0 || d2 < bestD2 || (d2 == bestD2 && compareIds(b.sid(s), b.sid(best)) < 0)) {
+      if (best < 0 || d2 < bestD2 || (d2 == bestD2 && compareIds(b.sid(s), b.sid(best), ids) < 0)) {
         best = s; bestD2 = d2
       }
     def ok(rMax: Double, single: Boolean): Boolean = full && bestD2 <= rMax * rMax
-    def values: Seq[Any] = Seq(Row(b.x(best), b.y(best), b.z(best)), bestD2)
+    def values: Seq[Any] = Seq(new GenericInternalRow(Array[Any](b.x(best), b.y(best), b.z(best))), bestD2)
   }
 
   /** Spark's ascending order of (doc_id, span_idx): nulls first, strings
     * by UTF-8 bytes. */
-  private def compareIds(a: Row, b: Row): Int = {
+  private def compareIds(a: InternalRow, b: InternalRow, types: Seq[DataType]): Int = {
     def one(u: Any, v: Any): Int = (u, v) match {
       case (null, null) => 0
       case (null, _) => -1
       case (_, null) => 1
-      case (s: String, t: String) => UTF8String.fromString(s).binaryCompare(UTF8String.fromString(t))
+      case (s: UTF8String, t: UTF8String) => s.binaryCompare(t)
       case (s, t) => s.asInstanceOf[Comparable[Any]].compareTo(t)
     }
-    val c = one(a.get(0), b.get(0))
-    if (c != 0) c else one(a.get(1), b.get(1))
+    val c = one(a.get(0, types(0)), b.get(0, types(0)))
+    if (c != 0) c else one(a.get(1, types(1)), b.get(1, types(1)))
   }
 
   /** Offer target t's sources ring by ring around its cell until the
@@ -413,9 +412,12 @@ object NbrBlocks {
       if (self) rP.select(core :+ col("__row"): _*) else points(left, payload, lit(-1L))
     val rowType = pending.schema("__row").dataType
     val noSid = if (nearest) Seq(lit(null).cast(rP.schema("__sid").dataType).as("__sid")) else Nil
-    val out = StructType(Seq(StructField("__pid", LongType), StructField("__x", DoubleType),
-      StructField("__y", DoubleType), StructField("__z", DoubleType),
-      StructField("__row", rowType), StructField("__ok", BooleanType)) ++ result.fields)
+    // the point columns are never null (null coordinates read as NaN), so
+    // every round's block key, like the first's, is a non-null long
+    val out = StructType(Seq("__pid" -> LongType, "__x" -> DoubleType, "__y" -> DoubleType,
+        "__z" -> DoubleType).map { case (c, t) => StructField(c, t, nullable = false) } ++
+      Seq(StructField("__row", rowType), StructField("__ok", BooleanType, nullable = false)) ++
+      result.fields)
     var lvl =
       if (startLevel >= 0) startLevel
       else if (!dims3) JoinOps.knnAutoLevel(rP.count(), kHint)
@@ -432,6 +434,7 @@ object NbrBlocks {
     var keep: Option[Array[Long]] = None
     var first = true
     var done = false
+    var rounds = 0L
     while (!done) {
       val g = BlockGrid.atLevel(space, lvl)
       val next = BlockGrid.atLevel(space, math.max(0, lvl - 2))
@@ -448,7 +451,9 @@ object NbrBlocks {
             .unionByName(pending.select(Seq(home(g).as("__blk"), lit(true).as("__tgt"),
               lit(false).as("__src")) ++ core ++ Seq(col("__row")) ++ noSid: _*))
         }
-      val round = perBlock(rows, out) { b =>
+      rounds += 1
+      val kind = if (nearest) "nearest" else s"kNN k=$kHint"
+      val round = perBlock(rows, out, s"$kind level $lvl", rounds) { (b, ok) =>
         val members = (0 until b.n).filter(b.src(_)).toArray
         // cells of ~2 sources: the ring search stops after a ring or two
         val gr = new LocalGrid(b, members, g.reach / 64, members.length / 2 + 16)
@@ -458,9 +463,10 @@ object NbrBlocks {
           val c = collector(b)
           ringSearch(b, gr, t, rMax, if (excludeSelf) b.pid(t) else Long.MinValue, dims3, c)
           val head = Seq(b.pid(t), tx, ty, b.z(t), b.row(t))
-          if (c.ok(rMax, g.single)) Some(Row.fromSeq(head ++ (true +: c.values)))
+          def row(vs: Seq[Any]): InternalRow = new GenericInternalRow((head ++ vs).toArray)
+          if (c.ok(rMax, g.single)) { ok += 1; Some(row(true +: c.values)) }
           else if (g.single) None
-          else Some(Row.fromSeq(head ++ (false +: result.fields.map(_ => null).toSeq)))
+          else Some(row(false +: result.fields.map(_ => null).toSeq))
         }
       }
       val (tapped, pend) = RowFold.tap(round, () => new PendingBlocks(1 << 16, next))
@@ -495,15 +501,18 @@ object NbrBlocks {
     knnRounds(left, right, startLevel, space, dims3, excludeSelf = false, 1, payload,
       nearest = true, StructType(Seq(
         StructField("__n", StructType(Seq("nx", "ny", "nz").map(StructField(_, DoubleType)))),
-        StructField("__d2min", DoubleType))))(
-      b => new Nearest(b))
+        StructField("__d2min", DoubleType))))({
+      val ids = Seq("doc_id", "span_idx").map(right.schema(_).dataType)
+      b => new Nearest(b, ids)
+    })
 
   /** Rows of `df` with at least `minNeighbors` other points (and at least
     * one) within 3D distance `radius`, unchanged. `g.reach` >= |radius|. */
   def radiusKeep(df: DataFrame, radius: Double, minNeighbors: Int, g: BlockGrid): DataFrame = {
     val need = math.max(minNeighbors, 1)
     val r = math.abs(radius); val r2 = radius * radius
-    perBlock(selfRows(points(df, df.columns, lit(0L)), g, Nil), df.schema) { b =>
+    perBlock(selfRows(points(df, df.columns, lit(0L)), g, Nil), df.schema,
+        s"radius r=$r min_neighbors=$need", 1) { (b, _) =>
       val gr = new LocalGrid(b, (0 until b.n).toArray, g.reach, 4L * b.n + 64)
       (0 until b.n).iterator.filter(b.tgt(_)).filter { t =>
         val (tx, ty) = (b.x(t), b.y(t))
@@ -525,7 +534,8 @@ object NbrBlocks {
   def pmfGround(df: DataFrame, ladder: Seq[(Double, Double)], floatKeep: Boolean): DataFrame = {
     val g = BlockGrid(0.0, 0.0, ladder.map(_._1).sum)
     perBlock(selfRows(points(df, df.columns, lit(0L)), g, Nil),
-        df.schema.add("__ground", BooleanType, nullable = false)) { b =>
+        df.schema.add("__ground", BooleanType, nullable = false),
+        s"pmf ${ladder.length} windows", ladder.length) { (b, _) =>
       var alive = (0 until b.n).toArray
       val ev = new Array[Double](b.n); val ov = new Array[Double](b.n)
       val has = new Array[Boolean](b.n)
@@ -564,7 +574,8 @@ object NbrBlocks {
       }
       val ground = new Array[Boolean](b.n)
       alive.foreach(ground(_) = true)
-      (0 until b.n).iterator.filter(b.tgt(_)).map(t => Row.fromSeq(b.row(t).toSeq :+ ground(t)))
+      (0 until b.n).iterator.filter(b.tgt(_))
+        .map(t => new JoinedRow(b.row(t), new GenericInternalRow(Array[Any](ground(t)))))
     }
   }
 }

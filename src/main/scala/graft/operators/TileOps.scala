@@ -3,16 +3,34 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression,
-  GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.SpatialFunctions
 import graft.index.CellSpace
+import graft.plans.Kernels
+
+/** A double that generated code reads from a reference object instead of
+  * inlining it as a Java literal, so a new value reuses the compiled
+  * class. Not foldable: constant folding would turn it into a literal. */
+case class RefDouble(value: Double) extends LeafExpression {
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = false
+  override def foldable: Boolean = false
+  override def eval(input: InternalRow): Any = value
+  override def toString: String = value.toString
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val v = ctx.addReferenceObj("param", this, classOf[RefDouble].getName)
+    ev.copy(code = code"final double ${ev.value} = $v.value();", isNull = FalseLiteral)
+  }
+}
 
 /** Tiling operators: fixed-grid splitter, capacity-balanced chipper,
   * LOD pyramid, hex density. These produce the `tile` grouping column
@@ -32,8 +50,9 @@ object TileOps {
     * order-dependent, so callers at scale should pass it explicitly.
     */
   def splitter(length: Double, originX: Double, originY: Double)(df: DataFrame): DataFrame = {
-    df.withColumn("tile_x", ((col("x") - lit(originX)) / lit(length)).cast(IntegerType))
-      .withColumn("tile_y", ((col("y") - lit(originY)) / lit(length)).cast(IntegerType))
+    def ref(v: Double): Column = ColumnBridge.column(RefDouble(v))
+    df.withColumn("tile_x", ((col("x") - ref(originX)) / ref(length)).cast(IntegerType))
+      .withColumn("tile_y", ((col("y") - ref(originY)) / ref(length)).cast(IntegerType))
   }
 
   /** Tile summary (one row per non-empty tile) — the golden-fixture shape
@@ -48,7 +67,7 @@ object TileOps {
     * holds the node's rows (copied UnsafeRows, the width of df0's row)
     * plus about 60 bytes per row of keys, ranks and orders, so 1M rows of
     * a ~100-byte point row bound a task's working memory near 160 MB,
-    * beside the rows Spark's sorter holds for the task's partition. A leaf
+    * beside the rest of the task's partition, held grouped by node. A leaf
     * (one chip) is never split, so a capacity above the budget raises the
     * bound to the capacity. */
   private val TaskRows = 1000000L
@@ -120,47 +139,40 @@ object TileOps {
     val (xi, yi) = (keyed.schema.fieldIndex("x"), keyed.schema.fieldIndex("y"))
     val outSchema = StructType(keyed.schema.fields.take(width) :+
       StructField("chip", IntegerType, nullable = false))
-    val ranges = nodes
     // each node to the partition of its slot, round robin over the node
     // ids: a hash of few node ids would stack several in one task
     val parts = math.min(nodes.size, spark.conf.get("spark.sql.shuffle.partitions").toInt)
     val slot = SpatialFunctions.longLookup(col("__node"),
       nodes.keys.toSeq.sorted.zipWithIndex.map { case (id, i) => id -> (i % parts: Any) },
       IntegerType, "slot")
-    val chipped = ColumnBridge.internalRows(
-      keyed.repartitionById(parts, slot).sortWithinPartitions(col("__node"))
-    ).mapPartitions { it =>
-      // output = the row's first `width` fields, then the chip (joined after __node)
-      val proj = UnsafeProjection.create(outSchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(if (i < width) i else width + 1, f.dataType, f.nullable): Expression })
-      val chipRow = new GenericInternalRow(1)
-      val joined = new JoinedRow
-      val rows = it.buffered
-      Iterator.continually(rows).takeWhile(_.hasNext).flatMap { _ =>
-        val id = rows.head.getLong(width)
-        val node = ArrayBuffer.empty[InternalRow]
-        while (rows.hasNext && rows.head.getLong(width) == id) {
-          val r = rows.next()
-          if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(xi) || r.isNullAt(yi))
-            throw new IllegalArgumentException(
-              "filters.chipper needs non-null doc_id, span_idx, x and y")
-          node += r.copy()
-        }
-        val (pl, pr) = ranges(id)
-        val k = node.length
-        val (x, y, doc, span) = (new Array[Double](k), new Array[Double](k),
-          new Array[UTF8String](k), new Array[Int](k))
-        for (i <- 0 until k) {
-          val r = node(i)
-          x(i) = r.getDouble(xi); y(i) = r.getDouble(yi); doc(i) = r.getUTF8String(0); span(i) = r.getInt(1)
-        }
-        val chips = finish(x, y, doc, span, pl, pr, bound)
-        node.iterator.zip(chips.iterator).map { case (r, c) =>
-          chipRow.setInt(0, c); proj(joined(r, chipRow)): InternalRow
-        }
+    Kernels.groupReduce(keyed.repartitionById(parts, slot), "__node", clustered = false, outSchema,
+      new ChipNodes(nodes, n, m, width, xi, yi, rounds.size))
+  }
+
+  /** The in-task finish of [[chipper]]: each node's rows (the first
+    * `width` fields, then `__node`) chipped over the partition range
+    * `ranges(node)` of the m chips of n rows; output = the row's first
+    * `width` fields, then the chip. */
+  private final class ChipNodes(ranges: Map[Long, (Int, Int)], n: Long, m: Int, width: Int,
+                                xi: Int, yi: Int, val rounds: Long) extends Kernels.GroupKernel {
+    override def from(i: Int): Int = if (i < width) i else width + 1
+    override def toString: String = s"chipper $m chips, ${ranges.size} nodes"
+    def apply(id: Long, node: Array[InternalRow], certified: SQLMetric): Iterator[InternalRow] = {
+      val k = node.length
+      val (x, y, doc, span) = (new Array[Double](k), new Array[Double](k),
+        new Array[UTF8String](k), new Array[Int](k))
+      for (i <- 0 until k) {
+        val r = node(i)
+        if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(xi) || r.isNullAt(yi))
+          throw new IllegalArgumentException("filters.chipper needs non-null doc_id, span_idx, x and y")
+        x(i) = r.getDouble(xi); y(i) = r.getDouble(yi); doc(i) = r.getUTF8String(0); span(i) = r.getInt(1)
+      }
+      val (pl, pr) = ranges(id)
+      val chips = finish(x, y, doc, span, pl, pr, i => math.round(i.toDouble * n / m))
+      node.iterator.zip(chips.iterator).map { case (r, c) =>
+        new JoinedRow(r, new GenericInternalRow(Array[Any](c))): InternalRow
       }
     }
-    ColumnBridge.internalCreateDataFrame(spark, chipped, outSchema)
   }
 
   /** The reference's axis rule (ChipperFilter.cpp:185-192): split on x

@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, Expression, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeSeq, BindReferences, Expression,
+  InterpretedUnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -69,7 +70,9 @@ object Manifest {
     * `java.lang.Double.compare` order (NaN above every number, as in
     * Spark's min/max), `seen(a)` false while axis `a` has none. */
   private final class Totals(@transient inputs: Seq[Expression]) extends RowFold.Partial[Totals] {
-    @transient private lazy val proj = UnsafeProjection.create(inputs)
+    // interpreted: generated code would be one more compiled class per
+    // checkpointed schema in every executor's codegen cache
+    @transient private lazy val proj = InterpretedUnsafeProjection.createProjection(inputs)
     private val keys = scala.collection.mutable.LongMap.empty[Array[Long]]
     private val lo, hi = new Array[Double](3)
     private val seen = new Array[Boolean](3)

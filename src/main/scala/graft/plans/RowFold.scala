@@ -2,7 +2,6 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Run facts folded from a frame's rows by the tasks of a job that reads
   * them anyway. Each task folds its rows into a fresh [[Partial]] and adds
@@ -17,7 +16,8 @@ object RowFold {
   }
 
   /** `df`'s rows as a new frame whose tasks also fold every row they pass
-    * on, and the merge of their partials, to take after a job has
+    * on (a [[Kernels.FoldTap]] node, planned inside the consumer's own
+    * plan), and the merge of their partials, to take after a job has
     * consumed the frame.
     *
     * Exactly once: Spark merges a result-stage task's accumulator update
@@ -27,21 +27,8 @@ object RowFold {
     * bucketing, an eager local checkpoint, a no-op write); behind a shuffle
     * the tap would sit in a map stage, whose re-runs add again. */
   def tap[P <: Partial[P]](df: DataFrame, zero: () => P): (DataFrame, () => P) = {
-    val spark = df.sparkSession
-    val parts = spark.sparkContext.collectionAccumulator[P]
-    val rows = ColumnBridge.internalRows(df).mapPartitions { it =>
-      val p = zero()
-      new Iterator[InternalRow] {
-        private var open = true
-        def hasNext: Boolean = {
-          val more = it.hasNext
-          if (!more && open) { open = false; parts.add(p) }
-          more
-        }
-        def next(): InternalRow = { val r = it.next(); p.add(r); r }
-      }
-    }
-    (ColumnBridge.internalCreateDataFrame(spark, rows, df.schema),
+    val parts = df.sparkSession.sparkContext.collectionAccumulator[P]
+    (Kernels.foldTap(df, new Kernels.Fold(zero, parts)),
       () => { val all = zero(); parts.value.forEach(p => all.merge(p)); all })
   }
 

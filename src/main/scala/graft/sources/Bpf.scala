@@ -396,7 +396,7 @@ object Bpf {
   final case class Codec(columns: Seq[String] = Nil, count: Int = Int.MaxValue,
                          opts: WriteOpts = WriteOpts()) extends PointCodec {
     def exts: Seq[String] = Seq("bpf")
-    def schema(bytes: => Array[Byte]): StructType = schemaOf(readHeader(bytes), columns)
+    def schema(head: => Array[Byte]): StructType = schemaOf(readHeader(head), columns)
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       Bpf.decode(bytes, docId, count, columns)
     override def writeCols(schema: StructType): Seq[StructField] =

@@ -391,7 +391,7 @@ object Icebridge {
     * granule (pruning the HDF5 chunk B-tree walk). */
   final case class Codec(count: Long = Long.MaxValue) extends PointCodec {
     def exts: Seq[String] = Seq("h5")
-    def schema(bytes: => Array[Byte]): StructType = Icebridge.schema
+    def schema(head: => Array[Byte]): StructType = Icebridge.schema
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       Icebridge.decode(bytes, docId, 0L, count)
   }

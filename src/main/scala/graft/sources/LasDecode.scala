@@ -523,7 +523,7 @@ object LasDecode {
                          xf: LasWriter.XForms = LasWriter.XForms(0.01, 0.01, 0.01, 0, 0, 0),
                          compress: Boolean = false) extends PointCodec with UnsafeLane {
     def exts: Seq[String] = if (compress) Seq("laz", "las") else Seq("las", "laz")
-    def schema(bytes: => Array[Byte]): StructType = LasDecode.schema
+    def schema(head: => Array[Byte]): StructType = LasDecode.schema
     def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) =
       (LasDecode.schema, decodeUnsafe(bytes, docId).map(rowConverter))
     def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {

@@ -123,7 +123,7 @@ object Nitf {
   final case class Codec() extends PointCodec with UnsafeLane {
     private val las = LasDecode.Codec()
     def exts: Seq[String] = Seq("ntf", "nitf")
-    def schema(bytes: => Array[Byte]): StructType = LasDecode.schema
+    def schema(head: => Array[Byte]): StructType = LasDecode.schema
     def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) =
       las.decode(lasPayload(bytes), docId)
     def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[InternalRow] =

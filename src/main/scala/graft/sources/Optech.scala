@@ -172,7 +172,7 @@ object Optech {
   /** Optech on the codec seam. */
   final case class Codec() extends PointCodec {
     def exts: Seq[String] = Seq("csd")
-    def schema(bytes: => Array[Byte]): StructType = Optech.schema
+    def schema(head: => Array[Byte]): StructType = Optech.schema
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       (Optech.schema, Optech.decode(bytes, docId))
   }

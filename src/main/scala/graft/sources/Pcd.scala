@@ -303,7 +303,7 @@ object Pcd {
   final case class Codec(data: String = "binary_compressed",
                          shiftOrigin: Boolean = false) extends PointCodec {
     def exts: Seq[String] = Seq("pcd")
-    def schema(bytes: => Array[Byte]): StructType = schemaOf(parseHeader(bytes))
+    def schema(head: => Array[Byte]): StructType = schemaOf(parseHeader(head))
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       Pcd.decode(bytes, docId)
     override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =

@@ -200,8 +200,8 @@ object Ply {
   /** PLY on the codec seam; `format` is the written layout. */
   final case class Codec(format: String = "binary_little_endian") extends PointCodec {
     def exts: Seq[String] = Seq("ply")
-    def schema(bytes: => Array[Byte]): StructType =
-      schemaOf(parseHeader(bytes).elements.find(_.name == "vertex").map(_.props).getOrElse(Nil))
+    def schema(head: => Array[Byte]): StructType =
+      schemaOf(parseHeader(head).elements.find(_.name == "vertex").map(_.props).getOrElse(Nil))
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       Ply.decode(bytes, docId)
     override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import scala.util.control.NonFatal
 
 /** One whole-file point format on the engine's single codec seam — the
   * reader/writer registry PDAL keeps over its typed point model.
@@ -25,9 +26,10 @@ trait PointCodec extends Serializable {
     * the first. */
   def exts: Seq[String]
 
-  /** The frame schema of a file. By name: a format with one fixed
-    * schema never reads the bytes. */
-  def schema(bytes: => Array[Byte]): StructType
+  /** The frame schema of a file from its first bytes (at most
+    * [[PointCodec.HeaderBytes]], which hold every header a codec parses).
+    * By name: a format with one fixed schema never reads them. */
+  def schema(head: => Array[Byte]): StructType
 
   /** Every point of one whole file, with the schema that file decodes
     * to (doc_id = `docId`, span_idx = the record ordinal). */
@@ -76,13 +78,19 @@ object PointCodec {
 
   def docIdOf(path: String): String = path.substring(path.lastIndexOf('/') + 1)
 
-  /** One whole file through the Hadoop FileSystem, so scheme'd
-    * (object-store) paths read the same as local ones. */
-  def readBytes(path: Path, conf: Configuration): Array[Byte] = {
+  /** The first `limit` bytes of a file (all of a shorter one) through the
+    * Hadoop FileSystem, so scheme'd (object-store) paths read the same as
+    * local ones. */
+  def readBytes(path: Path, conf: Configuration, limit: Int = Int.MaxValue): Array[Byte] = {
     val in = path.getFileSystem(conf).open(path)
-    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    finally in.close()
+    try in.readNBytes(limit) finally in.close()
   }
+
+  /** Bytes of a file the driver reads to pin a schema: PCD and PLY parse
+    * their text headers within the first 64 KiB, a BPF header with its
+    * dimension table is at most 14,456 bytes, and QFIT and TerraSolid
+    * read their first words. */
+  val HeaderBytes: Int = 65536
 
   /** The first file by name that `pathGlob` matches (a directory lists
     * its files; hidden `_`/`.` names are skipped, as the binaryFile
@@ -112,11 +120,23 @@ object PointCodec {
     rows
   }
 
+  /** The rows of file `path`; a decode failure, eager or while iterating,
+    * is rethrown naming the file unless its message already does. */
+  private def naming[T](path: String)(rows: => IterableOnce[T]): Iterator[T] = {
+    def named[A](a: => A): A = try a catch {
+      case NonFatal(e) if !String.valueOf(e.getMessage).contains(path) =>
+        throw new IllegalArgumentException(s"$path: $e", e)
+    }
+    val it = named(rows.iterator)
+    new Iterator[T] { def hasNext: Boolean = named(it.hasNext); def next(): T = named(it.next()) }
+  }
+
   /** A `readers.*` path, one file or a glob: one executor task per
     * matched file through Spark's binaryFile source, doc_id = the file
     * name, span_idx = the record ordinal. The schema is pinned from the
-    * first file by name, read on the driver; every file must decode to
-    * it. No decoded row passes through the driver. */
+    * header of the first file by name, the driver's only read; every file
+    * must decode to it, and a file that fails to decode fails its task
+    * naming the file. No decoded row passes through the driver. */
   def read(spark: SparkSession, pathGlob: String, codec: PointCodec): DataFrame = {
     // A glob in the PATH makes FileStreamSink.hasMetadata probe the glob
     // as a literal directory and log a FileNotFoundException stack on
@@ -131,16 +151,16 @@ object PointCodec {
       else reader.load(pathGlob))
       .select("path", "content")
     val conf = spark.sparkContext.hadoopConfiguration
-    val schema = codec.schema(readBytes(firstFile(conf, pathGlob), conf))
+    val schema = codec.schema(readBytes(firstFile(conf, pathGlob), conf, HeaderBytes))
     codec match {
       case u: UnsafeLane =>
         val rdd = bin.rdd.flatMap { r =>
-          u.decodeUnsafe(r.getAs[Array[Byte]](1), docIdOf(r.getString(0)))
+          naming(r.getString(0))(u.decodeUnsafe(r.getAs[Array[Byte]](1), docIdOf(r.getString(0))))
         }
         org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema)
       case _ =>
         spark.createDataFrame(bin.rdd.flatMap { r =>
-          decodeChecked(codec, schema, r.getString(0), r.getAs[Array[Byte]](1))
+          naming(r.getString(0))(decodeChecked(codec, schema, r.getString(0), r.getAs[Array[Byte]](1)))
         }, schema)
     }
   }

@@ -60,7 +60,7 @@ object Sbet {
   /** SBET on the codec seam. */
   final case class Codec() extends PointCodec {
     def exts: Seq[String] = Seq("sbet")
-    def schema(bytes: => Array[Byte]): StructType = Sbet.schema
+    def schema(head: => Array[Byte]): StructType = Sbet.schema
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       (Sbet.schema, Sbet.decode(bytes, docId))
   }
@@ -95,7 +95,9 @@ object Qfit {
   final case class Header(littleEndian: Boolean, recLen: Int, words: Int,
                           dataOffset: Int)
 
-  def header(bytes: Array[Byte]): Header = {
+  /** The header of a whole file, or, with `whole` false, of its first
+    * bytes (the file size checks need the whole file). */
+  def header(bytes: Array[Byte], whole: Boolean = true): Header = {
     require(bytes.length >= 8, "qfit: file too small")
     val le = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val first = le.getInt(0)
@@ -110,9 +112,9 @@ object Qfit {
       s"qfit: unsupported $words-word format")
     // offset to laser data = second word of the second logical record
     val dataOffset = bb.getInt(recLen + 4)
-    require(dataOffset >= 0 && dataOffset <= bytes.length,
+    require(!whole || dataOffset >= 0 && dataOffset <= bytes.length,
       s"qfit: bad data offset $dataOffset")
-    require((bytes.length - dataOffset) % recLen == 0,
+    require(!whole || (bytes.length - dataOffset) % recLen == 0,
       "qfit: file size inconsistent with point size")
     Header(littleEndian, recLen, words, dataOffset)
   }
@@ -183,7 +185,7 @@ object Qfit {
   /** QFIT on the codec seam; `flipX`/`scaleZ` as in [[decode]]. */
   final case class Codec(flipX: Boolean = true, scaleZ: Double = 0.001) extends PointCodec {
     def exts: Seq[String] = Seq("qi")
-    def schema(bytes: => Array[Byte]): StructType = schemaOf(header(bytes).words)
+    def schema(head: => Array[Byte]): StructType = schemaOf(header(head, whole = false).words)
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       (schemaOf(header(bytes).words), Qfit.decode(bytes, docId, flipX, scaleZ))
   }
@@ -310,7 +312,7 @@ object Terrasolid {
   /** TerraScan on the codec seam. */
   final case class Codec() extends PointCodec {
     def exts: Seq[String] = Seq("bin")
-    def schema(bytes: => Array[Byte]): StructType = schemaOf(header(bytes))
+    def schema(head: => Array[Byte]): StructType = schemaOf(header(head))
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       Terrasolid.decode(bytes, docId)
   }

@@ -174,7 +174,7 @@ object StreamOps {
     import graft.sources.PointCodec
     val conf = spark.sparkContext.hadoopConfiguration
     val seed = PointCodec.firstFile(conf, s"$landingDir/$glob")
-    val schema = PointCodec.forPath(seed.getName).schema(PointCodec.readBytes(seed, conf))
+    val schema = PointCodec.forPath(seed.getName).schema(PointCodec.readBytes(seed, conf, PointCodec.HeaderBytes))
     // the binaryFile source's fixed schema, required explicitly for streams
     val binSchema = StructType(Seq(
       StructField("path", StringType), StructField("modificationTime", TimestampType),

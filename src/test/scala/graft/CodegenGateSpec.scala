@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.functions.{col, sum}
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
 import org.apache.logging.log4j.core.appender.AbstractAppender
@@ -86,5 +87,20 @@ class CodegenGateSpec extends AnyFunSuite {
     assert(crop(tri) > 0)
     assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
       "the second polygon recompiled generated code")
+  }
+
+  test("a new splitter length reuses the compiled stage") {
+    // length and origin ride in reference objects, not Java literals, so a
+    // pipeline that changes the tile length per run compiles its stage once
+    val pts = graft.sources.Faux.uniform(spark, graft.sources.Faux.Box3(0, 0, 0, 1000, 1000, 10),
+      2000, seed = 5)
+    def tiles(length: Double, ox: Double): Long =
+      graft.operators.TileOps.splitter(length, ox, 0.0)(pts)
+        .agg(sum(col("tile_x")), sum(col("tile_y"))).head().getLong(0)
+    assert(tiles(100.0, 0.0) > 0)
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(tiles(110.0, 5.0) > 0)
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "the second tile length recompiled generated code")
   }
 }

@@ -91,6 +91,26 @@ class PointCodecSpec extends AnyFunSuite {
     assert(viaFile === src.filter(col("z") >= -0.5 && col("z") <= 0.25).count())
   }
 
+  test("a file corrupt past its header pins its schema from the header; its task fails naming the file") {
+    val dir = tmpDir("corrupt")
+    val path = s"$dir/big.pcd"
+    Pcd.write(path, Twins.grid(20000, 37, 11, (100.0, 0.0, -1.0), (0.25, 0.5, 0.125)), "ascii")
+    val clean = PointCodec.read(spark, path, Pcd.Codec()).schema
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+    assert(bytes.length > 4 * PointCodec.HeaderBytes)
+    // a record far past the header becomes text no number parses from
+    val line = bytes.indexOf('\n'.toByte, 3 * PointCodec.HeaderBytes) + 1
+    "corrupt".getBytes("US-ASCII").copyToArray(bytes, line)
+    java.nio.file.Files.write(java.nio.file.Paths.get(path), bytes)
+    // the driver reads the header only, and pins the same schema
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(PointCodec.readBytes(new org.apache.hadoop.fs.Path(path), conf, PointCodec.HeaderBytes).length === PointCodec.HeaderBytes)
+    val df = PointCodec.read(spark, path, Pcd.Codec())
+    assert(df.schema === clean)
+    val ex = intercept[org.apache.spark.SparkException](df.count())
+    assert(ex.getMessage.contains(path), ex.getMessage)
+  }
+
   test("landing-dir dispatch: each extension names its codec, unknown ones fail loudly") {
     assert(PointCodec.forPath("a/b.LAZ") === LasDecode.Codec())
     assert(PointCodec.forPath("x.ntf") === Nitf.Codec())
