@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 
 import graft.sources.{DocSynth, Oracle}
 import graft.operators._
+import graft.index.CellSpace
 
 /** Second query batch: grid-kNN family, raster aggregation, hex density,
   * reprojection, chipper/PMF (rows-only), and the training-data pipeline
@@ -1429,6 +1430,7 @@ object EntryPipelines {
   /** MinHash-LSH dedup oracle: same md5-anchored signature, band keys,
     * and single-hop min-rep union as TextOps.minhashDedup. */
   private def minhashDedupSql: String = {
+    val n = 2 // shingleN=3 -> slices of 3 words -> indices i..i+2
     s"""WITH sh AS (
        |  SELECT doc_id,
        |         CASE WHEN len($wordsSql) < 3

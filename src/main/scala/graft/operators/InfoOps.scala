@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.index.CellSpace
 
 /** The remaining kernel-level operators (reference apps/pdal verbs). */

@@ -16,6 +16,9 @@ object PointOps {
     * (reference filters/range/RangeFilter.cpp:99-124; `equals` collapses
     * to min=max, :75-76; comparison is in double space, :110). */
   final case class DimRange(dim: String, min: Double, max: Double)
+  object DimRange {
+    def equalTo(dim: String, v: Double): DimRange = DimRange(dim, v, v)
+  }
 
   /** filters.range — conjunction of per-dimension inclusive ranges:
     * a point survives iff ALL ranges pass (RangeFilter.cpp:117-123). */

@@ -57,4 +57,21 @@ object Quantize {
       col("z").cast(StringType),
       lit("""]},"properties":"""), to_json(props), lit("}")).as("feature"))
   }
+
+  /** LAS-writer header summary (SummaryData: bounds + counts by return
+    * number, io/las/LasWriter.cpp header finalize). */
+  def headerSummary(df: DataFrame): DataFrame = {
+    val hasRet = df.columns.contains("return_number")
+    val base = df.agg(count(lit(1)).as("point_count"),
+      min("x").as("minx"), max("x").as("maxx"),
+      min("y").as("miny"), max("y").as("maxy"),
+      min("z").as("minz"), max("z").as("maxz"))
+    if (!hasRet) base
+    else {
+      val byRet = df.groupBy(col("return_number")).count()
+        .agg(map_from_entries(collect_list(struct(col("return_number"), col("count"))))
+          .as("counts_by_return"))
+      base.join(byRet)
+    }
+  }
 }

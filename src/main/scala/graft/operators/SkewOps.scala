@@ -145,6 +145,7 @@ object SkewOps {
     df.join(assignment, Seq("doc_id", "span_idx"))
   }
 
+  private def lvlOf(cell: Column): Column = cell.bitwiseAND(lit(63L)).cast(IntegerType)
 
   def descend(x: Double, y: Double, space: CellSpace, baseLevel: Int,
               maxLevel: Int, splitSet: java.util.HashSet[java.lang.Long]): Long = {

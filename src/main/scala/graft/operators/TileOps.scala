@@ -3,7 +3,7 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.LeafExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -67,9 +67,9 @@ object TileOps {
     * holds the node's rows (copied UnsafeRows, the width of df0's row)
     * plus about 60 bytes per row of keys, ranks and orders, so 1M rows of
     * a ~100-byte point row bound a task's working memory near 160 MB,
-    * beside the rest of the task's partition, held grouped by node. A leaf
-    * (one chip) is never split, so a capacity above the budget raises the
-    * bound to the capacity. */
+    * beside the rows Spark's sorter holds (and spills) for the task's
+    * partition. A leaf (one chip) is never split, so a capacity above the
+    * budget raises the bound to the capacity. */
   private val TaskRows = 1000000L
 
   /** Sampled rows per node that bracket a distributed round's cut. */
@@ -151,11 +151,11 @@ object TileOps {
 
   /** The in-task finish of [[chipper]]: each node's rows (the first
     * `width` fields, then `__node`) chipped over the partition range
-    * `ranges(node)` of the m chips of n rows; output = the row's first
-    * `width` fields, then the chip. */
+    * `ranges(node)` of the m chips of n rows; each row's chip takes the
+    * place of its `__node`, its 8-byte slot zeroed first as Spark's row
+    * writer leaves an int's, so the row is the output row byte for byte. */
   private final class ChipNodes(ranges: Map[Long, (Int, Int)], n: Long, m: Int, width: Int,
                                 xi: Int, yi: Int, val rounds: Long) extends Kernels.GroupKernel {
-    override def from(i: Int): Int = if (i < width) i else width + 1
     override def toString: String = s"chipper $m chips, ${ranges.size} nodes"
     def apply(id: Long, node: Array[InternalRow], certified: SQLMetric): Iterator[InternalRow] = {
       val k = node.length
@@ -169,9 +169,7 @@ object TileOps {
       }
       val (pl, pr) = ranges(id)
       val chips = finish(x, y, doc, span, pl, pr, i => math.round(i.toDouble * n / m))
-      node.iterator.zip(chips.iterator).map { case (r, c) =>
-        new JoinedRow(r, new GenericInternalRow(Array[Any](c))): InternalRow
-      }
+      node.iterator.zip(chips.iterator).map { case (r, c) => r.setLong(width, 0L); r.setInt(width, c); r }
     }
   }
 

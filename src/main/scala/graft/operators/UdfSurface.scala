@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, Column}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The user-defined-function surface, mapping the reference's embedded-
   * Python stages (SURVEY.md §2.6) to Spark's native extension points:

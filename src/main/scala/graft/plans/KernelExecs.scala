@@ -1,19 +1,23 @@
 package graft.plans
 
 import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.TaskContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, BoundReference,
-  InterpretedUnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet,
+  BoundReference, InterpretedUnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution,
   UnspecifiedDistribution}
-import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode}
+import org.apache.spark.sql.connector.metric.CustomMetric
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan, SparkStrategy, UnaryExecNode,
+  UnsafeExternalRowSorter}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.{AccumulatorV2, CollectionAccumulator}
+import org.apache.spark.util.CollectionAccumulator
+import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
 
 /** The engine's task-side kernels as planned Catalyst operators: the
   * halo-block reduce (`NbrBlocks`), the chipper's in-task finish and the
@@ -25,12 +29,14 @@ import org.apache.spark.util.{AccumulatorV2, CollectionAccumulator}
 object Kernels {
 
   /** A task's reduce of one group of rows sharing a long key (a block, a
-    * chipper node): copies, in arrival order. Output column `i` is field
-    * `from(i)` of each returned row; `rounds` is the driver's round count
-    * for the kernel (kNN round, PMF windows, chipper sketch rounds). */
+    * chipper node). The rows are the task's own UnsafeRow copies, which
+    * the kernel may return updated in place. Each returned row holds the
+    * output columns in order: an UnsafeRow passes on as it is, any other
+    * row is written by an interpreted projection. `rounds` is the
+    * driver's round count for the kernel (kNN round, PMF windows, chipper
+    * sketch rounds). */
   trait GroupKernel extends Serializable {
     def apply(key: Long, rows: Array[InternalRow], certified: SQLMetric): Iterator[InternalRow]
-    def from(i: Int): Int = i
     def rounds: Long
   }
 
@@ -75,63 +81,93 @@ object Kernels {
     override protected def withNewChildInternal(c: LogicalPlan): FoldTap = copy(child = c)
   }
 
-  /** A metric that keeps the largest value a task set. */
-  private final class MaxMetric extends SQLMetric("sum", 0L) {
-    override def merge(o: AccumulatorV2[Long, Long]): Unit = if (o.value > value) set(o.value)
-    override def copy(): MaxMetric = { val m = new MaxMetric; m.set(value); m }
+  /** A per-task metric that the SQL UI aggregates by its largest value. */
+  final class MaxOverTasks extends CustomMetric {
+    def name: String = "max"
+    def description: String = "max group rows"
+    def aggregateTaskMetrics(values: Array[Long]): String = values.maxOption.getOrElse(0L).toString
   }
 
-  /** The reduce of [[GroupReduce]]; groups run in ascending key order. */
-  sealed abstract class GroupReduceExec(groupName: String) extends UnaryExecNode {
-    def kernel: GroupKernel
-    def key: Attribute
-
+  /** The reduce of [[GroupReduce]]: the task's rows sorted on the key by
+    * Spark's external sorter (spilling under memory pressure), then one
+    * group at a time in ascending key order. Clustered, it requires the
+    * halo-block distribution and is named HaloBlockReduce; otherwise it
+    * keeps its child's partitioning and is named ChipFinish. */
+  final case class GroupReduceExec(kernel: GroupKernel, key: Attribute, clustered: Boolean,
+                                   output: Seq[Attribute], child: SparkPlan) extends UnaryExecNode {
+    override def nodeName: String = if (clustered) "HaloBlockReduce" else "ChipFinish"
+    override def producedAttributes: AttributeSet = outputSet
+    override def requiredChildDistribution: Seq[Distribution] =
+      (if (clustered) ClusteredDistribution(Seq(key)) else UnspecifiedDistribution) :: Nil
     override lazy val metrics: Map[String, SQLMetric] = Map(
       "numInputRows" -> SQLMetrics.createMetric(sparkContext, "rows in"),
       "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
-      "groups" -> SQLMetrics.createMetric(sparkContext, groupName),
-      "maxGroupRows" -> { val m = new MaxMetric; sparkContext.register(m, s"max $groupName rows"); m },
+      "groups" -> SQLMetrics.createMetric(sparkContext, if (clustered) "blocks" else "nodes"),
+      "maxGroupRows" -> SQLMetrics.createV2CustomMetric(sparkContext, new MaxOverTasks),
       "rounds" -> SQLMetrics.createMetric(sparkContext, "rounds"),
       "certified" -> SQLMetrics.createMetric(sparkContext, "certified"),
+      "spillSize" -> SQLMetrics.createSizeMetric(sparkContext, "spill size"),
       "kernelTime" -> SQLMetrics.createNanoTimingMetric(sparkContext, "kernel time"))
     override protected def stringArgs: Iterator[Any] = Iterator(kernel)
 
     protected override def doExecute(): RDD[InternalRow] = {
-      val Seq(in, out, groups, maxRows, rounds, certified, time) = Seq("numInputRows",
-        "numOutputRows", "groups", "maxGroupRows", "rounds", "certified", "kernelTime").map(longMetric)
+      val Seq(in, out, groups, maxRows, rounds, certified, spill, time) = Seq("numInputRows",
+        "numOutputRows", "groups", "maxGroupRows", "rounds", "certified", "spillSize",
+        "kernelTime").map(longMetric)
       rounds.set(kernel.rounds)
       SQLMetrics.postDriverMetricUpdates(sparkContext,
         sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(rounds))
-      val (k, ki) = (kernel, child.output.indexWhere(_.exprId == key.exprId))
-      val exprs = output.zipWithIndex.map { case (a, i) => BoundReference(k.from(i), a.dataType, a.nullable) }
+      val (k, schema, ki) = (kernel, child.schema, child.output.indexWhere(_.exprId == key.exprId))
+      val exprs = output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) }
       child.execute().mapPartitions { it =>
         val proj = InterpretedUnsafeProjection.createProjection(exprs)
-        val byKey = new java.util.HashMap[java.lang.Long, ArrayBuffer[InternalRow]]()
-        it.foreach(r => byKey.computeIfAbsent(r.getLong(ki), _ => ArrayBuffer.empty) += r.copy())
-        byKey.keySet.toArray(Array.empty[java.lang.Long]).map(_.longValue).sorted.iterator.flatMap { g =>
-          val rows = byKey.remove(g).toArray
+        val sorted = sortedOn(it, schema, ki, spill).buffered
+        Iterator.continually(sorted).takeWhile(_.hasNext).flatMap { _ =>
+          val g = sorted.head.getLong(ki)
+          val group = ArrayBuffer.empty[InternalRow]
+          while (sorted.hasNext && sorted.head.getLong(ki) == g) group += sorted.next().copy()
+          val rows = group.toArray
           in += rows.length; groups += 1
           if (rows.length > maxRows.value) maxRows.set(rows.length.toLong)
           val t0 = System.nanoTime()
           val res = k(g, rows, certified).toArray
           time += System.nanoTime() - t0
           out += res.length
-          res.iterator.map(proj)
+          res.iterator.map {
+            case u: UnsafeRow => u
+            case r => proj(r)
+          }
         }
       }
     }
+    override protected def withNewChildInternal(c: SparkPlan): GroupReduceExec = copy(child = c)
   }
 
-  final case class HaloBlockReduceExec(kernel: GroupKernel, key: Attribute, output: Seq[Attribute],
-                                       child: SparkPlan) extends GroupReduceExec("blocks") {
-    override def requiredChildDistribution: Seq[Distribution] = ClusteredDistribution(Seq(key)) :: Nil
-    override protected def withNewChildInternal(c: SparkPlan): HaloBlockReduceExec = copy(child = c)
-  }
-
-  final case class ChipFinishExec(kernel: GroupKernel, key: Attribute, output: Seq[Attribute],
-                                  child: SparkPlan) extends GroupReduceExec("nodes") {
-    override def requiredChildDistribution: Seq[Distribution] = UnspecifiedDistribution :: Nil
-    override protected def withNewChildInternal(c: SparkPlan): ChipFinishExec = copy(child = c)
+  /** `rows` sorted on their non-null long field `ki` by Spark's external
+    * sorter: a radix sort on the key as the prefix, no generated code,
+    * spilling to disk when the task's execution memory runs out. Rows of
+    * one key keep their arrival order unless the sorter spilled. The
+    * rows returned are reused: copy one to keep it. */
+  private def sortedOn(rows: Iterator[InternalRow], schema: StructType, ki: Int,
+                       spill: SQLMetric): Iterator[InternalRow] = {
+    val prefix = new UnsafeExternalRowSorter.PrefixComputer {
+      private val p = new UnsafeExternalRowSorter.PrefixComputer.Prefix
+      def computePrefix(r: InternalRow): UnsafeExternalRowSorter.PrefixComputer.Prefix = {
+        p.value = r.getLong(ki); p
+      }
+    }
+    val task = TaskContext.get()
+    val sorter = UnsafeExternalRowSorter.create(schema, Ordering.by[InternalRow, Long](_.getLong(ki)),
+      PrefixComparators.LONG, prefix, ColumnBridge.pageSizeBytes, true)
+    lazy val toUnsafe = InterpretedUnsafeProjection.createProjection(
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) => BoundReference(i, f.dataType, f.nullable) })
+    val spilled = task.taskMetrics().memoryBytesSpilled
+    val out = sorter.sort(rows.map {
+      case u: UnsafeRow => u
+      case r => toUnsafe(r)
+    })
+    spill += task.taskMetrics().memoryBytesSpilled - spilled
+    out
   }
 
   final case class FoldTapExec(fold: Fold[_], child: SparkPlan) extends UnaryExecNode {
@@ -153,8 +189,8 @@ object Kernels {
   /** Plans the kernel nodes. */
   object Strategy extends SparkStrategy {
     def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case GroupReduce(k, key, true, _, out, child) => HaloBlockReduceExec(k, key, out, planLater(child)) :: Nil
-      case GroupReduce(k, key, false, _, out, child) => ChipFinishExec(k, key, out, planLater(child)) :: Nil
+      case GroupReduce(k, key, clustered, _, out, child) =>
+        GroupReduceExec(k, key, clustered, out, planLater(child)) :: Nil
       case FoldTap(f, _, child) => FoldTapExec(f, planLater(child)) :: Nil
       case _ => Nil
     }

@@ -142,16 +142,41 @@ object DocSynth {
     docs.join(bounds, Seq("doc_id"), "left")
   }
 
+  /** Drop memoized tables (required between SparkSessions — a cached DF
+    * is bound to its (stopped) context). */
+  def clearCache(): Unit = {
+    memo.values.foreach(df => try df.unpersist() catch { case _: Throwable => () })
+    memo.clear()
+  }
+
   /** The flat point frame for a testdata dir, via the honest path
     * (doc table -> explode -> decode). */
   def points(spark: SparkSession, sfDir: String): DataFrame =
     Model.explodePoints(cachedDocs(spark, sfDir))
+
+  /** Fast path used by pure point-side benchmarks: identical values to
+    * [[points]] (provable: explode(implode(x)) = x) without the doc
+    * shuffle — a projection straight off the parquet scan, so filters
+    * and column pruning push all the way down. */
+  def pointsDirect(spark: SparkSession, sfDir: String): DataFrame = {
+    val q = quantized(spark.read.parquet(s"$sfDir/lineitem.parquet"))
+    q.select(col("doc_id"), col("offset").as("span_idx"),
+      (col("xi") * Model.Scale).as("x"),
+      (col("yi") * Model.Scale).as("y"),
+      (col("zi") * Model.Scale).as("z"),
+      col("intensity"),
+      col("pid").cast(DoubleType).as("gps_time"))
+  }
 }
 
 /** SQL twins of the Spark derivations above, for the DuckDB oracle.
   * Any edit to DocSynth formulas must be mirrored here (and vice versa) —
   * the correctness gate compares the two row-for-row. */
 object Oracle {
+  /** Points CTE: identical values to DocSynth.points / pointsDirect.
+    * NOTE DuckDB CAST(double AS INT) rounds (Spark truncates) — all
+    * formulas below stay in integer arithmetic until the final exact
+    * *0.5 scaling, so no cast-direction trap. */
   /** Shared ordinal CTE: the unique per-doc span ordinal (see
     * DocSynth.quantized — row_number over the full span-content key). */
   private val seqCte: String =
@@ -163,7 +188,7 @@ object Oracle {
       |  FROM lineitem
       |)""".stripMargin
 
-  /** Points CTE: identical values to DocSynth.points.
+  /** Points CTE: identical values to DocSynth.points / pointsDirect.
     * NOTE DuckDB CAST(double AS INT) rounds (Spark truncates) — all
     * formulas below stay in integer arithmetic until the final exact
     * *0.5 scaling, so no cast-direction trap. */

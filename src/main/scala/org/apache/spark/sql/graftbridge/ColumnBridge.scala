@@ -28,6 +28,10 @@ object ColumnBridge {
   def ofPlan(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The memory page size Spark's sorters allocate in (the memory
+    * manager is private[spark]). */
+  def pageSizeBytes: Long = org.apache.spark.SparkEnv.get.memoryManager.pageSizeBytes
+
   /** Number of plans pinned in the session's CacheManager. Used by the
     * cache-hygiene spec: operators that `.cache()` internally must
     * release the entry before returning (a leaked entry is pinned for

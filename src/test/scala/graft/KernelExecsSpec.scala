@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
@@ -26,6 +27,25 @@ class KernelExecsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private def metric(p: SparkPlan, name: String): Long = p.metrics(name).value
 
+  /** Each accumulator's per-task updates in the tasks `body` runs: what
+    * the SQL UI aggregates (for "max group rows", by [[MaxOverTasks]]). */
+  private def taskUpdates(body: => Unit): Map[Long, Seq[Long]] = {
+    val ups = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]()
+    val l = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = e.taskInfo.accumulables.foreach { a =>
+        a.update.foreach { case v: Long => ups.add(a.id -> v); case _ => () }
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; Thread.sleep(1500) } // listener events arrive asynchronously
+    finally spark.sparkContext.removeSparkListener(l)
+    ups.toArray(Array.empty[(Long, Long)]).toSeq.groupMap(_._1)(_._2)
+  }
+
+  /** The largest group any task of `body` reduced in `p`, as the UI shows it. */
+  private def maxGroupRows(p: SparkPlan, ups: Map[Long, Seq[Long]]): Long =
+    new MaxOverTasks().aggregateTaskMetrics(ups(p.metrics("maxGroupRows").id).toArray).toLong
+
   /** The executed plans of the actions `body` runs. */
   private def executed(body: => Unit): Seq[SparkPlan] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
@@ -47,9 +67,10 @@ class KernelExecsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("halo-block reduce: planned on __blk, its metrics filled by one action") {
     val kept = NbrBlocks.radiusKeep(cloud(2000), 3.0, 2, BlockGrid(0, 0, 3.0))
-    val n = kept.collect().length
+    var n = 0
+    val ups = taskUpdates { n = kept.collect().length }
     val plan = kept.queryExecution.executedPlan
-    val Seq(reduce) = collect(plan) { case e: HaloBlockReduceExec => e }
+    val Seq(reduce) = collect(plan) { case e: GroupReduceExec if e.clustered => e }
     assert(kept.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
       .contains("HaloBlockReduce radius r=3.0"))
     // Spark planned the exchange the reduce requires
@@ -58,7 +79,8 @@ class KernelExecsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(metric(reduce, "numOutputRows") === n)
     assert(metric(reduce, "numInputRows") > 2000, "home rows plus halo copies")
     assert(metric(reduce, "groups") > 1)
-    assert(metric(reduce, "maxGroupRows") > 0 && metric(reduce, "maxGroupRows") < metric(reduce, "numInputRows"))
+    assert(maxGroupRows(reduce, ups) > 0 && maxGroupRows(reduce, ups) < metric(reduce, "numInputRows"))
+    assert(metric(reduce, "spillSize") === 0)
     assert(metric(reduce, "rounds") === 1)
     assert(metric(reduce, "kernelTime") > 0)
   }
@@ -66,7 +88,7 @@ class KernelExecsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   test("kNN rounds: each round's reduce certifies its targets, the round's tap folds them") {
     val pts = cloud(600)
     val plans = executed(JoinOps.statisticalOutlierRemoval(4, 1.0, level = 4)(pts))
-    val reduces = plans.flatMap(p => collect(p) { case e: HaloBlockReduceExec => e })
+    val reduces = plans.flatMap(p => collect(p) { case e: GroupReduceExec if e.clustered => e })
     assert(reduces.nonEmpty)
     // every point is certified exactly once, in the round that answers it
     assert(reduces.map(metric(_, "certified")).sum === 600)
@@ -79,10 +101,13 @@ class KernelExecsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("chip finish: in the executed plan, one group per node, rounds reported") {
     val chipped = TileOps.chipper(100, taskRows = 600)(cloud(2000))
-    assert(chipped.collect().length === 2000)
-    val Seq(finish) = collect(chipped.queryExecution.executedPlan) { case e: ChipFinishExec => e }
+    val ups = taskUpdates(assert(chipped.collect().length === 2000))
+    val Seq(finish) = collect(chipped.queryExecution.executedPlan) { case e: GroupReduceExec => e }
+    assert(!finish.clustered)
+    assert(chipped.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+      .contains("ChipFinish chipper 20 chips"))
     assert(metric(finish, "numInputRows") === 2000 && metric(finish, "numOutputRows") === 2000)
-    assert(metric(finish, "groups") > 1 && metric(finish, "maxGroupRows") <= 600)
+    assert(metric(finish, "groups") > 1 && maxGroupRows(finish, ups) <= 600)
     assert(metric(finish, "rounds") > 0)
     assert(metric(finish, "kernelTime") > 0)
   }
