@@ -136,7 +136,7 @@ object Bench {
         }
       }),
       // BPF v3 archive ingest: 16 zlib dim-major shards decoded in
-      // parallel (one task per file) by the clean-room BPF codec
+      // parallel (whole files in packed tasks) by the clean-room BPF codec
       "x_bpf_ingest_16shards" -> (() => {
         import org.apache.spark.sql.functions._
         val dir = java.nio.file.Files.createTempDirectory("graftbpfbench").toString

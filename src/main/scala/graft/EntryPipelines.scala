@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 
 import graft.sources.{DocSynth, Oracle}
 import graft.operators._
-import graft.index.CellSpace
 
 /** Second query batch: grid-kNN family, raster aggregation, hex density,
   * reprojection, chipper/PMF (rows-only), and the training-data pipeline

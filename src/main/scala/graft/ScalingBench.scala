@@ -1,11 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
 import graft.sources.DocSynth
-import graft.operators.{JoinOps, TileOps, PointOps}
+import graft.operators.{JoinOps, TileOps}
 
 /** N-vs-4N scaling evidence for the north rule: run the headline
   * PIP-join + tile-assignment job at local[8] and local[32] on the SAME

@@ -9,7 +9,6 @@ import graft.model.Model
 import graft.sources.{DocSynth, Oracle}
 import graft.operators._
 import graft.functions.SpatialFunctions
-import graft.index.CellSpace
 
 /** Driver contract: one `queries` entry per implemented operator
   * (SURVEY.md §2), each with a DuckDB-runnable oracle twin in

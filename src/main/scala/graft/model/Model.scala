@@ -1,6 +1,6 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession, Column}
+import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -82,21 +82,6 @@ object Model {
       if ((a == LongType && b == FloatType) || (a == FloatType && b == LongType)) DoubleType
       else widenOrder(math.max(ia, ib))
     }
-  }
-
-  /** Merge two point schemas with widening, like registerDim on an
-    * already-registered dimension (reference src/PointLayout.cpp:74-108). */
-  def mergeSchemas(a: StructType, b: StructType): StructType = {
-    val byName = a.fields.map(f => f.name -> f).toMap
-    val extra = b.fields.filterNot(f => byName.contains(f.name))
-    val widened = a.fields.map { f =>
-      b.fields.find(_.name == f.name) match {
-        case Some(g) if g.dataType != f.dataType =>
-          f.copy(dataType = widen(f.dataType, g.dataType))
-        case _ => f
-      }
-    }
-    StructType(widened ++ extra)
   }
 
   /** Checked cast, preserving the reference's lossy-conversion guard:

@@ -114,15 +114,6 @@ object AnnOps {
       copy(left = l, right = r)
   }
 
-  /** Sequential-fold dot via HOFs — kept as the reference formulation the
-    * codegen'd [[DotConst]] is verified against (identical left-to-right
-    * double summation; see the dot-parity spec). Not on any hot path. */
-  def dotSeq(a: Column, q: Array[Double]): Column = {
-    val qArr = array(q.map(lit): _*)
-    aggregate(zip_with(a, qArr, (x, w) => x.cast(DoubleType) * w),
-      lit(0.0), (acc, v) => acc + v)
-  }
-
   def norm2(a: Column): Column = ExpressionUtils.column(DotSelf(ExpressionUtils.expression(a)))
   def norm(a: Column): Column = sqrt(norm2(a))
   def dotPair(a: Column, b: Column): Column =
@@ -131,8 +122,7 @@ object AnnOps {
   /** Brute-force cosine top-k against a constant query vector.
     * Plan: scan -> project sim -> TakeOrderedAndProject(k) — fully
     * distributed partial top-k, no shuffle of the table. All dot products
-    * are codegen'd (DotConst/DotSelf); the interpreted HOF fold exists
-    * only as the parity reference. */
+    * are codegen'd (DotConst/DotSelf). */
   def cosineTopK(query: Array[Double], k: Int)(df: DataFrame): DataFrame = {
     val qn = math.sqrt(query.map(x => x * x).sum)
     val dot = dotConst(col("embedding"), query)

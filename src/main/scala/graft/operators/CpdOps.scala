@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -479,7 +479,7 @@ object CpdOps {
   private[graft] def nonrigidLocal(xs: Array[Double], n: Int, ys: Array[Double], m: Int,
                                        params: CpdParams): (Array[Double], Double, Int, Boolean) = {
     require(m <= MaxNonrigid, s"cpd nonrigid: $m moving points exceeds the M×M solve cap $MaxNonrigid — lower the chip capacity")
-    import breeze.linalg.{DenseMatrix, DenseVector}
+    import breeze.linalg.DenseMatrix
     val nmX = if (params.normalize) normLocal(xs, n) else Norm(Array(0.0, 0.0, 0.0), 1.0)
     // per-cloud centers, shared scale: a scale mismatch between the two
     // normalized frames would read as a spurious global deformation that

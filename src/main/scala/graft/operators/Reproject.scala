@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Column}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions.{Expression, BinaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -185,18 +185,10 @@ object Proj {
   def lccInvX(e: Double, n: Double, p: Lcc2SP): Double = p.inverse(e, n)._1
   def lccInvY(e: Double, n: Double, p: Lcc2SP): Double = p.inverse(e, n)._2
 
-  /** Static entry points for codegen (return packed lon/lat). */
-  def utmToGeoX(e: Double, n: Double, zone: Int, northern: Boolean): Double =
-    utmToGeo(e, n, zone, northern)._1
-  def utmToGeoY(e: Double, n: Double, zone: Int, northern: Boolean): Double =
-    utmToGeo(e, n, zone, northern)._2
-  def geoToUtmX(lon: Double, lat: Double, zone: Int, northern: Boolean): Double =
-    geoToUtm(lon, lat, zone, northern)._1
-  def geoToUtmY(lon: Double, lat: Double, zone: Int, northern: Boolean): Double =
-    geoToUtm(lon, lat, zone, northern)._2
-  // ellipsoid-explicit twins (NAD27 UTM projects on Clarke 1866); the
-  // Ellipsoid rides codegen as a reference object so name resolution is
-  // plan-time, not per-row
+  /** Static entry points for codegen, one coordinate each, on an explicit
+    * ellipsoid (NAD27 UTM projects on Clarke 1866); the Ellipsoid rides
+    * codegen as a reference object so name resolution is plan-time, not
+    * per-row. */
   def utmToGeoXE(e: Double, n: Double, zone: Int, northern: Boolean, ell: Ellipsoid): Double =
     utmToGeo(e, n, zone, northern, ell)._1
   def utmToGeoYE(e: Double, n: Double, zone: Int, northern: Boolean, ell: Ellipsoid): Double =

@@ -388,18 +388,6 @@ object TextOps {
         i => concat_ws(" ", slice(words, i + 1, lit(n)))))
   }
 
-  /** MinHash signature: perm p's hash of shingle s is md5(p:s); the
-    * signature element is the lexicographic min (hex strings order like
-    * the underlying 128-bit values).
-    *
-    * Computed by [[MinHashBands]] in ONE JVM pass per row: the naive
-    * nested higher-order-function formulation re-evaluates the shingle
-    * array per permutation and the signature per band (interpreted, no
-    * codegen, no subexpression elimination inside lambdas) — measured
-    * minutes instead of seconds on a few thousand documents. */
-  def minhashSignature(numPerms: Int, shingleN: Int): Column =
-    MinHashBands.sigCol(wordsCol, numPerms, shingleN)
-
   /** LSH banding: band b's key is md5 of its slice of the signature.
     * numPerms = bands * rowsPerBand. */
   def lshBandKeys(numPerms: Int, shingleN: Int, bands: Int): Column =
@@ -461,38 +449,23 @@ object TextOps {
 
     private def toWords(arr: ArrayData): IndexedSeq[String] =
       (0 until arr.numElements()).map(i => arr.getUTF8String(i).toString)
-    def evalSig(arr: ArrayData, p: Int, n: Int): ArrayData =
-      new GenericArrayData(signature(toWords(arr), p, n).map(UTF8String.fromString(_)))
     def evalBands(arr: ArrayData, p: Int, n: Int, b: Int): ArrayData =
       new GenericArrayData(bandKeys(toWords(arr), p, n, b).map(UTF8String.fromString(_)))
 
-    case class SigExpr(child: Expression, p: Int, n: Int) extends UnaryExpression {
-      override def dataType: DataType = ArrayType(StringType, containsNull = true)
-      override def nullIntolerant: Boolean = true
-      override def prettyName: String = "minhash_sig"
-      override protected def nullSafeEval(v: Any): Any =
-        evalSig(v.asInstanceOf[ArrayData], p, n)
-      // Janino can't resolve a nested Scala object through the outer
-      // object's forwarders — call the module instance by its JVM name.
-      override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-        nullSafeCodeGen(ctx, ev, c =>
-          s"${ev.value} = graft.operators.TextOps$$MinHashBands$$.MODULE$$.evalSig($c, $p, $n);")
-      override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-    }
     case class BandsExpr(child: Expression, p: Int, n: Int, b: Int) extends UnaryExpression {
       override def dataType: DataType = ArrayType(StringType, containsNull = false)
       override def nullIntolerant: Boolean = true
       override def prettyName: String = "minhash_bands"
       override protected def nullSafeEval(v: Any): Any =
         evalBands(v.asInstanceOf[ArrayData], p, n, b)
+      // Janino can't resolve a nested Scala object through the outer
+      // object's forwarders — call the module instance by its JVM name.
       override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
         nullSafeCodeGen(ctx, ev, c =>
           s"${ev.value} = graft.operators.TextOps$$MinHashBands$$.MODULE$$.evalBands($c, $p, $n, $b);")
       override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
     }
 
-    def sigCol(words: Column, p: Int, n: Int): Column =
-      EU.column(SigExpr(EU.expression(words), p, n))
     def bandsCol(words: Column, p: Int, n: Int, b: Int): Column =
       EU.column(BandsExpr(EU.expression(words), p, n, b))
   }

@@ -162,8 +162,8 @@ object Pipeline {
     case _ => None
   }
 
-  /** A codec-table stage. A reader reads `path`, one file or a glob, one
-    * executor task per file ([[PointCodec.read]]). A writer writes its
+  /** A codec-table stage. A reader reads `path`, one file or a glob, as one
+    * scan of whole files ([[PointCodec.read]]). A writer writes its
     * input, after an optional deterministic `order_by` (a file's byte
     * stream is sequential; unordered writes are iterator-order):
     * `shard_column` routes to the executor-parallel [[ShardedWrite]] (one
@@ -218,7 +218,7 @@ object Pipeline {
           case m => throw new IllegalArgumentException(s"faux mode $m")
         }
       case "readers.las" =>
-        // a glob reads one task per file; one file is planned from its
+        // a glob reads whole files in packed tasks; one file is planned from its
         // header (LasDecode.asDataFrame): LAZ chunks, where `columns`
         // prunes entropy layers and `bounds` prunes tiled-archive chunks
         // (exactness still comes from a downstream filters.crop), or

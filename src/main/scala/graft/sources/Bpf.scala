@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.{Deflater, Inflater}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 
 /** Clean-room BPF v3 (Binary Point File) reader + writer, covering the
@@ -399,6 +400,18 @@ object Bpf {
     def schema(head: => Array[Byte]): StructType = schemaOf(readHeader(head), columns)
     def decode(bytes: Array[Byte], docId: String): (StructType, Seq[Row]) =
       Bpf.decode(bytes, docId, count, columns)
+    /** Decodes only the dimensions of `fields` (x/y/z always: the
+      * Mueller transform couples them). */
+    override def decodeFields(bytes: Array[Byte], path: String, pinned: StructType,
+                              fields: Array[Int]): Iterator[InternalRow] = {
+      val own = schemaOf(readHeader(bytes), columns)
+      require(own == pinned,
+        s"$path: schema ${own.simpleString} differs from the pinned schema ${pinned.simpleString}")
+      val names = fields.toSeq.map(pinned(_).name).filterNot(Set("doc_id", "span_idx"))
+      val (sch, rows) = Bpf.decode(bytes, PointCodec.docIdOf(path), count,
+        if (names.isEmpty) Seq("x") else names)
+      rows.iterator.map(PointCodec.writer(sch, fields.map(f => sch.fieldIndex(pinned(f).name))))
+    }
     override def writeCols(schema: StructType): Seq[StructField] =
       writeColumns(schema).map(schema(_))
     override def encode(cols: Seq[(String, DataType)], recs: IndexedSeq[Array[Any]]): Array[Byte] =
@@ -406,7 +419,7 @@ object Bpf {
         recs.map(_.map(_.asInstanceOf[Number].doubleValue)).toArray, opts)
   }
 
-  /** Executor-parallel decode, one task per matched file. */
+  /** One scan over the matched files; `columns` prunes dimensions. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String,
                              columns: Seq[String] = Nil): DataFrame =
     PointCodec.read(spark, pathGlob, Codec(columns))

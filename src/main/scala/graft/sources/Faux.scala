@@ -53,9 +53,4 @@ object Faux {
       (lit(mean._2) + randn(seed + 1) * lit(stdev._2)).as("y"),
       (lit(mean._3) + randn(seed + 2) * lit(stdev._3)).as("z"),
       col("id").cast(DoubleType).as("offset_time"))
-
-  /** Return-number cycling 1..numReturns (FauxReader.cpp:186-191). */
-  def withReturns(df: DataFrame, numReturns: Int): DataFrame =
-    df.withColumn("return_number", (col("span_idx") % numReturns + 1).cast(ShortType))
-      .withColumn("number_of_returns", lit(numReturns).cast(ShortType))
 }

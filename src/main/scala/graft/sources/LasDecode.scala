@@ -3,9 +3,12 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.file.{Files, Paths}
 import org.apache.spark.network.util.JavaUtils
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,11 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    byte 247 and 15 u64 per-return counts; point-format byte masks
   *    off the two laszip compression bits (~0xC0).
   *
-  * Every frame read decodes in executor tasks: one file through
-  * [[asDataFrame]], planned from its header (LAZ chunks or record
-  * ranges), a glob through [[PointCodec.read]], one task per file. One
-  * record decoder, [[decodeRecordUnsafe]], serves them all; the driver
-  * decodes whole files only for tests and tools ([[readPoints]]).
+  * Every frame read is one [[PointScan]] decoding in executor tasks:
+  * one file through [[asDataFrame]], planned from its header (LAZ
+  * chunks or record ranges), a glob through [[PointCodec.read]] (whole
+  * files). One record decoder, [[decodeRecord]], serves them all and
+  * writes only the fields a query reads; the driver decodes whole files
+  * only for tests and tools ([[readPoints]]).
   */
 object LasDecode {
   final case class LasHeader(
@@ -314,7 +318,7 @@ object LasDecode {
     val w = new UnsafeRowWriter(schema.length)
     val rows = (0L until h.pointCount).map { i =>
       val recBase = (off0 + i * h.recordLen).toInt
-      val std = toRow(decodeRecordUnsafe(pb, recBase, h, id, i.toInt, w))
+      val std = toRow(decodeRecord(pb, recBase, h, AllFields, id, i.toInt, w))
       Row.fromSeq(std.toSeq ++ extras.map(readExtra(pb, recBase, _)))
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), fullSchema)
@@ -370,7 +374,7 @@ object LasDecode {
 
   /** Point-record bytes of `bb`, decompressing LASzip streams into raw
     * records first (so every caller decodes through the same
-    * golden-pinned [[decodeRecordUnsafe]]). Returns (buffer, offset of record
+    * golden-pinned [[decodeRecord]]). Returns (buffer, offset of record
     * 0 inside it). */
   private def pointBytes(bytes: Array[Byte], bb: ByteBuffer, h: LasHeader): (ByteBuffer, Long) =
     lazVlrOf(bb) match {
@@ -388,7 +392,7 @@ object LasDecode {
     val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     val h = readHeader(bb)
     require(h.pointFormat <= 10, s"unsupported point format ${h.pointFormat}")
-    (h, decodeAllUnsafe(bytes, bb, h, docId).map(rowConverter).toVector)
+    (h, decodeAll(bytes, bb, h, docId, AllFields).map(rowConverter).toVector)
   }
 
   /** InternalRow -> external Row of [[schema]]. */
@@ -399,18 +403,17 @@ object LasDecode {
 
   /** A single LAS/LAZ file as a frame, planned from its header and
     * decoded in executor tasks. A LASzip file reads one task per chunk
-    * ([[asChunkSplitDataFrame]]: `columns` prunes the entropy layers of
-    * a layered stream, `bounds` the chunks of a tiled archive). An
-    * uncompressed file reads [[splitsFor]] record ranges
-    * ([[asSplitDataFrame]]), then projects `columns`. */
+    * ([[asChunkSplitDataFrame]]: `bounds` prunes the chunks of a tiled
+    * archive). An uncompressed file reads [[splitsFor]] record ranges
+    * ([[asSplitDataFrame]]). Either is narrowed to `columns`
+    * ([[project]]), so the scan decodes only those. */
   def asDataFrame(spark: SparkSession, path: String, docId: String = "las",
-                  columns: Seq[String] = Nil, bounds: Seq[Double] = Nil): DataFrame =
-    if (isLaszip(path)) asChunkSplitDataFrame(spark, path, docId, columns, bounds)
-    else {
-      val h = headerOf(path)
-      project(asSplitDataFrame(spark, path,
-        splitsFor(spark, presentRecords(path, h) * h.recordLen), docId), columns)
-    }
+                  columns: Seq[String] = Nil, bounds: Seq[Double] = Nil): DataFrame = {
+    val f = fileHead(spark, path)
+    if ((f.head(104) & 0xC0) != 0) asChunkSplitDataFrame(spark, path, docId, columns, bounds)
+    else project(asSplitDataFrame(spark, path,
+      splitsFor(spark, presentRecords(f.len, f.header) * f.header.recordLen), docId), columns)
+  }
 
   /** `df` narrowed to doc_id, span_idx, x, y and `columns` (all of it
     * when `columns` is empty). */
@@ -430,105 +433,99 @@ object LasDecode {
     math.max(1L, (recordBytes + split - 1) / split).toInt
   }
 
-  /** Records physically present in an uncompressed file: a header whose
-    * count overruns the file (the reference's 1.2-no-points.las declares
-    * 1065 points over zero bytes) clamps to them, the reference reader's
-    * read-until-EOF behavior. */
-  private def presentRecords(path: String, h: LasHeader): Long =
-    math.min(h.pointCount,
-      math.max(0L, (Files.size(Paths.get(path)) - h.dataOffset) / h.recordLen))
+  /** Records physically present in an uncompressed file of `len` bytes:
+    * a header whose count overruns the file (the reference's
+    * 1.2-no-points.las declares 1065 points over zero bytes) clamps to
+    * them, the reference reader's read-until-EOF behavior. */
+  private def presentRecords(len: Long, h: LasHeader): Long =
+    math.min(h.pointCount, math.max(0L, (len - h.dataOffset) / h.recordLen))
 
-  /** One point record -> one row of [[schema]], the engine's one LAS
-    * record decoder: writes the 18 fields straight into a reusable
-    * UnsafeRowWriter and returns a materialized copy — 2 allocations
-    * per point instead of ~20 (external Row + field boxing + the
-    * RowEncoder conversion projection). At 8+ concurrent decode tasks
-    * in one JVM the allocation-rate/cache pressure of a boxed decode
-    * was the measured scaling bottleneck (a replicated-LAZ scaling run
-    * measured GC <= 5% but per-core throughput halved 2 -> 8 cores). */
-  def decodeRecordUnsafe(bb: ByteBuffer, base: Int, h: LasHeader,
-                         docId: org.apache.spark.unsafe.types.UTF8String, idx: Int,
-                         w: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter)
-      : org.apache.spark.sql.catalyst.InternalRow = {
+  /** The ordinals of every [[schema]] field. */
+  val AllFields: Array[Int] = schema.indices.toArray
+
+  /** One point record -> one row of the [[schema]] fields `fields` (in
+    * that order), the engine's one LAS record decoder: writes straight
+    * into a reusable UnsafeRowWriter and returns a materialized copy, 2
+    * allocations per point instead of ~20 (external Row + field boxing
+    * + the RowEncoder conversion projection). At 8+ concurrent decode
+    * tasks in one JVM the allocation-rate/cache pressure of a boxed
+    * decode was the measured scaling bottleneck (a replicated-LAZ
+    * scaling run measured GC <= 5% but per-core throughput halved
+    * 2 -> 8 cores). A field no format carries (gps_time of format 0, rgb
+    * of 0/1/4/6/9, nir below 8, scanner_channel below 6) reads 0. */
+  def decodeRecord(bb: ByteBuffer, base: Int, h: LasHeader, fields: Array[Int],
+                   docId: UTF8String, idx: Int, w: UnsafeRowWriter): InternalRow = {
     val fmt = h.pointFormat
-    val xi = bb.getInt(base); val yi = bb.getInt(base + 4); val zi = bb.getInt(base + 8)
-    val intensity = bb.getShort(base + 12) & 0xffff
+    val v14 = isV14(fmt)
+    val color = if (v14) base + 30 else base + (if (hasTime(fmt)) 28 else 20)
     w.reset()
-    w.write(0, docId)
-    w.write(1, idx)
-    w.write(2, xi * h.sx + h.ox)
-    w.write(3, yi * h.sy + h.oy)
-    w.write(4, zi * h.sz + h.oz)
-    w.write(5, intensity)
-    if (!isV14(fmt)) {
-      val flags = bb.get(base + 14) & 0xff
-      w.write(6, (flags & 0x7).toShort)
-      w.write(7, ((flags >> 3) & 0x7).toShort)
-      w.write(8, (bb.get(base + 15) & 0xff).toShort)
-      w.write(9, bb.get(base + 16).toFloat)
-      w.write(10, (bb.get(base + 17) & 0xff).toShort)
-      w.write(11, bb.getShort(base + 18) & 0xffff)
-      var off = base + 20
-      if (hasTime(fmt)) { w.write(12, bb.getDouble(off)); off += 8 } else w.write(12, 0.0)
-      if (hasColor(fmt)) {
-        w.write(13, bb.getShort(off) & 0xffff)
-        w.write(14, bb.getShort(off + 2) & 0xffff)
-        w.write(15, bb.getShort(off + 4) & 0xffff)
-      } else { w.write(13, 0); w.write(14, 0); w.write(15, 0) }
-      w.write(16, 0)
-      w.write(17, 0.toShort)
-    } else {
-      val returnInfo = bb.get(base + 14) & 0xff
-      val flags = bb.get(base + 15) & 0xff
-      w.write(6, (returnInfo & 0xf).toShort)
-      w.write(7, ((returnInfo >> 4) & 0xf).toShort)
-      w.write(8, (bb.get(base + 16) & 0xff).toShort)
-      w.write(9, (bb.getShort(base + 18) * 0.006).toFloat)
-      w.write(10, (bb.get(base + 17) & 0xff).toShort)
-      w.write(11, bb.getShort(base + 20) & 0xffff)
-      w.write(12, bb.getDouble(base + 22))
-      var off = base + 30
-      if (hasColor(fmt)) {
-        w.write(13, bb.getShort(off) & 0xffff)
-        w.write(14, bb.getShort(off + 2) & 0xffff)
-        w.write(15, bb.getShort(off + 4) & 0xffff)
-        off += 6
-      } else { w.write(13, 0); w.write(14, 0); w.write(15, 0) }
-      w.write(16, if (hasInfrared(fmt)) bb.getShort(off) & 0xffff else 0)
-      w.write(17, ((flags >> 4) & 0x3).toShort)
+    var k = 0
+    while (k < fields.length) {
+      fields(k) match {
+        case 0 => w.write(k, docId)
+        case 1 => w.write(k, idx)
+        case 2 => w.write(k, bb.getInt(base) * h.sx + h.ox)
+        case 3 => w.write(k, bb.getInt(base + 4) * h.sy + h.oy)
+        case 4 => w.write(k, bb.getInt(base + 8) * h.sz + h.oz)
+        case 5 => w.write(k, bb.getShort(base + 12) & 0xffff)
+        case 6 => w.write(k, (bb.get(base + 14) & (if (v14) 0xf else 0x7)).toShort)
+        case 7 => w.write(k, (if (v14) (bb.get(base + 14) >> 4) & 0xf else (bb.get(base + 14) >> 3) & 0x7).toShort)
+        case 8 => w.write(k, (bb.get(base + (if (v14) 16 else 15)) & 0xff).toShort)
+        case 9 => w.write(k, if (v14) (bb.getShort(base + 18) * 0.006).toFloat else bb.get(base + 16).toFloat)
+        case 10 => w.write(k, (bb.get(base + 17) & 0xff).toShort)
+        case 11 => w.write(k, bb.getShort(base + (if (v14) 20 else 18)) & 0xffff)
+        case 12 => w.write(k, if (v14) bb.getDouble(base + 22) else if (hasTime(fmt)) bb.getDouble(base + 20) else 0.0)
+        case 13 => w.write(k, if (hasColor(fmt)) bb.getShort(color) & 0xffff else 0)
+        case 14 => w.write(k, if (hasColor(fmt)) bb.getShort(color + 2) & 0xffff else 0)
+        case 15 => w.write(k, if (hasColor(fmt)) bb.getShort(color + 4) & 0xffff else 0)
+        case 16 => w.write(k, if (hasInfrared(fmt)) bb.getShort(color + (if (hasColor(fmt)) 6 else 0)) & 0xffff else 0)
+        case 17 => w.write(k, (if (v14) (bb.get(base + 15) >> 4) & 0x3 else 0).toShort)
+      }
+      k += 1
     }
     w.getRow.copy()
   }
 
-  /** Every record of a whole-file buffer as InternalRows (laszip
-    * decompressed) — the per-file unit of the glob and streaming reads.
-    * A header whose count overruns the records present clamps to them,
-    * as [[presentRecords]] does. */
-  def decodeAllUnsafe(bytes: Array[Byte], bb: ByteBuffer, h: LasHeader,
-                      docId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
-    requireSingleBuffer(h)
-    val (pb, off0) = pointBytes(bytes, bb, h)
-    val present = math.max(0L, (pb.capacity() - off0) / h.recordLen)
-    val id = org.apache.spark.unsafe.types.UTF8String.fromString(docId)
-    val w = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(schema.length)
-    (0L until math.min(h.pointCount, present)).iterator.map { i =>
-      decodeRecordUnsafe(pb, (off0 + i * h.recordLen).toInt, h, id, i.toInt, w)
+  /** Records `from` until `until` of `bb` (record `first` at byte `off`)
+    * as rows of `fields`, span_idx = the absolute record index. */
+  private def records(bb: ByteBuffer, off: Long, h: LasHeader, fields: Array[Int], docId: String,
+                      first: Long, until: Long): Iterator[InternalRow] = {
+    val id = UTF8String.fromString(docId)
+    val w = new UnsafeRowWriter(fields.length)
+    (first until until).iterator.map { i =>
+      decodeRecord(bb, (off + (i - first) * h.recordLen).toInt, h, fields, id, i.toInt, w)
     }
   }
 
-  /** LAS/LAZ on the codec seam, with the zero-boxing lane. The writer
-    * parameters (point format, quantization, LASzip compression) only
-    * shape [[PointCodec.encode]] and [[PointCodec.write]]. */
+  /** Every record of a whole-file buffer as rows of `fields` (laszip
+    * decompressed): the per-file unit of the glob and streaming reads. A
+    * header whose count overruns the records present clamps to them, as
+    * [[presentRecords]] does. */
+  def decodeAll(bytes: Array[Byte], bb: ByteBuffer, h: LasHeader, docId: String,
+                fields: Array[Int]): Iterator[InternalRow] = {
+    requireSingleBuffer(h)
+    val (pb, off0) = pointBytes(bytes, bb, h)
+    val present = math.max(0L, (pb.capacity() - off0) / h.recordLen)
+    records(pb, off0, h, fields, docId, 0L, math.min(h.pointCount, present))
+  }
+
+  /** LAS/LAZ on the codec seam, decoding only the fields a read needs.
+    * The writer parameters (point format, quantization, LASzip
+    * compression) only shape [[PointCodec.encode]] and
+    * [[PointCodec.write]]. */
   final case class Codec(pointFormat: Int = 3,
                          xf: LasWriter.XForms = LasWriter.XForms(0.01, 0.01, 0.01, 0, 0, 0),
-                         compress: Boolean = false) extends PointCodec with UnsafeLane {
+                         compress: Boolean = false) extends PointCodec {
     def exts: Seq[String] = if (compress) Seq("laz", "las") else Seq("las", "laz")
     def schema(head: => Array[Byte]): StructType = LasDecode.schema
-    def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) =
-      (LasDecode.schema, decodeUnsafe(bytes, docId).map(rowConverter))
-    def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
+    def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) = {
       val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-      decodeAllUnsafe(bytes, bb, readHeader(bb), docId)
+      (LasDecode.schema, decodeAll(bytes, bb, readHeader(bb), docId, AllFields).map(rowConverter))
+    }
+    override def decodeFields(bytes: Array[Byte], path: String, pinned: StructType,
+                              fields: Array[Int]): Iterator[InternalRow] = {
+      val bb = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
+      decodeAll(bytes, bb, readHeader(bb), PointCodec.docIdOf(path), fields)
     }
     override def writeCols(schema: StructType): Seq[StructField] =
       schema.fields.toSeq.filter(f => LasWriter.fieldNames.contains(f.name))
@@ -539,7 +536,7 @@ object LasDecode {
       else LasWriter.write(path, df, pointFormat, xf)
   }
 
-  /** One executor task per file of `pathGlob`, doc_id = file name.
+  /** One scan over the files of `pathGlob`, doc_id = file name.
     * Files too large for one task's buffer fail fast; a single one reads
     * through [[asDataFrame]]. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
@@ -553,16 +550,28 @@ object LasDecode {
     head.length > 104 && (head(104) & 0xC0) != 0
   }
 
-  /** CHUNK-parallel LASzip ingest: ONE large .laz fanned across
-    * executors at LAZ chunk boundaries. Chunks are self-contained by
-    * design (raw seed point + fresh entropy models), and the chunk
-    * table gives their exact byte offsets, so each task reads only its
-    * chunk's byte range through the Hadoop FileSystem and decodes it
-    * independently — the compressed counterpart of
-    * [[asSplitDataFrame]]: a 500 GB .laz (50k-point chunks) becomes
-    * tens of thousands of parallel units instead of one pinned
-    * executor. span_idx stays the absolute record index, so chunk
-    * parallelism never changes the decoded frame. */
+  /** A planned file: its qualified path, its length and its header and
+    * VLR block plus `extra` bytes past the data offset, read through the
+    * session's Hadoop FileSystem, the driver's only read of it. */
+  private final case class FileHead(path: String, len: Long, head: Array[Byte]) {
+    def bb: ByteBuffer = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
+    def header: LasHeader = readHeader(bb)
+  }
+
+  private def fileHead(spark: SparkSession, path: String, extra: Int = 0): FileHead = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(ColumnBridge.hadoopConf(spark))
+    val q = fs.makeQualified(p)
+    val in = fs.open(q)
+    val head = try {
+      val h = in.readNBytes(375)
+      val dataOffset = if (h.length < 100) 0L
+        else ByteBuffer.wrap(h).order(ByteOrder.LITTLE_ENDIAN).getInt(96) & 0xffffffffL
+      h ++ in.readNBytes(math.max(0L, dataOffset + extra - h.length).toInt)
+    } finally in.close()
+    FileHead(q.toString, fs.getFileStatus(q).getLen, head)
+  }
+
   /** One spatially-chunked-archive sidecar entry
     * ([[LasWriter.writeLazTiled]]): the chunk's point count and padded
     * bbox. */
@@ -574,38 +583,62 @@ object LasDecode {
     org.json4s.jackson.JsonMethods.parse(json).extract[List[ChunkBox]]
   }
 
+  /** One LAZ chunk of a scan: bytes [start, end) of the file, `count`
+    * records from absolute record `base`. */
+  final case class LazChunk(start: Long, end: Long, count: Int, base: Long) extends InputPartition
+
+  /** The chunks of one LASzip file, one input partition each. Each task
+    * reads only its chunk's byte range and decodes it independently.
+    * On a layered (compressor 3) stream the fields a read needs select
+    * the entropy layers it decodes: an x/y/z query decodes 2 of 9+
+    * layers and never touches gps/rgb/extra bytes
+    * ([[laz.LazLayered.LayerMask]]); compressor 1/2 interleave all
+    * fields, so there every layer decodes. */
+  final case class LasChunks(path: String, docId: String, h: LasHeader,
+                             vlr: laz.LazDecoder.LazVlr, chunks: Seq[LazChunk]) extends PointScan.Source {
+    def name: String = s"laz[$docId, ${chunks.size} chunks]"
+    def schema: StructType = LasDecode.schema
+    def partitions(spark: SparkSession): Seq[InputPartition] = chunks
+    def read(p: InputPartition, fields: Array[Int], conf: Configuration,
+             m: PointScan.Counters): Iterator[InternalRow] = {
+      val c = p.asInstanceOf[LazChunk]
+      val buf = PointScan.readRange(path, conf, c.start, (c.end - c.start).toInt)
+      m.files += 1
+      m.bytes += buf.length
+      val mask =
+        if (fields.length == schema.length) laz.LazLayered.LayerMask.All
+        else laz.LazLayered.LayerMask.forColumns(fields.map(schema(_).name))
+      val raw = laz.LazDecoder.decompressChunk(buf, 0, c.count, h.recordLen, vlr, mask)
+      records(ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN), 0L, h, fields, docId,
+        c.base, c.base + c.count)
+    }
+  }
+
+  /** CHUNK-parallel LASzip ingest: ONE large .laz fanned across
+    * executors at LAZ chunk boundaries ([[LasChunks]]). Chunks are
+    * self-contained by design (raw seed point + fresh entropy models),
+    * and the chunk table gives their exact byte offsets, so the driver
+    * reads only the header, VLR block and chunk table: a 500 GB .laz
+    * (50k-point chunks) becomes tens of thousands of parallel units
+    * instead of one pinned executor. span_idx stays the absolute record
+    * index, so chunk parallelism never changes the decoded frame.
+    * `columns` narrows the frame ([[project]]); `bounds` drops the
+    * chunks of a tiled archive whose sidecar box misses it. */
   def asChunkSplitDataFrame(spark: SparkSession, path: String,
                             docId: String = "las",
                             columns: Seq[String] = Nil,
                             bounds: Seq[Double] = Nil): DataFrame = {
-    // SELECTIVE DECOMPRESSION: on layered (compressor 3) streams a
-    // non-empty `columns` prunes whole entropy layers inside the codec —
-    // an x/y/z query decodes 2 of 9+ layers and never touches gps/rgb/
-    // extra bytes (LazLayered.LayerMask). Compressor 1/2 interleave all
-    // fields, so there the projection happens after decode as usual.
-    val mask =
-      if (columns.isEmpty) laz.LazLayered.LayerMask.All
-      else laz.LazLayered.LayerMask.forColumns(columns)
-    val absPath = Paths.get(path).toAbsolutePath.toString
-    // driver reads ONLY header + VLR block + chunk table
-    val headBlock = {
-      val in = Files.newInputStream(Paths.get(absPath))
-      try {
-        val head = in.readNBytes(375)
-        val dataOffset = ByteBuffer.wrap(head).order(ByteOrder.LITTLE_ENDIAN)
-          .getInt(96) & 0xffffffffL
-        head ++ in.readNBytes(math.max(0L, dataOffset + 8 - head.length).toInt)
-      } finally in.close()
-    }
-    val bb = ByteBuffer.wrap(headBlock).order(ByteOrder.LITTLE_ENDIAN)
-    val h = readHeader(bb)
+    val conf = ColumnBridge.hadoopConf(spark)
+    val f = fileHead(spark, path, extra = 8)
+    val bb = f.bb
+    val h = f.header
     // span_idx is int32 in the frame schema; past 2^31 records the
     // absolute-index identity (dedup/split-equality) would silently wrap
     require(h.pointCount <= Int.MaxValue,
       s"$path holds ${h.pointCount} records; span_idx is int32 — shard the file (2^31-1 records max per file)")
     val vlr = lazVlrOf(bb).getOrElse(
       throw new IllegalArgumentException(s"$path is not a LASzip stream"))
-    val fileLen = Files.size(Paths.get(absPath))
+    val fileLen = f.len
     val variable = vlr.compressor >= 2 && vlr.chunkSize == laz.LazDecoder.VarChunkSentinel
     val chunk =
       if (vlr.compressor >= 2 && !variable && vlr.chunkSize > 0) vlr.chunkSize.toInt
@@ -616,9 +649,7 @@ object LasDecode {
       // read ONLY the table region — never the chunk data
       require(tableOff > 0 && tableOff + 8 <= fileLen,
         s"laszip chunk table offset $tableOff outside $path")
-      val in = Files.newInputStream(Paths.get(absPath))
-      try { in.skipNBytes(tableOff); in.readNBytes((fileLen - tableOff).toInt) }
-      finally in.close()
+      PointScan.readRange(f.path, conf, tableOff, (fileLen - tableOff).toInt)
     }
     val (starts: Seq[Long], counts: Seq[Int]) =
       if (variable) {
@@ -639,11 +670,11 @@ object LasDecode {
       else (Seq(h.dataOffset), Seq(h.pointCount.toInt))
     val chunksEnd = if (tableOff > 0 && tableOff <= fileLen) tableOff else fileLen
     val bases = counts.map(_.toLong).scanLeft(0L)(_ + _)
-    val allDescs = starts.zipWithIndex.map { case (s, i) =>
+    val all = starts.zipWithIndex.map { case (s, i) =>
       // +8 slack: the arithmetic decoder primes lookahead bytes past a
       // chunk's own payload
       val end = (if (i + 1 < starts.size) starts(i + 1) else chunksEnd) + 8
-      (i, s, math.min(end, fileLen), counts(i), bases(i))
+      LazChunk(s, math.min(end, fileLen), counts(i), bases(i))
     }
     // CHUNK-LEVEL SPATIAL PRUNING: a `bounds` query box against a
     // spatially-chunked archive ([[LasWriter.writeLazTiled]] sidecar)
@@ -651,89 +682,73 @@ object LasDecode {
     // Pruning is an optimization, never a filter: kept chunks may hold
     // out-of-box points (callers crop exactly downstream), and a
     // missing or stale sidecar falls back to decoding every chunk.
-    val descs =
-      if (bounds.size == 4 && Files.exists(Paths.get(absPath + ".chunks.json"))) {
-        val boxes = chunkBoxesOf(Files.readString(Paths.get(absPath + ".chunks.json")))
-        if (boxes.size == allDescs.size &&
+    val sidecar = new org.apache.hadoop.fs.Path(f.path + ".chunks.json")
+    val kept =
+      if (bounds.size == 4 && sidecar.getFileSystem(conf).exists(sidecar)) {
+        val boxes = chunkBoxesOf(new String(PointCodec.readBytes(sidecar, conf), "UTF-8"))
+        if (boxes.size == all.size &&
             boxes.map(_.count.toLong).sum == h.pointCount) {
           val Seq(qminx, qminy, qmaxx, qmaxy) = bounds
-          allDescs.zip(boxes).collect {
+          all.zip(boxes).collect {
             case (d, b) if b.maxx >= qminx && b.minx <= qmaxx &&
               b.maxy >= qminy && b.miny <= qmaxy => d
           }
-        } else allDescs // stale sidecar: correct, just unpruned
-      } else allDescs
-    val rdd = spark.sparkContext.parallelize(descs, math.max(1, descs.size))
-      .flatMap { case (ci, start, end, count, base) =>
-        val hp = new org.apache.hadoop.fs.Path(absPath)
-        val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(hp)
-        val buf = new Array[Byte]((end - start).toInt)
-        try in.readFully(start.toLong, buf, 0, buf.length)
-        finally in.close()
-        val raw = laz.LazDecoder.decompressChunk(buf, 0, count, h.recordLen, vlr, mask)
-        val rb = ByteBuffer.wrap(raw).order(ByteOrder.LITTLE_ENDIAN)
-        val id = org.apache.spark.unsafe.types.UTF8String.fromString(docId)
-        val w = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(schema.length)
-        (0 until count).iterator.map { i =>
-          decodeRecordUnsafe(rb, i * h.recordLen, h, id, (base + i).toInt, w)
-        }
-      }
-    project(org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema),
-      columns)
+        } else all // stale sidecar: correct, just unpruned
+      } else all
+    project(PointScan.frame(spark, LasChunks(f.path, docId, h, vlr, kept)), columns)
+  }
+
+  /** One LAS record range of a scan: records [start, end). */
+  final case class RecordRange(start: Long, end: Long) extends InputPartition
+
+  /** Record ranges of one uncompressed LAS file, one input partition
+    * each. Records are fixed-length, so each task reads only its range's
+    * bytes, the move Parquet/CSV splittable sources make. */
+  final case class LasRanges(path: String, docId: String, h: LasHeader,
+                             ranges: Seq[RecordRange]) extends PointScan.Source {
+    def name: String = s"las[$docId, ${ranges.size} ranges]"
+    def schema: StructType = LasDecode.schema
+    def partitions(spark: SparkSession): Seq[InputPartition] = ranges
+    def read(p: InputPartition, fields: Array[Int], conf: Configuration,
+             m: PointScan.Counters): Iterator[InternalRow] = {
+      val r = p.asInstanceOf[RecordRange]
+      val buf = PointScan.readRange(path, conf, h.dataOffset + r.start * h.recordLen,
+        ((r.end - r.start) * h.recordLen).toInt)
+      m.files += 1
+      m.bytes += buf.length
+      records(ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN), 0L, h, fields, docId, r.start, r.end)
+    }
   }
 
   /** Offset-SPLIT LAS ingest: ONE large file fanned across `numSplits`
-    * executor tasks at record boundaries (records are fixed-length, so a
-    * split is a pure [startRecord, endRecord) range — the same move
-    * Parquet/CSV splittable sources make). The driver reads only the
-    * header; each task opens the file through the Hadoop FileSystem
-    * (file://, hdfs://, s3a:// all resolve), seeks to its range, and
-    * decodes with [[decodeRecordUnsafe]]. span_idx stays the ABSOLUTE
-    * record index, so split count never changes the decoded frame. The
-    * ranges cover the records present ([[presentRecords]]). A single
-    * 500 GB LAS file becomes numSplits parallel scans instead of pinning
-    * one executor. */
+    * executor tasks at record boundaries ([[LasRanges]]). The driver
+    * reads only the header; each task opens the file through the Hadoop
+    * FileSystem (file://, hdfs://, s3a:// all resolve), seeks to its
+    * range and decodes with [[decodeRecord]]. span_idx stays the
+    * ABSOLUTE record index, so split count never changes the decoded
+    * frame. The ranges cover the records present ([[presentRecords]]). A
+    * single 500 GB LAS file becomes numSplits parallel scans instead of
+    * pinning one executor. */
   def asSplitDataFrame(spark: SparkSession, path: String, numSplits: Int,
                        docId: String = "las"): DataFrame = {
     require(numSplits >= 1, s"numSplits must be >= 1, got $numSplits")
-    val headBytes = {
-      val in = Files.newInputStream(Paths.get(path))
-      try in.readNBytes(375) finally in.close()
-    }
-    val h = readHeader(ByteBuffer.wrap(headBytes).order(ByteOrder.LITTLE_ENDIAN))
+    val f = fileHead(spark, path)
+    val h = f.header
     require(h.pointFormat <= 10, s"unsupported point format ${h.pointFormat}")
     require(h.pointCount <= Int.MaxValue,
       s"$path holds ${h.pointCount} records; span_idx is int32 — shard the file (2^31-1 records max per file)")
     // laszip bits in the raw format byte: compressed records are not
     // fixed-length, so offset splitting cannot apply; LAZ chunks are the
     // split unit there
-    require((headBytes(104) & 0xC0) == 0,
+    require((f.head(104) & 0xC0) == 0,
       "offset-split ingest needs uncompressed LAS; read .laz with asChunkSplitDataFrame")
-    val n = presentRecords(path, h)
+    val n = presentRecords(f.len, h)
     val per = (n + numSplits - 1) / numSplits
     require(per * h.recordLen <= Int.MaxValue,
       s"split of $per records exceeds one task's buffer; raise numSplits")
     val ranges = (0 until numSplits)
-      .map(i => (n * i / numSplits, n * (i + 1) / numSplits))
-      .filter { case (s, e) => e > s }
-    val absPath = Paths.get(path).toAbsolutePath.toString
-    val rdd = spark.sparkContext.parallelize(ranges, math.max(1, ranges.size))
-      .flatMap { case (startRec, endRec) =>
-        val hp = new org.apache.hadoop.fs.Path(absPath)
-        val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
-        val in = fs.open(hp)
-        val len = ((endRec - startRec) * h.recordLen).toInt
-        val buf = new Array[Byte](len)
-        try in.readFully(h.dataOffset + startRec * h.recordLen, buf, 0, len)
-        finally in.close()
-        val bb = ByteBuffer.wrap(buf).order(ByteOrder.LITTLE_ENDIAN)
-        val id = org.apache.spark.unsafe.types.UTF8String.fromString(docId)
-        val w = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(schema.length)
-        (startRec until endRec).iterator.map { i =>
-          decodeRecordUnsafe(bb, ((i - startRec) * h.recordLen).toInt, h, id, i.toInt, w)
-        }
-      }
-    org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema)
+      .map(i => RecordRange(n * i / numSplits, n * (i + 1) / numSplits))
+      .filter(r => r.end > r.start)
+    PointScan.frame(spark, LasRanges(f.path, docId, h, ranges))
   }
 }

@@ -119,14 +119,15 @@ object Nitf {
   }
 
   /** NITF on the codec seam: the LAS codec over the embedded LAS image
-    * (LIDARA DES payload), zero-boxing lane included. */
-  final case class Codec() extends PointCodec with UnsafeLane {
+    * (LIDARA DES payload), field-pruned decode included. */
+  final case class Codec() extends PointCodec {
     private val las = LasDecode.Codec()
     def exts: Seq[String] = Seq("ntf", "nitf")
     def schema(head: => Array[Byte]): StructType = LasDecode.schema
     def decode(bytes: Array[Byte], docId: String): (StructType, Iterator[Row]) =
       las.decode(lasPayload(bytes), docId)
-    def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[InternalRow] =
-      las.decodeUnsafe(lasPayload(bytes), docId)
+    override def decodeFields(bytes: Array[Byte], path: String, pinned: StructType,
+                              fields: Array[Int]): Iterator[InternalRow] =
+      las.decodeFields(lasPayload(bytes), path, pinned, fields)
   }
 }

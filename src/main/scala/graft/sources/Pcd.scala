@@ -310,7 +310,7 @@ object Pcd {
       imageBytes(cols, recs, data, shiftOrigin)
   }
 
-  /** Executor-parallel decode, one task per matched file. */
+  /** One scan over the matched files. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
     PointCodec.read(spark, pathGlob, Codec())
 

@@ -208,7 +208,7 @@ object Ply {
       imageBytes(cols, recs, format)
   }
 
-  /** Executor-parallel decode, one task per matched file. */
+  /** One scan over the matched files. */
   def asDistributedDataFrame(spark: SparkSession, pathGlob: String): DataFrame =
     PointCodec.read(spark, pathGlob, Codec())
 

@@ -1,11 +1,14 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import scala.util.control.NonFatal
 
 /** One whole-file point format on the engine's single codec seam — the
@@ -16,9 +19,10 @@ import scala.util.control.NonFatal
   * writer, the encode of one file from its records. Format parameters
   * (BPF `columns`, QFIT `flip_coordinates`/`scale_z`, a reader's
   * `count`, a writer's layout) are constructor arguments of the codec
-  * value. Everything else is written once: the read in the companion,
-  * the landing-dir stream in [[graft.streaming.StreamOps.ingestPointFiles]]
-  * and the sharded write in [[ShardedWrite.run]].
+  * value. Everything else is written once: the read in the companion
+  * (one [[PointScan]]), the landing-dir stream in
+  * [[graft.streaming.StreamOps.ingestPointFiles]] and the sharded write
+  * in [[ShardedWrite.run]].
   */
 trait PointCodec extends Serializable {
 
@@ -34,6 +38,16 @@ trait PointCodec extends Serializable {
   /** Every point of one whole file, with the schema that file decodes
     * to (doc_id = `docId`, span_idx = the record ordinal). */
   def decode(bytes: Array[Byte], docId: String): (StructType, IterableOnce[Row])
+
+  /** The points of file `path` (its whole bytes) as UnsafeRows of the
+    * `pinned` fields `fields`, in that order: a scan's per-file decode.
+    * The default decodes every field, fails loudly when the file's
+    * schema is not `pinned` ([[PointCodec.decodeChecked]]), then writes
+    * the fields; a codec that can skip the fields a read does not use
+    * overrides it. */
+  def decodeFields(bytes: Array[Byte], path: String, pinned: StructType,
+                   fields: Array[Int]): Iterator[InternalRow] =
+    PointCodec.decodeChecked(this, pinned, path, bytes).iterator.map(PointCodec.writer(pinned, fields))
 
   /** The columns a written file serializes, in file order. */
   def writeCols(schema: StructType): Seq[StructField] = ShardedWrite.numericCols(schema)
@@ -52,12 +66,6 @@ trait PointCodec extends Serializable {
     java.nio.file.Files.write(java.nio.file.Paths.get(path),
       encode(cols.map(f => (f.name, f.dataType)), recs))
   }
-}
-
-/** A codec with one fixed schema that decodes straight to UnsafeRows:
-  * its glob read builds the frame with no external Row per point. */
-trait UnsafeLane { this: PointCodec =>
-  def decodeUnsafe(bytes: Array[Byte], docId: String): Iterator[InternalRow]
 }
 
 object PointCodec {
@@ -92,21 +100,24 @@ object PointCodec {
     * read their first words. */
   val HeaderBytes: Int = 65536
 
-  /** The first file by name that `pathGlob` matches (a directory lists
-    * its files; hidden `_`/`.` names are skipped, as the binaryFile
-    * source skips them): the file a multi-file read pins its schema
-    * from. */
-  def firstFile(conf: Configuration, pathGlob: String): Path = {
+  /** The files `pathGlob` matches, by name (a directory lists its files;
+    * hidden `_`/`.` names are skipped, as Spark's file sources skip
+    * them). */
+  def listFiles(conf: Configuration, pathGlob: String): Seq[FileStatus] = {
     val p = new Path(pathGlob)
     val fs = p.getFileSystem(conf)
     Option(fs.globStatus(p)).toSeq.flatten
       .flatMap(s => if (s.isDirectory) fs.listStatus(s.getPath).toSeq else Seq(s))
-      .filter(_.isFile).map(_.getPath)
-      .filterNot(q => q.getName.startsWith("_") || q.getName.startsWith("."))
-      .sortBy(_.getName).headOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"no file matches $pathGlob to pin the schema"))
+      .filter(_.isFile)
+      .filterNot(s => s.getPath.getName.startsWith("_") || s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
   }
+
+  /** The first file by name that `pathGlob` matches: the file a
+    * multi-file read pins its schema from. */
+  def firstFile(conf: Configuration, pathGlob: String): Path =
+    listFiles(conf, pathGlob).headOption.map(_.getPath).getOrElse(
+      throw new IllegalArgumentException(s"no file matches $pathGlob to pin the schema"))
 
   /** Decode one file of a multi-file read and fail loudly, naming the
     * file, when its schema is not the pinned one (a file with its
@@ -120,9 +131,44 @@ object PointCodec {
     rows
   }
 
+  /** External Row of `schema` -> UnsafeRow of its fields `fields`, in
+    * that order (one reusable writer; each row a fresh copy). One type
+    * switch per field, so the loop stays monomorphic. */
+  def writer(schema: StructType, fields: Array[Int]): Row => InternalRow = {
+    val types = Seq(StringType, DoubleType, FloatType, LongType, IntegerType, ShortType,
+      ByteType, BooleanType)
+    val codes = fields.map { f =>
+      val t = types.indexOf(schema(f).dataType)
+      require(t >= 0, s"no point-field writer for ${schema(f).dataType}")
+      t
+    }
+    val w = new UnsafeRowWriter(fields.length)
+    r => {
+      w.reset()
+      w.zeroOutNullBytes()
+      var k = 0
+      while (k < fields.length) {
+        val f = fields(k)
+        if (r.isNullAt(f)) w.setNullAt(k)
+        else (codes(k): @scala.annotation.switch) match {
+          case 0 => w.write(k, UTF8String.fromString(r.getString(f)))
+          case 1 => w.write(k, r.getDouble(f))
+          case 2 => w.write(k, r.getFloat(f))
+          case 3 => w.write(k, r.getLong(f))
+          case 4 => w.write(k, r.getInt(f))
+          case 5 => w.write(k, r.getShort(f))
+          case 6 => w.write(k, r.getByte(f))
+          case 7 => w.write(k, r.getBoolean(f))
+        }
+        k += 1
+      }
+      w.getRow.copy()
+    }
+  }
+
   /** The rows of file `path`; a decode failure, eager or while iterating,
     * is rethrown naming the file unless its message already does. */
-  private def naming[T](path: String)(rows: => IterableOnce[T]): Iterator[T] = {
+  def naming[T](path: String)(rows: => IterableOnce[T]): Iterator[T] = {
     def named[A](a: => A): A = try a catch {
       case NonFatal(e) if !String.valueOf(e.getMessage).contains(path) =>
         throw new IllegalArgumentException(s"$path: $e", e)
@@ -131,37 +177,18 @@ object PointCodec {
     new Iterator[T] { def hasNext: Boolean = named(it.hasNext); def next(): T = named(it.next()) }
   }
 
-  /** A `readers.*` path, one file or a glob: one executor task per
-    * matched file through Spark's binaryFile source, doc_id = the file
-    * name, span_idx = the record ordinal. The schema is pinned from the
-    * header of the first file by name, the driver's only read; every file
-    * must decode to it, and a file that fails to decode fails its task
-    * naming the file. No decoded row passes through the driver. */
+  /** A `readers.*` path, one file or a glob, as one [[PointScan]] over
+    * its files (bin-packed into tasks as Spark packs files), doc_id = the
+    * file name, span_idx = the record ordinal. The schema is pinned from
+    * the header of the first file by name, the driver's only read; every
+    * file must decode to it, and a file that fails to decode fails its
+    * task naming the file. No decoded row passes through the driver. */
   def read(spark: SparkSession, pathGlob: String, codec: PointCodec): DataFrame = {
-    // A glob in the PATH makes FileStreamSink.hasMetadata probe the glob
-    // as a literal directory and log a FileNotFoundException stack on
-    // every load; a pathGlobFilter over the parent directory lists the
-    // same files with clean logs.
-    val slash = pathGlob.lastIndexOf('/')
-    val (dir, leaf) =
-      if (slash >= 0) (pathGlob.substring(0, slash), pathGlob.substring(slash + 1))
-      else (".", pathGlob)
-    val reader = spark.read.format("binaryFile")
-    val bin = (if (isGlob(leaf)) reader.option("pathGlobFilter", leaf).load(dir)
-      else reader.load(pathGlob))
-      .select("path", "content")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val schema = codec.schema(readBytes(firstFile(conf, pathGlob), conf, HeaderBytes))
-    codec match {
-      case u: UnsafeLane =>
-        val rdd = bin.rdd.flatMap { r =>
-          naming(r.getString(0))(u.decodeUnsafe(r.getAs[Array[Byte]](1), docIdOf(r.getString(0))))
-        }
-        org.apache.spark.sql.graftbridge.ColumnBridge.internalCreateDataFrame(spark, rdd, schema)
-      case _ =>
-        spark.createDataFrame(bin.rdd.flatMap { r =>
-          naming(r.getString(0))(decodeChecked(codec, schema, r.getString(0), r.getAs[Array[Byte]](1)))
-        }, schema)
-    }
+    val conf = ColumnBridge.hadoopConf(spark)
+    val files = listFiles(conf, pathGlob)
+    require(files.nonEmpty, s"no file matches $pathGlob to pin the schema")
+    val schema = codec.schema(readBytes(files.head.getPath, conf, HeaderBytes))
+    PointScan.frame(spark, PointScan.Files(codec,
+      files.map(f => (f.getPath.toString, f.getLen)), schema))
   }
 }

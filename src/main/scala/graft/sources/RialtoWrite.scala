@@ -194,7 +194,8 @@ object RialtoWrite {
          |    ]
          |}
          |""".stripMargin
-    ShardedWrite.publish(dir, !local, "header.json", header.getBytes("US-ASCII"))
+    val conf = ShardedWrite.confFor(df.sparkSession, dir)
+    ShardedWrite.publish(dir, "header.json", header.getBytes("US-ASCII"), conf.map(_.value.value))
 
     // memberships: every point x every level of its path
     val cols = valueCols
@@ -241,8 +242,8 @@ object RialtoWrite {
         if (!hasScheme)
           java.nio.file.Files.createDirectories(
             java.nio.file.Paths.get(s"$outDir/$level/$tx"))
-        ShardedWrite.publish(outDir, hasScheme, s"$level/$tx/$ty.ria",
-          out.toByteArray)
+        ShardedWrite.publish(outDir, s"$level/$tx/$ty.ria", out.toByteArray,
+          conf.map(_.value.value))
         n += 1
       }
       Iterator.single(n)

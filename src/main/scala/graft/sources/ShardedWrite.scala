@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Encoders}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{NumericType, StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** The one executor-sharded export harness behind every point-format
   * writer (LAS/LAZ, BPF, PCD, PLY): one output file per distinct value
@@ -31,23 +35,35 @@ object ShardedWrite {
   /** True for `file:/...`, `hdfs://...`, `s3a://...` destinations. */
   def hasScheme(dir: String): Boolean = dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
 
-  /** Publish bytes as `dir/name`; scheme'd destinations go two-phase. */
-  def publish(dir: String, hasScheme: Boolean, name: String,
-              bytes: Array[Byte]): Unit =
-    if (hasScheme) {
-      val tmp = java.io.File.createTempFile("graftshard", name)
-      java.nio.file.Files.write(tmp.toPath, bytes)
-      val destDir = new org.apache.hadoop.fs.Path(dir)
-      val fs = destDir.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      val tmpDst = new org.apache.hadoop.fs.Path(destDir, name + ".inprogress")
-      val dst = new org.apache.hadoop.fs.Path(destDir, name)
-      fs.copyFromLocalFile(false, true,
-        new org.apache.hadoop.fs.Path(tmp.toURI), tmpDst)
-      if (fs.exists(dst)) fs.delete(dst, false)
-      require(fs.rename(tmpDst, dst), s"two-phase rename failed for $name")
-      tmp.delete(); ()
-    } else java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$dir/$name"), bytes)
+  /** The session's Hadoop configuration for the tasks that publish to
+    * `dir`: a broadcast (each executor deserializes it once) for a
+    * scheme'd destination, none for a local one. Tasks resolve the
+    * destination's file system from it, as Spark's file sources do, so a
+    * scheme or credential set on the session holds in tasks too. */
+  def confFor(spark: SparkSession, dir: String): Option[Broadcast[SerializableConfiguration]] =
+    if (hasScheme(dir)) Some(spark.sparkContext.broadcast(
+      new SerializableConfiguration(ColumnBridge.hadoopConf(spark))))
+    else None
+
+  /** Publish bytes as `dir/name`: a scheme'd destination (`conf` given)
+    * goes two-phase through the file system `conf` resolves, a local one
+    * is written directly. */
+  def publish(dir: String, name: String, bytes: Array[Byte], conf: Option[Configuration]): Unit =
+    conf match {
+      case Some(c) =>
+        val tmp = java.io.File.createTempFile("graftshard", name)
+        java.nio.file.Files.write(tmp.toPath, bytes)
+        val destDir = new org.apache.hadoop.fs.Path(dir)
+        val fs = destDir.getFileSystem(c)
+        val tmpDst = new org.apache.hadoop.fs.Path(destDir, name + ".inprogress")
+        val dst = new org.apache.hadoop.fs.Path(destDir, name)
+        fs.copyFromLocalFile(false, true,
+          new org.apache.hadoop.fs.Path(tmp.toURI), tmpDst)
+        if (fs.exists(dst)) fs.delete(dst, false)
+        require(fs.rename(tmpDst, dst), s"two-phase rename failed for $name")
+        tmp.delete(); ()
+      case None => java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/$name"), bytes)
+    }
 
   /** Run the sharded export: partition by `shardCol`, sort each
     * partition by (shard, doc_id, span_idx) for deterministic record
@@ -56,11 +72,13 @@ object ShardedWrite {
     * shard file names, sorted. */
   def run(df: DataFrame, dir: String, shardCol: String, codec: PointCodec,
           numTasks: Int = 0): Seq[String] = {
-    val scheme = hasScheme(dir)
-    if (scheme) {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(new org.apache.hadoop.conf.Configuration()).mkdirs(p)
-    } else java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    val conf = confFor(df.sparkSession, dir)
+    conf match {
+      case Some(c) =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(c.value.value).mkdirs(p)
+      case None => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
+    }
     val ext = codec.exts.head
     val valueCols = codec.writeCols(df.schema)
     require(valueCols.nonEmpty, s"no columns to write as .$ext")
@@ -84,7 +102,7 @@ object ShardedWrite {
       var written = List.empty[String]
       def close(): Unit = if (cur != null && buf.nonEmpty) {
         val name = s"shard_$cur.$ext"
-        publish(dir, scheme, name, codec.encode(colMeta, buf.toIndexedSeq))
+        publish(dir, name, codec.encode(colMeta, buf.toIndexedSeq), conf.map(_.value.value))
         written ::= name
         buf = scala.collection.mutable.ArrayBuffer.empty[Array[Any]]
       }

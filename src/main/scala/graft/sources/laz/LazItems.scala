@@ -7,7 +7,7 @@ import ArithmeticDecoder.SymbolModel
   * reference's .laz fixtures vs their uncompressed .las ground truth).
   * Each item decodes into the point's RAW little-endian record bytes, so
   * downstream Row conversion reuses the golden-pinned
-  * [[graft.sources.LasDecode.decodeRecordUnsafe]]. */
+  * [[graft.sources.LasDecode.decodeRecord]]. */
 object LazItems {
 
   def u8fold(n: Int): Int = if (n < 0) n + 256 else if (n > 255) n - 256 else n

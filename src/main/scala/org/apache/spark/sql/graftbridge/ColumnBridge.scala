@@ -13,20 +13,19 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** DataFrame over an RDD of InternalRows without the external-Row
-    * encoder layer (the official `internalCreateDataFrame` is
-    * private[sql]). The fast path for binary-format ingest: decoders
-    * write UnsafeRows directly instead of boxing ~20 objects per point
-    * through Row + RowEncoder. */
-  def internalCreateDataFrame(spark: SparkSession,
-                              rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-                              schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
-
   /** DataFrame over a logical plan (`Dataset.ofRows` is private[sql]):
     * how the engine's planned kernel nodes become frames. */
   def ofPlan(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** The session's SQL conf (`sessionState` is private[sql]). */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** The session's Hadoop configuration, with its `spark.hadoop.*`
+    * settings: what Spark's file sources hand their tasks. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
 
   /** The memory page size Spark's sorters allocate in (the memory
     * manager is private[spark]). */

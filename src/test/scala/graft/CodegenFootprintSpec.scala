@@ -43,20 +43,6 @@ class CodegenFootprintSpec extends AnyFunSuite {
     def clear(): Unit = call("invalidateAll")
   }
 
-  /** The names of the jobs `body` launches (their last stage's call site;
-    * an adaptive query's shuffle-stage jobs name a thread-pool frame). */
-  private def jobNames(body: => Unit): Seq[String] = {
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        names.synchronized(names += j.stageInfos.maxBy(_.stageId).name)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(300) } // drain listener-bus events
-    finally spark.sparkContext.removeSparkListener(listener)
-    names.synchronized(names.toSeq)
-  }
-
   /** Documents of 1-7 points on the 0.5 payload grid over [0, 256)²: 60%
     * in six gaussian clusters (one much hotter than the rest), the rest
     * uniform background too sparse for the outlier filter's first level,

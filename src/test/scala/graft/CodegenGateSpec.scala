@@ -103,4 +103,28 @@ class CodegenGateSpec extends AnyFunSuite {
     assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
       "the second tile length recompiled generated code")
   }
+
+  test("reads of different codecs share one compiled stage: LAZ, then PCD and PLY globs") {
+    // the scan hands each query only the columns it reads, so a checksum
+    // over x, y, z and intensity sees the same leaf whatever the format,
+    // and the PCD and PLY reads reuse the class the LAZ read compiled
+    import graft.sources.{LasDecode, LasWriter, Pcd, Ply}
+    val dir = java.nio.file.Files.createTempDirectory("graftshare").toString
+    val pts = Twins.grid(2000, 37, 11, (100.0, 0.0, -1.0), (0.25, 0.5, 0.125))
+      .withColumn("shard", col("span_idx") % 4)
+    LasWriter.writeSharded(s"$dir/laz", pts, 1, LasWriter.XForms(0.125, 0.125, 0.125, 0, 0, 0),
+      "shard", compress = true)
+    Pcd.writeSharded(s"$dir/pcd", pts, "shard")
+    Ply.writeSharded(s"$dir/ply", pts, "shard")
+    def checksum(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.Row =
+      df.filter(col("z") =!= -0.375)
+        .agg(sum("x"), sum("y"), sum("z"), sum("intensity"), org.apache.spark.sql.functions.count("*"))
+        .head()
+    val laz = checksum(LasDecode.asDistributedDataFrame(spark, s"$dir/laz/*.laz"))
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(checksum(Pcd.asDistributedDataFrame(spark, s"$dir/pcd/*.pcd")) === laz)
+    assert(checksum(Ply.asDistributedDataFrame(spark, s"$dir/ply/*.ply")) === laz)
+    assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
+      "the PCD or PLY read recompiled generated code")
+  }
 }

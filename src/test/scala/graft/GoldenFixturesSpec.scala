@@ -62,6 +62,33 @@ object TestSpark {
     (out, warnings.toArray.map(_.toString).toSeq)
   }
 
+  /** The name of each job `body` launches, in start order: the
+    * description of the SQL execution it serves (the
+    * `spark.sql.execution.id` job property, which an adaptive query's
+    * shuffle-stage and final-stage jobs carry too), else the call site
+    * of its last stage. */
+  def jobNames(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val descriptions = new java.util.concurrent.ConcurrentHashMap[Long, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(Option[Long], String)]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => descriptions.put(s.executionId, s.description)
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add((
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong),
+        j.stageInfos.maxBy(_.stageId).name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try { body; Thread.sleep(300) } // drain listener-bus events
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.toArray(Array.empty[(Option[Long], String)]).toSeq.map { case (id, site) =>
+      id.flatMap(i => Option(descriptions.get(i))).getOrElse(site)
+    }
+  }
+
   /** The innermost cause of `e`: a decode failure inside a task reaches
     * the driver wrapped in a SparkException. */
   @scala.annotation.tailrec

@@ -399,19 +399,6 @@ class PipelineSpec extends AnyFunSuite {
     assert(Manifest.validate(spark, ck, "st"))
   }
 
-  /** The result-stage name of each job `body` launches, in start order. */
-  private def jobNames(body: => Unit): Seq[String] = {
-    val names = scala.collection.mutable.ArrayBuffer.empty[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        names.synchronized(names += j.stageInfos.maxBy(_.stageId).name)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try { body; Thread.sleep(300) } // drain listener-bus events
-    finally spark.sparkContext.removeSparkListener(listener)
-    names.synchronized(names.toSeq)
-  }
-
   test("job-count gate: checkpoint 1 job, validate 1, readers.doc 0, SOR none after its mean distances") {
     val ck = tmp()
     val df = sources.Faux.ramp(spark, sources.Faux.Box3(0, 0, 0, 50, 50, 5), 400)
