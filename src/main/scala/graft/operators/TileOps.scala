@@ -3,9 +3,6 @@ package graft.operators
 import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.LeafExpression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -15,22 +12,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.SpatialFunctions
 import graft.index.CellSpace
-import graft.plans.Kernels
-
-/** A double that generated code reads from a reference object instead of
-  * inlining it as a Java literal, so a new value reuses the compiled
-  * class. Not foldable: constant folding would turn it into a literal. */
-case class RefDouble(value: Double) extends LeafExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = false
-  override def foldable: Boolean = false
-  override def eval(input: InternalRow): Any = value
-  override def toString: String = value.toString
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val v = ctx.addReferenceObj("param", this, classOf[RefDouble].getName)
-    ev.copy(code = code"final double ${ev.value} = $v.value();", isNull = FalseLiteral)
-  }
-}
+import graft.plans.{Kernels, Param}
 
 /** Tiling operators: fixed-grid splitter, capacity-balanced chipper,
   * LOD pyramid, hex density. These produce the `tile` grouping column
@@ -50,7 +32,7 @@ object TileOps {
     * order-dependent, so callers at scale should pass it explicitly.
     */
   def splitter(length: Double, originX: Double, originY: Double)(df: DataFrame): DataFrame = {
-    def ref(v: Double): Column = ColumnBridge.column(RefDouble(v))
+    def ref(v: Double): Column = ColumnBridge.column(Param(v, DoubleType))
     df.withColumn("tile_x", ((col("x") - ref(originX)) / ref(length)).cast(IntegerType))
       .withColumn("tile_y", ((col("y") - ref(originY)) / ref(length)).cast(IntegerType))
   }

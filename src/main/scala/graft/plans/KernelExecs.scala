@@ -25,7 +25,8 @@ import org.apache.spark.util.collection.unsafe.sort.PrefixComparators
   * into an exec that reads and writes UnsafeRows (payload structs pass
   * unopened, no external-Row encoder), declares SQL metrics and is named by
   * EXPLAIN. The engine registers the strategy on a session when it first
-  * builds a node ([[register]]); `GraftExtensions` also injects it. */
+  * builds a node or a point scan ([[register]]); `GraftExtensions` also
+  * injects it. */
 object Kernels {
 
   /** A task's reduce of one group of rows sharing a long key (a block, a
@@ -196,10 +197,12 @@ object Kernels {
     }
   }
 
-  /** Adds [[Strategy]] to `spark`'s planner unless it is there. */
+  /** Adds [[Strategy]] to `spark`'s planner and the [[Params]] rule to its
+    * optimizer, unless they are there. */
   def register(spark: SparkSession): Unit = synchronized {
     val e = spark.experimental
     if (!e.extraStrategies.contains(Strategy)) e.extraStrategies = Strategy +: e.extraStrategies
+    if (!e.extraOptimizations.contains(Params)) e.extraOptimizations = e.extraOptimizations :+ Params
   }
 
   private def frame(df: DataFrame)(node: LogicalPlan => LogicalPlan): DataFrame = {

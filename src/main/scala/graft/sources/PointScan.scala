@@ -1,7 +1,9 @@
 package graft.sources
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -16,6 +18,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
+import graft.plans.Kernels
 
 /** Point files as one DataSource V2 scan: every `readers.*` read, the
   * per-file glob read and the header-planned LAS/LAZ reads, is a
@@ -50,9 +53,15 @@ object PointScan {
              m: Counters): Iterator[InternalRow]
   }
 
-  /** The scan of `source` as a frame. */
-  def frame(spark: SparkSession, source: Source): DataFrame =
+  /** The scan of `source` as a frame, on a session whose optimizer lifts
+    * the constants of filters over the scan ([[graft.plans.Params]]). */
+  def frame(spark: SparkSession, source: Source): DataFrame = {
+    Kernels.register(spark)
     ColumnBridge.ofPlan(spark, DataSourceV2Relation.create(Points(source), None, None))
+  }
+
+  /** True iff `t` is a point scan's table. */
+  def isPoints(t: Table): Boolean = t.isInstanceOf[Points]
 
   /** A task's running totals, reported as the scan's custom metrics. */
   final class Counters {
@@ -60,6 +69,24 @@ object PointScan {
     var bytes = 0L
     var points = 0L
     var decodeNs = 0L
+  }
+
+  /** The last broadcast of a session's Hadoop configuration, with the
+    * context it lives in and the entries it holds. */
+  private var lastConf: (SparkContext, Map[String, String], Broadcast[SerializableConfiguration]) = _
+
+  /** `spark`'s Hadoop configuration, with its `spark.hadoop.*` and session
+    * settings, as a broadcast, as in Spark's file sources: each executor
+    * deserializes it once, not every task. Broadcasting it (about 110 KB)
+    * costs a read several ms of planning, so the last broadcast is
+    * reused while the configuration's entries are unchanged. */
+  def sessionConf(spark: SparkSession): Broadcast[SerializableConfiguration] = synchronized {
+    val conf = ColumnBridge.hadoopConf(spark)
+    val entries = conf.iterator.asScala.map(e => e.getKey -> e.getValue).toMap
+    val sc = spark.sparkContext
+    if (lastConf == null || (lastConf._1 ne sc) || lastConf._2 != entries)
+      lastConf = (sc, entries, sc.broadcast(new SerializableConfiguration(conf)))
+    lastConf._3
   }
 
   /** `len` bytes of `path` from byte `start`. */
@@ -130,15 +157,9 @@ object PointScan {
     def planInputPartitions: Array[InputPartition] =
       source.partitions(SparkSession.active).toArray
     /** One factory per scan: Spark asks for it while planning (to learn
-      * whether the scan is columnar) and again to execute, and each ask
-      * would otherwise broadcast the session's Hadoop configuration anew.
-      * The configuration rides a broadcast, as in Spark's file sources:
-      * each executor deserializes it once, not every task. */
-    @transient private lazy val factory: PartitionReaderFactory = {
-      val spark = SparkSession.active
-      Readers(source, fields,
-        spark.sparkContext.broadcast(new SerializableConfiguration(ColumnBridge.hadoopConf(spark))))
-    }
+      * whether the scan is columnar) and again to execute. */
+    @transient private lazy val factory: PartitionReaderFactory =
+      Readers(source, fields, sessionConf(SparkSession.active))
     def createReaderFactory: PartitionReaderFactory = factory
     override def supportedCustomMetrics: Array[CustomMetric] = Metrics.all
   }

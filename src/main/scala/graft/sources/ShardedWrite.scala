@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{NumericType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
@@ -36,14 +35,12 @@ object ShardedWrite {
   def hasScheme(dir: String): Boolean = dir.matches("[a-zA-Z][a-zA-Z0-9+.-]*:/.*")
 
   /** The session's Hadoop configuration for the tasks that publish to
-    * `dir`: a broadcast (each executor deserializes it once) for a
+    * `dir`: the session's broadcast ([[PointScan.sessionConf]]) for a
     * scheme'd destination, none for a local one. Tasks resolve the
     * destination's file system from it, as Spark's file sources do, so a
     * scheme or credential set on the session holds in tasks too. */
   def confFor(spark: SparkSession, dir: String): Option[Broadcast[SerializableConfiguration]] =
-    if (hasScheme(dir)) Some(spark.sparkContext.broadcast(
-      new SerializableConfiguration(ColumnBridge.hadoopConf(spark))))
-    else None
+    if (hasScheme(dir)) Some(PointScan.sessionConf(spark)) else None
 
   /** Publish bytes as `dir/name`: a scheme'd destination (`conf` given)
     * goes two-phase through the file system `conf` resolves, a local one

@@ -32,6 +32,9 @@ class CodegenGateSpec extends AnyFunSuite {
     "q_token_bpe", "q_ann_ivf_pq", "q_grid_shift", "q_reproject",
     "q_bloom_delta", "q_hexbin")
 
+  private def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   test("hot-path expressions compile under CODEGEN_ONLY with zero fallback") {
     val compileFailures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
@@ -49,21 +52,12 @@ class CodegenGateSpec extends AnyFunSuite {
     config.getRootLogger.addAppender(appender, Level.WARN, null)
     ctx.updateLoggers()
 
-    val conf = spark.conf
-    val prevFactory = conf.getOption("spark.sql.codegen.factoryMode")
-    val prevFallback = conf.getOption("spark.sql.codegen.fallback")
-    try {
-      conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-      conf.set("spark.sql.codegen.fallback", "false")
+    try codegenOnly {
       gatedQueries.foreach { q =>
         val n = SparkEntry.queries(q)(spark, sfDir).count()
         assert(n > 0, s"$q returned no rows under CODEGEN_ONLY")
       }
     } finally {
-      prevFactory.fold(conf.unset("spark.sql.codegen.factoryMode"))(
-        v => conf.set("spark.sql.codegen.factoryMode", v))
-      prevFallback.fold(conf.unset("spark.sql.codegen.fallback"))(
-        v => conf.set("spark.sql.codegen.fallback", v))
       config.getRootLogger.removeAppender("graft-codegen-capture")
       ctx.updateLoggers()
       appender.stop()
@@ -126,5 +120,75 @@ class CodegenGateSpec extends AnyFunSuite {
     assert(checksum(Ply.asDistributedDataFrame(spark, s"$dir/ply/*.ply")) === laz)
     assert(org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount === compiles,
       "the PCD or PLY read recompiled generated code")
+  }
+
+  test("a new filter constant over a LAZ glob compiles nothing") {
+    // the constant a filter over a point scan compares against rides in a
+    // reference object (graft.plans.Params), so a checksum skipping a new
+    // z level reuses the classes the first one compiled
+    import graft.sources.{LasDecode, LasWriter}
+    val dir = java.nio.file.Files.createTempDirectory("graftparam").toString
+    val pts = Twins.grid(2000, 37, 11, (100.0, 0.0, -1.0), (0.25, 0.5, 0.125))
+      .withColumn("shard", col("span_idx") % 4)
+    LasWriter.writeSharded(dir, pts, 1, LasWriter.XForms(0.125, 0.125, 0.125, 0, 0, 0),
+      "shard", compress = true)
+    def checksum(df: org.apache.spark.sql.DataFrame, z: Double): (Long, Double) = {
+      val r = df.filter(col("z") =!= z).agg(org.apache.spark.sql.functions.count("*"), sum("x")).head()
+      (r.getLong(0), r.getDouble(1))
+    }
+    val want = Seq(-0.375, 0.25).map(checksum(pts, _))
+    codegenOnly {
+      assert(checksum(LasDecode.asDistributedDataFrame(spark, s"$dir/*.laz"), -0.375) === want(0))
+      val before = compiles
+      assert(checksum(LasDecode.asDistributedDataFrame(spark, s"$dir/*.laz"), 0.25) === want(1))
+      assert(compiles === before, "the second filter constant recompiled generated code")
+    }
+  }
+
+  /** An engine-written LAS file and the frame it holds. */
+  private lazy val las: (String, org.apache.spark.sql.DataFrame) = {
+    val path = java.nio.file.Files.createTempDirectory("graftparam").resolve("c.las").toString
+    val pts = Twins.grid(3000, 53, 17, (100.0, 0.0, -1.0), (0.25, 0.5, 0.125))
+    graft.sources.LasWriter.write(path, pts, 3,
+      graft.sources.LasWriter.XForms(0.125, 0.125, 0.125, 0, 0, 0))
+    (path, pts)
+  }
+
+  /** Runs a `readers.las` + `filter` pipeline over [[las]] for each stage of
+    * `filters`, checks its count and sum of x against the rows `keeps`
+    * keeps, and returns the compiles of the runs after the first. */
+  private def compilesAfterFirst(filters: Seq[String], keeps: Seq[org.apache.spark.sql.Column]): Long = {
+    val (path, pts) = las
+    def checksum(df: org.apache.spark.sql.DataFrame): (Long, Double) = {
+      val r = df.agg(org.apache.spark.sql.functions.count("*"), sum("x")).head()
+      (r.getLong(0), r.getDouble(1))
+    }
+    val want = keeps.map(k => checksum(pts.filter(k)))
+    codegenOnly {
+      var before = 0L
+      for ((f, i) <- filters.zipWithIndex) {
+        if (i == 1) before = compiles
+        assert(checksum(graft.plans.Pipeline.run(spark,
+          s"""{"pipeline": [{"type": "readers.las", "path": "$path"}, $f]}""").df) === want(i), f)
+      }
+      compiles - before
+    }
+  }
+
+  test("a new filters.range over readers.las compiles nothing") {
+    val ranges = Seq((0.0, 105.0), (0.5, 107.25))
+    val added = compilesAfterFirst(ranges.map { case (z, x) =>
+      s"""{"type": "filters.range", "limits": [{"dimension": "z", "min": $z},
+         |  {"dimension": "x", "min": 100.5, "max": $x}]}""".stripMargin
+    }, ranges.map { case (z, x) => col("z") >= z && col("x").between(100.5, x) })
+    assert(added === 0, "a new range recompiled generated code")
+  }
+
+  test("a new filters.crop box over readers.las compiles nothing") {
+    val boxes = Seq(Seq(101.0, 10, 108, 40), Seq(102.5, 0, 104, 60))
+    val added = compilesAfterFirst(
+      boxes.map(b => s"""{"type": "filters.crop", "bounds": [${b.mkString(", ")}]}"""),
+      boxes.map(b => col("x").between(b(0), b(2)) && col("y").between(b(1), b(3))))
+    assert(added === 0, "a new crop box recompiled generated code")
   }
 }

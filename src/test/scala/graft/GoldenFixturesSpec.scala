@@ -40,6 +40,18 @@ object TestSpark {
     if (refPresent) s"$RefData/$rel" else twin
   val P1065 = s"$RefData/las/1.2-with-color.las"
 
+  /** `body` run with generated code only and no interpreted fallback, so
+    * an expression whose code fails to compile throws. */
+  def codegenOnly[T](body: => T): T = {
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+    val prev = keys.map { case (k, _) => k -> conf.getOption(k) }
+    try {
+      keys.foreach { case (k, v) => conf.set(k, v) }
+      body
+    } finally prev.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
+  }
+
   /** `body`'s result and the WARN messages logged while it ran, through
     * an appender on the root logger. */
   def warningsDuring[T](body: => T): (T, Seq[String]) = {

@@ -113,13 +113,51 @@ class PointScanSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       hc.unset("fs.sessfs.impl.disable.cache")
     }
   }
+
+  test("a Hadoop setting changed between two reads reaches the second read's tasks") {
+    // reads share one broadcast of the session's Hadoop configuration while
+    // its entries are unchanged; a changed session or context setting must
+    // start a new one
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.sessfs.impl", classOf[PointScanSpec.SessionFs].getName)
+    hc.setBoolean("fs.sessfs.impl.disable.cache", true)
+    try {
+      val dir = tmp()
+      val pts = cloud(3000)
+      LasWriter.writeSharded(dir, pts, 1, xf, "shard", compress = true)
+      def tagsOfRead(): Set[String] = {
+        PointScanSpec.tagsSeen.clear()
+        assert(xyz(PointCodec.read(spark, s"sessfs:$dir/*.laz", LasDecode.Codec())) === xyz(pts))
+        PointScanSpec.tagsSeen.toArray.map(_.toString).toSet
+      }
+      spark.conf.set("sessfs.tag", "a")
+      assert(tagsOfRead() === Set("a"))
+      assert(tagsOfRead() === Set("a"))
+      spark.conf.set("sessfs.tag", "b")
+      assert(tagsOfRead() === Set("b"))
+      spark.conf.unset("sessfs.tag")
+      hc.set("sessfs.tag", "c")
+      assert(tagsOfRead() === Set("c"))
+    } finally {
+      spark.conf.unset("sessfs.tag")
+      Seq("fs.sessfs.impl", "fs.sessfs.impl.disable.cache", "sessfs.tag").foreach(hc.unset)
+    }
+  }
 }
 
 object PointScanSpec {
+  /** Values of the setting `sessfs.tag` that the file systems tasks
+    * opened files through were configured with. */
+  val tagsSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
   /** The local file system under the scheme `sessfs`, which a default
     * Hadoop configuration does not know. */
   final class SessionFs extends org.apache.hadoop.fs.RawLocalFileSystem {
     override def getUri: java.net.URI = java.net.URI.create("sessfs:///")
     override def getScheme: String = "sessfs"
+    override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+      if (org.apache.spark.TaskContext.get() != null) tagsSeen.add(getConf.get("sessfs.tag", ""))
+      super.open(f, bufferSize)
+    }
   }
 }
